@@ -249,7 +249,7 @@ def flagship(spark, n_docs: int) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench", master=f"local[{cpus}]")

@@ -53,26 +53,7 @@ def cell_of(lon, lat, res: int) -> np.ndarray:
 
 def cell_bounds(cell: int) -> tuple[float, float, float, float]:
     """cell id → (lon_min, lat_min, lon_max, lat_max)."""
-    c = np.uint64(cell)
-    res = int(c >> np.uint64(_RES_SHIFT))
-    morton = c & ((np.uint64(1) << np.uint64(_RES_SHIFT)) - np.uint64(1))
-
-    def compact(v):
-        v = v & np.uint64(0x5555555555555555)
-        v = (v | (v >> np.uint64(1))) & np.uint64(0x3333333333333333)
-        v = (v | (v >> np.uint64(2))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        v = (v | (v >> np.uint64(4))) & np.uint64(0x00FF00FF00FF00FF)
-        v = (v | (v >> np.uint64(8))) & np.uint64(0x0000FFFF0000FFFF)
-        v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-        return v
-
-    xi = int(compact(morton))
-    yi = int(compact(morton >> np.uint64(1)))
-    nx = 1 << (res + 1)
-    ny = 1 << res
-    w = 360.0 / nx
-    h = 180.0 / ny
-    return (-180.0 + xi * w, -90.0 + yi * h, -180.0 + (xi + 1) * w, -90.0 + (yi + 1) * h)
+    return tuple(float(v[0]) for v in cell_bounds_many(np.array([cell], dtype=np.int64)))
 
 
 def _compact_bits(v: np.ndarray) -> np.ndarray:
@@ -115,11 +96,6 @@ def _xy_of(cell: int) -> tuple[int, int, int]:
     xi = int(round((lon0 + 180.0) / 360.0 * nx))
     yi = int(round((lat0 + 90.0) / 180.0 * ny))
     return xi, yi, res
-
-
-def _cell_from_xy(xi: int, yi: int, res: int) -> int:
-    morton = _interleave_bits(np.array([xi], dtype=np.uint64), np.array([yi], dtype=np.uint64))[0]
-    return int((np.uint64(res) << np.uint64(_RES_SHIFT)) | morton) - (1 << 64) * 0
 
 
 def cells_covering(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:

@@ -75,19 +75,6 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# BBOX predicate — SpatialAssert.java:39-67 (interval overlap per dimension)
-# ---------------------------------------------------------------------------
-
-
-def bbox_intersects(a_xmin, a_ymin, a_xmax, a_ymax, b_xmin, b_ymin, b_xmax, b_ymax) -> Column:
-    return (a_xmin <= b_xmax) & (a_xmax >= b_xmin) & (a_ymin <= b_ymax) & (a_ymax >= b_ymin)
-
-
-def bbox_contains_point(xmin, ymin, xmax, ymax, x, y) -> Column:
-    return (x >= xmin) & (x <= xmax) & (y >= ymin) & (y <= ymax)
-
-
-# ---------------------------------------------------------------------------
 # Point-in-polygon as pure Column math (JVM higher-order functions)
 # ---------------------------------------------------------------------------
 
@@ -120,8 +107,9 @@ def _ring_crossings(lon: Column, lat: Column, ring: Column) -> Column:
 
 def point_in_polygon_col(lon: Column, lat: Column, exterior: Column,
                          interiors: Column) -> Column:
-    """Even-odd point-in-polygon (with holes) as a whole-stage-codegen'd
-    Column expression — the JVM fast path of the spatial-join refine; the
+    """Even-odd point-in-polygon (with holes) as a Column expression —
+    the JVM refine of the spatial join (its lambdas run interpreted,
+    CodegenFallback, but no row crosses into Python); the
     numpy kernel (kernels.geometry.points_in_polygon) is the same
     algorithm for Arrow-batch contexts."""
     inside_ext = F.pmod(_ring_crossings(lon, lat, exterior), F.lit(2)) == 1
@@ -325,15 +313,6 @@ def round_down_2dp(x: Column) -> Column:
     ceil for negatives."""
     scaled = x * F.lit(100.0)
     return F.when(x >= 0, F.floor(scaled)).otherwise(F.ceil(scaled)) / F.lit(100.0)
-
-
-def envelope_as_gml_pos(xmin, ymin, xmax, ymax) -> Column:
-    """gml:Envelope lowerCorner/upperCorner text with 2dp-DOWN ordinates."""
-    return F.format_string(
-        "<gml:Envelope><gml:lowerCorner>%s %s</gml:lowerCorner><gml:upperCorner>%s %s</gml:upperCorner></gml:Envelope>",
-        round_down_2dp(xmin).cast("string"), round_down_2dp(ymin).cast("string"),
-        round_down_2dp(xmax).cast("string"), round_down_2dp(ymax).cast("string"),
-    )
 
 
 # ---------------------------------------------------------------------------

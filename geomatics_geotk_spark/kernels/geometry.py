@@ -599,17 +599,6 @@ def _segment_intersection_point(p1, p2, p3, p4):
     return (p1[0] + t * (p2[0] - p1[0]), p1[1] + t * (p2[1] - p1[1]))
 
 
-def geom_coords(parts) -> np.ndarray:
-    """All coordinates of a (possibly nested) parts list as one (n,2) array."""
-    arrs = []
-    for p in parts:
-        if isinstance(p, list):
-            arrs.extend(p)
-        else:
-            arrs.append(p)
-    return np.vstack(arrs)
-
-
 # ---------------------------------------------------------------------------
 # Coordinate-list operators
 # ---------------------------------------------------------------------------

@@ -15,7 +15,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import (
-    antipode_lat,
     antipode_lon,
     envelope_to_kvp,
     round_down_2dp,
@@ -33,23 +32,6 @@ def envelope_agg(df: DataFrame, group_cols: list[str] | None = None,
         F.min(lat_col).alias("ymin"),
         F.max(lon_col).alias("xmax"),
         F.max(lat_col).alias("ymax"),
-    ]
-    if group_cols:
-        return df.groupBy(*group_cols).agg(*aggs)
-    return df.agg(*aggs)
-
-
-def envelope_agg_boxes(df: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Union (coalesce) of envelope rows (xmin/ymin/xmax/ymax columns).
-
-    Reference: Extents.coalesceBoundingBoxes (Extents.java:258-274) — the
-    caller harmonizes CRS first (all engine envelopes are CRS:84 lon/lat).
-    """
-    aggs = [
-        F.min("xmin").alias("xmin"),
-        F.min("ymin").alias("ymin"),
-        F.max("xmax").alias("xmax"),
-        F.max("ymax").alias("ymax"),
     ]
     if group_cols:
         return df.groupBy(*group_cols).agg(*aggs)
@@ -154,11 +136,4 @@ def with_envelope_gml_corners(df: DataFrame) -> DataFrame:
             F.concat_ws(" ", round_down_2dp(F.col("xmax")).cast("string"),
                         round_down_2dp(F.col("ymax")).cast("string")),
         )
-    )
-
-
-def antipode_points(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """getAntipode per point row (Extents.java:421-431)."""
-    return df.withColumn("anti_lat", antipode_lat(F.col(lat_col))).withColumn(
-        "anti_lon", antipode_lon(F.col(lon_col))
     )

@@ -34,7 +34,9 @@ from pyspark.sql import types as T
 from ..functions import covering_cells_col
 from ..kernels import geometry as geom_k
 from ..kernels import geometry_batch as gb
-from .spatial_join import _rings_from_flat, prep_zone_struct
+from .spatial_join import (
+    _explode_zone_cells, _rings_from_flat, flat_ring_cols, prep_zone_struct,
+)
 
 DEFAULT_RES = 10
 
@@ -174,12 +176,8 @@ def geometry_join(
             matched.select(id_col).distinct(), id_col, "left_anti"
         )
 
-    from .spatial_join import flat_ring_cols
-
     z = prep_zone_struct(zones, res)
-    zone_cells = z.select("zone_id", F.explode("_z.cells").alias("_c")).select(
-        F.col("_c.cell_id").alias("cell_id"), "zone_id"
-    )
+    zone_cells = _explode_zone_cells(z).select("cell_id", "zone_id")
     # rings travel flattened ([x0,y0,…] double arrays): Arrow hands the
     # refine numpy, not per-row dict lists — see flat_ring_cols
     flat_ext, flat_int = flat_ring_cols(F.col("_z.exterior"), F.col("_z.interiors"))

@@ -93,12 +93,6 @@ def unit_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn(vec_col, _unit(F.col(vec_col)))
 
 
-def with_cosine(df: DataFrame, vec_a: str, vec_b: str, out: str = "cosine") -> DataFrame:
-    """cosine(a,b) as pure Column math (JVM, codegen)."""
-    a, b = F.col(vec_a), F.col(vec_b)
-    return df.withColumn(out, _dot(a, b) / (_norm(a) * _norm(b)))
-
-
 def brute_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                id_col: str = "vec_id", q_id_col: str = "q_id",
                vec_col: str = "embedding") -> DataFrame:

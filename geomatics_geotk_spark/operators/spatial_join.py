@@ -15,9 +15,10 @@ into the classic spatial hash join:
 3. **equi-join on cell_id** — broadcast for small zone sets, shuffle with
    explicit hot-cell salting for large/skewed ones (AQE skew-split stays
    on as belt-and-suspenders);
-4. **refine** only the partial-cell candidates with the vectorized
-   crossing-number kernel (Arrow batch → numpy), reproducing the
-   reference's exact predicate semantics.
+4. **refine** only the partial-cell candidates with the crossing-number
+   test as Column expressions (:func:`functions.point_in_polygon_col`)
+   over the rings carried on the zone-cell rows: JVM only, no Python
+   worker, reproducing the reference's exact predicate semantics.
 
 CRS harmonization (reference ``setCRS``, ``TopologicalRelationships.java:
 261-271``) happens once on the zone side at prepare time — zones are the
@@ -62,19 +63,20 @@ def tile_assign(docs: DataFrame, res: int = DEFAULT_RES,
 
 
 # ---------------------------------------------------------------------------
-# Zone preparation (driver-side over the SMALL side; O(M) work)
+# Zone preparation: one per-zone kernel (O(M) work over the SMALL side),
+# run on the executors (prep_zone_struct) or the driver (prepare_zones)
 # ---------------------------------------------------------------------------
 
 
-def _zone_rings_lonlat(row) -> list[np.ndarray]:
-    """zones-table row → [exterior, *interiors] as (n,2) lon/lat arrays,
-    CRS-harmonized (reference setCRS semantics) and axis-normalized."""
-    rings = [np.array([[p["x"], p["y"]] for p in row["exterior"]], dtype=np.float64)]
-    for hole in row["interiors"] or []:
-        rings.append(np.array([[p["x"], p["y"]] for p in hole], dtype=np.float64))
+def _zone_rings_lonlat(exterior, interiors, crs) -> list[np.ndarray]:
+    """Zone rings (lists of {x,y}) → [exterior, *interiors] as (n,2)
+    lon/lat arrays, CRS-harmonized (reference setCRS semantics) and
+    axis-normalized.  ``interiors`` may be a Row list, an Arrow-decoded
+    numpy object array or None."""
     out = []
-    for r in rings:
-        lon, lat = crs_k.to_lonlat(r[:, 0], r[:, 1], row["crs"])
+    for ring in [exterior, *(interiors if interiors is not None else [])]:
+        r = np.array([[p["x"], p["y"]] for p in ring], dtype=np.float64)
+        lon, lat = crs_k.to_lonlat(r[:, 0], r[:, 1], crs)
         out.append(np.column_stack([lon, lat]))
     return out
 
@@ -152,86 +154,51 @@ def _classify_zone_cells(rings: list[np.ndarray], res: int, margin_m: float = 0.
     return carr[keep], full_mask[keep]
 
 
-def prepare_zones(zones: DataFrame, res: int = DEFAULT_RES):
-    """Zone polygons → (zone_cells DataFrame, {zone_id: rings} dict),
-    prepared on the DRIVER (zones collected).
-
-    Used only by callers that need the ring_map dict for a broadcast
-    pandas-UDF refine (``refine='pandas'``, geometry_join).  The default
-    Column-refine join path uses :func:`prepare_zones_distributed`, which
-    never touches the driver — prefer that for large zone sides.
-    """
-    spark = zones.sparkSession
-    rows = zones.collect()
-    cell_rows = []
-    ring_map: dict[str, list[np.ndarray]] = {}
-    for row in rows:
-        rings = _zone_rings_lonlat(row)
-        ring_map[row["zone_id"]] = rings
-        kept, full_mask = _classify_zone_cells(rings, res)
-        ext = [(float(x), float(y)) for x, y in rings[0]]
-        ints = [[(float(x), float(y)) for x, y in r] for r in rings[1:]]
-        for c, full in zip(kept.tolist(), full_mask.tolist()):
-            # rings ride along on partial cells only — full cells skip
-            # the refine, so the broadcast stays lean where it can
-            cell_rows.append(
-                (int(c), row["zone_id"], bool(full),
-                 [] if full else ext, [] if full else ints)
-            )
-    zone_cells = spark.createDataFrame(
-        cell_rows,
-        "cell_id long, zone_id string, full boolean, "
-        "exterior array<struct<x:double,y:double>>, "
-        "interiors array<array<struct<x:double,y:double>>>",
-    )
-    return zone_cells, ring_map
-
-
+_POINTS = T.ArrayType(T.StructType([
+    T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType()),
+]))
 _ZPREP_SCHEMA = T.StructType([
-    T.StructField("exterior", T.ArrayType(T.StructType([
-        T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType()),
-    ]))),
-    T.StructField("interiors", T.ArrayType(T.ArrayType(T.StructType([
-        T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType()),
-    ])))),
+    T.StructField("exterior", _POINTS),
+    T.StructField("interiors", T.ArrayType(_POINTS)),
     T.StructField("cells", T.ArrayType(T.StructType([
         T.StructField("cell_id", T.LongType()), T.StructField("full", T.BooleanType()),
     ]))),
 ])
 
 
+def _prep_zone(exterior, interiors, crs, res: int, margin_m: float = 0.0) -> tuple:
+    """The per-zone kernel: one zone → one ``_ZPREP_SCHEMA`` row
+    (harmonized exterior, harmonized interiors, classified covering
+    cells as (cell_id, full) pairs)."""
+    rings = _zone_rings_lonlat(exterior, interiors, crs)
+    kept, full_mask = _classify_zone_cells(rings, res, margin_m)
+    return (
+        [tuple(p) for p in rings[0].tolist()],
+        [[tuple(p) for p in r.tolist()] for r in rings[1:]],
+        list(zip(kept.tolist(), full_mask.tolist())),
+    )
+
+
 def prep_zone_struct(zones: DataFrame, res: int = DEFAULT_RES,
                      margin_m: float = 0.0) -> DataFrame:
     """(zone_id, _z(exterior, interiors, cells)) computed ZONE-PARALLEL:
-    CRS harmonization + covering-cell classification inside a pandas UDF
-    on the executors.  The driver never materializes a zone or a cell —
-    10^6 zones is just more partitions.  ``margin_m`` expands the covering
-    cells by a distance margin (the DWithin candidate disk).
+    the per-zone kernel inside a pandas UDF on the executors.  The driver
+    never materializes a zone or a cell — 10^6 zones is just more
+    partitions.  ``margin_m`` expands the covering cells by a distance
+    margin (the DWithin candidate disk).
 
-    Downstream shapes: explode ``_z.cells`` for the cell equi-join;
-    project ``_z.exterior``/``_z.interiors`` for a (zone_id → rings)
-    attach join — rings reach the refine on join rows, never via a
-    driver-built broadcast dict.
+    Downstream shapes: :func:`_explode_zone_cells` for the cell
+    equi-join; project ``_z.exterior``/``_z.interiors`` for a
+    (zone_id → rings) attach join — rings reach the refine on join rows,
+    never via a driver-built broadcast dict.
     """
 
     @F.pandas_udf(_ZPREP_SCHEMA)
     def prep(exterior: pd.Series, interiors: pd.Series, crs: pd.Series) -> pd.DataFrame:
-        out = []
-        for ext, ints, c in zip(exterior, interiors, crs):
-            row = {"exterior": ext, "interiors": ints, "crs": c}
-            rings = _zone_rings_lonlat(row)
-            kept, full_mask = _classify_zone_cells(rings, res, margin_m)
-            out.append({
-                "exterior": [{"x": float(x), "y": float(y)} for x, y in rings[0]],
-                "interiors": [
-                    [{"x": float(x), "y": float(y)} for x, y in r] for r in rings[1:]
-                ],
-                "cells": [
-                    {"cell_id": int(cc), "full": bool(fl)}
-                    for cc, fl in zip(kept.tolist(), full_mask.tolist())
-                ],
-            })
-        return pd.DataFrame(out)
+        return pd.DataFrame(
+            [_prep_zone(e, i, c, res, margin_m) for e, i, c in zip(exterior, interiors, crs)],
+            columns=_ZPREP_SCHEMA.names,
+        )
 
     # single-eval barrier: _z feeds both the cell explode and the ring
     # projection — without this Catalyst re-runs the (expensive) zone
@@ -240,22 +207,18 @@ def prep_zone_struct(zones: DataFrame, res: int = DEFAULT_RES,
     return zones.withColumn("_z", prep("exterior", "interiors", "crs"))
 
 
-def prepare_zones_distributed(zones: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """zone_cells(cell_id, zone_id, full, exterior, interiors) computed
-    ZONE-PARALLEL (:func:`prep_zone_struct`) then exploded as Column ops —
-    the identical row set to :func:`prepare_zones` (same kernels,
-    cross-checked in tests/test_distributed_expansion.py).  Rings ride on
-    partial-cell rows; full cells carry empty rings (refine skipped).
-    """
-    z = prep_zone_struct(zones, res)
+def _explode_zone_cells(z: DataFrame) -> DataFrame:
+    """(zone_id, _z) → zone_cells(cell_id, zone_id, full, exterior,
+    interiors), one row per covering cell.  Rings ride on partial-cell
+    rows; full cells carry empty rings (refine skipped)."""
     c = z.select(
         "zone_id",
         F.col("_z.exterior").alias("_ext"),
         F.col("_z.interiors").alias("_int"),
         F.explode("_z.cells").alias("_c"),
     )
-    empty_ext = F.array().cast("array<struct<x:double,y:double>>")
-    empty_int = F.array().cast("array<array<struct<x:double,y:double>>>")
+    empty_ext = F.array().cast(_POINTS)
+    empty_int = F.array().cast(T.ArrayType(_POINTS))
     return c.select(
         F.col("_c.cell_id").alias("cell_id"),
         "zone_id",
@@ -265,14 +228,34 @@ def prepare_zones_distributed(zones: DataFrame, res: int = DEFAULT_RES) -> DataF
     )
 
 
-def _rings_from_row(ext, ints) -> list[np.ndarray]:
-    """Arrow-decoded ring columns (list of {x,y} structs / list of lists)
-    → [exterior, *interiors] as (n,2) float64 arrays, for refine UDFs
-    that receive zone rings ON THE JOIN ROW instead of a broadcast dict."""
-    rings = [np.array([[p["x"], p["y"]] for p in ext], dtype=np.float64)]
-    for hole in (ints if ints is not None else []):
-        rings.append(np.array([[p["x"], p["y"]] for p in hole], dtype=np.float64))
-    return rings
+def prepare_zones(zones: DataFrame, res: int = DEFAULT_RES):
+    """Zone polygons → (zone_cells DataFrame, {zone_id: rings} dict),
+    prepared on the DRIVER: the zones are collected, the per-zone kernel
+    runs on each, and the result (one row per zone) is exploded in the
+    JVM.  No Python runs in the plan, so a broadcast join over it stays
+    JVM-only; the rings dict serves brute-force cross-checks.  For zone
+    sides too large to collect use :func:`prepare_zones_distributed`.
+    """
+    rows = [
+        (r["zone_id"], _prep_zone(r["exterior"], r["interiors"], r["crs"], res))
+        for r in zones.collect()
+    ]
+    z = zones.sparkSession.createDataFrame(rows, T.StructType([
+        T.StructField("zone_id", T.StringType()), T.StructField("_z", _ZPREP_SCHEMA),
+    ]))
+    rings_by_zone = {
+        zone_id: [np.array(ext, dtype=np.float64)]
+        + [np.array(hole, dtype=np.float64) for hole in ints]
+        for zone_id, (ext, ints, _) in rows
+    }
+    return _explode_zone_cells(z), rings_by_zone
+
+
+def prepare_zones_distributed(zones: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+    """zone_cells(cell_id, zone_id, full, exterior, interiors) computed
+    ZONE-PARALLEL (:func:`prep_zone_struct`) — the identical row set to
+    :func:`prepare_zones` (same kernel, same explode)."""
+    return _explode_zone_cells(prep_zone_struct(zones, res))
 
 
 def flat_ring_cols(ext_col, int_col):
@@ -298,36 +281,6 @@ def _rings_from_flat(ext, ints) -> list[np.ndarray]:
     return rings
 
 
-def _pip_refine_udf(ring_map_bc):
-    """Vectorized crossing-number refine: (lon, lat, zone_id, full) → bool.
-
-    ``full=true`` rows (cell entirely inside the polygon) short-circuit to
-    true without touching the kernel; the rest are grouped by zone via
-    integer ``factorize`` codes (string equality per zone over the whole
-    batch was the hot spot) and tested batch-wise in numpy.
-    """
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, zone_id: pd.Series, full: pd.Series) -> pd.Series:
-        rings_by_zone = ring_map_bc.value
-        fullv = full.to_numpy(dtype=bool)
-        out = fullv.copy()
-        todo = np.nonzero(~fullv)[0]
-        if len(todo):
-            lon_np = lon.to_numpy(dtype=np.float64)[todo]
-            lat_np = lat.to_numpy(dtype=np.float64)[todo]
-            codes, uniques = pd.factorize(zone_id.to_numpy()[todo])
-            for k, z in enumerate(uniques):
-                rings = rings_by_zone.get(z)
-                if rings is None:
-                    continue
-                m = codes == k
-                out[todo[m]] = geom_k.points_in_polygon(lon_np[m], lat_np[m], rings)
-        return pd.Series(out)
-
-    return pip
-
-
 # ---------------------------------------------------------------------------
 # The join
 # ---------------------------------------------------------------------------
@@ -343,7 +296,6 @@ def spatial_join(
     hot_cell_threshold: int = 200_000,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    refine: str = "column",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """docs(points) ⋈ zones(polygons) under a spatial predicate.
@@ -359,41 +311,33 @@ def spatial_join(
         rows replicated ×salt and doc rows spread across salt sub-keys —
         the explicit skew handling the north rule demands.
 
-    Zone preparation: 'shuffle' (the large-zone-side strategy) prepares
-    zone cells fully distributed (:func:`prepare_zones_distributed` — the
-    driver never materializes a zone or cell, so a 10^6-zone side is just
-    more partitions).  'broadcast' keeps the driver-side
-    :func:`prepare_zones`: a side small enough to broadcast to every
-    executor is by definition driver-sized, and the driver path keeps the
-    flagship plan 100% JVM (no Arrow eval anywhere — asserted in
-    tests/test_plans_bucketing.py).  ``refine='pandas'`` also needs the
-    driver path for its broadcast ring dict.
+    Zone preparation runs one per-zone kernel either way.  'broadcast'
+    runs it on the driver (:func:`prepare_zones`): a zone side small
+    enough to broadcast is driver-sized, and the plan then holds no
+    Python node at all (asserted in tests/test_plans_bucketing.py).
+    'shuffle', the large-zone-side strategy, runs it on the executors
+    (:func:`prepare_zones_distributed`), so the driver never
+    materializes a zone or a cell.
     """
-    spark = docs.sparkSession
-    if refine == "column" and strategy == "shuffle":
-        zone_cells = prepare_zones_distributed(zones, res)
-        ring_bc = None
-    else:
-        zone_cells, ring_map = prepare_zones(zones, res)
-        ring_bc = spark.sparkContext.broadcast(ring_map)
-
-    pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
-
     if predicate == "disjoint":
-        matched = spatial_join(
-            docs, zones, res, strategy, "intersects", salt, hot_cell_threshold,
-            lon_col, lat_col,
-        )
         if id_col not in docs.columns:
             raise ValueError(
                 f"disjoint anti-join needs a unique id column; {id_col!r} "
                 f"not in {docs.columns}"
             )
+        matched = spatial_join(
+            docs, zones, res, strategy, "intersects", salt, hot_cell_threshold,
+            lon_col, lat_col,
+        )
         return docs.join(matched.select(id_col).distinct(), id_col, "left_anti")
 
+    pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
+
     if strategy == "broadcast":
+        zone_cells, _ = prepare_zones(zones, res)
         joined = pts.join(F.broadcast(zone_cells), "cell_id", "inner")
     elif strategy == "shuffle":
+        zone_cells = prepare_zones_distributed(zones, res)
         if salt > 0:
             # explicit hot-cell salting: estimate per-cell doc counts on a
             # sample, replicate zone rows for hot cells only
@@ -405,7 +349,7 @@ def spatial_join(
                 .collect()
             ]
             if hot:
-                salts = spark.range(salt).select(F.col("id").cast("int").alias("salt"))
+                salts = docs.sparkSession.range(salt).select(F.col("id").cast("int").alias("salt"))
                 zc_hot = (
                     zone_cells.where(F.col("cell_id").isin(hot)).crossJoin(salts)
                 )
@@ -428,20 +372,13 @@ def spatial_join(
     else:
         raise ValueError(f"unknown strategy: {strategy}")
 
-    if refine == "column":
-        # JVM fast path: crossing-number as whole-stage-codegen'd Column
-        # math over the rings shipped on the broadcast side — no Python,
-        # no Arrow, in the 10^12-doc hot loop.
-        pip_col = point_in_polygon_col(
-            F.col(lon_col), F.col(lat_col), F.col("exterior"), F.col("interiors")
-        )
-        refined = joined.where(F.col("full") | pip_col)
-    else:
-        pip = _pip_refine_udf(ring_bc)
-        refined = joined.where(
-            pip(F.col(lon_col), F.col(lat_col), F.col("zone_id"), F.col("full"))
-        )
-    return refined.drop("full", "exterior", "interiors")
+    # crossing-number refine as Column math over the rings carried on the
+    # zone side: no Python, no Arrow.  Its filter/exists lambdas over edge
+    # indices are CodegenFallback, i.e. interpreted inside the stage.
+    pip_col = point_in_polygon_col(
+        F.col(lon_col), F.col(lat_col), F.col("exterior"), F.col("interiors")
+    )
+    return joined.where(F.col("full") | pip_col).drop("full", "exterior", "interiors")
 
 
 def dwithin_zone_join(
@@ -485,9 +422,7 @@ def dwithin_zone_join(
         res = cells.res_for_meters(max(distance_m, 500.0) * 4)
 
     z = prep_zone_struct(zones, res, margin_m=distance_m)
-    zone_cells = z.select(
-        "zone_id", F.explode("_z.cells").alias("_c")
-    ).select(F.col("_c.cell_id").alias("cell_id"), "zone_id", F.col("_c.full").alias("full"))
+    zone_cells = _explode_zone_cells(z).select("cell_id", "zone_id", "full")
     flat_ext, flat_int = flat_ring_cols(F.col("_z.exterior"), F.col("_z.interiors"))
     zone_rings = z.select(
         "zone_id", flat_ext.alias("_zext"), flat_int.alias("_zint")

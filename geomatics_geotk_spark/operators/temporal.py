@@ -227,10 +227,3 @@ def merge_intervals(
         F.max(end_col).alias("run_end"),
         F.count("*").alias("n_merged"),
     ).drop("_grp")
-
-
-def temporal_sort(df: DataFrame, begin_col: str = "begin", end_col: str = "end") -> DataFrame:
-    """Total order per TemporalComparator (begin, then end) —
-    time/TemporalComparator.java:13-40 (the DURING→0 discard quirk is a
-    TreeSet artifact, not an ordering one)."""
-    return df.orderBy(F.col(begin_col).asc(), F.coalesce(F.col(end_col), F.col(begin_col)).asc())

@@ -1,15 +1,12 @@
-"""Plan inspection + run metrics.
+"""Plan inspection.
 
 Helpers to assert scale-hygiene properties of Catalyst plans (filters
-pushed to the parquet scan, broadcast joins where expected) and to collect
-per-stage row/latency metrics for the lineage table.
+pushed to the parquet scan, broadcast joins where expected).
 """
 
 from __future__ import annotations
 
 import re
-import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
@@ -35,23 +32,3 @@ def scan_read_schema(df: DataFrame) -> list[str]:
     if not m:
         return []
     return [c.split(":")[0] for c in m.group(1).split(",") if c]
-
-
-@dataclass
-class StageMetrics:
-    """Per-stage row-count + latency log — the metrics half of the
-    lineage requirement (sources.sink writes the per-partition half)."""
-
-    stages: list[dict] = field(default_factory=list)
-
-    def record(self, name: str, df: DataFrame) -> DataFrame:
-        t0 = time.time()
-        rows = df.count()
-        self.stages.append({"stage": name, "rows": rows, "seconds": time.time() - t0})
-        return df
-
-    def as_dataframe(self, spark):
-        return spark.createDataFrame(
-            [(s["stage"], s["rows"], s["seconds"]) for s in self.stages],
-            "stage string, rows long, seconds double",
-        )

@@ -48,9 +48,9 @@ def get_spark(app: str = "geomatics_geotk_spark", master: str | None = None,
         _submitted_master()
         or master
         or os.environ.get("SPARK_GRAFT_MASTER")
-        or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count() or 8)}]"
     )
-    cores = master.split("[")[-1].rstrip("]") if "[" in master else "32"
+    cores = master.split("[")[-1].rstrip("]") if "[" in master else "*"
     try:
         n_cores = int(cores) if cores != "*" else (os.cpu_count() or 8)
     except ValueError:

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.spatial_join import decode_geo_spans, tile_assign
+from ..operators.spatial_join import decode_geo_spans, spatial_join, tile_assign
 
 DOCS_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -35,24 +35,14 @@ def streaming_tile_assign(spark, path: str, res: int = 12,
 
 def streaming_spatial_join(assigned: DataFrame, zones: DataFrame,
                            res: int = 12) -> DataFrame:
-    """Stream-static point-in-polygon join: the streaming tile-assigned
-    docs equi-join the (static, broadcastable) zone-cell table and refine
-    with the same JVM Column crossing-number as the batch operator —
-    batch/stream parity is structural.
+    """Stream-static point-in-polygon join: the batch broadcast
+    :func:`spatial_join` applied to the streaming tile-assigned docs
+    (which already carry ``cell_id``) — batch/stream parity holds by
+    construction.
 
     Returns the streaming DataFrame of (doc columns…, zone_id) matches.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions import point_in_polygon_col
-    from ..operators.spatial_join import prepare_zones
-
-    zone_cells, _ = prepare_zones(zones, res)
-    joined = assigned.join(F.broadcast(zone_cells), "cell_id", "inner")
-    pip = point_in_polygon_col(
-        F.col("lon"), F.col("lat"), F.col("exterior"), F.col("interiors")
-    )
-    return joined.where(F.col("full") | pip).drop("full", "exterior", "interiors")
+    return spatial_join(assigned, zones, res, strategy="broadcast")
 
 
 def streaming_exact_dedup(stream: DataFrame, text_col: str = "text",

@@ -7,8 +7,8 @@ round-1 driver-side loops.
   strategy) and matches a numpy brute-force truth on sampled docs;
 - prepare_zones_distributed emits the identical (cell_id, zone_id, full)
   row set as the driver-side prepare_zones;
-- spatial_join through the distributed prep returns the same rows as
-  through the driver-side prep.
+- a zone with a hole goes through both preps and every join that uses
+  them.
 """
 
 import numpy as np
@@ -97,17 +97,65 @@ def test_prepare_zones_distributed_equals_driver(spark):
             assert len(r["exterior"]) >= 4
 
 
-def test_spatial_join_same_rows_both_preps(spark):
-    docs = sj.tile_assign(
-        sj.decode_geo_spans(synth_documents(spark, 1500)), 12
+def test_holed_zone_every_prep_path(spark):
+    """A zone with a hole through both zone preps and all three joins
+    that use them: driver and executor preps give the same cells, the
+    broadcast and shuffle point-in-polygon joins equal the numpy brute
+    force (no point in the hole matches), and the DWithin join equals
+    the brute-force witness distances.  A plain zone rides in the same
+    Arrow batch, so empty and non-empty interiors decode together."""
+    from geomatics_geotk_spark.kernels import geometry as geom_k
+
+    outer = [(-123.4, 49.1), (-122.6, 49.1), (-122.6, 49.9), (-123.4, 49.9), (-123.4, 49.1)]
+    hole = [(-123.1, 49.4), (-122.9, 49.45), (-122.95, 49.65), (-123.1, 49.4)]
+    plain = [(-123.5, 49.0), (-123.3, 49.0), (-123.3, 49.05), (-123.5, 49.0)]
+    zones = spark.createDataFrame(
+        [("holed", "CRS:84", outer, [hole]), ("plain", "CRS:84", plain, [])],
+        "zone_id string, crs string, exterior array<struct<x:double,y:double>>, "
+        "interiors array<array<struct<x:double,y:double>>>",
     )
-    zones = zones_table(spark, grid=8).where(F.col("zone_id").startswith("zone-grid-"))
-    col_path = sj.spatial_join(docs, zones, res=12, strategy="broadcast")
-    pd_path = sj.spatial_join(docs, zones, res=12, strategy="broadcast", refine="pandas")
-    a = {(r["doc_id"], r["zone_id"]) for r in col_path.select("doc_id", "zone_id").collect()}
-    b = {(r["doc_id"], r["zone_id"]) for r in pd_path.select("doc_id", "zone_id").collect()}
-    assert a == b
-    assert len(a) > 0
+    res = 12
+    key = lambda r: (r["cell_id"], r["zone_id"], r["full"])  # noqa: E731
+    drv, _ = sj.prepare_zones(zones, res)
+    dist = sj.prepare_zones_distributed(zones, res)
+    assert sorted(map(key, drv.collect())) == sorted(map(key, dist.collect()))
+
+    docs = sj.tile_assign(sj.decode_geo_spans(synth_documents(spark, 1500)), res)
+    d = docs.select("doc_id", "lon", "lat").toPandas()
+    px, py = d["lon"].to_numpy(), d["lat"].to_numpy()
+    rings_by_zone = {
+        "holed": [np.array(outer), np.array(hole)], "plain": [np.array(plain)],
+    }
+    want = set()
+    for zid, rings in rings_by_zone.items():
+        inside = geom_k.points_in_polygon(px, py, rings)
+        want |= {(doc, zid) for doc in d["doc_id"][inside]}
+    in_hole = set(d["doc_id"][geom_k.points_in_polygon(px, py, [np.array(hole)])])
+    assert in_hole and not {doc for doc, _ in want} & in_hole
+    for strategy in ("broadcast", "shuffle"):
+        out = sj.spatial_join(docs, zones, res=res, strategy=strategy)
+        assert {(r["doc_id"], r["zone_id"]) for r in out.collect()} == want
+
+    dist_m = 3000.0
+    out = sj.dwithin_zone_join(docs.select("doc_id", "lon", "lat"), zones, distance_m=dist_m)
+    got = {(r["doc_id"], r["zone_id"], round(r["dist_m"], 6)) for r in out.collect()}
+    want = set()
+    for zid, rings in rings_by_zone.items():
+        inside = geom_k.points_in_polygon(px, py, rings)
+        best = np.full(len(px), np.inf)
+        qx, qy = np.zeros(len(px)), np.zeros(len(px))
+        for r in rings:
+            d2, rx, ry = geom_k._nearest_on_segments(px, py, r[:-1], r[1:])
+            better = d2 < best
+            best = np.where(better, d2, best)
+            qx, qy = np.where(better, rx, qx), np.where(better, ry, qy)
+        vd = np.where(inside, 0.0, geodesic.inverse(py, px, qy, qx))
+        want |= {
+            (d["doc_id"].iloc[i], zid, round(float(vd[i]), 6))
+            for i in np.nonzero(vd < dist_m)[0]
+        }
+    assert got == want
+    assert any(doc in in_hole and v > 0.0 for doc, _, v in got)
 
 
 def test_dwithin_zone_join_vs_brute_force_pentagon(spark):

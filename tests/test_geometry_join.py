@@ -46,7 +46,7 @@ def test_matches_brute_force(spark, mixed_docs, pred):
     for i, w in rows:
         kind, parts = geom_k.parse_wkt(w)
         for zr in zrows:
-            rings = _zone_rings_lonlat(zr)
+            rings = _zone_rings_lonlat(zr["exterior"], zr["interiors"], zr["crs"])
             if getattr(geom_k, pred)(kind, parts, "polygon", rings):
                 want.add((i, zr["zone_id"]))
     assert got == want
