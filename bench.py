@@ -29,194 +29,7 @@ from geomatics_geotk_spark.operators import spatial_join
 from geomatics_geotk_spark.session import get_spark
 from geomatics_geotk_spark.sources.documents import synth_documents, zones_table
 
-BENCH_QUERIES = [
-    "tile_assign",
-    "interleaved_tile_pip",
-    "pip_convex",
-    "dwithin_exact",
-    "knn_cellring",
-    "zonal_stats",
-    "envelope_agg",
-    "temporal_during",
-    "window_running",
-    "pricing_summary",
-    "revenue_by_nation",
-    "minhash_lsh",
-    "minhash_lsh_fast",
-    "ngram_jaccard",
-    "simhash_neardups",
-    "simhash_neardups_fast",
-    "cosine_topk",
-    "ann_topk",
-    "quality_score",
-    "fingerprint",
-    "gml_decode",
-    "pip_salted_shuffle",
-    # round-3 additions: the operators whose scale paths were rebuilt
-    # (distributed zone prep + batch-vectorized DE-9IM refine)
-    "geometry_join_lines",
-    "dwithin_zones",
-    # round-3 additions: training-data pipeline family (suite EXTENSION —
-    # earlier queries keep their positions, so per-query diffs vs
-    # BENCH_r01/r02 stay valid; the suite total is not comparable across
-    # rounds and never was the headline metric)
-    "decontaminate",
-    "heavy_shingles",
-    "repetition",
-    "pii_scan",
-    "curation_funnel",
-    # the streaming-signature index build: arrow twin (the bulk path);
-    # the pure-Column twin shares its oracle and is correctness-only
-    "lsh_band_index_arrow",
-    "vocab_topk",
-    "tfidf_topk",
-    "kmeans_clusters",
-    # sketch family (suite extension, same position-preserving rule)
-    "hll_distinct",
-    "cms_vocab",
-    "inverted_index",
-    # graph / mixing family
-    "pagerank",
-    "budget_pack",
-    # line-level dedup + context packing (suite extension)
-    "line_dedup",
-    "chunk_sliding",
-    # substring self-similarity + interleaved span compaction
-    "selfsim",
-    "span_compact",
-    # round-4 additions (suite extension, same position-preserving rule):
-    # bloom-pruned join, BM25 retrieval, one-shuffle tile pyramid,
-    # grouping-sets rollup, three-table top-k join
-    "bloom_join",
-    "bm25_topk",
-    "tile_pyramid",
-    "pricing_rollup",
-    "shipping_priority",
-    "order_priority_check",
-    "ann_topk_int8",
-    "customer_distribution",
-    "top_supplier",
-    "render_interleaved",
-    # round-5 additions (suite extension, same position-preserving rule):
-    # the composed IVF+int8 retrieval plan and the multi-table near-dup
-    # join over the rotated adversarial fixture
-    "ann_topk_ivf_int8",
-    "embedding_neardups",
-    "semantic_dedup",
-    "group_quantiles",
-    # trajectory family (late round-5 extension)
-    "staypoints",
-    "track_simplify",
-    "od_matrix",
-    "stay_zones",
-    "speed_spikes",
-    "simplify_error",
-    "colocation",
-    # closing round-5 relational shapes
-    "waiting_suppliers",
-    "idle_customers",
-    # final round-5 extension: remaining TPC-H shapes, PQ retrieval,
-    # A-ES weighted sampling, entropy QC, hull geodesic measure
-    "small_quantity_revenue",
-    "large_volume_customers",
-    "nation_trade_volume",
-    "market_share",
-    "product_profit",
-    "promo_revenue",
-    "ann_topk_pq",
-    "ann_topk_ivf_pq",
-    "weighted_sample",
-    "token_entropy",
-    "hull_perimeter",
-    "lm_logloss",
-    "map_match",
-    "pack_sequences",
-    # continuation round-5 extension: raster focal stats, shoelace ring
-    # measures, IDW interpolation, degree-ordered triangles, OHLC bars,
-    # hotspot z-scores, bearing roses, and the Q6/Q10/Q11/Q16 shapes
-    "focal_mean",
-    "polygon_measures",
-    "idw_interpolate",
-    "triangle_counts",
-    "ohlc_bars",
-    "hotspot_cells",
-    "bearing_histogram",
-    "forecast_revenue",
-    "returned_items",
-    "important_parts",
-    "supplier_part_counts",
-    "geodesic_area",
-    "event_funnel",
-    "retention_cohorts",
-    "source_overlap",
-    "rolling_revenue",
-    "customer_quartiles",
-    "event_transitions",
-    "embedding_stats",
-    "resample_track",
-    "geohash_cells",
-    "zonal_weighted",
-    "clustering_coeff",
-    "robust_stats",
-    "integrity_audit",
-    "source_kl",
-    "containment_pairs",
-    "linestatus_priority",
-    "dominant_suppliers",
-    "heavy_hitters",
-    "grid_clusters",
-    "fuzzy_name_pairs",
-    "track_cells",
-    "pareto_parts",
-    "kmv_vocab",
-    "kmv_overlap",
-    "scd2_build",
-    "snapshot_diff",
-    "moran_events",
-    # round-5 final-session additions (suite EXTENSION — positions of
-    # earlier queries preserved)
-    "hotspot_gi",
-    "rate_anomaly",
-    "pmi_collocations",
-    "basket_pairs",
-    "quantile_calibration",
-    "trend_test",
-    "revenue_gini",
-    "benford_audit",
-    "kernel_density",
-    "emerging_hotspots",
-    "coverage_gaps",
-    "cusum_alarm",
-    "readability",
-    "media_reuse",
-    "attribution",
-    "zonal_majority",
-    "behavior_entropy",
-    "hausdorff_routes",
-    "voronoi_stats",
-    "hex_bin",
-    "acf_profile",
-    "theil_sen",
-    "cdc_apply",
-    "common_neighbors",
-    "token_bursts",
-    "kcore",
-    "ewma_chart",
-    "haar_multires",
-    "zipf_fit",
-    "variogram",
-    "gap_fill",
-    "survival_km",
-    "leadlag_xcorr",
-    "path_trigrams",
-    "mad_outliers",
-    "anomaly_drilldown",
-    "markov_stationary",
-    "seasonality_profile",
-    "assortativity",
-    "audience_overlap",
-    "series_peaks",
-]
+BENCH_QUERIES = [e.name for e in q.CATALOG if e.bench]
 
 
 def _force(df) -> None:
@@ -292,7 +105,7 @@ def main() -> None:
         return
 
     # Per-query protocol: 1 untimed warm-up + best of 2 timed passes.
-    # The r2→r3 controlled A/B (scripts/ab_bench.py, AB_BENCH.json) showed
+    # The r2→r3 controlled A/B (recorded in AB_BENCH.json) showed
     # the single-cold-pass protocol measured session/host noise, not the
     # engine: identical queries ran 2-4x slower on their first execution
     # of a session (JIT, Python-worker spin-up, page cache) and the

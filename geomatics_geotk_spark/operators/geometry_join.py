@@ -67,7 +67,7 @@ def _wkt_envelope(wkt: pd.Series) -> pd.DataFrame:
 _wkt_envelope = _wkt_envelope.asNondeterministic()
 
 
-def _refine_udf(predicate: str, impl: str = "batch"):
+def _refine_udf(predicate: str):
     """(wkt, zone_id, exterior, interiors) → bool, batch-vectorized.
 
     Inside each Arrow batch: parse each distinct WKT once (docs repeat
@@ -109,8 +109,7 @@ def _refine_udf(predicate: str, impl: str = "batch"):
                 kidx = zidx[kinds == kind]
                 if kind == "_bad":
                     continue
-                if (impl == "batch" and kind in ("point", "linestring", "polygon")
-                        and predicate in gb.BATCHABLE):
+                if kind in ("point", "linestring", "polygon") and predicate in gb.BATCHABLE:
                     geoms = [parsed[w][1] for w in wkt_np[kidx]]
                     out[kidx] = gb.batch_predicate(predicate, kind, geoms, rings)
                 else:
@@ -131,7 +130,6 @@ def geometry_join(
     wkt_col: str = "wkt",
     id_col: str = "doc_id",
     strategy: str = "broadcast",
-    refine_impl: str = "batch",
     _valid_env: DataFrame | None = None,
 ) -> DataFrame:
     """docs(any WKT geometry) ⋈ zones(polygons) under ``predicate``.
@@ -143,10 +141,6 @@ def geometry_join(
     strategy: 'broadcast' ships zone cell + ring tables to every executor
     (dimension-sized zone sets); 'shuffle' hash-partitions both joins —
     the large-zone-side path (zone prep is distributed either way).
-
-    refine_impl: 'batch' (default — vectorized group kernels) or
-    'perpair' (force the fallback loop; benchmarking/cross-check only,
-    results identical by the geometry_batch property tests).
     """
     if strategy not in ("broadcast", "shuffle"):
         raise ValueError(f"geometry_join: unknown strategy {strategy!r}")
@@ -170,7 +164,7 @@ def geometry_join(
         # re-deriving the WKT-envelope Arrow stage a second time
         matched = geometry_join(
             docs, zones, "intersects", res, wkt_col, id_col, strategy,
-            refine_impl, _valid_env=valid,
+            _valid_env=valid,
         )
         return valid.drop("_env").join(
             matched.select(id_col).distinct(), id_col, "left_anti"
@@ -202,7 +196,7 @@ def geometry_join(
         .agg(F.min(wkt_col).alias(wkt_col))
         .join(zone_rings, "zone_id")
     )
-    refine = _refine_udf(predicate, refine_impl)
+    refine = _refine_udf(predicate)
     return cand.where(
         refine(F.col(wkt_col), F.col("zone_id"), F.col("_zext"), F.col("_zint"))
     ).select(id_col, "zone_id")

@@ -237,7 +237,9 @@ def learn_centroids(embeddings: DataFrame, n_centroids: int = 256,
         .toPandas()
     )
     m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    m = m / np.linalg.norm(m, axis=1, keepdims=True)
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    nonzero = norms[:, 0] > 0  # a zero vector has no direction to train on
+    m = m[nonzero] / norms[nonzero]
     c = min(n_centroids, len(m))
     cent = m[:: max(1, len(m) // c)][:c].copy()
     for _ in range(iters):

@@ -533,7 +533,6 @@ def dwithin_join(
     res: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    exact: bool = True,
     strategy: str = "broadcast",
 ) -> DataFrame:
     """docs × pois pairs with geodesic distance < distance_m (DWITHIN).
@@ -573,8 +572,6 @@ def dwithin_join(
         haversine_m(F.col(lat_col), F.col(lon_col), F.col("poi_lat"), F.col("poi_lon"))
         < F.lit(distance_m * 1.01)
     )
-    if not exact:
-        return cand
 
     from ..kernels import geodesic
 

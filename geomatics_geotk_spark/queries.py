@@ -23,6 +23,12 @@ offset ``(k % 996) + 1`` keeps points strictly off cell/zone boundaries.
 
 from __future__ import annotations
 
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,7 +38,6 @@ from .functions import (
     RES_SHIFT,
     abbreviated_crs_id_col,
     cell_id_col,
-    haversine_m,
     length_in_meters_col,
     round_down_2dp,
     srs_name_to_urn_col,
@@ -350,33 +355,11 @@ def q_interleaved_gml_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# 4. DWITHIN (haversine path) + kNN ranking  — SURVEY §2.1 DWithin, §2.6 topk
+# 4. DWITHIN / BEYOND against zones  — SURVEY §2.1 DWithin
 # ===========================================================================
 
+# point×POI radius shared by dwithin_exact and beyond
 _DIST_M = 8000.0
-
-
-def q_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haversine DWITHIN as a deliberate 1:1 SQL mirror (crossJoin over
-    the 3 fixture POIs — fine at dimension size, NOT the engine path).
-    The production operator is ``spatial_join.dwithin_join`` (cell-disk
-    prefilter + Vincenty refine), driver-checked as ``dwithin_exact``."""
-    pts = _pts_from_key(_read(spark, sf_dir, "orders"), "o_orderkey")
-    cand = pts.crossJoin(F.broadcast(_pois_df(spark)))
-    d = haversine_m(F.col("lat"), F.col("lon"), F.col("poi_lat"), F.col("poi_lon"))
-    return (
-        cand.withColumn("dist_m_r", F.round(d, 3))
-        .where(d < F.lit(_DIST_M))
-        .select("doc_id", "poi_id", "dist_m_r")
-    )
-
-
-ORACLE_DWITHIN = (
-    f"WITH pts AS ({_pts_sql('orders', 'o_orderkey')}) "
-    f"SELECT doc_id, poi_id, round({_haversine_sql('lat', 'lon', 'poi_lat', 'poi_lon')}, 3) "
-    f"AS dist_m_r FROM pts CROSS JOIN {_POIS_SQL} "
-    f"WHERE {_haversine_sql('lat', 'lon', 'poi_lat', 'poi_lon')} < {_DIST_M}"
-)
 
 
 def q_dwithin_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,30 +441,6 @@ def _oracle_beyond_zones() -> str:
         f"SELECT doc_id FROM pts WHERE doc_id NOT IN "
         f"(SELECT doc_id FROM ({near}) WHERE _bd < 5000.0)"
     )
-
-
-def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _pts_from_key(_read(spark, sf_dir, "orders"), "o_orderkey")
-    cand = pts.crossJoin(F.broadcast(_pois_df(spark)))
-    d = haversine_m(F.col("lat"), F.col("lon"), F.col("poi_lat"), F.col("poi_lon"))
-    w = Window.partitionBy("doc_id").orderBy(F.col("dist_m").asc(), F.col("poi_id").asc())
-    return (
-        cand.withColumn("dist_m", d)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 2)
-        .select("doc_id", "poi_id", "rank", F.round("dist_m", 3).alias("dist_m_r"))
-    )
-
-
-ORACLE_KNN = (
-    f"WITH pts AS ({_pts_sql('orders', 'o_orderkey')}), "
-    f"c AS (SELECT doc_id, poi_id, {_haversine_sql('lat', 'lon', 'poi_lat', 'poi_lon')} "
-    f"AS dist_m FROM pts CROSS JOIN {_POIS_SQL}) "
-    "SELECT doc_id, poi_id, CAST(row_number() OVER "
-    "(PARTITION BY doc_id ORDER BY dist_m ASC, poi_id ASC) AS BIGINT) AS rank, "
-    "round(dist_m, 3) AS dist_m_r FROM c "
-    "QUALIFY rank <= 2"
-)
 
 
 # ===========================================================================
@@ -2635,7 +2594,7 @@ ORACLE_COSINE_TOPK = (
 
 
 # ===========================================================================
-# 11. Non-SQL-expressible operators (driver records rows-only checks)
+# 11. Kernel-backed operators (LSH, ANN, geodesic, DE-9IM): oracles replay the kernels
 # ===========================================================================
 
 
@@ -10338,593 +10297,276 @@ ORACLE_DOMINANT_SUPPLIERS = (
 # Catalog
 # ===========================================================================
 
-# Ordering note (r2 verdict item 8): the driver's correctness pass walks
-# this dict in order and may stop on a time budget — CORRECTNESS_r02
-# covered only the first 50.  Queries the driver has NOT yet recorded
-# (added late in r2 or new in r3) therefore come FIRST.
-QUERIES = {
-    "audience_overlap": q_audience_overlap,
-    "series_peaks": q_series_peaks,
-    "markov_stationary": q_markov_stationary,
-    "seasonality_profile": q_seasonality_profile,
-    "assortativity": q_assortativity,
-    "mad_outliers": q_mad_outliers,
-    "anomaly_drilldown": q_anomaly_drilldown,
-    "leadlag_xcorr": q_leadlag_xcorr,
-    "path_trigrams": q_path_trigrams,
-    "variogram": q_variogram,
-    "gap_fill": q_gap_fill,
-    "survival_km": q_survival_km,
-    "haar_multires": q_haar_multires,
-    "zipf_fit": q_zipf_fit,
-    "kcore": q_kcore,
-    "ewma_chart": q_ewma_chart,
-    "common_neighbors": q_common_neighbors,
-    "token_bursts": q_token_bursts,
-    "acf_profile": q_acf_profile,
-    "theil_sen": q_theil_sen,
-    "cdc_apply": q_cdc_apply,
-    "hausdorff_routes": q_hausdorff_routes,
-    "voronoi_stats": q_voronoi_stats,
-    "hex_bin": q_hex_bin,
-    "moran_events": q_moran_events,
-    "hotspot_gi": q_hotspot_gi,
-    "rate_anomaly": q_rate_anomaly,
-    "pmi_collocations": q_pmi_collocations,
-    "basket_pairs": q_basket_pairs,
-    "quantile_calibration": q_quantile_calibration,
-    "trend_test": q_trend_test,
-    "revenue_gini": q_revenue_gini,
-    "benford_audit": q_benford_audit,
-    "kernel_density": q_kernel_density,
-    "emerging_hotspots": q_emerging_hotspots,
-    "coverage_gaps": q_coverage_gaps,
-    "cusum_alarm": q_cusum_alarm,
-    "readability": q_readability,
-    "media_reuse": q_media_reuse,
-    "attribution": q_attribution,
-    "zonal_majority": q_zonal_majority,
-    "behavior_entropy": q_behavior_entropy,
-    "scd2_build": q_scd2_build,
-    "snapshot_diff": q_snapshot_diff,
-    "kmv_vocab": q_kmv_vocab,
-    "kmv_overlap": q_kmv_overlap,
-    "pareto_parts": q_pareto_parts,
-    "track_cells": q_track_cells,
-    "fuzzy_name_pairs": q_fuzzy_name_pairs,
-    "grid_clusters": q_grid_clusters,
-    "heavy_hitters": q_heavy_hitters,
-    "linestatus_priority": q_linestatus_priority,
-    "dominant_suppliers": q_dominant_suppliers,
-    "containment_pairs": q_containment_pairs,
-    "source_kl": q_source_kl,
-    "clustering_coeff": q_clustering_coeff,
-    "robust_stats": q_robust_stats,
-    "integrity_audit": q_integrity_audit,
-    "zonal_weighted": q_zonal_weighted,
-    "geohash_cells": q_geohash_cells,
-    "embedding_stats": q_embedding_stats,
-    "resample_track": q_resample_track,
-    "rolling_revenue": q_rolling_revenue,
-    "customer_quartiles": q_customer_quartiles,
-    "event_transitions": q_event_transitions,
-    "event_funnel": q_event_funnel,
-    "retention_cohorts": q_retention_cohorts,
-    "source_overlap": q_source_overlap,
-    "geodesic_area": q_geodesic_area,
-    "ohlc_bars": q_ohlc_bars,
-    "hotspot_cells": q_hotspot_cells,
-    "bearing_histogram": q_bearing_histogram,
-    "triangle_counts": q_triangle_counts,
-    "idw_interpolate": q_idw_interpolate,
-    "polygon_measures": q_polygon_measures,
-    "focal_mean": q_focal_mean,
-    "forecast_revenue": q_forecast_revenue,
-    "returned_items": q_returned_items,
-    "important_parts": q_important_parts,
-    "supplier_part_counts": q_supplier_part_counts,
-    "small_quantity_revenue": q_small_quantity_revenue,
-    "large_volume_customers": q_large_volume_customers,
-    "nation_trade_volume": q_nation_trade_volume,
-    "market_share": q_market_share,
-    "product_profit": q_product_profit,
-    "promo_revenue": q_promo_revenue,
-    "weighted_sample": q_weighted_sample,
-    "token_entropy": q_token_entropy,
-    "hull_perimeter": q_hull_perimeter,
-    "lm_logloss": q_lm_logloss,
-    "map_match": q_map_match,
-    "pack_sequences": q_pack_sequences,
-    "bloom_join": q_bloom_join,
-    "bm25_topk": q_bm25_topk,
-    "tile_pyramid": q_tile_pyramid,
-    "order_priority_check": q_order_priority_check,
-    "waiting_suppliers": q_waiting_suppliers,
-    "idle_customers": q_idle_customers,
-    "cheapest_supplier": q_cheapest_supplier,
-    "ann_topk_int8": q_ann_topk_int8,
-    "customer_distribution": q_customer_distribution,
-    "render_interleaved": q_render_interleaved,
-    "discount_revenue_brands": q_discount_revenue_brands,
-    "top_supplier": q_top_supplier,
-    "pricing_rollup": q_pricing_rollup,
-    "shipping_priority": q_shipping_priority,
-    "trajectory_length": q_trajectory_length,
-    "staypoints": q_staypoints,
-    "track_simplify": q_track_simplify,
-    "simplify_error": q_simplify_error,
-    "od_matrix": q_od_matrix,
-    "stay_zones": q_stay_zones,
-    "speed_spikes": q_speed_spikes,
-    "colocation": q_colocation,
-    "interval_coverage": q_interval_coverage,
-    "oov_rate": q_oov_rate,
-    "minhash_est_jaccard": q_minhash_est_jaccard,
-    "span_compact": q_span_compact,
-    "selfsim": q_selfsim,
-    "keeper_election": q_keeper_election,
-    "line_dedup": q_line_dedup,
-    "chunk_sliding": q_chunk_sliding,
-    "pagerank": q_pagerank,
-    "budget_pack": q_budget_pack,
-    "mix_resample": q_mix_resample,
-    "hll_distinct": q_hll_distinct,
-    "cms_vocab": q_cms_vocab,
-    "bloom_dedup": q_bloom_dedup,
-    "inverted_index": q_inverted_index,
-    "kmeans_clusters": q_kmeans_clusters,
-    "cluster_balanced_sample": q_cluster_balanced_sample,
-    "tfidf_topk": q_tfidf_topk,
-    "lsh_band_index": q_lsh_band_index,
-    "lsh_band_index_arrow": q_lsh_band_index_arrow,
-    "vocab_topk": q_vocab_topk,
-    "length_percentiles": q_length_percentiles,
-    "group_quantiles": q_group_quantiles,
-    "length_histogram": q_length_histogram,
-    "stratified_sample": q_stratified_sample,
-    "curation_funnel": q_curation_funnel,
-    "split_assign": q_split_assign,
-    "repetition": q_repetition,
-    "pii_scan": q_pii_scan,
-    "url_domains": q_url_domains,
-    "decontaminate": q_decontaminate,
-    "heavy_shingles": q_heavy_shingles,
-    "asof_join": q_asof_join,
-    "dup_components": q_dup_components,
-    "gml_to_temporal": q_gml_to_temporal,
-    "media_frames": q_media_frames,
-    "ann_topk": q_ann_topk,
-    "ann_topk_ivf": q_ann_topk_ivf,
-    "ann_topk_ivf_int8": q_ann_topk_ivf_int8,
-    "ann_topk_pq": q_ann_topk_pq,
-    "ann_topk_ivf_pq": q_ann_topk_ivf_pq,
-    "geometry_join_lines": q_geometry_join_lines,
-    "geometry_join_polys": q_geometry_join_polys,
-    "geometry_join_within": q_geometry_join_within,
-    "geometry_join_crosses": q_geometry_join_crosses,
-    "geometry_join_equals": q_geometry_join_equals,
-    "geometry_join_multi": q_geometry_join_multi,
-    "spatial_predicates": q_spatial_predicates,
-    "antipodal_envelope": q_antipodal_envelope,
-    "coalesce_boxes": q_coalesce_boxes,
-    "crs_domain": q_crs_domain,
-    "cell_histogram": q_cell_histogram,
-    "skew_report": q_skew_report,
-    "pip_salted_shuffle": q_pip_salted_shuffle,
-    "dwithin_zones": q_dwithin_zones,
-    "beyond_zones": q_beyond_zones,
+
+class Entry(NamedTuple):
+    """One catalog query: its function, its DuckDB oracle SQL, and whether
+    bench.py times it.  The query's name is the function's minus ``q_``."""
+
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    bench: bool = False
+
+    @property
+    def name(self) -> str:
+        return self.build.__name__.removeprefix("q_")
+
+
+# The one hand-kept list of queries, in definition order; QUERIES,
+# ORACLES and bench.BENCH_QUERIES are all derived from it.
+CATALOG = (
+    Entry(q_tile_assign, ORACLE_TILE_ASSIGN, bench=True),
+    Entry(q_pip_convex, ORACLE_PIP_CONVEX, bench=True),
+    Entry(q_interleaved_tile_pip, ORACLE_INTERLEAVED, bench=True),
+    # GML-encoded flagship: must produce the identical match set
+    Entry(q_interleaved_gml_pip, ORACLE_INTERLEAVED),
+    Entry(q_dwithin_zones, _oracle_dwithin_zones(), bench=True),
+    Entry(q_beyond_zones, _oracle_beyond_zones()),
+    Entry(q_envelope_agg, ORACLE_ENVELOPE_AGG, bench=True),
+    Entry(q_envelope_gml_2dp, ORACLE_ENVELOPE_GML_2DP),
+    Entry(q_envelope_kvp, ORACLE_ENVELOPE_KVP),
+    Entry(q_antipode, ORACLE_ANTIPODE),
+    Entry(q_crs_abbrev, ORACLE_CRS_ABBREV),
+    Entry(q_srs_to_urn, ORACLE_SRS_TO_URN),
+    Entry(q_ucum_length, ORACLE_UCUM_LENGTH),
+    Entry(q_trajectory_length, _oracle_trajectory_length()),
+    Entry(q_staypoints, ORACLE_STAYPOINTS, bench=True),
+    Entry(q_od_matrix, ORACLE_OD_MATRIX, bench=True),
+    Entry(q_stay_zones, ORACLE_STAY_ZONES, bench=True),
+    Entry(q_track_simplify, ORACLE_TRACK_SIMPLIFY, bench=True),
+    Entry(q_simplify_error, ORACLE_SIMPLIFY_ERROR, bench=True),
+    Entry(q_speed_spikes, ORACLE_SPEED_SPIKES, bench=True),
+    Entry(q_colocation, ORACLE_COLOCATION, bench=True),
+    Entry(q_interval_coverage, ORACLE_INTERVAL_COVERAGE),
+    Entry(q_temporal_during, ORACLE_TEMPORAL_DURING, bench=True),
+    Entry(q_temporal_extent, ORACLE_TEMPORAL_EXTENT),
+    Entry(q_split_interval, ORACLE_SPLIT_INTERVAL),
+    Entry(q_temporal_relations_all, ORACLE_TEMPORAL_RELATIONS_ALL),
+    Entry(q_temporal_rank, ORACLE_TEMPORAL_RANK),
+    Entry(q_asof_join, ORACLE_ASOF_JOIN),
+    Entry(q_pricing_summary, ORACLE_PRICING_SUMMARY, bench=True),
+    Entry(q_revenue_by_nation, ORACLE_REVENUE_BY_NATION, bench=True),
+    Entry(q_session_windows, ORACLE_SESSION_WINDOWS),
+    Entry(q_window_running, ORACLE_WINDOW_RUNNING, bench=True),
+    Entry(q_zonal_pairs, ORACLE_ZONAL_PAIRS),
+    Entry(q_zonal_stats, ORACLE_ZONAL_STATS, bench=True),
+    Entry(q_exact_dup_groups, ORACLE_EXACT_DUP_GROUPS),
+    Entry(q_ngram_jaccard, ORACLE_NGRAM_JACCARD, bench=True),
+    Entry(q_dup_components, ORACLE_DUP_COMPONENTS),
+    Entry(q_keeper_election, ORACLE_KEEPER_ELECTION),
+    Entry(q_decontaminate, ORACLE_DECONTAMINATE, bench=True),
+    Entry(q_heavy_shingles, ORACLE_HEAVY_SHINGLES, bench=True),
+    Entry(q_line_dedup, ORACLE_LINE_DEDUP, bench=True),
+    Entry(q_chunk_sliding, ORACLE_CHUNK_SLIDING, bench=True),
+    Entry(q_span_compact, ORACLE_SPAN_COMPACT, bench=True),
+    Entry(q_selfsim, ORACLE_SELFSIM, bench=True),
+    Entry(q_lsh_band_index, ORACLE_LSH_BAND_INDEX),
+    Entry(q_lsh_band_index_arrow, ORACLE_LSH_BAND_INDEX, bench=True),
+    Entry(q_tfidf_topk, ORACLE_TFIDF_TOPK, bench=True),
+    Entry(q_oov_rate, ORACLE_OOV_RATE),
+    Entry(q_vocab_topk, ORACLE_VOCAB_TOPK, bench=True),
+    Entry(q_length_percentiles, ORACLE_LENGTH_PERCENTILES),
+    Entry(q_length_histogram, ORACLE_LENGTH_HISTOGRAM),
+    Entry(q_group_quantiles, ORACLE_GROUP_QUANTILES, bench=True),
+    Entry(q_split_assign, ORACLE_SPLIT_ASSIGN),
+    Entry(q_repetition, ORACLE_REPETITION, bench=True),
+    Entry(q_pii_scan, ORACLE_PII_SCAN, bench=True),
+    Entry(q_url_domains, ORACLE_URL_DOMAINS),
+    Entry(q_stratified_sample, ORACLE_STRATIFIED_SAMPLE),
+    Entry(q_curation_funnel, ORACLE_CURATION_FUNNEL, bench=True),
+    Entry(q_token_counts, ORACLE_TOKEN_COUNTS),
+    Entry(q_lang_id, ORACLE_LANG_ID),
+    Entry(q_quality_score, ORACLE_QUALITY_SCORE, bench=True),
+    Entry(q_fingerprint, ORACLE_FINGERPRINT, bench=True),
+    Entry(q_cosine_topk, ORACLE_COSINE_TOPK, bench=True),
+    Entry(q_kmeans_clusters, ORACLE_KMEANS_CLUSTERS, bench=True),
+    Entry(q_cluster_balanced_sample, ORACLE_CLUSTER_BALANCED_SAMPLE),
+    Entry(q_minhash_lsh, _oracle_minhash_lsh(), bench=True),
+    Entry(q_minhash_lsh_fast, ORACLE_MINHASH_FAST_CONTRACT, bench=True),
+    Entry(q_minhash_est_jaccard, _oracle_minhash_est_jaccard()),
+    Entry(q_simhash_neardups, _oracle_simhash_neardups(), bench=True),
+    Entry(q_simhash_neardups_fast, ORACLE_SIMHASH_FAST_CONTRACT, bench=True),
+    Entry(q_minhash_fast_planted, ORACLE_MINHASH_FAST_PLANTED),
+    Entry(q_simhash_fast_planted, ORACLE_SIMHASH_FAST_PLANTED),
+    Entry(q_ann_topk, _ANN_PLANTED_SQL, bench=True),
+    Entry(q_ann_topk_ivf, _ANN_PLANTED_SQL),
+    Entry(q_ann_topk_int8, _ANN_PLANTED_SQL, bench=True),
+    Entry(q_ann_topk_ivf_int8, _ANN_PLANTED_SQL, bench=True),
+    Entry(q_ann_topk_pq, _ANN_PLANTED_SQL, bench=True),
+    Entry(q_ann_topk_ivf_pq, _ANN_PLANTED_SQL, bench=True),
+    Entry(q_embedding_neardups, ORACLE_EMBEDDING_NEARDUPS, bench=True),
+    Entry(q_semantic_dedup, _oracle_semantic_dedup(), bench=True),
+    Entry(q_dwithin_exact, _oracle_dwithin_exact(), bench=True),
+    Entry(q_knn_cellring, _oracle_knn_cellring(), bench=True),
+    Entry(q_multimodal_features, ORACLE_MULTIMODAL_FEATURES),
+    Entry(q_media_frames, ORACLE_MEDIA_FRAMES),
     # span-sequence invariant: must be the empty set (oracle = empty)
-    "span_invariant": q_span_invariant,
-    # --- driver-covered since r2 below ---
-    "tile_assign": q_tile_assign,
-    "pip_convex": q_pip_convex,
-    "interleaved_tile_pip": q_interleaved_tile_pip,
-    "interleaved_gml_pip": q_interleaved_gml_pip,
-    "dwithin": q_dwithin,
-    "knn": q_knn,
-    "envelope_agg": q_envelope_agg,
-    "envelope_gml_2dp": q_envelope_gml_2dp,
-    "envelope_kvp": q_envelope_kvp,
-    "antipode": q_antipode,
-    "crs_abbrev": q_crs_abbrev,
-    "srs_to_urn": q_srs_to_urn,
-    "ucum_length": q_ucum_length,
-    "temporal_during": q_temporal_during,
-    "temporal_extent": q_temporal_extent,
-    "split_interval": q_split_interval,
-    "temporal_relations_all": q_temporal_relations_all,
-    "temporal_rank": q_temporal_rank,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "window_running": q_window_running,
-    "session_windows": q_session_windows,
-    "zonal_pairs": q_zonal_pairs,
-    "zonal_stats": q_zonal_stats,
-    "exact_dup_groups": q_exact_dup_groups,
-    "ngram_jaccard": q_ngram_jaccard,
-    "token_counts": q_token_counts,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "fingerprint": q_fingerprint,
-    "cosine_topk": q_cosine_topk,
-    "gml_decode": q_gml_decode,
-    "gml_envelope": q_gml_envelope,
-    "gml_arc_decode": q_gml_arc_decode,
-    "min_curve_segment_length": q_min_curve_segment_length,
-    "create_envelope_parse": q_create_envelope_parse,
-    "beyond": q_beyond,
-    "dwithin_exact": q_dwithin_exact,
-    "knn_cellring": q_knn_cellring,
-    "geodesic_destination": q_geodesic_destination,
-    "crs_roundtrip_utm": q_crs_roundtrip_utm,
-    "arc_densify": q_arc_densify,
-    "ring_dedupe_ppm": q_ring_dedupe_ppm,
-    "minhash_lsh": q_minhash_lsh,
-    "embedding_neardups": q_embedding_neardups,
-    "semantic_dedup": q_semantic_dedup,
-    "multimodal_features": q_multimodal_features,
-    "convex_hull_groups": q_convex_hull_groups,
-    "simhash_neardups": q_simhash_neardups,
-    # rows-only (Spark-xxhash64 lanes — no SQL mirror exists; each is
-    # pytest-asserted equal to its md5-lane oracle twin on planted pairs)
-    "minhash_lsh_fast": q_minhash_lsh_fast,
-    "simhash_neardups_fast": q_simhash_neardups_fast,
-    # planted-ground-truth driver rows for the xxhash64 production paths
-    "minhash_fast_planted": q_minhash_fast_planted,
-    "simhash_fast_planted": q_simhash_fast_planted,
-}
+    Entry(q_span_invariant, ORACLE_SPAN_INVARIANT),
+    Entry(q_geodesic_destination, _oracle_geodesic_destination()),
+    Entry(q_crs_roundtrip_utm, _oracle_crs_roundtrip_utm()),
+    Entry(q_arc_densify, _oracle_arc_densify()),
+    Entry(q_convex_hull_groups, ORACLE_CONVEX_HULL_GROUPS),
+    Entry(q_ring_dedupe_ppm, ORACLE_RING_DEDUPE_PPM),
+    Entry(q_beyond, _oracle_beyond()),
+    Entry(q_antipodal_envelope, ORACLE_ANTIPODAL_ENVELOPE),
+    Entry(q_coalesce_boxes, _oracle_coalesce_boxes()),
+    Entry(q_crs_domain, ORACLE_CRS_DOMAIN),
+    Entry(q_pip_salted_shuffle, ORACLE_PIP_CONVEX, bench=True),
+    Entry(q_geometry_join_lines, ORACLE_GEOMETRY_JOIN_LINES, bench=True),
+    Entry(q_geometry_join_polys, ORACLE_GEOMETRY_JOIN_POLYS),
+    Entry(q_geometry_join_crosses, ORACLE_GEOMETRY_JOIN_CROSSES),
+    Entry(q_geometry_join_within, ORACLE_GEOMETRY_JOIN_WITHIN),
+    Entry(q_geometry_join_equals, ORACLE_GEOMETRY_JOIN_EQUALS),
+    Entry(q_geometry_join_multi, ORACLE_GEOMETRY_JOIN_MULTI),
+    Entry(q_cell_histogram, ORACLE_CELL_HISTOGRAM),
+    Entry(q_skew_report, ORACLE_SKEW_REPORT),
+    Entry(q_spatial_predicates, ORACLE_SPATIAL_PREDICATES),
+    Entry(q_gml_decode, ORACLE_GML_DECODE, bench=True),
+    Entry(q_gml_envelope, ORACLE_GML_ENVELOPE),
+    Entry(q_gml_arc_decode, _oracle_gml_arc_decode()),
+    Entry(q_min_curve_segment_length, ORACLE_MIN_CURVE_SEGMENT_LENGTH),
+    Entry(q_create_envelope_parse, ORACLE_CREATE_ENVELOPE_PARSE),
+    Entry(q_gml_to_temporal, ORACLE_GML_TO_TEMPORAL),
+    Entry(q_hll_distinct, ORACLE_HLL_DISTINCT, bench=True),
+    Entry(q_cms_vocab, ORACLE_CMS_VOCAB, bench=True),
+    Entry(q_heavy_hitters, ORACLE_HEAVY_HITTERS, bench=True),
+    Entry(q_pareto_parts, ORACLE_PARETO_PARTS, bench=True),
+    Entry(q_track_cells, ORACLE_TRACK_CELLS, bench=True),
+    Entry(q_fuzzy_name_pairs, ORACLE_FUZZY_NAME_PAIRS, bench=True),
+    Entry(q_moran_events, ORACLE_MORAN_EVENTS, bench=True),
+    Entry(q_hotspot_gi, ORACLE_HOTSPOT_GI, bench=True),
+    Entry(q_rate_anomaly, ORACLE_RATE_ANOMALY, bench=True),
+    Entry(q_pmi_collocations, ORACLE_PMI_COLLOCATIONS, bench=True),
+    Entry(q_basket_pairs, ORACLE_BASKET_PAIRS, bench=True),
+    Entry(q_quantile_calibration, ORACLE_QUANTILE_CALIBRATION, bench=True),
+    Entry(q_trend_test, ORACLE_TREND_TEST, bench=True),
+    Entry(q_revenue_gini, ORACLE_REVENUE_GINI, bench=True),
+    Entry(q_benford_audit, ORACLE_BENFORD_AUDIT, bench=True),
+    Entry(q_kernel_density, ORACLE_KERNEL_DENSITY, bench=True),
+    Entry(q_emerging_hotspots, ORACLE_EMERGING_HOTSPOTS, bench=True),
+    Entry(q_coverage_gaps, ORACLE_COVERAGE_GAPS, bench=True),
+    Entry(q_cusum_alarm, ORACLE_CUSUM_ALARM, bench=True),
+    Entry(q_readability, ORACLE_READABILITY, bench=True),
+    Entry(q_media_reuse, ORACLE_MEDIA_REUSE, bench=True),
+    Entry(q_attribution, ORACLE_ATTRIBUTION, bench=True),
+    Entry(q_zonal_majority, ORACLE_ZONAL_MAJORITY, bench=True),
+    Entry(q_behavior_entropy, ORACLE_BEHAVIOR_ENTROPY, bench=True),
+    Entry(q_hausdorff_routes, ORACLE_HAUSDORFF_ROUTES, bench=True),
+    Entry(q_voronoi_stats, ORACLE_VORONOI_STATS, bench=True),
+    Entry(q_hex_bin, ORACLE_HEX_BIN, bench=True),
+    Entry(q_audience_overlap, ORACLE_AUDIENCE_OVERLAP, bench=True),
+    Entry(q_series_peaks, ORACLE_SERIES_PEAKS, bench=True),
+    Entry(q_markov_stationary, _oracle_markov_stationary(), bench=True),
+    Entry(q_seasonality_profile, ORACLE_SEASONALITY_PROFILE, bench=True),
+    Entry(q_assortativity, ORACLE_ASSORTATIVITY, bench=True),
+    Entry(q_mad_outliers, ORACLE_MAD_OUTLIERS, bench=True),
+    Entry(q_anomaly_drilldown, ORACLE_ANOMALY_DRILLDOWN, bench=True),
+    Entry(q_leadlag_xcorr, ORACLE_LEADLAG_XCORR, bench=True),
+    Entry(q_path_trigrams, ORACLE_PATH_TRIGRAMS, bench=True),
+    Entry(q_variogram, ORACLE_VARIOGRAM, bench=True),
+    Entry(q_gap_fill, ORACLE_GAP_FILL, bench=True),
+    Entry(q_survival_km, ORACLE_SURVIVAL_KM, bench=True),
+    Entry(q_haar_multires, ORACLE_HAAR_MULTIRES, bench=True),
+    Entry(q_zipf_fit, ORACLE_ZIPF_FIT, bench=True),
+    Entry(q_kcore, _oracle_kcore(), bench=True),
+    Entry(q_ewma_chart, ORACLE_EWMA_CHART, bench=True),
+    Entry(q_common_neighbors, ORACLE_COMMON_NEIGHBORS, bench=True),
+    Entry(q_token_bursts, ORACLE_TOKEN_BURSTS, bench=True),
+    Entry(q_acf_profile, ORACLE_ACF_PROFILE, bench=True),
+    Entry(q_theil_sen, ORACLE_THEIL_SEN, bench=True),
+    Entry(q_cdc_apply, ORACLE_CDC_APPLY, bench=True),
+    Entry(q_scd2_build, ORACLE_SCD2_BUILD, bench=True),
+    Entry(q_snapshot_diff, ORACLE_SNAPSHOT_DIFF, bench=True),
+    Entry(q_kmv_vocab, ORACLE_KMV_VOCAB, bench=True),
+    Entry(q_kmv_overlap, ORACLE_KMV_OVERLAP, bench=True),
+    Entry(q_grid_clusters, ORACLE_GRID_CLUSTERS, bench=True),
+    Entry(q_bloom_dedup, ORACLE_BLOOM_DEDUP),
+    Entry(q_inverted_index, ORACLE_INVERTED_INDEX, bench=True),
+    Entry(q_pagerank, _oracle_pagerank(), bench=True),
+    Entry(q_budget_pack, ORACLE_BUDGET_PACK, bench=True),
+    Entry(q_mix_resample, ORACLE_MIX_RESAMPLE),
+    Entry(q_bloom_join, ORACLE_BLOOM_JOIN, bench=True),
+    Entry(q_pricing_rollup, ORACLE_PRICING_ROLLUP, bench=True),
+    Entry(q_shipping_priority, ORACLE_SHIPPING_PRIORITY, bench=True),
+    Entry(q_tile_pyramid, ORACLE_TILE_PYRAMID, bench=True),
+    Entry(q_order_priority_check, ORACLE_ORDER_PRIORITY_CHECK, bench=True),
+    Entry(q_waiting_suppliers, ORACLE_WAITING_SUPPLIERS, bench=True),
+    Entry(q_idle_customers, ORACLE_IDLE_CUSTOMERS, bench=True),
+    Entry(q_cheapest_supplier, ORACLE_CHEAPEST_SUPPLIER),
+    Entry(q_customer_distribution, ORACLE_CUSTOMER_DISTRIBUTION, bench=True),
+    Entry(q_top_supplier, ORACLE_TOP_SUPPLIER, bench=True),
+    Entry(q_render_interleaved, ORACLE_RENDER_INTERLEAVED, bench=True),
+    Entry(q_discount_revenue_brands, ORACLE_DISCOUNT_REVENUE_BRANDS),
+    Entry(q_bm25_topk, ORACLE_BM25_TOPK, bench=True),
+    Entry(q_small_quantity_revenue, ORACLE_SMALL_QUANTITY_REVENUE, bench=True),
+    Entry(q_large_volume_customers, ORACLE_LARGE_VOLUME_CUSTOMERS, bench=True),
+    Entry(q_nation_trade_volume, ORACLE_NATION_TRADE_VOLUME, bench=True),
+    Entry(q_market_share, ORACLE_MARKET_SHARE, bench=True),
+    Entry(q_product_profit, ORACLE_PRODUCT_PROFIT, bench=True),
+    Entry(q_promo_revenue, ORACLE_PROMO_REVENUE, bench=True),
+    Entry(q_weighted_sample, ORACLE_WEIGHTED_SAMPLE, bench=True),
+    Entry(q_token_entropy, ORACLE_TOKEN_ENTROPY, bench=True),
+    Entry(q_hull_perimeter, ORACLE_HULL_PERIMETER, bench=True),
+    Entry(q_lm_logloss, ORACLE_LM_LOGLOSS, bench=True),
+    Entry(q_pack_sequences, ORACLE_PACK_SEQUENCES, bench=True),
+    Entry(q_map_match, _oracle_map_match(), bench=True),
+    Entry(q_ohlc_bars, ORACLE_OHLC_BARS, bench=True),
+    Entry(q_hotspot_cells, ORACLE_HOTSPOT_CELLS, bench=True),
+    Entry(q_bearing_histogram, ORACLE_BEARING_HISTOGRAM, bench=True),
+    Entry(q_triangle_counts, ORACLE_TRIANGLE_COUNTS, bench=True),
+    Entry(q_idw_interpolate, ORACLE_IDW_INTERPOLATE, bench=True),
+    Entry(q_polygon_measures, ORACLE_POLYGON_MEASURES, bench=True),
+    Entry(q_containment_pairs, ORACLE_CONTAINMENT_PAIRS, bench=True),
+    Entry(q_source_kl, ORACLE_SOURCE_KL, bench=True),
+    Entry(q_clustering_coeff, ORACLE_CLUSTERING_COEFF, bench=True),
+    Entry(q_robust_stats, ORACLE_ROBUST_STATS, bench=True),
+    Entry(q_integrity_audit, ORACLE_INTEGRITY_AUDIT, bench=True),
+    Entry(q_zonal_weighted, ORACLE_ZONAL_WEIGHTED, bench=True),
+    Entry(q_geohash_cells, _oracle_geohash_cells(), bench=True),
+    Entry(q_embedding_stats, ORACLE_EMBEDDING_STATS, bench=True),
+    Entry(q_resample_track, ORACLE_RESAMPLE_TRACK, bench=True),
+    Entry(q_rolling_revenue, ORACLE_ROLLING_REVENUE, bench=True),
+    Entry(q_customer_quartiles, ORACLE_CUSTOMER_QUARTILES, bench=True),
+    Entry(q_event_transitions, ORACLE_EVENT_TRANSITIONS, bench=True),
+    Entry(q_event_funnel, ORACLE_EVENT_FUNNEL, bench=True),
+    Entry(q_retention_cohorts, ORACLE_RETENTION_COHORTS, bench=True),
+    Entry(q_source_overlap, ORACLE_SOURCE_OVERLAP, bench=True),
+    Entry(q_geodesic_area, _oracle_geodesic_area(), bench=True),
+    Entry(q_focal_mean, ORACLE_FOCAL_MEAN, bench=True),
+    Entry(q_forecast_revenue, ORACLE_FORECAST_REVENUE, bench=True),
+    Entry(q_returned_items, ORACLE_RETURNED_ITEMS, bench=True),
+    Entry(q_important_parts, ORACLE_IMPORTANT_PARTS, bench=True),
+    Entry(q_supplier_part_counts, ORACLE_SUPPLIER_PART_COUNTS, bench=True),
+    Entry(q_linestatus_priority, ORACLE_LINESTATUS_PRIORITY, bench=True),
+    Entry(q_dominant_suppliers, ORACLE_DOMINANT_SUPPLIERS, bench=True),
+)
 
-ORACLES = {
-    "audience_overlap": ORACLE_AUDIENCE_OVERLAP,
-    "series_peaks": ORACLE_SERIES_PEAKS,
-    "markov_stationary": _oracle_markov_stationary(),
-    "seasonality_profile": ORACLE_SEASONALITY_PROFILE,
-    "assortativity": ORACLE_ASSORTATIVITY,
-    "mad_outliers": ORACLE_MAD_OUTLIERS,
-    "anomaly_drilldown": ORACLE_ANOMALY_DRILLDOWN,
-    "leadlag_xcorr": ORACLE_LEADLAG_XCORR,
-    "path_trigrams": ORACLE_PATH_TRIGRAMS,
-    "variogram": ORACLE_VARIOGRAM,
-    "gap_fill": ORACLE_GAP_FILL,
-    "survival_km": ORACLE_SURVIVAL_KM,
-    "haar_multires": ORACLE_HAAR_MULTIRES,
-    "zipf_fit": ORACLE_ZIPF_FIT,
-    "kcore": _oracle_kcore(),
-    "ewma_chart": ORACLE_EWMA_CHART,
-    "common_neighbors": ORACLE_COMMON_NEIGHBORS,
-    "token_bursts": ORACLE_TOKEN_BURSTS,
-    "acf_profile": ORACLE_ACF_PROFILE,
-    "theil_sen": ORACLE_THEIL_SEN,
-    "cdc_apply": ORACLE_CDC_APPLY,
-    "hausdorff_routes": ORACLE_HAUSDORFF_ROUTES,
-    "voronoi_stats": ORACLE_VORONOI_STATS,
-    "hex_bin": ORACLE_HEX_BIN,
-    "trajectory_length": _oracle_trajectory_length(),
-    "staypoints": ORACLE_STAYPOINTS,
-    "track_simplify": ORACLE_TRACK_SIMPLIFY,
-    "simplify_error": ORACLE_SIMPLIFY_ERROR,
-    "od_matrix": ORACLE_OD_MATRIX,
-    "stay_zones": ORACLE_STAY_ZONES,
-    "speed_spikes": ORACLE_SPEED_SPIKES,
-    "colocation": ORACLE_COLOCATION,
-    "interval_coverage": ORACLE_INTERVAL_COVERAGE,
-    "oov_rate": ORACLE_OOV_RATE,
-    "minhash_est_jaccard": _oracle_minhash_est_jaccard(),
-    "span_compact": ORACLE_SPAN_COMPACT,
-    "selfsim": ORACLE_SELFSIM,
-    "keeper_election": ORACLE_KEEPER_ELECTION,
-    "line_dedup": ORACLE_LINE_DEDUP,
-    "chunk_sliding": ORACLE_CHUNK_SLIDING,
-    "pagerank": _oracle_pagerank(),
-    "budget_pack": ORACLE_BUDGET_PACK,
-    "mix_resample": ORACLE_MIX_RESAMPLE,
-    "hll_distinct": ORACLE_HLL_DISTINCT,
-    "cms_vocab": ORACLE_CMS_VOCAB,
-    "bloom_dedup": ORACLE_BLOOM_DEDUP,
-    "inverted_index": ORACLE_INVERTED_INDEX,
-    "kmeans_clusters": ORACLE_KMEANS_CLUSTERS,
-    "cluster_balanced_sample": ORACLE_CLUSTER_BALANCED_SAMPLE,
-    "tfidf_topk": ORACLE_TFIDF_TOPK,
-    "lsh_band_index": ORACLE_LSH_BAND_INDEX,
-    "lsh_band_index_arrow": ORACLE_LSH_BAND_INDEX,
-    "vocab_topk": ORACLE_VOCAB_TOPK,
-    "length_percentiles": ORACLE_LENGTH_PERCENTILES,
-    "group_quantiles": ORACLE_GROUP_QUANTILES,
-    "length_histogram": ORACLE_LENGTH_HISTOGRAM,
-    "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-    "curation_funnel": ORACLE_CURATION_FUNNEL,
-    "split_assign": ORACLE_SPLIT_ASSIGN,
-    "repetition": ORACLE_REPETITION,
-    "pii_scan": ORACLE_PII_SCAN,
-    "url_domains": ORACLE_URL_DOMAINS,
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "heavy_shingles": ORACLE_HEAVY_SHINGLES,
-    "asof_join": ORACLE_ASOF_JOIN,
-    "dup_components": ORACLE_DUP_COMPONENTS,
-    "tile_assign": ORACLE_TILE_ASSIGN,
-    "pip_convex": ORACLE_PIP_CONVEX,
-    "interleaved_tile_pip": ORACLE_INTERLEAVED,
-    # GML-encoded flagship must produce the identical match set
-    "interleaved_gml_pip": ORACLE_INTERLEAVED,
-    "dwithin": ORACLE_DWITHIN,
-    "knn": ORACLE_KNN,
-    "envelope_agg": ORACLE_ENVELOPE_AGG,
-    "envelope_gml_2dp": ORACLE_ENVELOPE_GML_2DP,
-    "envelope_kvp": ORACLE_ENVELOPE_KVP,
-    "antipode": ORACLE_ANTIPODE,
-    "crs_abbrev": ORACLE_CRS_ABBREV,
-    "srs_to_urn": ORACLE_SRS_TO_URN,
-    "ucum_length": ORACLE_UCUM_LENGTH,
-    "temporal_during": ORACLE_TEMPORAL_DURING,
-    "temporal_extent": ORACLE_TEMPORAL_EXTENT,
-    "split_interval": ORACLE_SPLIT_INTERVAL,
-    "temporal_relations_all": ORACLE_TEMPORAL_RELATIONS_ALL,
-    "temporal_rank": ORACLE_TEMPORAL_RANK,
-    "pricing_summary": ORACLE_PRICING_SUMMARY,
-    "revenue_by_nation": ORACLE_REVENUE_BY_NATION,
-    "window_running": ORACLE_WINDOW_RUNNING,
-    "session_windows": ORACLE_SESSION_WINDOWS,
-    "zonal_pairs": ORACLE_ZONAL_PAIRS,
-    "zonal_stats": ORACLE_ZONAL_STATS,
-    "exact_dup_groups": ORACLE_EXACT_DUP_GROUPS,
-    "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "token_counts": ORACLE_TOKEN_COUNTS,
-    "lang_id": ORACLE_LANG_ID,
-    "quality_score": ORACLE_QUALITY_SCORE,
-    "fingerprint": ORACLE_FINGERPRINT,
-    "cosine_topk": ORACLE_COSINE_TOPK,
-    "ann_topk": _ANN_PLANTED_SQL,
-    "ann_topk_ivf": _ANN_PLANTED_SQL,
-    "ann_topk_ivf_int8": _ANN_PLANTED_SQL,
-    "ann_topk_pq": _ANN_PLANTED_SQL,
-    "ann_topk_ivf_pq": _ANN_PLANTED_SQL,
-    "embedding_neardups": ORACLE_EMBEDDING_NEARDUPS,
-    "semantic_dedup": _oracle_semantic_dedup(),
-    "multimodal_features": ORACLE_MULTIMODAL_FEATURES,
-    "minhash_lsh": _oracle_minhash_lsh(),
-    "simhash_neardups": _oracle_simhash_neardups(),
-    "convex_hull_groups": ORACLE_CONVEX_HULL_GROUPS,
-    "gml_decode": ORACLE_GML_DECODE,
-    "gml_envelope": ORACLE_GML_ENVELOPE,
-    "gml_arc_decode": _oracle_gml_arc_decode(),
-    "min_curve_segment_length": ORACLE_MIN_CURVE_SEGMENT_LENGTH,
-    "create_envelope_parse": ORACLE_CREATE_ENVELOPE_PARSE,
-    "beyond": _oracle_beyond(),
-    "dwithin_exact": _oracle_dwithin_exact(),
-    "dwithin_zones": _oracle_dwithin_zones(),
-    "beyond_zones": _oracle_beyond_zones(),
-    "knn_cellring": _oracle_knn_cellring(),
-    "geodesic_destination": _oracle_geodesic_destination(),
-    "crs_roundtrip_utm": _oracle_crs_roundtrip_utm(),
-    "arc_densify": _oracle_arc_densify(),
-    "ring_dedupe_ppm": ORACLE_RING_DEDUPE_PPM,
-    "spatial_predicates": ORACLE_SPATIAL_PREDICATES,
-    "pip_salted_shuffle": ORACLE_PIP_CONVEX,
-    "antipodal_envelope": ORACLE_ANTIPODAL_ENVELOPE,
-    "coalesce_boxes": _oracle_coalesce_boxes(),
-    "crs_domain": ORACLE_CRS_DOMAIN,
-    "geometry_join_lines": ORACLE_GEOMETRY_JOIN_LINES,
-    "geometry_join_polys": ORACLE_GEOMETRY_JOIN_POLYS,
-    "geometry_join_within": ORACLE_GEOMETRY_JOIN_WITHIN,
-    "geometry_join_crosses": ORACLE_GEOMETRY_JOIN_CROSSES,
-    "geometry_join_equals": ORACLE_GEOMETRY_JOIN_EQUALS,
-    "geometry_join_multi": ORACLE_GEOMETRY_JOIN_MULTI,
-    "cell_histogram": ORACLE_CELL_HISTOGRAM,
-    "skew_report": ORACLE_SKEW_REPORT,
-    "gml_to_temporal": ORACLE_GML_TO_TEMPORAL,
-    "media_frames": ORACLE_MEDIA_FRAMES,
-    "span_invariant": ORACLE_SPAN_INVARIANT,
-    "minhash_fast_planted": ORACLE_MINHASH_FAST_PLANTED,
-    "minhash_lsh_fast": ORACLE_MINHASH_FAST_CONTRACT,
-    "simhash_neardups_fast": ORACLE_SIMHASH_FAST_CONTRACT,
-    "simhash_fast_planted": ORACLE_SIMHASH_FAST_PLANTED,
-    "bloom_join": ORACLE_BLOOM_JOIN,
-    "bm25_topk": ORACLE_BM25_TOPK,
-    "tile_pyramid": ORACLE_TILE_PYRAMID,
-    "order_priority_check": ORACLE_ORDER_PRIORITY_CHECK,
-    "waiting_suppliers": ORACLE_WAITING_SUPPLIERS,
-    "idle_customers": ORACLE_IDLE_CUSTOMERS,
-    "cheapest_supplier": ORACLE_CHEAPEST_SUPPLIER,
-    "ann_topk_int8": _ANN_PLANTED_SQL,
-    "customer_distribution": ORACLE_CUSTOMER_DISTRIBUTION,
-    "render_interleaved": ORACLE_RENDER_INTERLEAVED,
-    "discount_revenue_brands": ORACLE_DISCOUNT_REVENUE_BRANDS,
-    "top_supplier": ORACLE_TOP_SUPPLIER,
-    "pricing_rollup": ORACLE_PRICING_ROLLUP,
-    "shipping_priority": ORACLE_SHIPPING_PRIORITY,
-    "containment_pairs": ORACLE_CONTAINMENT_PAIRS,
-    "source_kl": ORACLE_SOURCE_KL,
-    "clustering_coeff": ORACLE_CLUSTERING_COEFF,
-    "robust_stats": ORACLE_ROBUST_STATS,
-    "integrity_audit": ORACLE_INTEGRITY_AUDIT,
-    "zonal_weighted": ORACLE_ZONAL_WEIGHTED,
-    "geohash_cells": _oracle_geohash_cells(),
-    "embedding_stats": ORACLE_EMBEDDING_STATS,
-    "resample_track": ORACLE_RESAMPLE_TRACK,
-    "rolling_revenue": ORACLE_ROLLING_REVENUE,
-    "customer_quartiles": ORACLE_CUSTOMER_QUARTILES,
-    "event_transitions": ORACLE_EVENT_TRANSITIONS,
-    "event_funnel": ORACLE_EVENT_FUNNEL,
-    "retention_cohorts": ORACLE_RETENTION_COHORTS,
-    "source_overlap": ORACLE_SOURCE_OVERLAP,
-    "geodesic_area": _oracle_geodesic_area(),
-    "ohlc_bars": ORACLE_OHLC_BARS,
-    "hotspot_cells": ORACLE_HOTSPOT_CELLS,
-    "bearing_histogram": ORACLE_BEARING_HISTOGRAM,
-    "triangle_counts": ORACLE_TRIANGLE_COUNTS,
-    "idw_interpolate": ORACLE_IDW_INTERPOLATE,
-    "polygon_measures": ORACLE_POLYGON_MEASURES,
-    "focal_mean": ORACLE_FOCAL_MEAN,
-    "forecast_revenue": ORACLE_FORECAST_REVENUE,
-    "linestatus_priority": ORACLE_LINESTATUS_PRIORITY,
-    "dominant_suppliers": ORACLE_DOMINANT_SUPPLIERS,
-    "heavy_hitters": ORACLE_HEAVY_HITTERS,
-    "grid_clusters": ORACLE_GRID_CLUSTERS,
-    "fuzzy_name_pairs": ORACLE_FUZZY_NAME_PAIRS,
-    "track_cells": ORACLE_TRACK_CELLS,
-    "pareto_parts": ORACLE_PARETO_PARTS,
-    "kmv_vocab": ORACLE_KMV_VOCAB,
-    "kmv_overlap": ORACLE_KMV_OVERLAP,
-    "scd2_build": ORACLE_SCD2_BUILD,
-    "snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-    "moran_events": ORACLE_MORAN_EVENTS,
-    "hotspot_gi": ORACLE_HOTSPOT_GI,
-    "rate_anomaly": ORACLE_RATE_ANOMALY,
-    "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
-    "basket_pairs": ORACLE_BASKET_PAIRS,
-    "quantile_calibration": ORACLE_QUANTILE_CALIBRATION,
-    "trend_test": ORACLE_TREND_TEST,
-    "revenue_gini": ORACLE_REVENUE_GINI,
-    "benford_audit": ORACLE_BENFORD_AUDIT,
-    "kernel_density": ORACLE_KERNEL_DENSITY,
-    "emerging_hotspots": ORACLE_EMERGING_HOTSPOTS,
-    "coverage_gaps": ORACLE_COVERAGE_GAPS,
-    "cusum_alarm": ORACLE_CUSUM_ALARM,
-    "readability": ORACLE_READABILITY,
-    "media_reuse": ORACLE_MEDIA_REUSE,
-    "attribution": ORACLE_ATTRIBUTION,
-    "zonal_majority": ORACLE_ZONAL_MAJORITY,
-    "behavior_entropy": ORACLE_BEHAVIOR_ENTROPY,
-    "returned_items": ORACLE_RETURNED_ITEMS,
-    "important_parts": ORACLE_IMPORTANT_PARTS,
-    "supplier_part_counts": ORACLE_SUPPLIER_PART_COUNTS,
-    "small_quantity_revenue": ORACLE_SMALL_QUANTITY_REVENUE,
-    "large_volume_customers": ORACLE_LARGE_VOLUME_CUSTOMERS,
-    "nation_trade_volume": ORACLE_NATION_TRADE_VOLUME,
-    "market_share": ORACLE_MARKET_SHARE,
-    "product_profit": ORACLE_PRODUCT_PROFIT,
-    "promo_revenue": ORACLE_PROMO_REVENUE,
-    "weighted_sample": ORACLE_WEIGHTED_SAMPLE,
-    "token_entropy": ORACLE_TOKEN_ENTROPY,
-    "hull_perimeter": ORACLE_HULL_PERIMETER,
-    "lm_logloss": ORACLE_LM_LOGLOSS,
-    "map_match": _oracle_map_match(),
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
-}
+_CORRECTNESS_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-# Driver-rotation ordering (r4 verdict item 3): the driver's correctness
-# pass walks QUERIES in order and stops at ~50, so the front block is
-# (a) queries NEW or CHANGED this round (the reworked ANN family, the
-# rotated near-dup fixture, the two former rows-only twins — now
-# contract-checked — and the two ADVICE-touched queries), then
-# (b) the 21 queries whose latest driver row is r2 (oldest coverage
-# first), then (c) everything last checked in r3; the r4-green and
-# unchanged queries close the list.
-_R5_FRONT = [
-    # (a) new/changed in round 5 — newest (continuation-session) first
-    "audience_overlap",                                  # new: co-engagement
-    "series_peaks",                                      # new: local maxima
-    "markov_stationary",                                 # new: chain fixed point
-    "seasonality_profile",                               # new: weekly rhythm
-    "assortativity",                                     # new: graph QC scalar
-    "mad_outliers",                                      # new: MAD fences
-    "anomaly_drilldown",                                 # new: alarm triage
-    "leadlag_xcorr",                                     # new: lead-lag xcorr
-    "path_trigrams",                                     # new: journey motifs
-    "variogram",                                         # new: semivariogram
-    "gap_fill",                                          # new: forward-fill repair
-    "survival_km",                                       # new: Kaplan-Meier
-    "haar_multires",                                     # new: series pyramid
-    "zipf_fit",                                          # new: vocab power law
-    "kcore",                                             # new: dense-core peel
-    "ewma_chart",                                        # new: EWMA control chart
-    "common_neighbors",                                  # new: link prediction
-    "token_bursts",                                      # new: trending terms
-    "acf_profile",                                       # new: lag-k ACF
-    "theil_sen",                                         # new: robust slope
-    "cdc_apply",                                         # new: CDC merge-apply
-    "hausdorff_routes",                                  # new: route matching
-    "voronoi_stats",                                     # new: nearest-site rollup
-    "hex_bin",                                           # new: hexagonal binning
-    "rate_anomaly",                                      # new: rolling z-score
-    "pmi_collocations",                                  # new: PMI phrases
-    "basket_pairs",                                      # new: basket affinity
-    "quantile_calibration",                              # new: decile calib
-    "trend_test",                                        # new: Mann-Kendall
-    "revenue_gini",                                      # new: Gini audit
-    "benford_audit",                                     # new: Benford digits
-    "kernel_density",                                    # new: Epanechnikov KDE
-    "emerging_hotspots",                                 # new: space-time Gi*+MK
-    "coverage_gaps",                                     # new: feed completeness
-    "cusum_alarm",                                       # new: CUSUM level shift
-    "readability",                                       # new: pooled Flesch
-    "media_reuse",                                       # new: span asset reuse
-    "attribution",                                       # new: last-touch latency
-    "zonal_majority",                                    # new: mode per zone
-    "behavior_entropy",                                  # new: user-mix entropy
-    "hotspot_gi",                                        # new: Getis-Ord Gi*
-    "moran_events",                                      # new: Moran's I
-    "scd2_build", "snapshot_diff",                       # new: SCD2 / crawl delta
-    "kmv_vocab", "kmv_overlap",                          # new: KMV/theta sketch
-    "pareto_parts",                                      # new: D&C skyline
-    "track_cells",                                       # new: supercover raster
-    "fuzzy_name_pairs",                                  # new: delete-nbhd ER join
-    "grid_clusters",                                     # new: grid DBSCAN
-    "heavy_hitters",                                     # new: Misra-Gries 2-pass
-    "linestatus_priority", "dominant_suppliers",         # new: TPC-H Q12/Q20
-    "containment_pairs",                                 # new: asymmetric near-dup
-    "source_kl",                                         # new: feed-drift KL
-    "clustering_coeff", "robust_stats",                  # new: graph QC / winsorize
-    "integrity_audit",                                   # new: FK orphan probes
-    "zonal_weighted",                                    # new: overlay-area zonal
-    "geohash_cells",                                     # new: interop cell index
-    "embedding_stats",                                   # new: per-dim moments
-    "resample_track",                                    # new: track regularization
-    "rolling_revenue", "customer_quartiles",             # new: range frame / ntile
-    "event_transitions",                                 # new: Markov bigrams
-    "event_funnel", "retention_cohorts",                 # new: funnel/retention
-    "source_overlap",                                    # new: vocab overlap matrix
-    "geodesic_area",                                     # new: spherical-excess area
-    "ohlc_bars", "hotspot_cells", "bearing_histogram",   # new: resample/hotspot/rose
-    "triangle_counts",                                   # new: degree-ordered triangles
-    "idw_interpolate",                                   # new: IDW field estimate
-    "polygon_measures",                                  # new: shoelace area/centroid
-    "focal_mean",                                        # new: raster focal stats
-    "forecast_revenue", "returned_items",                # new: Q6/Q10 shapes
-    "important_parts", "supplier_part_counts",           # new: Q11/Q16 shapes
-    "small_quantity_revenue", "large_volume_customers",  # new: Q17/Q18 shapes
-    "nation_trade_volume", "market_share",               # new: Q7/Q8 shapes
-    "product_profit", "promo_revenue",                   # new: Q9/Q14 shapes
-    "ann_topk_pq", "ann_topk_ivf_pq",                    # new: PQ/ADC retrieval
-    "weighted_sample", "token_entropy",                  # new: A-ES sample, entropy QC
-    "hull_perimeter",                                    # new: hull geodesic measure
-    "lm_logloss", "map_match",                           # new: LM xent QC, segment snap
-    "pack_sequences",                                    # new: concat-split packer
-    "speed_spikes", "simplify_error", "colocation",      # new: trajectory QC/meet
-    "waiting_suppliers", "idle_customers",               # new: Q21/Q22 shapes
-    "cheapest_supplier",                                 # new: Q2-shaped argmin
-    "staypoints", "track_simplify", "od_matrix",       # new: trajectory ops
-    "stay_zones",                                      # new: trajectory × PIP compose
-    "group_quantiles",                                 # new: aggregate-path quantiles
-    "ann_topk_ivf_int8",                               # new: IVF+int8 composition
-    "embedding_neardups",                              # rotated adversarial fixture + multi-table LSH
-    "semantic_dedup",                                  # new: cluster-blocked near-dup pairs
-    "minhash_lsh_fast", "simhash_neardups_fast",       # now superset-contract oracles
-    "cosine_topk", "ann_topk", "ann_topk_ivf", "ann_topk_int8",  # two-phase top-k
-    "bm25_topk",                                       # explicit term-set dedupe
-    "bloom_join",                                      # key identifier quoting
-    "knn", "knn_cellring",                             # fallback-threshold parameter
-    # (b) last driver-checked in r2
-    "arc_densify", "beyond", "convex_hull_groups", "create_envelope_parse",
-    "crs_roundtrip_utm", "dwithin_exact", "exact_dup_groups", "fingerprint",
-    "geodesic_destination", "gml_arc_decode", "gml_decode", "gml_envelope",
-    "lang_id", "min_curve_segment_length", "minhash_lsh", "multimodal_features",
-    "quality_score", "ring_dedupe_ppm", "session_windows", "simhash_neardups",
-    "token_counts",
-    # (c) last driver-checked in r3
-    "antipodal_envelope", "asof_join", "bloom_dedup", "budget_pack",
-    "cell_histogram", "chunk_sliding", "cluster_balanced_sample", "cms_vocab",
-    "coalesce_boxes", "crs_domain", "decontaminate", "dup_components",
-    "geometry_join_crosses", "geometry_join_equals", "geometry_join_lines",
-    "geometry_join_multi", "geometry_join_polys", "geometry_join_within",
-    "gml_to_temporal", "heavy_shingles", "hll_distinct", "interval_coverage",
-    "inverted_index", "keeper_election", "length_histogram",
-    "length_percentiles", "media_frames", "minhash_est_jaccard", "mix_resample",
-    "oov_rate", "pagerank", "pii_scan", "repetition", "skew_report",
-    "span_compact", "spatial_predicates", "split_assign", "stratified_sample",
-    "tfidf_topk", "trajectory_length", "url_domains", "vocab_topk",
-]
+
+def oldest_checked_first(names: Iterable[str], root: Path) -> list[str]:
+    """``names`` ordered oldest-checked first: by the latest round in which
+    each was green (hash_match) in ``root``'s CORRECTNESS_r*.json, never
+    green first; ties keep the given order.  No files (e.g. the package
+    shipped as a ``--py-files`` zip) leaves the order unchanged.
+
+    The correctness pass that records those files walks QUERIES in order
+    and stops on a time budget (~50 queries), so this rotates it onto the
+    queries whose last green row is oldest."""
+    last_green: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = _CORRECTNESS_FILE.fullmatch(path.name)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("hash_match") is True:
+                last_green[name] = max(last_green.get(name, 0), rnd)
+    return sorted(names, key=lambda n: last_green.get(n, 0))
+
+
+_BY_NAME = {e.name: e.build for e in CATALOG}
 QUERIES = {
-    **{k: QUERIES[k] for k in _R5_FRONT},
-    **{k: v for k, v in QUERIES.items() if k not in _R5_FRONT},
+    name: _BY_NAME[name]
+    for name in oldest_checked_first(_BY_NAME, Path(__file__).resolve().parent.parent)
 }
+ORACLES = {e.name: e.oracle for e in CATALOG}

@@ -108,9 +108,6 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
             continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(spark_pdf)} rows, {time.time()-t0:.1f}s)")
-            continue
         try:
             oracle_pdf = con.execute(oracles[name]).fetchdf()
         except Exception as e:  # noqa: BLE001

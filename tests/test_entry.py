@@ -1,12 +1,15 @@
 """Driver-surface invariants: catalog counts (README's numbers can't
-drift), planted ground truth for the deployed xxhash64 LSH paths, and
-the knn_join no-doc-side-broadcast scale guarantee (r3 verdict items
-3 and 7)."""
+drift), the oldest-checked-first query order, planted ground truth for
+the deployed xxhash64 LSH paths, and the knn_join no-doc-side-broadcast
+scale guarantee (r3 verdict items 3 and 7)."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,20 +21,59 @@ from geomatics_geotk_spark import queries  # noqa: E402
 from geomatics_geotk_spark.operators import knn  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parent.parent
 
 
 class TestCatalog:
     def test_catalog_counts(self):
-        """README.md's module-map numbers are these — update both together."""
-        q = entrymod.queries()
-        o = entrymod.oracle_sql()
-        assert len(q) == 224
-        assert len(o) == 224
-        assert set(o) == set(q)  # r5: every entry oracle-checkable, no rows-only twins
+        """README.md's module-map count is the catalog size, and every
+        query has an oracle."""
+        readme = (ROOT / "README.md").read_text()
+        counts = re.findall(r"(\d+) queries,\s+ALL (\d+) with", readme)
+        assert counts, "README lost its 'N queries, ALL N with' line"
+        n = str(len(entrymod.queries()))
+        assert set(counts) == {(n, n)}
+        assert set(entrymod.oracle_sql()) == set(entrymod.queries())
 
     def test_every_query_callable_and_named(self):
         for name, fn in entrymod.queries().items():
             assert callable(fn), name
+
+
+class TestQueryOrder:
+    """QUERIES is ordered oldest-checked first: by the latest round each
+    query was green in CORRECTNESS_r*.json, never-green first."""
+
+    @staticmethod
+    def _round(root, rnd, rows):
+        path = root / f"CORRECTNESS_r{rnd:02d}.json"
+        path.write_text(json.dumps({n: {"hash_match": g} for n, g in rows.items()}))
+
+    def test_rule(self, tmp_path):
+        self._round(tmp_path, 1, {"a": True, "b": True, "c": True, "d": None})
+        self._round(tmp_path, 2, {"a": True, "c": False, "e": False})
+        # a last green r2; b, c last green r1 (c's r2 row is red);
+        # d (null row), e (red only) and f (no row) were never green
+        names = ["a", "b", "c", "d", "e", "f"]
+        assert queries.oldest_checked_first(names, tmp_path) == ["d", "e", "f", "b", "c", "a"]
+        # ties keep the given order
+        assert queries.oldest_checked_first(names[::-1], tmp_path) == ["f", "e", "d", "c", "b", "a"]
+
+    def test_no_files_keeps_table_order(self, tmp_path):
+        names = ["c", "a", "b"]
+        assert queries.oldest_checked_first(names, tmp_path) == names
+        # package shipped as a --py-files zip: the "root" is a file
+        archive = tmp_path / "deps.zip"
+        archive.write_bytes(b"")
+        assert queries.oldest_checked_first(names, archive) == names
+
+    def test_committed_files_put_unchecked_first(self):
+        green = set()
+        for path in ROOT.glob("CORRECTNESS_r*.json"):
+            rows = json.loads(path.read_text())
+            green |= {n for n, row in rows.items() if row["hash_match"] is True}
+        assert green, "no committed CORRECTNESS_r*.json rows"
+        assert not green & set(list(queries.QUERIES)[:50])
 
 
 class TestPlantedFastTwins:

@@ -460,6 +460,35 @@ class TestSimilarity:
         assert full, "no query fully recalled — rerank exactness unprovable"
         assert all(er[k] == ar[k] for k in er if k[0] in full)
 
+    def test_zero_norm_embedding_ranks_last(self, spark):
+        """An all-zero corpus vector has no cosine: every ANN path scores
+        it −2.0 (never NaN, which Spark orders greatest) and ranks it
+        below every real neighbor (the _safe_cos guard)."""
+        rng = np.random.default_rng(7)
+        rows = [(i, rng.standard_normal(64).tolist()) for i in range(40)]
+        zero_id = len(rows)
+        rows.append((zero_id, [0.0] * 64))
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        queries = emb.where(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("q_id"), "embedding"
+        )
+        k = len(rows)
+        assert np.isfinite(similarity.learn_centroids(emb, n_centroids=4)).all()
+        outs = {
+            "ann_topk": similarity.ann_topk(emb, queries, k=k, planes_per_table=2),
+            "ann_topk_int8": similarity.ann_topk_int8(emb, queries, k=k, pool=k),
+            "ann_topk_ivf": similarity.ann_topk_ivf(emb, queries, k=k, n_centroids=4, nprobe=4),
+        }
+        for name, df in outs.items():
+            got = df.collect()
+            assert not any(np.isnan(r["cosine"]) for r in got), name
+            zero = [r for r in got if r["vec_id"] == zero_id]
+            assert zero, f"{name}: the zero row never reached a top-k"
+            for z in zero:
+                assert z["cosine"] == -2.0, name
+                last = max(r["rank"] for r in got if r["q_id"] == z["q_id"])
+                assert z["rank"] == last, name
+
 
 class TestBeyond:
     def test_beyond_is_complement_of_dwithin(self, spark):
