@@ -1,8 +1,11 @@
 """JVM-side Column-expression helpers — the engine's hot path.
 
-Everything here compiles to Catalyst expressions inside whole-stage
-codegen: no Python is executed per row.  These re-express the reference
-operations that are pure arithmetic/string work:
+Everything here is a Catalyst expression: no Python is executed per row.
+The plain arithmetic and string helpers compile inside whole-stage
+codegen; the helpers built on higher-order functions (the point-in-polygon
+crossing number, covering/disk cell arrays) use lambdas, which Spark 4.1
+runs interpreted (CodegenFallback) inside the stage.  These re-express the
+reference operations that are pure arithmetic/string work:
 
 - WKT POINT decode (regexp) — scan-side geometry extraction;
 - Z-order cell id (bit-interleave as Column ops) — mirrors
@@ -32,12 +35,14 @@ RES_SHIFT = 58
 _POINT_RE = r"POINT\s*\(\s*([-+0-9.eE]+)\s+([-+0-9.eE]+)\s*\)"
 
 
+# try_cast: text that is not a WKT POINT extracts "" (or a non-number),
+# which must decode to null rather than fail the job under ANSI mode
 def wkt_point_lon(wkt: Column) -> Column:
-    return F.regexp_extract(wkt, _POINT_RE, 1).cast("double")
+    return F.regexp_extract(wkt, _POINT_RE, 1).try_cast("double")
 
 
 def wkt_point_lat(wkt: Column) -> Column:
-    return F.regexp_extract(wkt, _POINT_RE, 2).cast("double")
+    return F.regexp_extract(wkt, _POINT_RE, 2).try_cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +63,13 @@ def _spread_bits(c: Column) -> Column:
 def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
     """Cell id at ``res`` as a pure Column expression (codegen'd JVM math).
 
-    Bit-identical to :func:`geomatics_geotk_spark.cells.cell_of`.
+    Bit-identical to :func:`geomatics_geotk_spark.cells.cell_of` for
+    non-null input.  A null lon or lat gives the sentinel ``-1``, which is
+    no cell (every cell id is non-negative), so a doc without a point
+    joins no zone; unguarded, the clamp's ``greatest``/``least`` would
+    skip the null and put a missing point in the real corner cell of
+    (-180, -90).  The result is never null, so an equi-join on it infers
+    no ``isnotnull`` filter.
     """
     nx = F.lit(1 << (res + 1))
     ny = F.lit(1 << res)
@@ -71,7 +82,17 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
         ny - F.lit(1),
     ).cast("long")
     morton = _spread_bits(xi).bitwiseOR(F.shiftleft(_spread_bits(yi), 1))
-    return (F.lit(res << RES_SHIFT).bitwiseOR(morton)).alias("cell_id")
+    # The range tests always hold after the clamp.  They put xi and yi
+    # twice into the CASE condition, which is always evaluated, so
+    # subexpression elimination computes them once and the branch reuses
+    # them; without that, the branch inlines each 32 times and the
+    # generated method is too large to JIT (over 100x slower).
+    known = (
+        lon.isNotNull() & lat.isNotNull()
+        & (xi >= 0) & (xi < nx) & (yi >= 0) & (yi < ny)
+    )
+    cell = F.lit(res << RES_SHIFT).bitwiseOR(morton)
+    return F.when(known, cell).otherwise(F.lit(-1).cast("long")).alias("cell_id")
 
 
 # ---------------------------------------------------------------------------

@@ -6,9 +6,10 @@ The reference evaluates predicates one pair at a time
 DE-9IM).  At 10^12 documents that is an O(N·M) loop; this module lifts it
 into the classic spatial hash join:
 
-1. **decode** (scan-side, JVM regexp — no Python): extract the single
-   ``kind='geo'`` span's WKT POINT into lon/lat sibling columns, leaving
-   the ``spans`` array untouched (span-sequence invariant);
+1. **decode** (scan-side, codegen'd JVM expressions — no Python, no
+   lambda): extract the first ``kind='geo'`` span's WKT POINT into
+   lon/lat sibling columns, leaving the ``spans`` array untouched
+   (span-sequence invariant);
 2. **cell-encode** both sides (JVM bit math, :func:`functions.cell_id_col`);
    zones explode into their covering cells, each flagged ``full`` (cell
    entirely inside the polygon — refine skipped) or ``partial``;
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,23 +44,28 @@ DEFAULT_RES = 12
 
 
 def decode_geo_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Extract lon/lat from the single ``kind='geo'`` span (WKT POINT).
+    """Extract lon/lat from the first ``kind='geo'`` span (WKT POINT).
 
-    Pure Column expressions (filter + regexp in JVM); ``spans`` is carried
-    opaquely — never exploded — so per-doc span sequence is preserved.
+    Pure codegen'd Column expressions, no lambda: ``array_position`` over
+    the span kinds finds the geo span, ``get`` over the span texts takes
+    it and two regexps read the ordinates.  A doc with no geo span, or
+    geo text that is not a WKT POINT, gets null lon/lat (never an ANSI
+    error).  ``spans`` is carried opaquely — never exploded — so per-doc
+    span sequence is preserved.
     """
-    geo_text = F.element_at(
-        F.filter(F.col(spans_col), lambda s: s["kind"] == F.lit("geo")), 1
-    )["text"]
-    return docs.withColumn("lon", wkt_point_lon(geo_text)).withColumn(
-        "lat", wkt_point_lat(geo_text)
-    )
+    spans = F.col(spans_col)
+    # array_position is 1-based and 0 when absent; get is 0-based and
+    # null out of range, so a doc with no geo span gets a null text
+    pos = F.array_position(spans["kind"], "geo")
+    geo_text = F.get(spans["text"], (pos - 1).cast("int"))
+    return docs.withColumns({"lon": wkt_point_lon(geo_text), "lat": wkt_point_lat(geo_text)})
 
 
 def tile_assign(docs: DataFrame, res: int = DEFAULT_RES,
                 lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Append the Z-order ``cell_id`` (the engine's tile assignment) —
-    whole-stage-codegen'd JVM bit math."""
+    whole-stage-codegen'd JVM bit math; ``-1`` (no cell) where lon or lat
+    is null."""
     return docs.withColumn("cell_id", cell_id_col(F.col(lon_col), F.col(lat_col), res))
 
 
@@ -166,17 +173,15 @@ _ZPREP_SCHEMA = T.StructType([
 ])
 
 
-def _prep_zone(exterior, interiors, crs, res: int, margin_m: float = 0.0) -> tuple:
-    """The per-zone kernel: one zone → one ``_ZPREP_SCHEMA`` row
-    (harmonized exterior, harmonized interiors, classified covering
-    cells as (cell_id, full) pairs)."""
+def _prep_zone(exterior, interiors, crs, res: int, margin_m: float = 0.0):
+    """The per-zone kernel: one zone → (rings, kept_cell_ids, full_mask)
+    as numpy — the harmonized [exterior, *interiors] (n,2) lon/lat rings
+    and the classified covering cells.  Each caller packs it into its own
+    ``_ZPREP_SCHEMA`` carrier (row tuples in :func:`prep_zone_struct`, one
+    Arrow table in :func:`prepare_zones`)."""
     rings = _zone_rings_lonlat(exterior, interiors, crs)
     kept, full_mask = _classify_zone_cells(rings, res, margin_m)
-    return (
-        [tuple(p) for p in rings[0].tolist()],
-        [[tuple(p) for p in r.tolist()] for r in rings[1:]],
-        list(zip(kept.tolist(), full_mask.tolist())),
-    )
+    return rings, kept, full_mask
 
 
 def prep_zone_struct(zones: DataFrame, res: int = DEFAULT_RES,
@@ -193,10 +198,18 @@ def prep_zone_struct(zones: DataFrame, res: int = DEFAULT_RES,
     never via a driver-built broadcast dict.
     """
 
+    def row(e, i, c) -> tuple:
+        rings, kept, full_mask = _prep_zone(e, i, c, res, margin_m)
+        return (
+            [tuple(p) for p in rings[0].tolist()],
+            [[tuple(p) for p in r.tolist()] for r in rings[1:]],
+            list(zip(kept.tolist(), full_mask.tolist())),
+        )
+
     @F.pandas_udf(_ZPREP_SCHEMA)
     def prep(exterior: pd.Series, interiors: pd.Series, crs: pd.Series) -> pd.DataFrame:
         return pd.DataFrame(
-            [_prep_zone(e, i, c, res, margin_m) for e, i, c in zip(exterior, interiors, crs)],
+            [row(e, i, c) for e, i, c in zip(exterior, interiors, crs)],
             columns=_ZPREP_SCHEMA.names,
         )
 
@@ -228,27 +241,57 @@ def _explode_zone_cells(z: DataFrame) -> DataFrame:
     )
 
 
+def _list_array(parts: list[np.ndarray], values) -> pa.ListArray:
+    """One Arrow list per entry of ``parts``, over ``values`` (the parts
+    concatenated), built from the cumulative-length offsets."""
+    offsets = np.zeros(len(parts) + 1, dtype=np.int32)
+    np.cumsum([len(p) for p in parts], out=offsets[1:])
+    return pa.ListArray.from_arrays(offsets, values)
+
+
+def _points_array(rings: list[np.ndarray]) -> pa.ListArray:
+    """(n,2) rings → list<struct<x,y>>, one list per ring."""
+    xy = np.concatenate(rings) if rings else np.empty((0, 2))
+    return _list_array(rings, pa.StructArray.from_arrays([xy[:, 0], xy[:, 1]], names=["x", "y"]))
+
+
 def prepare_zones(zones: DataFrame, res: int = DEFAULT_RES):
     """Zone polygons → (zone_cells DataFrame, {zone_id: rings} dict),
     prepared on the DRIVER: the zones are collected, the per-zone kernel
-    runs on each, and the result (one row per zone) is exploded in the
-    JVM.  No Python runs in the plan, so a broadcast join over it stays
-    JVM-only; the rings dict serves brute-force cross-checks.  For zone
-    sides too large to collect use :func:`prepare_zones_distributed`.
+    runs on each, and its numpy output is packed into one Arrow table
+    (zone_id, _z) straight from list offsets, with no per-point or
+    per-cell Python object.  Spark takes that table as a local relation
+    (a ``LocalTableScan`` leaf) and explodes it in the JVM, so a broadcast
+    join over it holds no Python node and no pickled RDD; the rings dict
+    serves brute-force cross-checks.  For zone sides too large to collect
+    use :func:`prepare_zones_distributed`.
     """
-    rows = [
-        (r["zone_id"], _prep_zone(r["exterior"], r["interiors"], r["crs"], res))
-        for r in zones.collect()
-    ]
-    z = zones.sparkSession.createDataFrame(rows, T.StructType([
+    zone_ids, rings, kept, full = [], [], [], []
+    for r in zones.collect():
+        zr, zk, zf = _prep_zone(r["exterior"], r["interiors"], r["crs"], res)
+        zone_ids.append(r["zone_id"])
+        rings.append(zr)
+        kept.append(zk)
+        full.append(zf)
+    holes = [h for zr in rings for h in zr[1:]]
+    cells_arr = pa.StructArray.from_arrays(
+        [pa.array(np.concatenate(kept) if kept else [], pa.int64()),
+         pa.array(np.concatenate(full) if full else [], pa.bool_())],
+        names=["cell_id", "full"],
+    )
+    zprep = pa.StructArray.from_arrays(
+        [
+            _points_array([zr[0] for zr in rings]),
+            _list_array([zr[1:] for zr in rings], _points_array(holes)),
+            _list_array(kept, cells_arr),
+        ],
+        names=_ZPREP_SCHEMA.names,
+    )
+    table = pa.table({"zone_id": pa.array(zone_ids, pa.string()), "_z": zprep})
+    z = zones.sparkSession.createDataFrame(table, T.StructType([
         T.StructField("zone_id", T.StringType()), T.StructField("_z", _ZPREP_SCHEMA),
     ]))
-    rings_by_zone = {
-        zone_id: [np.array(ext, dtype=np.float64)]
-        + [np.array(hole, dtype=np.float64) for hole in ints]
-        for zone_id, (ext, ints, _) in rows
-    }
-    return _explode_zone_cells(z), rings_by_zone
+    return _explode_zone_cells(z), dict(zip(zone_ids, rings))
 
 
 def prepare_zones_distributed(zones: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
@@ -313,11 +356,14 @@ def spatial_join(
 
     Zone preparation runs one per-zone kernel either way.  'broadcast'
     runs it on the driver (:func:`prepare_zones`): a zone side small
-    enough to broadcast is driver-sized, and the plan then holds no
-    Python node at all (asserted in tests/test_plans_bucketing.py).
-    'shuffle', the large-zone-side strategy, runs it on the executors
+    enough to broadcast is driver-sized, it enters the plan as a local
+    Arrow relation (``LocalTableScan``), and the plan holds no Python node
+    at all (asserted in tests/test_plans_bucketing.py).  'shuffle', the
+    large-zone-side strategy, runs it on the executors
     (:func:`prepare_zones_distributed`), so the driver never
     materializes a zone or a cell.
+
+    Docs with a null lon or lat get ``cell_id`` -1 and match no zone.
     """
     if predicate == "disjoint":
         if id_col not in docs.columns:

@@ -18,11 +18,14 @@ _lineage → snapshot summary + manifest metrics.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def _lineage_path(out_dir: str) -> str:
@@ -30,14 +33,25 @@ def _lineage_path(out_dir: str) -> str:
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
+    """Buckets committed to ``_lineage`` (the checkpoint).
+
+    A missing lineage means nothing is committed yet.  So does a lineage
+    directory holding only hidden or ``_``-prefixed entries (a first
+    lineage write that died before its commit).  Any other read failure
+    is logged and raised: treating a corrupt lineage as empty would
+    silently re-run every bucket.
+    """
     path = _lineage_path(out_dir)
     if not os.path.exists(path):
         return set()
+    if os.path.isdir(path) and all(f.startswith(("_", ".")) for f in os.listdir(path)):
+        return set()
     try:
         rows = spark.read.parquet(path).select("bucket").distinct().collect()
-        return {r["bucket"] for r in rows}
     except Exception:
-        return set()
+        log.exception("cannot read sink lineage %s", path)
+        raise
+    return {r["bucket"] for r in rows}
 
 
 def resume_remaining(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -56,6 +70,9 @@ def checkpointed_write(df: DataFrame, out_dir: str, bucket_col: str,
     lineage record per bucket; skip buckets already committed.
 
     Returns a summary dict {written_buckets, skipped_buckets, rows}.
+    Rows with a null ``bucket_col`` belong to no bucket: a first write
+    stores them under Spark's default partition without counting them,
+    and a resume neither rewrites nor duplicates them.
     """
     spark = df.sparkSession
     os.makedirs(out_dir, exist_ok=True)
@@ -71,7 +88,10 @@ def checkpointed_write(df: DataFrame, out_dir: str, bucket_col: str,
     # uncommitted and the next invocation redoes exactly them.
     t0 = time.time()
     data_dir = os.path.join(out_dir, "data")
-    pending = work.where(F.col("_bucket").isin([int(b) for b in todo]))
+    # A first write (every bucket pending) takes no bucket filter: Spark
+    # would push it below the projections computing ``bucket_col`` and
+    # evaluate them twice per row (for tiled docs: the decode and the cell)
+    pending = work if not done else work.where(F.col("_bucket").isin([int(b) for b in todo]))
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

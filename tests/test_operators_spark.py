@@ -86,6 +86,61 @@ class TestDecodeAndTile:
     def test_spans_preserved_through_decode(self, docs, decoded):
         assert_spans_preserved(docs, decoded.select("doc_id", "spans"))
 
+    @pytest.fixture
+    def edge_docs(self, spark, docs):
+        """Docs the decode must map to null lon/lat, plus one with two geo
+        spans, under ANSI mode (Spark 4's default)."""
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        rows = [
+            ("empty", []),
+            ("text-only", [("text", "a b", "", 0), ("media", "", "media://x", 10)]),
+            ("two-geo", [("text", "x", "", 0), ("geo", "POINT (1.5 2.5)", "", 10),
+                         ("geo", "POINT (3 4)", "", 20)]),
+            ("garbage", [("geo", "garbage", "", 0)]),
+        ]
+        yield spark.createDataFrame(rows, docs.schema)
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+    def test_decode_edge_docs_give_null_not_error(self, edge_docs):
+        got = {r["doc_id"]: (r["lon"], r["lat"]) for r in decode_geo_spans(edge_docs).collect()}
+        assert got == {
+            "empty": (None, None),
+            "text-only": (None, None),
+            "two-geo": (1.5, 2.5),  # the first geo span wins
+            "garbage": (None, None),
+        }
+
+    def test_tile_assign_null_point_sentinel_cell(self, edge_docs):
+        tiled = tile_assign(decode_geo_spans(edge_docs), 12)
+        assert not tiled.schema["cell_id"].nullable
+        got = {r["doc_id"]: r["cell_id"] for r in tiled.collect()}
+        assert got == {
+            "empty": -1, "text-only": -1, "garbage": -1,
+            "two-geo": int(cells.cell_of(1.5, 2.5, 12)),
+        }
+
+    def test_no_point_never_joins_corner_zone(self, spark, edge_docs):
+        """A zone fully covering the cell of (-180, -90) must not match a
+        doc without a point: its null lon/lat used to clamp into that
+        cell, where the full-cell accept skipped the refine."""
+        # past the corner, so the corner cell's corners are strictly inside
+        corner = [(-181.0, -91.0), (-170.0, -91.0), (-170.0, -80.0), (-181.0, -80.0), (-181.0, -91.0)]
+        zones = spark.createDataFrame(
+            [("zone-corner", "CRS:84", corner, [])],
+            "zone_id string, crs string, exterior array<struct<x:double,y:double>>, "
+            "interiors array<array<struct<x:double,y:double>>>",
+        )
+        zc, _ = prepare_zones(zones, 12)
+        assert zc.where("full AND cell_id = 3458764513820540928").count() == 1
+        inside = spark.createDataFrame(
+            [("inside", [("geo", "POINT (-179.99 -89.99)", "", 0)])], edge_docs.schema
+        )
+        docs = decode_geo_spans(edge_docs.unionByName(inside))
+        for strategy in ("broadcast", "shuffle"):
+            out = spatial_join.spatial_join(docs, zones, res=12, strategy=strategy)
+            assert {r["doc_id"] for r in out.collect()} == {"inside"}, strategy
+
 
 class TestSpatialJoin:
     @pytest.fixture(scope="class")
@@ -116,6 +171,21 @@ class TestSpatialJoin:
         a = {(r["doc_id"], r["zone_id"]) for r in bc.select("doc_id", "zone_id").collect()}
         b = {(r["doc_id"], r["zone_id"]) for r in sh.select("doc_id", "zone_id").collect()}
         assert a == b
+
+    def test_salted_shuffle_no_point_docs_keep_cold_matches(self, spark, docs, decoded, zones):
+        """Docs without a point all share cell id -1; enough of them make it
+        a hot cell, and the matches in the cold cells must survive that."""
+        no_point = tile_assign(decode_geo_spans(
+            spark.createDataFrame([(f"no-point-{i}", []) for i in range(1000)], docs.schema)
+        ), 12)
+        bc = spatial_join.spatial_join(decoded, zones, res=12, strategy="broadcast")
+        sh = spatial_join.spatial_join(
+            decoded.unionByName(no_point), zones, res=12, strategy="shuffle", salt=4,
+            hot_cell_threshold=50,
+        )
+        a = {(r["doc_id"], r["zone_id"]) for r in bc.select("doc_id", "zone_id").collect()}
+        b = {(r["doc_id"], r["zone_id"]) for r in sh.select("doc_id", "zone_id").collect()}
+        assert a and a == b
 
     def test_disjoint_is_complement(self, spark, decoded, zones):
         inter = spatial_join.spatial_join(decoded, zones, res=12)

@@ -40,7 +40,8 @@ class TestPlanHygiene:
 
     def test_flagship_refine_is_jvm_only(self, spark):
         """The broadcast pip join must contain no Python/Arrow eval node —
-        the refine is Column math inside codegen."""
+        the refine is Column math in the JVM — and its zone side is a
+        local Arrow relation, not a scan of a pickled Python RDD."""
         docs = synth_documents(spark, 100)
         tiled = spatial_join.tile_assign(spatial_join.decode_geo_spans(docs), 12)
         joined = spatial_join.spatial_join(
@@ -48,6 +49,25 @@ class TestPlanHygiene:
         )
         plan = plans.formatted_plan(joined)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        # the docs side is a Range leaf, so these leaves are the zone side's
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    def test_decode_has_no_lambda(self, spark):
+        """The decode projection is codegen'd expressions only.  It runs
+        over an empty relation with the docs' schema, so the generator's
+        own lambdas stay out of the plan."""
+        docs = spark.createDataFrame([], synth_documents(spark, 1).schema)
+        plan = plans.formatted_plan(spatial_join.decode_geo_spans(docs))
+        assert "array_position" in plan
+        assert "lambdafunction" not in plan
+
+    def test_zero_zones_join_is_empty(self, spark):
+        docs = synth_documents(spark, 100)
+        tiled = spatial_join.tile_assign(spatial_join.decode_geo_spans(docs), 12)
+        zones = zones_table(spark, grid=4).limit(0)
+        for strategy in ("broadcast", "shuffle"):
+            joined = spatial_join.spatial_join(tiled, zones, res=12, strategy=strategy)
+            assert joined.count() == 0, strategy
 
     def test_agg_has_mapside_partial(self, spark):
         """Partial + final HashAggregate around one exchange — the

@@ -8,6 +8,8 @@ import os
 import shutil
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from geomatics_geotk_spark.operators import multimodal, spatial_join
@@ -208,6 +210,66 @@ class TestCheckpointedSink:
         data = spark.read.parquet(os.path.join(out, "data"))
         assert data.count() == 1000
         assert data.select("id").distinct().count() == 1000
+
+    def test_corrupt_lineage_raises(self, spark, tmp_path, caplog):
+        """A lineage that cannot be read must stop the resume (logged and
+        raised), not look empty and silently re-run every bucket."""
+        out = str(tmp_path / "sink3")
+        df = spark.range(100).select(F.col("id"), F.pmod(F.col("id"), F.lit(7)).alias("bucket"))
+        sink.checkpointed_write(df, out, "bucket", n_buckets=4)
+        lineage_path = os.path.join(out, "_lineage")
+        for f in os.listdir(lineage_path):
+            if f.endswith(".parquet"):
+                with open(os.path.join(lineage_path, f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+            elif f.endswith(".crc"):
+                os.remove(os.path.join(lineage_path, f))
+        with caplog.at_level("ERROR", logger=sink.__name__), pytest.raises((Py4JJavaError, PySparkException)):
+            sink.checkpointed_write(df, out, "bucket", n_buckets=4)
+        assert any(lineage_path in r.getMessage() for r in caplog.records)
+
+    def test_uncommitted_lineage_is_empty(self, spark, tmp_path):
+        """A lineage directory holding only an uncommitted ``_temporary``
+        (the first lineage write died) means nothing is committed."""
+        out = str(tmp_path / "sink4")
+        os.makedirs(os.path.join(out, "_lineage", "_temporary", "0"))
+        assert sink.completed_buckets(spark, out) == set()
+        assert sink.completed_buckets(spark, str(tmp_path / "never-written")) == set()
+
+    def test_docs_without_point_are_written(self, spark, tmp_path):
+        """Tiled docs with no geo span (cell id -1) land in a real bucket
+        and are written and counted like every other doc."""
+        docs = synth_documents(spark, 40, partitions=2)
+        docs = docs.withColumn(
+            "spans",
+            F.when(F.col("doc_id").endswith("0"), F.filter("spans", lambda s: s["kind"] != "geo"))
+            .otherwise(F.col("spans")),
+        )
+        tiled = spatial_join.tile_assign(spatial_join.decode_geo_spans(docs), 12)
+        assert tiled.where(F.col("cell_id") == -1).count() == 4
+        s = sink.checkpointed_write(tiled, str(tmp_path / "sink5"), "cell_id", n_buckets=8)
+        assert s["rows"] == 40
+        assert spark.read.parquet(str(tmp_path / "sink5" / "data")).count() == 40
+
+    def test_null_key_rows_written_once_uncounted(self, spark, tmp_path):
+        out = str(tmp_path / "sink6")
+        df = spark.range(100).select(
+            F.col("id"), F.when(F.col("id") % 10 != 0, F.col("id")).alias("bucket")
+        )
+        s1 = sink.checkpointed_write(df, out, "bucket", n_buckets=4)
+        assert s1["rows"] == 90
+        # forge a lineage missing buckets 2 and 3, then resume
+        lineage_path = os.path.join(out, "_lineage")
+        partial = spark.read.parquet(lineage_path).where(F.col("bucket") < 2)
+        partial.write.mode("overwrite").parquet(str(tmp_path / "lineage_partial"))
+        shutil.rmtree(lineage_path)
+        shutil.copytree(str(tmp_path / "lineage_partial"), lineage_path)
+        s2 = sink.checkpointed_write(df, out, "bucket", n_buckets=4)
+        assert sorted(s2["written_buckets"]) == [2, 3]
+        data = spark.read.parquet(os.path.join(out, "data"))
+        assert data.count() == 100
+        assert data.select("id").distinct().count() == 100
+        assert data.where(F.col("_bucket").isNull()).count() == 10
 
 
 class TestMultimodal:
