@@ -2,15 +2,20 @@
 
 Everything here is a Catalyst expression: no Python is executed per row.
 The plain arithmetic and string helpers compile inside whole-stage
-codegen; the helpers built on higher-order functions (the point-in-polygon
-crossing number, covering/disk cell arrays) use lambdas, which Spark 4.1
-runs interpreted (CodegenFallback) inside the stage.  These re-express the
-reference operations that are pure arithmetic/string work:
+codegen, and so does the spatial join's refine (:func:`edge_slots_pip_col`,
+the crossing number unrolled over a cell's edge slots, for zone sides with
+few slots per cell).  The helpers built on higher-order functions (the
+full-ring point-in-polygon crossing number, covering/disk cell arrays) use
+lambdas, which Spark 4.1 runs interpreted (CodegenFallback) and which keep
+their operator out of whole-stage codegen.  These re-express the reference
+operations that are pure arithmetic/string work:
 
 - WKT POINT decode (regexp) — scan-side geometry extraction;
 - Z-order cell id (bit-interleave as Column ops) — mirrors
   :mod:`geomatics_geotk_spark.cells` exactly, so JVM- and numpy-computed
   ids are interchangeable;
+- point-in-polygon crossing number, over whole rings and over a cell's
+  edge slots;
 - BBOX interval-overlap predicate (``SpatialAssert.java:39-67``);
 - antipode (``Extents.java:421-431``);
 - CRS-id normalization regexes (``GeodesyUtils.java:222-271``);
@@ -96,8 +101,18 @@ def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Point-in-polygon as pure Column math (JVM higher-order functions)
+# Point-in-polygon as pure Column math
 # ---------------------------------------------------------------------------
+
+
+def _crossing(lon: Column, lat: Column, px: Column, py: Column, cy: Column,
+              dx: Column, dy: Column) -> Column:
+    """Does the ray x < lon at lat cross edge p→c (``dx``, ``dy`` = c - p)?
+    The division stays under ``And``, evaluated only when the edge spans
+    lat, so it never divides by zero (ANSI raises on a double division by
+    zero)."""
+    cond = (py > lat) != (cy > lat)
+    return cond & (lon < dx * (lat - py) / dy + px)
 
 
 def _ring_crossings(lon: Column, lat: Column, ring: Column) -> Column:
@@ -107,15 +122,15 @@ def _ring_crossings(lon: Column, lat: Column, ring: Column) -> Column:
     Bit-for-bit the same half-open edge rule as
     kernels.geometry.points_in_ring: ``(yi > y) != (yj > y)`` and strict
     ``x < xcross``.  Degenerate (yi == yj) edges contribute nothing: the
-    cond is false and double division never raises.
+    cond is false.  Under ANSI mode (on by default) a double division by
+    zero raises ``DIVIDE_BY_ZERO``; only ``And``'s short-circuit keeps a
+    horizontal edge's division from running.
     """
 
     def edge(i: Column) -> Column:
         p = F.element_at(ring, (i - 1).cast("int"))
         c = F.element_at(ring, i.cast("int"))
-        cond = (p["y"] > lat) != (c["y"] > lat)
-        xcross = (c["x"] - p["x"]) * (lat - p["y"]) / (c["y"] - p["y"]) + p["x"]
-        return cond & (lon < xcross)
+        return _crossing(lon, lat, p["x"], p["y"], c["y"], c["x"] - p["x"], c["y"] - p["y"])
 
     # guard: rings with < 2 points (e.g. empty rings on full-cell rows)
     # would make sequence(2, size) descend to [2, 1, 0] and element_at(0)
@@ -128,16 +143,68 @@ def _ring_crossings(lon: Column, lat: Column, ring: Column) -> Column:
 
 def point_in_polygon_col(lon: Column, lat: Column, exterior: Column,
                          interiors: Column) -> Column:
-    """Even-odd point-in-polygon (with holes) as a Column expression —
-    the JVM refine of the spatial join (its lambdas run interpreted,
-    CodegenFallback, but no row crosses into Python); the
-    numpy kernel (kernels.geometry.points_in_polygon) is the same
+    """Even-odd point-in-polygon (with holes) over whole rings as a
+    Column expression — the corner test of the zonal join's envelope
+    refine, the spatial join's refine for zone sides with many edge slots
+    per cell, and the reference for :func:`edge_slots_pip_col`.  Its lambdas
+    run interpreted (CodegenFallback), but no row crosses into Python;
+    the numpy kernel (kernels.geometry.points_in_polygon) is the same
     algorithm for Arrow-batch contexts."""
     inside_ext = F.pmod(_ring_crossings(lon, lat, exterior), F.lit(2)) == 1
     in_hole = F.exists(
         interiors, lambda h: F.pmod(_ring_crossings(lon, lat, h), F.lit(2)) == 1
     )
     return inside_ext & ~F.coalesce(in_hole, F.lit(False))
+
+
+def edge_slot_cols(edges: Column, k: int) -> list[list[Column]]:
+    """The first ``k`` slots of ``edges`` as the Columns
+    :func:`edge_slots_pip_col` reads, per slot [py, cy, px, dx, dy, step].
+
+    ``edges`` is a zone-cell row's array<struct<px,py,cx,cy,last>>: the
+    ring edges p→c, in ring order, that can cross the ray x < lon for a
+    point in the cell (``operators.spatial_join._band_edges``), ``last``
+    marking the last slot of each ring.  ``dx``, ``dy`` are c - p, the
+    same doubles the full-ring test computes; ``step`` is 4 on a ring's
+    last slot, else 0.  No column is null: a slot past the row's own
+    count is padding with NaN y-values, which no latitude lies between,
+    so it crosses nothing and ends no ring.
+    """
+    nan = F.lit(float("nan"))
+    out = []
+    for i in range(k):
+        e = F.get(edges, i)
+        out.append([
+            F.coalesce(e["py"], nan), F.coalesce(e["cy"], nan), F.coalesce(e["px"], nan),
+            F.coalesce(e["cx"] - e["px"], nan), F.coalesce(e["cy"] - e["py"], nan),
+            F.when(e["last"], 4).otherwise(0),
+        ])
+    return out
+
+
+def edge_slots_pip_col(lon: Column, lat: Column, slots: list[list[Column]]) -> Column:
+    """Even-odd point-in-polygon over a cell's edge slots
+    (:func:`edge_slot_cols`) — the spatial join's refine, one lambda-free
+    expression that whole-stage codegen compiles.  Each slot runs the
+    same crossing test with the same operands as
+    :func:`point_in_polygon_col`, and the answer is the same: inside the
+    exterior and in no hole.
+
+    Walking the slots, the running crossing parity must be odd at the end
+    of every ring: the exterior's count odd, then each hole adding an even
+    count.  The state carries that parity in bit 0 and, in bit 1, whether
+    some ring has ended on an even parity; each step is one lookup that
+    reads the previous state once, so the expression grows linearly in
+    the slot count.
+    """
+    # indexed by (state XOR crossed) + step: on a ring's last slot (step
+    # 4) an even parity sets bit 1, which no later crossing clears
+    table = F.array(*map(F.lit, (0, 1, 2, 3, 2, 1, 2, 3)))
+    state = F.lit(0)
+    for py, cy, px, dx, dy, step in slots:
+        crossed = _crossing(lon, lat, px, py, cy, dx, dy).cast("int")
+        state = F.get(table, state.bitwiseXOR(crossed) + step)
+    return state == 1
 
 
 def _seg_box_intersects(p: Column, c: Column, x0: Column, y0: Column,

@@ -295,10 +295,11 @@ def kcore(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     aggregation + one semi-join back onto the edge set — the pagerank
     loop shape (driver-side bounded iteration, ``localCheckpoint``
     lineage truncation every round, one ``count()`` action as the
-    fixpoint probe).  Convergence takes at most the peel depth of the
-    graph (≪ ``max_iters`` for any real degree distribution); the
-    operator raises if the cap is hit rather than return a
-    non-fixpoint.
+    fixpoint probe).  Convergence takes the peel depth of the graph
+    (≪ ``max_iters`` for any real degree distribution) plus one
+    confirming round, which may run past the cap: a graph of peel depth
+    up to ``max_iters`` converges, a deeper one raises rather than
+    return a non-fixpoint.
 
     Output: (node, core_degree) for every member of the k-core, with
     its degree INSIDE the core subgraph (≥ k by construction).
@@ -312,7 +313,7 @@ def kcore(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
         .localCheckpoint()
     )
     n_edges = cur.count()
-    for _ in range(max_iters):
+    for peels in range(max_iters + 1):
         deg = (
             cur.select(F.col("a").alias("node"))
             .union(cur.select(F.col("b").alias("node")))
@@ -330,9 +331,9 @@ def kcore(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
         if n_next == n_edges:
             cur = nxt
             break
+        if peels == max_iters:  # this round only confirms, yet it peeled
+            raise RuntimeError(f"kcore: no fixpoint within {max_iters} rounds")
         cur, n_edges = nxt, n_next
-    else:
-        raise RuntimeError(f"kcore: no fixpoint within {max_iters} rounds")
     return (
         cur.select(F.col("a").alias("node"))
         .union(cur.select(F.col("b").alias("node")))

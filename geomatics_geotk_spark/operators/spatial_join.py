@@ -17,9 +17,14 @@ into the classic spatial hash join:
    explicit hot-cell salting for large/skewed ones (AQE skew-split stays
    on as belt-and-suspenders);
 4. **refine** only the partial-cell candidates with the crossing-number
-   test as Column expressions (:func:`functions.point_in_polygon_col`)
-   over the rings carried on the zone-cell rows: JVM only, no Python
-   worker, reproducing the reference's exact predicate semantics.
+   test over the partial cell's **edge slots** — the few ring edges that
+   can cross a ray from a point in that cell, built once per zone at
+   prepare time — unrolled into one lambda-free Column expression
+   (:func:`functions.edge_slots_pip_col`): JVM only, no Python worker,
+   compiled with the join by whole-stage codegen, and the same answer as
+   the full-ring test (:func:`functions.point_in_polygon_col`), so the
+   reference's exact predicate semantics hold.  A zone side with more
+   than :data:`MAX_SLOTS` slots in some cell keeps the full-ring test.
 
 CRS harmonization (reference ``setCRS``, ``TopologicalRelationships.java:
 261-271``) happens once on the zone side at prepare time — zones are the
@@ -28,15 +33,24 @@ small side, so the transform cost is O(M), not O(N).
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import cells
-from ..functions import cell_id_col, point_in_polygon_col, wkt_point_lat, wkt_point_lon
+from ..functions import (
+    cell_id_col,
+    edge_slot_cols,
+    edge_slots_pip_col,
+    point_in_polygon_col,
+    wkt_point_lat,
+    wkt_point_lon,
+)
 from ..kernels import crs as crs_k
 from ..kernels import geometry as geom_k
 
@@ -75,17 +89,23 @@ def tile_assign(docs: DataFrame, res: int = DEFAULT_RES,
 # ---------------------------------------------------------------------------
 
 
-def _zone_rings_lonlat(exterior, interiors, crs) -> list[np.ndarray]:
-    """Zone rings (lists of {x,y}) → [exterior, *interiors] as (n,2)
-    lon/lat arrays, CRS-harmonized (reference setCRS semantics) and
-    axis-normalized.  ``interiors`` may be a Row list, an Arrow-decoded
-    numpy object array or None."""
+def _lonlat(rings: list[np.ndarray], crs) -> list[np.ndarray]:
+    """(n,2) rings in the CRS's native axes → (n,2) lon/lat rings,
+    CRS-harmonized (reference setCRS semantics) and axis-normalized."""
     out = []
-    for ring in [exterior, *(interiors if interiors is not None else [])]:
-        r = np.array([[p["x"], p["y"]] for p in ring], dtype=np.float64)
+    for r in rings:
         lon, lat = crs_k.to_lonlat(r[:, 0], r[:, 1], crs)
         out.append(np.column_stack([lon, lat]))
     return out
+
+
+def _ring_arrays(exterior, interiors) -> list[np.ndarray]:
+    """Zone rings (lists of {x,y}) → [exterior, *interiors] as (n,2)
+    arrays; ``interiors`` may be None."""
+    return [
+        np.array([[p["x"], p["y"]] for p in ring], dtype=np.float64)
+        for ring in [exterior, *(interiors if interiors is not None else [])]
+    ]
 
 
 def _segs_hit_boxes(rings: list[np.ndarray], x0, y0, x1, y1) -> np.ndarray:
@@ -161,36 +181,103 @@ def _classify_zone_cells(rings: list[np.ndarray], res: int, margin_m: float = 0.
     return carr[keep], full_mask[keep]
 
 
+# far above the double rounding of a cell bound or of a point's cell, far
+# below any cell edge (res 28 cells are ~7e-7 degrees)
+_BAND_MARGIN_DEG = 1e-9
+
+
+def _band_edges(rings: list[np.ndarray], cell_ids: np.ndarray):
+    """The edge slots of each cell: the ring edges p→c, in ring order,
+    with p.y != c.y, whose y-range meets the cell's y-range and whose
+    larger x reaches the cell's left side (both widened by
+    ``_BAND_MARGIN_DEG``).
+
+    No other edge can satisfy ``(p.y > lat) != (c.y > lat) AND lon <
+    xcross`` for a point of the cell, so the crossing count over a cell's
+    slots equals the full-ring count for every point that cell_id_col
+    puts in it.  A cell on the edge of the lon/lat domain also holds the
+    points clamped into it from beyond, so its band is open on that side.
+    A cell with no exterior slot has no point inside the exterior, so it
+    gets no slot at all.
+
+    Returns (per-cell slot counts, (n,2) p, (n,2) c, (n,) last), slots
+    grouped by cell; ``last`` marks the last slot of a ring in its cell.
+    """
+    x0, y0, _, y1 = cells.cell_bounds_many(cell_ids)
+    x_lo = np.where(x0 <= -180.0, -np.inf, x0 - _BAND_MARGIN_DEG)[:, None]
+    y_lo = np.where(y0 <= -90.0, -np.inf, y0 - _BAND_MARGIN_DEG)[:, None]
+    y_hi = np.where(y1 >= 90.0, np.inf, y1 + _BAND_MARGIN_DEG)[:, None]
+    p = np.concatenate([r[:-1] for r in rings])
+    c = np.concatenate([r[1:] for r in rings])
+    ring = np.repeat(np.arange(len(rings)), [len(r) - 1 for r in rings])
+    band = (
+        (p[:, 1] != c[:, 1])
+        & (np.minimum(p[:, 1], c[:, 1]) <= y_hi)
+        & (np.maximum(p[:, 1], c[:, 1]) >= y_lo)
+        & (np.maximum(p[:, 0], c[:, 0]) >= x_lo)
+    )
+    band &= band[:, ring == 0].any(axis=1, keepdims=True)
+    row, col = np.nonzero(band)  # row-major: each cell's slots in ring order
+    slot_ring = ring[col]
+    last = np.ones(len(col), dtype=bool)
+    last[:-1] = (row[1:] != row[:-1]) | (slot_ring[1:] != slot_ring[:-1])
+    return band.sum(axis=1), p[col], c[col], last
+
+
 _POINTS = T.ArrayType(T.StructType([
     T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType()),
 ]))
-_ZPREP_SCHEMA = T.StructType([
-    T.StructField("exterior", _POINTS),
-    T.StructField("interiors", T.ArrayType(_POINTS)),
-    T.StructField("cells", T.ArrayType(T.StructType([
-        T.StructField("cell_id", T.LongType()), T.StructField("full", T.BooleanType()),
-    ]))),
-])
+_EDGES = T.ArrayType(T.StructType([
+    T.StructField(f, T.DoubleType()) for f in ("px", "py", "cx", "cy")
+] + [T.StructField("last", T.BooleanType())]))
 
 
-def _prep_zone(exterior, interiors, crs, res: int, margin_m: float = 0.0):
-    """The per-zone kernel: one zone → (rings, kept_cell_ids, full_mask)
-    as numpy — the harmonized [exterior, *interiors] (n,2) lon/lat rings
-    and the classified covering cells.  Each caller packs it into its own
-    ``_ZPREP_SCHEMA`` carrier (row tuples in :func:`prep_zone_struct`, one
-    Arrow table in :func:`prepare_zones`)."""
-    rings = _zone_rings_lonlat(exterior, interiors, crs)
+def _zprep_schema(slots: bool) -> T.StructType:
+    """The per-zone carrier (exterior, interiors, cells); with ``slots``
+    each cell also carries its edge slots (empty on full cells)."""
+    cell = [T.StructField("cell_id", T.LongType()), T.StructField("full", T.BooleanType())]
+    if slots:
+        cell.append(T.StructField("edges", _EDGES))
+    return T.StructType([
+        T.StructField("exterior", _POINTS),
+        T.StructField("interiors", T.ArrayType(_POINTS)),
+        T.StructField("cells", T.ArrayType(T.StructType(cell))),
+    ])
+
+
+def _prep_zone(rings: list[np.ndarray], crs, res: int, margin_m: float = 0.0,
+               slots: bool = False):
+    """The per-zone kernel: one zone's [exterior, *interiors] (n,2) rings
+    in its CRS → (rings, kept_cell_ids, full_mask, slots) as numpy — the
+    harmonized lon/lat rings, the classified covering cells and, when
+    ``slots`` is asked for (only :func:`spatial_join` reads them), the
+    partial cells' edge slots as :func:`_band_edges` returns them, over
+    all kept cells (full cells get none); else ``slots`` is None.  Each
+    caller packs it into its own :func:`_zprep_schema` carrier (row
+    tuples in :func:`prep_zone_struct`, one Arrow table in
+    :func:`prepare_zones`)."""
+    rings = _lonlat(rings, crs)
     kept, full_mask = _classify_zone_cells(rings, res, margin_m)
-    return rings, kept, full_mask
+    if slots:
+        partial = np.nonzero(~full_mask)[0]
+        n, p, c, last = _band_edges(rings, kept[partial])
+        counts = np.zeros(len(kept), dtype=np.int64)
+        counts[partial] = n
+        slots = counts, p, c, last
+    else:
+        slots = None
+    return rings, kept, full_mask, slots
 
 
 def prep_zone_struct(zones: DataFrame, res: int = DEFAULT_RES,
-                     margin_m: float = 0.0) -> DataFrame:
+                     margin_m: float = 0.0, slots: bool = False) -> DataFrame:
     """(zone_id, _z(exterior, interiors, cells)) computed ZONE-PARALLEL:
     the per-zone kernel inside a pandas UDF on the executors.  The driver
     never materializes a zone or a cell — 10^6 zones is just more
     partitions.  ``margin_m`` expands the covering cells by a distance
-    margin (the DWithin candidate disk).
+    margin (the DWithin candidate disk).  With ``slots`` each cell also
+    carries its edge slots (:func:`_zprep_schema`), for the point-in-polygon
+    refine of :func:`spatial_join`.
 
     Downstream shapes: :func:`_explode_zone_cells` for the cell
     equi-join; project ``_z.exterior``/``_z.interiors`` for a
@@ -198,32 +285,48 @@ def prep_zone_struct(zones: DataFrame, res: int = DEFAULT_RES,
     never via a driver-built broadcast dict.
     """
 
-    def row(e, i, c) -> tuple:
-        rings, kept, full_mask = _prep_zone(e, i, c, res, margin_m)
+    schema = _zprep_schema(slots)
+
+    def row(exterior, interiors, crs) -> tuple:
+        holes = json.loads(interiors) if interiors is not None else None
+        rings, kept, full_mask, zslots = _prep_zone(
+            _ring_arrays(exterior, holes), crs, res, margin_m, slots)
+        cols = [kept.tolist(), full_mask.tolist()]
+        if slots:
+            counts, p, c, last = zslots
+            edges = list(zip(*p.T.tolist(), *c.T.tolist(), last.tolist()))
+            ends = np.cumsum(counts).tolist()
+            cols.append([edges[b - n:b] for n, b in zip(counts.tolist(), ends)])
         return (
             [tuple(p) for p in rings[0].tolist()],
             [[tuple(p) for p in r.tolist()] for r in rings[1:]],
-            list(zip(kept.tolist(), full_mask.tolist())),
+            list(zip(*cols)),
         )
 
-    @F.pandas_udf(_ZPREP_SCHEMA)
+    @F.pandas_udf(schema)
     def prep(exterior: pd.Series, interiors: pd.Series, crs: pd.Series) -> pd.DataFrame:
         return pd.DataFrame(
             [row(e, i, c) for e, i, c in zip(exterior, interiors, crs)],
-            columns=_ZPREP_SCHEMA.names,
+            columns=schema.names,
         )
 
     # single-eval barrier: _z feeds both the cell explode and the ring
     # projection — without this Catalyst re-runs the (expensive) zone
     # classification once per consumer
     prep = prep.asNondeterministic()
-    return zones.withColumn("_z", prep("exterior", "interiors", "crs"))
+    # interiors as JSON text: pyspark cannot hand a pandas UDF holes of
+    # different lengths as array<array<struct>> (it builds a ragged numpy
+    # array), and JSON also takes the type a writer infers for interiors
+    # that are all empty lists (array<void> from Arrow, array<int> from
+    # parquet)
+    return zones.withColumn("_z", prep("exterior", F.to_json("interiors"), "crs"))
 
 
 def _explode_zone_cells(z: DataFrame) -> DataFrame:
     """(zone_id, _z) → zone_cells(cell_id, zone_id, full, exterior,
-    interiors), one row per covering cell.  Rings ride on partial-cell
-    rows; full cells carry empty rings (refine skipped)."""
+    interiors[, edges]), one row per covering cell.  Rings and edge slots
+    ride on partial-cell rows; full cells carry empty ones (refine
+    skipped).  ``edges`` is there when the carrier has slots."""
     c = z.select(
         "zone_id",
         F.col("_z.exterior").alias("_ext"),
@@ -232,73 +335,143 @@ def _explode_zone_cells(z: DataFrame) -> DataFrame:
     )
     empty_ext = F.array().cast(_POINTS)
     empty_int = F.array().cast(T.ArrayType(_POINTS))
+    slots = "edges" in z.schema["_z"].dataType["cells"].dataType.elementType.names
     return c.select(
         F.col("_c.cell_id").alias("cell_id"),
         "zone_id",
         F.col("_c.full").alias("full"),
         F.when(F.col("_c.full"), empty_ext).otherwise(F.col("_ext")).alias("exterior"),
         F.when(F.col("_c.full"), empty_int).otherwise(F.col("_int")).alias("interiors"),
+        *([F.col("_c.edges").alias("edges")] if slots else []),
     )
 
 
-def _list_array(parts: list[np.ndarray], values) -> pa.ListArray:
-    """One Arrow list per entry of ``parts``, over ``values`` (the parts
+def _list_array(lengths, values) -> pa.ListArray:
+    """One Arrow list per entry of ``lengths``, over ``values`` (the lists
     concatenated), built from the cumulative-length offsets."""
-    offsets = np.zeros(len(parts) + 1, dtype=np.int32)
-    np.cumsum([len(p) for p in parts], out=offsets[1:])
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offsets[1:])
     return pa.ListArray.from_arrays(offsets, values)
 
 
 def _points_array(rings: list[np.ndarray]) -> pa.ListArray:
     """(n,2) rings → list<struct<x,y>>, one list per ring."""
     xy = np.concatenate(rings) if rings else np.empty((0, 2))
-    return _list_array(rings, pa.StructArray.from_arrays([xy[:, 0], xy[:, 1]], names=["x", "y"]))
+    return _list_array([len(r) for r in rings],
+                       pa.StructArray.from_arrays([xy[:, 0], xy[:, 1]], names=["x", "y"]))
+
+
+def _concat(parts, dtype, width: int = 0) -> np.ndarray:
+    """np.concatenate that also takes no parts (a zone side with no zone)."""
+    if parts:
+        return np.concatenate(parts).astype(dtype, copy=False)
+    return np.empty((0, width) if width else 0, dtype=dtype)
+
+
+def _prepare_zones(zones: DataFrame, res: int, slots: bool):
+    """:func:`prepare_zones`, with the edge slots when ``slots`` is set,
+    plus the largest slot count of any row (0 without slots), read off
+    the kernel's numpy output."""
+    rows = zones.collect()
+    preps = [
+        _prep_zone(_ring_arrays(r["exterior"], r["interiors"]), r["crs"], res, slots=slots)
+        for r in rows
+    ]
+    zone_ids = [r["zone_id"] for r in rows]
+    rings, kept, full, zslots = (list(v) for v in zip(*preps)) if preps else ([], [], [], [])
+    holes = [h for zr in rings for h in zr[1:]]
+    cell_cols = [pa.array(_concat(kept, np.int64)), pa.array(_concat(full, np.bool_))]
+    k = 0
+    if slots:
+        counts, p, c, last = zip(*zslots) if zslots else ([], [], [], [])
+        p, c = _concat(p, np.float64, 2), _concat(c, np.float64, 2)
+        edges_arr = pa.StructArray.from_arrays(
+            [p[:, 0], p[:, 1], c[:, 0], c[:, 1], pa.array(_concat(last, np.bool_))],
+            names=_EDGES.elementType.names,
+        )
+        cell_counts = _concat(counts, np.int64)
+        cell_cols.append(_list_array(cell_counts, edges_arr))
+        k = int(cell_counts.max()) if len(cell_counts) else 0
+    schema = _zprep_schema(slots)
+    cells_arr = pa.StructArray.from_arrays(
+        cell_cols, names=schema["cells"].dataType.elementType.names)
+    zprep = pa.StructArray.from_arrays(
+        [
+            _points_array([zr[0] for zr in rings]),
+            _list_array([len(zr) - 1 for zr in rings], _points_array(holes)),
+            _list_array([len(zk) for zk in kept], cells_arr),
+        ],
+        names=schema.names,
+    )
+    table = pa.table({"zone_id": pa.array(zone_ids, pa.string()), "_z": zprep})
+    z = zones.sparkSession.createDataFrame(table, T.StructType([
+        T.StructField("zone_id", T.StringType()), T.StructField("_z", schema),
+    ]))
+    return _explode_zone_cells(z), dict(zip(zone_ids, rings)), k
 
 
 def prepare_zones(zones: DataFrame, res: int = DEFAULT_RES):
     """Zone polygons → (zone_cells DataFrame, {zone_id: rings} dict),
     prepared on the DRIVER: the zones are collected, the per-zone kernel
     runs on each, and its numpy output is packed into one Arrow table
-    (zone_id, _z) straight from list offsets, with no per-point or
-    per-cell Python object.  Spark takes that table as a local relation
-    (a ``LocalTableScan`` leaf) and explodes it in the JVM, so a broadcast
-    join over it holds no Python node and no pickled RDD; the rings dict
-    serves brute-force cross-checks.  For zone sides too large to collect
-    use :func:`prepare_zones_distributed`.
+    (zone_id, _z) straight from list offsets, with no per-point,
+    per-cell or per-slot Python object.  Spark takes that table as a
+    local relation (a ``LocalTableScan`` leaf) and explodes it in the
+    JVM, so a broadcast join over it holds no Python node and no pickled
+    RDD; the rings dict serves brute-force cross-checks.  For zone sides
+    too large to collect use :func:`prepare_zones_distributed`.
     """
-    zone_ids, rings, kept, full = [], [], [], []
-    for r in zones.collect():
-        zr, zk, zf = _prep_zone(r["exterior"], r["interiors"], r["crs"], res)
-        zone_ids.append(r["zone_id"])
-        rings.append(zr)
-        kept.append(zk)
-        full.append(zf)
-    holes = [h for zr in rings for h in zr[1:]]
-    cells_arr = pa.StructArray.from_arrays(
-        [pa.array(np.concatenate(kept) if kept else [], pa.int64()),
-         pa.array(np.concatenate(full) if full else [], pa.bool_())],
-        names=["cell_id", "full"],
-    )
-    zprep = pa.StructArray.from_arrays(
-        [
-            _points_array([zr[0] for zr in rings]),
-            _list_array([zr[1:] for zr in rings], _points_array(holes)),
-            _list_array(kept, cells_arr),
-        ],
-        names=_ZPREP_SCHEMA.names,
-    )
-    table = pa.table({"zone_id": pa.array(zone_ids, pa.string()), "_z": zprep})
-    z = zones.sparkSession.createDataFrame(table, T.StructType([
-        T.StructField("zone_id", T.StringType()), T.StructField("_z", _ZPREP_SCHEMA),
-    ]))
-    return _explode_zone_cells(z), dict(zip(zone_ids, rings))
+    zone_cells, rings, _ = _prepare_zones(zones, res, slots=False)
+    return zone_cells, rings
 
 
 def prepare_zones_distributed(zones: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """zone_cells(cell_id, zone_id, full, exterior, interiors) computed
-    ZONE-PARALLEL (:func:`prep_zone_struct`) — the identical row set to
-    :func:`prepare_zones` (same kernel, same explode)."""
+    ZONE-PARALLEL (:func:`prep_zone_struct`) — the identical row
+    set to :func:`prepare_zones` (same kernel, same explode)."""
     return _explode_zone_cells(prep_zone_struct(zones, res))
+
+
+def _prepare_zones_distributed(zones: DataFrame, res: int):
+    """:func:`prepare_zones_distributed` with the edge slots, plus the
+    largest slot count of any row.  The prepared zones are checkpointed
+    first, so the slot-count aggregate and the join read them without
+    running the prep UDF twice."""
+    zone_cells = _explode_zone_cells(prep_zone_struct(zones, res, slots=True).localCheckpoint())
+    k = zone_cells.agg(F.max(F.size("edges"))).first()[0]
+    return zone_cells, k or 0
+
+
+# The slot refine unrolls into the join stage's generated Java method,
+# which HotSpot JIT-compiles only up to 8,000 bytes of bytecode; past
+# that the stage runs interpreted, slower than the full-ring refine.  On
+# flagship_pip (the docs' decode and tile in the same stage) the method
+# takes 5,678 bytes at 3 slots and 7,250 at 6, about 520 per slot.
+MAX_SLOTS = 6
+
+
+def _refine_side(zone_cells: DataFrame, k: int, lon: Column, lat: Column):
+    """The join's zone side and its refine, for a zone side whose partial
+    rows hold at most ``k`` edge slots → (zone side, refine Column, the
+    columns only the refine reads).
+
+    Up to :data:`MAX_SLOTS` slots the refine is
+    :func:`functions.edge_slots_pip_col`, and the zone side carries each
+    slot field as its own non-null column in place of the rings: read as
+    array elements, the slots made flagship_pip's method 8,778 bytes at
+    3 slots.  Full rows hold NaN padding there, 48 bytes per slot, so the
+    bound also caps how much the broadcast relation grows.  Past it the
+    refine is the full-ring test (:func:`functions.point_in_polygon_col`)
+    over the rings, with the same rows."""
+    if k > MAX_SLOTS:
+        pip = point_in_polygon_col(lon, lat, F.col("exterior"), F.col("interiors"))
+        return zone_cells.drop("edges"), pip, ["exterior", "interiors"]
+    names = [[f"_slot{i}_{j}" for j in range(6)] for i in range(k)]
+    cols = [c.alias(n) for slot, ns in zip(edge_slot_cols(F.col("edges"), k), names)
+            for c, n in zip(slot, ns)]
+    pip = edge_slots_pip_col(lon, lat, [[F.col(n) for n in ns] for ns in names])
+    return (zone_cells.select("cell_id", "zone_id", "full", *cols), pip,
+            [n for ns in names for n in ns])
 
 
 def flat_ring_cols(ext_col, int_col):
@@ -360,8 +533,18 @@ def spatial_join(
     Arrow relation (``LocalTableScan``), and the plan holds no Python node
     at all (asserted in tests/test_plans_bucketing.py).  'shuffle', the
     large-zone-side strategy, runs it on the executors
-    (:func:`prepare_zones_distributed`), so the driver never
-    materializes a zone or a cell.
+    (:func:`prepare_zones_distributed`, checkpointed once), so the driver
+    never materializes a zone or a cell.
+
+    Either way the refine is :func:`functions.edge_slots_pip_col` over
+    the partial cells' edge slots, unrolled to the largest slot count of
+    this zone side: no lambda, so the join and its refine compile in one
+    whole-stage-codegen stage, with the same rows as the full-ring
+    crossing number.  A zone side with more than :data:`MAX_SLOTS` slots
+    in some cell (a detailed, concave or holed polygon) keeps the
+    full-ring refine (:func:`functions.point_in_polygon_col`), whose
+    lambdas run interpreted, because the unrolled one would make the
+    stage's method too long to JIT-compile.
 
     Docs with a null lon or lat get ``cell_id`` -1 and match no zone.
     """
@@ -379,11 +562,14 @@ def spatial_join(
 
     pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
 
+    lon, lat = F.col(lon_col), F.col(lat_col)
     if strategy == "broadcast":
-        zone_cells, _ = prepare_zones(zones, res)
+        zone_cells, _, k = _prepare_zones(zones, res, slots=True)
+        zone_cells, pip_col, refine_cols = _refine_side(zone_cells, k, lon, lat)
         joined = pts.join(F.broadcast(zone_cells), "cell_id", "inner")
     elif strategy == "shuffle":
-        zone_cells = prepare_zones_distributed(zones, res)
+        zone_cells, k = _prepare_zones_distributed(zones, res)
+        zone_cells, pip_col, refine_cols = _refine_side(zone_cells, k, lon, lat)
         if salt > 0:
             # explicit hot-cell salting: estimate per-cell doc counts on a
             # sample, replicate zone rows for hot cells only
@@ -418,13 +604,9 @@ def spatial_join(
     else:
         raise ValueError(f"unknown strategy: {strategy}")
 
-    # crossing-number refine as Column math over the rings carried on the
-    # zone side: no Python, no Arrow.  Its filter/exists lambdas over edge
-    # indices are CodegenFallback, i.e. interpreted inside the stage.
-    pip_col = point_in_polygon_col(
-        F.col(lon_col), F.col(lat_col), F.col("exterior"), F.col("interiors")
-    )
-    return joined.where(F.col("full") | pip_col).drop("full", "exterior", "interiors")
+    # crossing-number refine as Column math over what the zone side
+    # carries: no Python, no Arrow
+    return joined.where(F.col("full") | pip_col).drop("full", *refine_cols)
 
 
 def dwithin_zone_join(

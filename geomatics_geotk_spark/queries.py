@@ -53,6 +53,7 @@ from .operators import (
     zonal,
 )
 from .operators.envelope import envelope_agg
+from .sources.documents import polygon_zones
 
 RES = 12
 
@@ -213,11 +214,7 @@ ORACLE_TILE_ASSIGN = (
 
 def _pentagon_zone(spark: SparkSession) -> DataFrame:
     ring = [*PENTAGON, PENTAGON[0]]
-    return spark.createDataFrame(
-        [("pentagon", "CRS:84", [(x, y) for x, y in ring], [])],
-        "zone_id string, crs string, exterior array<struct<x:double,y:double>>, "
-        "interiors array<array<struct<x:double,y:double>>>",
-    )
+    return polygon_zones(spark, [("pentagon", "CRS:84", [(x, y) for x, y in ring], [])])
 
 
 def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:

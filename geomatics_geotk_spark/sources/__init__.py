@@ -5,6 +5,7 @@ a checkpoint-resumable parquet sink with per-partition lineage."""
 from .documents import (  # noqa: F401
     synth_documents,
     zones_table,
+    polygon_zones,
     pois_table,
     raster_tiles_table,
     periods_table,

@@ -19,6 +19,7 @@ JVM job with no Python in the row path.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -165,13 +166,36 @@ def compact_adjacent_text_spans(spans: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
+_POINT = pa.struct([("x", pa.float64()), ("y", pa.float64())])
+_ZONES_ARROW = pa.schema([
+    ("zone_id", pa.string()), ("crs", pa.string()),
+    ("exterior", pa.list_(_POINT)), ("interiors", pa.list_(pa.list_(_POINT))),
+])
+_ZONES_SCHEMA = (
+    "zone_id string, crs string, exterior array<struct<x:double,y:double>>, "
+    "interiors array<array<struct<x:double,y:double>>>"
+)
+
+
+def polygon_zones(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """(zone_id, crs, exterior, interiors) tuples, rings as (x, y) tuples
+    → a zones DataFrame.  It is handed to Spark as one Arrow table, so it
+    plans as a ``LocalTableScan`` and collecting it is a driver-local
+    read: no job, no Python worker."""
+    table = pa.Table.from_pylist(
+        [dict(zip(_ZONES_ARROW.names, r)) for r in rows], schema=_ZONES_ARROW
+    )
+    return spark.createDataFrame(table, _ZONES_SCHEMA)
+
+
 def zones_table(spark: SparkSession, grid: int = 8) -> DataFrame:
     """Polygon zones: the reference fixture polygons (verbatim) + a
     ``grid×grid`` rectangle tiling of the Vancouver box.
 
     Schema: zone_id, crs, exterior array<struct<x,y>>, interiors
     array<array<struct<x,y>>> — x,y in the CRS's native axis order
-    (lat,lon for EPSG:4326/4258 per GML fixture convention).
+    (lat,lon for EPSG:4326/4258 per GML fixture convention).  A local
+    relation (:func:`polygon_zones`).
     """
     rows = []
     # gml/Polygon-InteriorLinearRing.xml exterior (EPSG:4326, lat,lon)
@@ -191,11 +215,7 @@ def zones_table(spark: SparkSession, grid: int = 8) -> DataFrame:
             x0, y0 = lon0 + i * dx, lat0 + j * dy
             ring = [(x0, y0), (x0 + dx, y0), (x0 + dx, y0 + dy), (x0, y0 + dy), (x0, y0)]
             rows.append((f"zone-grid-{i}-{j}", "CRS:84", ring, []))
-    schema = (
-        "zone_id string, crs string, exterior array<struct<x:double,y:double>>, "
-        "interiors array<array<struct<x:double,y:double>>>"
-    )
-    return spark.createDataFrame(rows, schema)
+    return polygon_zones(spark, rows)
 
 
 def pois_table(spark: SparkSession, n_random: int = 64) -> DataFrame:

@@ -158,6 +158,33 @@ def test_holed_zone_every_prep_path(spark):
     assert any(doc in in_hole and v > 0.0 for doc, _, v in got)
 
 
+def test_zone_prep_takes_untyped_empty_interiors(spark, tmp_path):
+    """Zones written with only empty interiors get whatever type the
+    writer infers for an empty list: Arrow's list<null> reads as
+    array<void>, and through parquet (as perfbench writes its DWithin
+    zones) as array<int>.  The executor prep takes both like typed
+    zones: the same DWithin and shuffle-join rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    typed = zones_table(spark, grid=2)
+    table = pa.Table.from_pylist([r.asDict(recursive=True) for r in typed.collect()])
+    pq.write_table(table, str(tmp_path / "zones.parquet"))
+    docs = sj.tile_assign(sj.decode_geo_spans(synth_documents(spark, 400)), 12)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    want_dwithin = rows(sj.dwithin_zone_join(docs, typed, distance_m=3000.0))
+    want_pip = rows(sj.spatial_join(docs, typed, res=12, strategy="shuffle"))
+    assert want_dwithin and want_pip
+    for untyped, kind in ((spark.createDataFrame(table), "array<void>"),
+                          (spark.read.parquet(str(tmp_path / "zones.parquet")), "array<int>")):
+        assert untyped.schema["interiors"].dataType.simpleString() == kind
+        assert rows(sj.dwithin_zone_join(docs, untyped, distance_m=3000.0)) == want_dwithin
+        assert rows(sj.spatial_join(docs, untyped, res=12, strategy="shuffle")) == want_pip
+
+
 def test_dwithin_zone_join_vs_brute_force_pentagon(spark):
     """Geometry×geometry DWITHIN against a non-rectangular (pentagon)
     zone: the cell-prefiltered operator must reproduce the numpy brute

@@ -1630,6 +1630,24 @@ class TestKcore:
         df = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
         assert graph.kcore(df, k=3).count() == 0
 
+    @staticmethod
+    def _chain(spark, n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+
+    def test_peel_depth_at_cap_converges(self, spark):
+        """A 60-node chain peels its two end edges per round: the 2-core
+        is empty after exactly 30 peels, the default cap, so the
+        confirming round runs past it."""
+        from geomatics_geotk_spark.operators import graph
+        assert graph.kcore(self._chain(spark, 60), k=2).count() == 0
+
+    def test_peel_depth_past_cap_raises(self, spark):
+        from geomatics_geotk_spark.operators import graph
+        chain = self._chain(spark, 8)  # 7 edges: 4 peels
+        assert graph.kcore(chain, k=2, max_iters=4).count() == 0
+        with pytest.raises(RuntimeError, match="no fixpoint within 3 rounds"):
+            graph.kcore(chain, k=2, max_iters=3)
+
 
 class TestEwmaFold:
     """The frame-fold EWMA ≡ the sequential recursion seeded at the

@@ -3,6 +3,9 @@ bucketed co-located joins."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,19 +41,66 @@ class TestPlanHygiene:
         df = li.where(F.col("l_quantity") > 49).select("l_orderkey", "l_quantity")
         assert plans.plan_has_pushed_filters(df)
 
-    def test_flagship_refine_is_jvm_only(self, spark):
-        """The broadcast pip join must contain no Python/Arrow eval node —
-        the refine is Column math in the JVM — and its zone side is a
-        local Arrow relation, not a scan of a pickled Python RDD."""
-        docs = synth_documents(spark, 100)
+    def test_flagship_refine_is_jvm_only(self, spark, tmp_path):
+        """The broadcast pip join must contain no Python/Arrow eval node
+        and no lambda — the refine is lambda-free Column math in the JVM —
+        and its zone side is a local Arrow relation, not a scan of a
+        pickled Python RDD.  Once it has run, the final plan compiles the
+        join, refine included, in a whole-stage-codegen stage."""
+        # parquet, so the docs side holds none of the generator's lambdas
+        synth_documents(spark, 2000).write.parquet(str(tmp_path / "docs"))
+        docs = spark.read.parquet(str(tmp_path / "docs"))
         tiled = spatial_join.tile_assign(spatial_join.decode_geo_spans(docs), 12)
         joined = spatial_join.spatial_join(
             tiled, zones_table(spark, grid=4), res=12, strategy="broadcast"
         )
         plan = plans.formatted_plan(joined)
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        # the docs side is a Range leaf, so these leaves are the zone side's
+        assert "lambdafunction" not in plan
+        # the docs side is a parquet scan, so these leaves are the zone side's
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert joined.collect()
+        final = joined._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in final
+        assert re.search(r"\*\(\d+\) BroadcastHashJoin", final), final
+
+    def test_zones_table_is_local_relation(self, spark):
+        """zones_table plans as a local Arrow relation (its collect is a
+        driver-local read, no job), with the same rows as the list-built
+        table it replaced (a hash of its sorted rows, recorded then)."""
+        z = zones_table(spark, grid=8)
+        plan = plans.formatted_plan(z)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert z.schema.simpleString() == (
+            "struct<zone_id:string,crs:string,exterior:array<struct<x:double,y:double>>,"
+            "interiors:array<array<struct<x:double,y:double>>>>"
+        )
+        rows = sorted(z.collect())
+        assert len(rows) == 66
+        assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+            "0f3d57d1a2a3cbafa11231a6eaf63f357fa295ed35bce1c49c5a8b6679914d52"
+        )
+
+    def test_dwithin_prep_schema_has_no_slots(self, spark):
+        """With a distance margin the zone prep builds no edge slots: its
+        output schema is the one the DWithin join has always read."""
+        z = spatial_join.prep_zone_struct(zones_table(spark, grid=2), 12, margin_m=5000)
+        assert z.schema["_z"].dataType.simpleString() == (
+            "struct<exterior:array<struct<x:double,y:double>>,"
+            "interiors:array<array<struct<x:double,y:double>>>,"
+            "cells:array<struct<cell_id:bigint,full:boolean>>>"
+        )
+
+    def test_only_spatial_join_builds_slots(self, spark):
+        """The zone preps build edge slots only when asked, as
+        spatial_join does: the public preps keep their five columns and
+        prep_zone_struct its (cell_id, full) cells."""
+        zones = zones_table(spark, grid=2)
+        cols = ["cell_id", "zone_id", "full", "exterior", "interiors"]
+        assert spatial_join.prepare_zones(zones, 12)[0].columns == cols
+        assert spatial_join.prepare_zones_distributed(zones, 12).columns == cols
+        cells = spatial_join.prep_zone_struct(zones, 12).schema["_z"].dataType["cells"]
+        assert cells.dataType.elementType.names == ["cell_id", "full"]
 
     def test_decode_has_no_lambda(self, spark):
         """The decode projection is codegen'd expressions only.  It runs
