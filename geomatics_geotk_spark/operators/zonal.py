@@ -12,6 +12,9 @@ Everything is JVM Column math (whole-stage codegen): covering cells via
 ``functions.envelope_intersects_polygon_col`` over rings shipped on the
 broadcast ``zone_cells`` side — no Python in the per-tile path, so the
 operator holds up at raster scale (billions of tiles).
+
+The zone side follows spatial_join's one rule: broadcast → driver Arrow
+table, shuffle → executor ``mapInArrow``.
 """
 
 from __future__ import annotations
@@ -20,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import covering_cells_col, envelope_intersects_polygon_col
-from .spatial_join import prepare_zones_distributed
+from .spatial_join import _explode_zone_cells, _zone_side
 
 DEFAULT_RES = 10
 
@@ -29,18 +32,15 @@ def zonal_join(tiles: DataFrame, zones: DataFrame, res: int = DEFAULT_RES,
                strategy: str = "broadcast") -> DataFrame:
     """(tile columns…, zone_id) pairs where tile envelope ∩ zone ≠ ∅.
 
-    Zone prep is ZONE-PARALLEL (prepare_zones_distributed) — the driver
-    never collects a ring, so 10^6-zone inputs classify on executors.
-
-    ``strategy='broadcast'`` (default) pins the zone-cell side as a
-    broadcast — right when zones fit an executor.  ``'shuffle'`` drops
-    the hint so both sides exchange on cell_id (AQE picks the physical
-    join and handles hot-cell skew) — the plan for zone sets too large
-    to broadcast.  Row set is identical either way.
+    ``strategy='broadcast'`` (default) pins the driver-packed zone-cell
+    side as a broadcast — right when zones fit an executor.
+    ``'shuffle'`` packs the zones on the executors and drops the hint,
+    so both sides exchange on cell_id (AQE picks the physical join and
+    handles hot-cell skew) — the plan for zone sets too large to
+    broadcast.  Row set is identical either way.
     """
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"zonal_join: strategy must be broadcast or shuffle, got {strategy!r}")
-    zone_cells = prepare_zones_distributed(zones, res)
+    z, _ = _zone_side(zones, res, strategy)
+    zone_cells = _explode_zone_cells(z)
     if strategy == "broadcast":
         zone_cells = F.broadcast(zone_cells)
 

@@ -5915,9 +5915,10 @@ ORACLE_AUDIENCE_OVERLAP = (
 
 def q_series_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-peak detection on the hourly rate series: hours whose
-    count strictly exceeds BOTH neighbors and is ≥ 2× the 24-hour
-    trailing mean (integer-cleared: 24·n > 2·trailing_sum with a full
-    baseline) — the discrete-event companion of `rate_anomaly`'s
+    count strictly exceeds BOTH neighbors and is ≥ 2× the trailing mean
+    of the type's 24 previous series rows — hours with events, so a
+    gapped series looks back further than 24 hours (integer-cleared:
+    24·n > 2·trailing_sum with a full baseline) — the discrete-event companion of `rate_anomaly`'s
     z-scores (a peak is shape-local; a z-alarm is variance-relative).
     All-integer predicate — bit-exact.
 
@@ -5966,7 +5967,8 @@ ORACLE_SERIES_PEAKS = (
 
 
 def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stationary distribution of the behavioral Markov chain: 12
+    """Stationary distribution of the behavioral Markov chain: from the
+    uniform π = round(1/n, 12) over the n event types, 12
     decimal-fixed-point power iterations π ← πP over the event-type
     transition matrix (`event_transitions`' counts row-normalized) —
     the long-run behavioral mix the chain converges to, independent of
@@ -5993,15 +5995,12 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "from_type", "to_type",
         (F.col("n").cast("double") / F.col("r").cast("double")).alias("p"),
     ).localCheckpoint()
+    # uniform start π = round(1/n, 12) over the n states, as the oracle
+    n_states = tot.count()
     pi = tot.select(
         F.col("from_type").alias("state"),
-        F.lit("0.200000000000").cast("decimal(20,12)").alias("pi"),
+        F.round(F.lit(1.0) / F.lit(n_states), 12).cast("decimal(20,12)").alias("pi"),
     )
-    n_states = pi.count()
-    if n_states != 5:  # the uniform-π/5 literal is the oracle contract
-        raise ValueError(
-            f"markov_stationary: expected the 5-type chain, got {n_states}"
-        )
     for _ in range(12):
         term = (
             pi.join(p, pi["state"] == p["from_type"])
@@ -6033,7 +6032,8 @@ def _oracle_markov_stationary(iters: int = 12) -> str:
         "CAST(n AS DOUBLE) / CAST(r AS DOUBLE) AS p "
         "FROM cnt JOIN tot USING (from_type)), "
         "pi0 AS (SELECT from_type AS state, "
-        "CAST('0.200000000000' AS DECIMAL(20,12)) AS pi FROM tot)"
+        "CAST(round(1.0 / (SELECT count(*) FROM tot), 12) AS DECIMAL(20,12)) "
+        "AS pi FROM tot)"
     ]
     for i in range(iters):
         parts.append(

@@ -64,7 +64,9 @@ def main() -> None:
         "Hash exchange on (cell_id, salt): hot cells spread over salt "
         "sub-keys, AQE skew-join enabled on top.  At bench scale AQE "
         "rightly picks broadcast instead; this is the shape the plan "
-        "takes when the zone side outgrows the broadcast threshold.",
+        "takes when the zone side outgrows the broadcast threshold.  The "
+        "zone side is packed on the executors in one mapInArrow and "
+        "checkpointed, so it enters as a Scan ExistingRDD.",
         salted_plan,
     ))
 
@@ -94,13 +96,14 @@ def main() -> None:
 
     sections.append((
         "Geometry-distance join (dwithin_zones)",
-        "Zone prep is DISTRIBUTED (prep_zone_struct pandas UDF on the "
-        "zone side, margin-expanded cells exploded as Column ops — the "
-        "driver never collects a zone); candidates broadcast-join on "
-        "cell_id, rings attach on zone_id, then ONE Arrow node runs the "
-        "per-candidate nearest-witness + Vincenty refine (full cells "
-        "short-circuit to 0).  strategy='shuffle' swaps both broadcasts "
-        "for hash exchanges when the zone side outgrows the driver.",
+        "strategy='broadcast': the zone side (margin-expanded cells) is "
+        "packed on the driver into one Arrow table — a LocalTableScan, "
+        "exploded as Column ops, no Python node; candidates "
+        "broadcast-join on cell_id, rings attach on zone_id, then ONE "
+        "Arrow node runs the per-candidate nearest-witness + Vincenty "
+        "refine (full cells short-circuit to 0).  strategy='shuffle' "
+        "packs the zone side on the executors in one mapInArrow and "
+        "swaps both broadcasts for hash exchanges.",
         _trim(plans.formatted_plan(queries.q_dwithin_zones(spark, SF)), 36),
     ))
 
@@ -113,9 +116,11 @@ def main() -> None:
         "string — min(string) has no hash-agg buffer; partial agg still "
         "runs map-side) → ring-attach join on zone_id → batch DE-9IM "
         "refine (one Arrow node; factorized by (zone, kind) inside each "
-        "batch, concatenated-array kernels — no per-pair Python).  Zone "
-        "prep distributed; rings never ride through the explode/shuffle, "
-        "only the final dimension join.",
+        "batch, concatenated-array kernels — no per-pair Python).  The "
+        "zone side is packed on the driver under strategy='broadcast' (a "
+        "LocalTableScan) and on the executors under 'shuffle' (one "
+        "mapInArrow); rings never ride through the explode/shuffle, only "
+        "the final dimension join.",
         _trim(plans.formatted_plan(queries.q_geometry_join_lines(spark, SF)), 40),
     ))
 
@@ -299,8 +304,9 @@ substring greps):
         "Tiles explode to covering cells (Column math) → broadcast "
         "zone-cell equi-join → codegen envelope∩polygon refine (full "
         "cells classified without refining) → ONE map-side-combined "
-        "hash-agg exchange for the per-zone stats.  Zone prep is "
-        "prepare_zones_distributed — the driver never collects a zone.",
+        "hash-agg exchange for the per-zone stats.  strategy='broadcast': "
+        "the zone side is packed on the driver (a LocalTableScan); "
+        "'shuffle' packs it on the executors in one mapInArrow.",
         _trim(plans.formatted_plan(queries.q_zonal_stats(spark, SF)), 30),
     ))
 

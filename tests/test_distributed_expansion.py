@@ -5,8 +5,9 @@ round-1 driver-side loops.
   expansion exactly;
 - dwithin_join at 10^5 POIs runs with NO driver collect (shuffle
   strategy) and matches a numpy brute-force truth on sampled docs;
-- prepare_zones_distributed emits the identical (cell_id, zone_id, full)
-  row set as the driver-side prepare_zones;
+- the zone packer gives the identical prepared zone side on the driver
+  (strategy 'broadcast') and on the executors ('shuffle'), for every
+  way interiors arrive;
 - a zone with a hole goes through both preps and every join that uses
   them.
 """
@@ -80,17 +81,62 @@ def test_dwithin_100k_pois_no_driver_collect(spark, pois_big):
     assert len(got) > 0
 
 
-def test_prepare_zones_distributed_equals_driver(spark):
-    zones = zones_table(spark, grid=4)
+_TYPED_INTERIORS = "array<array<struct<x:double,y:double>>>"
+
+
+def _zones_with_interiors(spark, tmp_path, kind):
+    """Zones whose interiors arrive as ``kind``: 'typed' (with a zone of
+    two holes of different lengths), all-null, or all-empty lists typed
+    as a writer infers them: Arrow's list<null> reads as array<void>,
+    and through parquet (as perfbench writes its DWithin zones) as
+    array<int>."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from geomatics_geotk_spark.sources import polygon_zones
+
+    plain = zones_table(spark, grid=2)
+    if kind == "typed":
+        outer = [(-123.4, 49.1), (-122.6, 49.1), (-122.6, 49.9), (-123.4, 49.9), (-123.4, 49.1)]
+        holes = [[(-123.3, 49.2), (-123.2, 49.2), (-123.25, 49.3), (-123.3, 49.2)],
+                 [(-122.9, 49.5), (-122.8, 49.5), (-122.75, 49.6), (-122.8, 49.7),
+                  (-122.9, 49.65), (-122.9, 49.5)]]
+        return plain.unionByName(polygon_zones(spark, [("two-holes", "CRS:84", outer, holes)]))
+    if kind == "null":
+        return plain.withColumn("interiors", F.lit(None).cast(_TYPED_INTERIORS))
+    table = pa.Table.from_pylist([r.asDict(recursive=True) for r in plain.collect()])
+    if kind == "array<void>":
+        zones = spark.createDataFrame(table)
+    else:
+        pq.write_table(table, str(tmp_path / "zones.parquet"))
+        zones = spark.read.parquet(str(tmp_path / "zones.parquet"))
+    assert zones.schema["interiors"].dataType.simpleString() == kind
+    return zones
+
+
+@pytest.mark.parametrize("margin_m,slots", [(0.0, False), (5000.0, False), (0.0, True)],
+                         ids=["plain", "margin", "slots"])
+@pytest.mark.parametrize("interiors", ["typed", "null", "array<void>", "array<int>"])
+def test_prepare_zones_distributed_equals_driver(spark, tmp_path, interiors, margin_m, slots):
+    """The zone packer on the driver (strategy 'broadcast') and on the
+    executors ('shuffle') gives the same prepared zone side, field by
+    field of ``_z``, and the same slot count; exploded, partial cells
+    carry the harmonized rings and full cells carry []."""
+    zones = _zones_with_interiors(spark, tmp_path, interiors)
     res = 10
-    drv, _ = sj.prepare_zones(zones, res)
-    dist = sj.prepare_zones_distributed(zones, res)
-    key = lambda r: (r["cell_id"], r["zone_id"], r["full"])  # noqa: E731
-    got_d = sorted(key(r) for r in drv.collect())
-    got_x = sorted(key(r) for r in dist.collect())
-    assert got_d == got_x
-    # partial cells carry the harmonized rings, full cells carry []
-    for r in dist.collect():
+    (drv, k_drv), (exe, k_exe) = (
+        sj._zone_side(zones, res, s, margin_m, slots) for s in ("broadcast", "shuffle")
+    )
+    assert k_drv == k_exe and (k_drv > 0) == slots
+    got_d, got_x = sorted(drv.collect()), sorted(exe.collect())
+    assert [r["zone_id"] for r in got_d] == [r["zone_id"] for r in got_x]
+    for field in drv.schema["_z"].dataType.names:
+        assert [r["_z"][field] for r in got_d] == [r["_z"][field] for r in got_x], field
+    if interiors == "typed":
+        assert [len(h) for r in got_x if r["zone_id"] == "two-holes" for h in r["_z"]["interiors"]] == [4, 6]
+    cells_ = sj._explode_zone_cells(exe).collect()
+    assert any(r["full"] for r in cells_) and not all(r["full"] for r in cells_)
+    for r in cells_:
         if r["full"]:
             assert r["exterior"] == []
         else:
@@ -117,7 +163,7 @@ def test_holed_zone_every_prep_path(spark):
     res = 12
     key = lambda r: (r["cell_id"], r["zone_id"], r["full"])  # noqa: E731
     drv, _ = sj.prepare_zones(zones, res)
-    dist = sj.prepare_zones_distributed(zones, res)
+    dist = sj._explode_zone_cells(sj.prep_zone_struct(zones, res))
     assert sorted(map(key, drv.collect())) == sorted(map(key, dist.collect()))
 
     docs = sj.tile_assign(sj.decode_geo_spans(synth_documents(spark, 1500)), res)
@@ -158,31 +204,26 @@ def test_holed_zone_every_prep_path(spark):
     assert any(doc in in_hole and v > 0.0 for doc, _, v in got)
 
 
-def test_zone_prep_takes_untyped_empty_interiors(spark, tmp_path):
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_zone_prep_takes_untyped_empty_interiors(spark, tmp_path, strategy):
     """Zones written with only empty interiors get whatever type the
-    writer infers for an empty list: Arrow's list<null> reads as
-    array<void>, and through parquet (as perfbench writes its DWithin
-    zones) as array<int>.  The executor prep takes both like typed
-    zones: the same DWithin and shuffle-join rows."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    writer infers for an empty list (:func:`_zones_with_interiors`).
+    The zone prep of either strategy takes both like typed zones: the
+    same DWithin and point-in-polygon join rows."""
     typed = zones_table(spark, grid=2)
-    table = pa.Table.from_pylist([r.asDict(recursive=True) for r in typed.collect()])
-    pq.write_table(table, str(tmp_path / "zones.parquet"))
     docs = sj.tile_assign(sj.decode_geo_spans(synth_documents(spark, 400)), 12)
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
+    def rows(zones):
+        return (
+            sorted(map(tuple, sj.dwithin_zone_join(docs, zones, distance_m=3000.0,
+                                                   strategy=strategy).collect())),
+            sorted(map(tuple, sj.spatial_join(docs, zones, res=12, strategy=strategy).collect())),
+        )
 
-    want_dwithin = rows(sj.dwithin_zone_join(docs, typed, distance_m=3000.0))
-    want_pip = rows(sj.spatial_join(docs, typed, res=12, strategy="shuffle"))
-    assert want_dwithin and want_pip
-    for untyped, kind in ((spark.createDataFrame(table), "array<void>"),
-                          (spark.read.parquet(str(tmp_path / "zones.parquet")), "array<int>")):
-        assert untyped.schema["interiors"].dataType.simpleString() == kind
-        assert rows(sj.dwithin_zone_join(docs, untyped, distance_m=3000.0)) == want_dwithin
-        assert rows(sj.spatial_join(docs, untyped, res=12, strategy="shuffle")) == want_pip
+    want = rows(typed)
+    assert all(want)
+    for kind in ("array<void>", "array<int>"):
+        assert rows(_zones_with_interiors(spark, tmp_path, kind)) == want, kind
 
 
 def test_dwithin_zone_join_vs_brute_force_pentagon(spark):

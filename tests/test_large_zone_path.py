@@ -1,13 +1,13 @@
 """Large-zone-side scale path: 10^5 zones with NO driver-side collect.
 
-r2 verdict item 2: `dwithin_zone_join` and `geometry_join` used to
-collect every zone to the driver and broadcast a ring dict — at 10^6+
-zones that OOMs the driver while the point-pip sibling scales.  Both now
-prep zones fully distributed (spatial_join.prep_zone_struct) and ship
-rings on join rows.  These tests run both operators over a 100,000-zone
-grid built entirely from Column expressions (the zone table never exists
-on the driver) and check planted docs land in their analytically-known
-zones.
+A zone side too large for the driver must never be collected.  Every
+cell join follows one rule: strategy='broadcast' packs the zone side on
+the driver, strategy='shuffle' packs it on the executors
+(spatial_join.prep_zone_struct, one mapInArrow) and ships rings on join
+rows.  These tests run `dwithin_zone_join` and `geometry_join` under
+'shuffle' over a 100,000-zone grid built entirely from Column
+expressions (the zone table never exists on the driver) and check
+planted docs land in their analytically-known zones.
 
 Also covers the malformed-WKT routing rule (ADVICE r2): unparseable
 geometries are excluded from BOTH the intersects output and the disjoint

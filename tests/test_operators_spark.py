@@ -1877,3 +1877,40 @@ class TestMarkovStationary:
         v = v / v.sum()
         for i, s in enumerate(states):
             assert abs(out[s] - v[i]) < 1e-6, s
+
+    def test_three_state_chain(self, spark, tmp_path):
+        """A chain of 3 event types starts from round(1/3, 12) in both
+        engines: the query equals a numpy power iteration from the same
+        start and the DuckDB oracle, row for row."""
+        import duckdb
+        import numpy as np
+        import pandas as pd
+
+        from geomatics_geotk_spark import queries as qmod
+        rng = np.random.default_rng(7)
+        P = np.array([[0.6, 0.3, 0.1], [0.2, 0.5, 0.3], [0.3, 0.2, 0.5]])
+        types = ["a", "b", "c"]
+        rows = []
+        for user in range(6):
+            s = user % 3
+            for step in range(60):
+                rows.append((len(rows), user, pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=step),
+                             types[s]))
+                s = rng.choice(3, p=P[s])
+        events = pd.DataFrame(rows, columns=["event_id", "user_id", "ts", "event_type"])
+        events.to_parquet(tmp_path / "events.parquet", coerce_timestamps="us")
+
+        out = {r["state"]: r["pi_r"] for r in qmod.q_markov_stationary(spark, str(tmp_path)).collect()}
+        counts = np.zeros((3, 3))
+        for _, g in events.sort_values(["user_id", "ts", "event_id"]).groupby("user_id"):
+            seq = [types.index(t) for t in g["event_type"]]
+            np.add.at(counts, (seq[:-1], seq[1:]), 1)
+        pi = np.full(3, round(1 / 3, 12))
+        for _ in range(12):
+            pi = pi @ (counts / counts.sum(axis=1, keepdims=True))
+        assert sorted(out) == types
+        assert np.allclose([out[t] for t in types], pi, rtol=0, atol=1e-9)
+
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+        assert dict(con.execute(qmod.ORACLES["markov_stationary"]).fetchall()) == out

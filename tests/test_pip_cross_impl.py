@@ -210,8 +210,9 @@ def _check_slot_refine(spark, monkeypatch, zones, res, joins):
     zdf = _zones_df(spark, zones)
     key = ["cell_id", "zone_id", "full", "edges"]
 
-    drv, _, k = sj._prepare_zones(zdf, res, slots=True)
-    dist, k_dist = sj._prepare_zones_distributed(zdf, res)
+    z_drv, k = sj._zone_side(zdf, res, "broadcast", slots=True)
+    z_dist, k_dist = sj._zone_side(zdf, res, "shuffle", slots=True)
+    drv, dist = sj._explode_zone_cells(z_drv), sj._explode_zone_cells(z_dist)
     assert k_dist == k
     assert sorted(drv.select(key).collect()) == sorted(dist.select(key).collect())
     cand = tiled.join(drv, "cell_id").select(

@@ -93,14 +93,66 @@ class TestPlanHygiene:
 
     def test_only_spatial_join_builds_slots(self, spark):
         """The zone preps build edge slots only when asked, as
-        spatial_join does: the public preps keep their five columns and
-        prep_zone_struct its (cell_id, full) cells."""
+        spatial_join does: both preps keep their five exploded columns
+        and prep_zone_struct its (cell_id, full) cells.  The executor
+        prep is one MapInArrow, with no Python UDF."""
         zones = zones_table(spark, grid=2)
         cols = ["cell_id", "zone_id", "full", "exterior", "interiors"]
+        z = spatial_join.prep_zone_struct(zones, 12)
         assert spatial_join.prepare_zones(zones, 12)[0].columns == cols
-        assert spatial_join.prepare_zones_distributed(zones, 12).columns == cols
-        cells = spatial_join.prep_zone_struct(zones, 12).schema["_z"].dataType["cells"]
-        assert cells.dataType.elementType.names == ["cell_id", "full"]
+        assert spatial_join._explode_zone_cells(z).columns == cols
+        assert z.schema["_z"].dataType["cells"].dataType.elementType.names == ["cell_id", "full"]
+        plan = plans.formatted_plan(z)
+        assert "MapInArrow" in plan
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+    @pytest.mark.parametrize("op", ["spatial_join", "dwithin_zone_join", "geometry_join", "zonal_join"])
+    def test_zone_side_follows_strategy(self, spark, tmp_path, op):
+        """Every cell join takes its zone side from the one rule: under
+        'broadcast' the driver-packed local relation (a LocalTableScan,
+        no MapInArrow), under 'shuffle' the checkpointed executor pack
+        (Scan ExistingRDD, no LocalTableScan).  Both give the same rows
+        with a bigint zone_id, and the rows of string ids."""
+        from geomatics_geotk_spark.operators.geometry_join import geometry_join
+        from geomatics_geotk_spark.operators.zonal import zonal_join
+
+        # parquet, so the only local relation or RDD scan is the zone side
+        synth_documents(spark, 200).write.parquet(str(tmp_path / "docs"))
+        pts = spatial_join.tile_assign(
+            spatial_join.decode_geo_spans(spark.read.parquet(str(tmp_path / "docs"))), 12
+        ).select("doc_id", "lon", "lat", "cell_id")
+        joins = {
+            "spatial_join": lambda z, s: spatial_join.spatial_join(
+                pts, z, res=12, strategy=s).select("doc_id", "zone_id"),
+            "dwithin_zone_join": lambda z, s: spatial_join.dwithin_zone_join(
+                pts, z, 3000.0, strategy=s).select("doc_id", "zone_id", "dist_m"),
+            "geometry_join": lambda z, s: geometry_join(
+                pts.select("doc_id", F.format_string("POINT (%s %s)", "lon", "lat").alias("wkt")),
+                z, strategy=s),
+            "zonal_join": lambda z, s: zonal_join(
+                pts.select(F.col("doc_id").alias("tile_id"),
+                           *[(F.col(c) + d).alias(n) for c, d, n in (
+                               ("lon", -0.01, "xmin"), ("lat", -0.01, "ymin"),
+                               ("lon", 0.01, "xmax"), ("lat", 0.01, "ymax"))]),
+                z, strategy=s),
+        }
+        zones = zones_table(spark, grid=2)
+        by_hash = dict(zones.select(F.xxhash64("zone_id"), "zone_id").collect())
+        bigint = zones.withColumn("zone_id", F.xxhash64("zone_id"))
+        got = {}
+        for strategy in ("broadcast", "shuffle"):
+            df = joins[op](bigint, strategy)
+            plan = plans.formatted_plan(df)
+            if strategy == "broadcast":
+                assert "LocalTableScan" in plan, plan
+                assert "MapInArrow" not in plan and "ExistingRDD" not in plan, plan
+            else:
+                assert "ExistingRDD" in plan and "LocalTableScan" not in plan, plan
+            got[strategy] = sorted(df.collect())
+        assert got["broadcast"] and got["broadcast"] == got["shuffle"]
+        named = [tuple(by_hash[v] if k == "zone_id" else v for k, v in r.asDict().items())
+                 for r in got["shuffle"]]
+        assert sorted(named) == sorted(map(tuple, joins[op](zones, "broadcast").collect()))
 
     def test_decode_has_no_lambda(self, spark):
         """The decode projection is codegen'd expressions only.  It runs
