@@ -23,11 +23,13 @@ operations that are pure arithmetic/string work:
   round-DOWN-to-2dp ordinates (``Extents.java:191-223``);
 - UCUM length conversion ladder (``GmlUtils.java:220-240``);
 - haversine distance (spherical) as pure Column math — the cheap
-  prefilter for DWITHIN before the exact geodesic refine.
+  prefilter for DWITHIN before the exact geodesic refine, which is the
+  one Python UDF here (:func:`vincenty_m_udf`, Arrow batches).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -441,6 +443,22 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
     dlon = (lon2 - lon1) * rad / 2
     h = F.sin(dlat) ** 2 + F.cos(lat1 * rad) * F.cos(lat2 * rad) * F.sin(dlon) ** 2
     return F.lit(2.0 * 6371008.8) * F.asin(F.sqrt(F.least(h, F.lit(1.0))))
+
+
+def vincenty_m_udf():
+    """A pandas UDF (lat1, lon1, lat2, lon2) → WGS84 Vincenty metres, new
+    per call: a UDF caches its JVM twin, which a restarted SparkContext no
+    longer knows.  Callers add ``.asNondeterministic()`` (a single-eval
+    barrier) where the distance feeds more than one consumer."""
+    from ..kernels import geodesic
+
+    @F.pandas_udf("double")
+    def geo_dist(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
+        return pd.Series(
+            geodesic.inverse(lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy())
+        )
+
+    return geo_dist
 
 
 # ---------------------------------------------------------------------------

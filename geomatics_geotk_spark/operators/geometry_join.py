@@ -128,7 +128,6 @@ def geometry_join(
     wkt_col: str = "wkt",
     id_col: str = "doc_id",
     strategy: str = "broadcast",
-    _valid_env: DataFrame | None = None,
 ) -> DataFrame:
     """docs(any WKT geometry) ⋈ zones(polygons) under ``predicate``.
 
@@ -141,32 +140,28 @@ def geometry_join(
     sets); 'shuffle' packs it on the executors and hash-partitions both
     joins — the large-zone-side path.
     """
-    if _valid_env is not None:
-        valid = _valid_env
-    else:
-        env = docs.withColumn("_env", _wkt_envelope(F.col(wkt_col)))
-        # malformed WKT yields a NaN envelope (which Arrow surfaces as
-        # NULL after the pandas round-trip) — route those rows out up
-        # front: NaN would clamp covering_cells_col to a bogus max-corner
-        # cell, and the reference THROWS on unparseable geometry, so
-        # under 'disjoint' the anti-join base must also exclude them or a
-        # parse failure would be misreported as disjoint-from-every-zone
-        # (ADVICE r2).
-        valid = env.where(
-            F.col("_env.xmin").isNotNull() & ~F.isnan(F.col("_env.xmin"))
-        )
+    env = docs.withColumn("_env", _wkt_envelope(F.col(wkt_col)))
+    # malformed WKT yields a NaN envelope (which Arrow surfaces as
+    # NULL after the pandas round-trip) — route those rows out up
+    # front: NaN would clamp covering_cells_col to a bogus max-corner
+    # cell, and the reference THROWS on unparseable geometry, so
+    # under 'disjoint' the anti-join base must also exclude them or a
+    # parse failure would be misreported as disjoint-from-every-zone
+    # (ADVICE r2).
+    valid = env.where(
+        F.col("_env.xmin").isNotNull() & ~F.isnan(F.col("_env.xmin"))
+    )
+    if predicate != "disjoint":
+        return _join_enveloped(valid, zones, predicate, res, wkt_col, id_col, strategy)
+    # share the enveloped subtree with the intersects pass instead of
+    # re-deriving the WKT-envelope Arrow stage a second time
+    matched = _join_enveloped(valid, zones, "intersects", res, wkt_col, id_col, strategy)
+    return valid.drop("_env").join(matched.select(id_col).distinct(), id_col, "left_anti")
 
-    if predicate == "disjoint":
-        # share the enveloped subtree with the intersects pass instead of
-        # re-deriving the WKT-envelope Arrow stage a second time
-        matched = geometry_join(
-            docs, zones, "intersects", res, wkt_col, id_col, strategy,
-            _valid_env=valid,
-        )
-        return valid.drop("_env").join(
-            matched.select(id_col).distinct(), id_col, "left_anti"
-        )
 
+def _join_enveloped(valid: DataFrame, zones: DataFrame, predicate: str, res: int,
+                    wkt_col: str, id_col: str, strategy: str) -> DataFrame:
+    """:func:`geometry_join` over docs that carry a valid ``_env``."""
     z, _ = _zone_side(zones, res, strategy)
     zone_cells = _explode_zone_cells(z).select("cell_id", "zone_id")
     # rings travel flattened ([x0,y0,…] double arrays): Arrow hands the

@@ -25,22 +25,11 @@ is two Catalyst plans — no driver-side per-row loops.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..kernels import geodesic
+from ..functions import vincenty_m_udf
 from .spatial_join import tile_assign
-
-
-def _geo_dist_udf():
-    @F.pandas_udf(T.DoubleType())
-    def geo_dist(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(
-            geodesic.inverse(lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy())
-        )
-    return geo_dist
 
 
 def knn_join(
@@ -80,7 +69,7 @@ def knn_join(
     n_pois = None
     if strategy == "auto" or (strategy == "cellring" and res is None):
         n_pois = max(1, pois.count())
-    geo_dist = _geo_dist_udf()
+    geo_dist = vincenty_m_udf()
     w = Window.partitionBy(id_col).orderBy(F.col("dist_m").asc(), F.col("poi_id").asc())
     if strategy == "auto":
         strategy = "brute" if n_pois <= 100 else "cellring"

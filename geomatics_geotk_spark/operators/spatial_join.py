@@ -778,28 +778,17 @@ def dwithin_join(
     right = F.broadcast(poi_cells) if strategy == "broadcast" else poi_cells
     cand = pts.join(right, "cell_id", "inner")
 
-    from ..functions import haversine_m
+    from ..functions import haversine_m, vincenty_m_udf
 
     # spherical prefilter with 0.6% guard band, then exact ellipsoidal refine
     cand = cand.where(
         haversine_m(F.col(lat_col), F.col(lon_col), F.col("poi_lat"), F.col("poi_lon"))
         < F.lit(distance_m * 1.01)
     )
-
-    from ..kernels import geodesic
-
-    @F.pandas_udf(T.DoubleType())
-    def geo_dist(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(
-            geodesic.inverse(
-                lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy()
-            )
-        )
-
     # single-eval barrier: dist_m feeds both the filter and downstream
     # projections — without this Catalyst inlines the Arrow UDF into each
     # consumer and runs the Vincenty refine twice per candidate
-    geo_dist = geo_dist.asNondeterministic()
+    geo_dist = vincenty_m_udf().asNondeterministic()
     return cand.withColumn(
         "dist_m", geo_dist(F.col(lat_col), F.col(lon_col), F.col("poi_lat"), F.col("poi_lon"))
     ).where(F.col("dist_m") < F.lit(distance_m))

@@ -37,10 +37,13 @@ from pyspark.sql import functions as F
 from .functions import (
     RES_SHIFT,
     abbreviated_crs_id_col,
+    antipode_lat,
+    antipode_lon,
     cell_id_col,
     length_in_meters_col,
     round_down_2dp,
     srs_name_to_urn_col,
+    vincenty_m_udf,
 )
 from .operators import (
     dedup,
@@ -520,10 +523,8 @@ def q_antipode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts_from_key(_read(spark, sf_dir, "customer"), "c_custkey")
     return pts.select(
         "doc_id",
-        (-F.col("lat")).alias("anti_lat"),
-        F.when(F.col("lon") < 0, F.col("lon") + F.lit(180.0))
-        .otherwise(F.col("lon") - F.lit(180.0))
-        .alias("anti_lon"),
+        antipode_lat(F.col("lat")).alias("anti_lat"),
+        antipode_lon(F.col("lon")).alias("anti_lon"),
     )
 
 
@@ -646,10 +647,6 @@ def q_trajectory_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asNondeterministic barrier — evaluated once); the rollup reuses
     the window's partitioning.
     """
-    from pyspark.sql import types as T
-
-    from .kernels import geodesic
-
     ev = _read(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     k = F.col("event_id")
     staged = ev.select(
@@ -664,15 +661,7 @@ def q_trajectory_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("lon").over(w).alias("plon"),
     ).where(F.col("plat").isNotNull())
 
-    @F.pandas_udf(T.DoubleType())
-    def geo_dist(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(
-            geodesic.inverse(
-                lat1.to_numpy(), lon1.to_numpy(), lat2.to_numpy(), lon2.to_numpy()
-            )
-        )
-
-    geo_dist = geo_dist.asNondeterministic()
+    geo_dist = vincenty_m_udf().asNondeterministic()
     legd = legs.withColumn(
         "_leg", F.round(geo_dist("plat", "plon", "lat", "lon"), 2)
     )
@@ -4922,9 +4911,11 @@ ORACLE_HOTSPOT_GI = (
 
 def q_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-rate spike/drought detection (``stats.rolling_zscore``):
-    hourly counts per event_type scored against their trailing-24-hour
-    baseline, top-20 by |z| — the keyed rate monitor that flags a feed
-    going dark or a scraper going hot.  Bit-exact across engines: the
+    hourly counts per event_type scored against a baseline of the
+    type's 24 previous series rows — hours with events, so a gapped
+    series looks back further than 24 hours — top-20 by |z| — the
+    keyed rate monitor that flags a feed going dark or a scraper going
+    hot.  Bit-exact across engines: the
     frame sums (s1, s2, m) are BIGINT window aggregates and
     z = (n·m − s1)/sqrt(m·s2 − s1²) is ONE correctly-rounded double
     division + sqrt on identical scalars.  Shape: one exchange to the

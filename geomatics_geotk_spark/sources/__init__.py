@@ -12,4 +12,4 @@ from .documents import (  # noqa: F401
     with_span_hash,
     assert_spans_preserved,
 )
-from .sink import checkpointed_write, resume_remaining  # noqa: F401
+from .sink import checkpointed_write  # noqa: F401

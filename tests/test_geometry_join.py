@@ -60,3 +60,21 @@ def test_disjoint_is_complement(spark, mixed_docs):
     }
     dis_ids = {r["doc_id"] for r in geometry_join(docs, zones, "disjoint", res=10).collect()}
     assert dis_ids == {i for i, _ in rows} - inter_ids
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
+def test_disjoint_plan_shares_one_envelope(spark, mixed_docs, strategy):
+    """disjoint = intersects' Arrow stages plus the anti-join base, which
+    reuses the intersects pass's enveloped docs: one envelope stage on
+    each side of the anti-join and one refine (3 ArrowEvalPython nodes,
+    against 2 for intersects alone)."""
+    _, docs = mixed_docs
+    zones = zones_table(spark, grid=4)
+
+    def arrow_nodes(pred):
+        plan = geometry_join(docs, zones, pred, res=10, strategy=strategy)._jdf \
+            .queryExecution().executedPlan().toString()
+        return plan.count("ArrowEvalPython"), plan.count("_wkt_envelope")
+
+    assert arrow_nodes("intersects") == (2, 1)
+    assert arrow_nodes("disjoint") == (3, 2)

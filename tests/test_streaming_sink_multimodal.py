@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from geomatics_geotk_spark.operators import multimodal, spatial_join
@@ -170,6 +171,47 @@ class TestStreamingTileAssign:
         assert (1, 0, 3) not in got and (1, 0, 1) not in got
 
 
+def _jobs_run(spark, fn):
+    """(fn's result, number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"sink-{uuid.uuid4()}"
+    sc.setJobGroup(group, "sink job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_lineage_matches_data(spark, out):
+    """Each bucket is committed once, with the rows a re-read of ``data``
+    counts for it (null-bucket rows belong to no bucket)."""
+    lineage = pq.read_table(os.path.join(out, "_lineage")).to_pylist()
+    committed = {r["bucket"]: r["rows"] for r in lineage}
+    assert len(committed) == len(lineage)
+    counted = {
+        r["_bucket"]: r["n"]
+        for r in spark.read.parquet(os.path.join(out, "data"))
+        .where(F.col("_bucket").isNotNull())
+        .groupBy("_bucket").agg(F.count("*").alias("n")).collect()
+    }
+    assert committed == {b: counted.get(b, 0) for b in committed}
+    assert set(counted) <= set(committed)
+
+
+def _forge_partial_lineage(spark, out, tmp_path, keep):
+    """Replace ``_lineage`` with a Spark-written copy of its rows with
+    ``bucket < keep`` (as if the job died before the rest committed)."""
+    lineage_path = os.path.join(out, "_lineage")
+    tmp_lineage = str(tmp_path / "lineage_partial")
+    spark.read.parquet(lineage_path).where(F.col("bucket") < keep) \
+        .write.mode("overwrite").parquet(tmp_lineage)
+    shutil.rmtree(lineage_path)
+    shutil.copytree(tmp_lineage, lineage_path)
+
+
 class TestCheckpointedSink:
     def test_write_then_resume_skips(self, spark, tmp_path):
         out = str(tmp_path / "sink1")
@@ -181,6 +223,7 @@ class TestCheckpointedSink:
         assert s1["rows"] == 1000
         data = spark.read.parquet(os.path.join(out, "data"))
         assert data.count() == 1000
+        _assert_lineage_matches_data(spark, out)
         # second invocation: everything already committed → no-op resume
         s2 = sink.checkpointed_write(df, out, "bucket", n_buckets=8)
         assert s2["written_buckets"] == []
@@ -189,19 +232,14 @@ class TestCheckpointedSink:
 
     def test_crash_resume_redoes_only_missing(self, spark, tmp_path):
         """Simulate a crash after some buckets committed: lineage rows
-        exist for buckets 0..3 only → resume rewrites exactly 4..7."""
+        exist for buckets 0..3 only (written by Spark) → resume rewrites
+        exactly 4..7 and appends their lineage with pyarrow."""
         out = str(tmp_path / "sink2")
         df = spark.range(1000).select(
             F.col("id"), F.pmod(F.col("id"), F.lit(97)).alias("bucket")
         )
         sink.checkpointed_write(df, out, "bucket", n_buckets=8)
-        # forge a partial-lineage state (as if the job died mid-commit)
-        lineage_path = os.path.join(out, "_lineage")
-        partial = spark.read.parquet(lineage_path).where(F.col("bucket") < 4)
-        tmp_lineage = str(tmp_path / "lineage_partial")
-        partial.write.mode("overwrite").parquet(tmp_lineage)
-        shutil.rmtree(lineage_path)
-        shutil.copytree(tmp_lineage, lineage_path)
+        _forge_partial_lineage(spark, out, tmp_path, keep=4)
 
         s = sink.checkpointed_write(df, out, "bucket", n_buckets=8)
         assert sorted(s["written_buckets"]) == [4, 5, 6, 7]
@@ -210,6 +248,40 @@ class TestCheckpointedSink:
         data = spark.read.parquet(os.path.join(out, "data"))
         assert data.count() == 1000
         assert data.select("id").distinct().count() == 1000
+        _assert_lineage_matches_data(spark, out)
+        # the Spark-written partial lineage plus the pyarrow append read
+        # as one bucket set, the same in both engines
+        lineage_path = os.path.join(out, "_lineage")
+        assert sink.completed_buckets(out) == set(range(8))
+        assert {r["bucket"] for r in spark.read.parquet(lineage_path).collect()} == set(range(8))
+        assert pq.read_table(lineage_path).schema.types == [pa.int32(), pa.int64(), pa.float64(), pa.string()]
+
+    def test_first_write_is_one_job_and_full_resume_none(self, spark, tmp_path):
+        """The data write is the only Spark job: the counts come from the
+        written footers and the lineage is read and committed on the
+        driver, so a resume with every bucket done runs no job at all."""
+        out = str(tmp_path / "sink_jobs")
+        df = spark.range(1000).select(F.col("id"), F.pmod(F.col("id"), F.lit(97)).alias("bucket"))
+        s1, jobs = _jobs_run(spark, lambda: sink.checkpointed_write(df, out, "bucket", n_buckets=8))
+        assert s1["rows"] == 1000 and jobs == 1
+        s2, jobs = _jobs_run(spark, lambda: sink.checkpointed_write(df, out, "bucket", n_buckets=8))
+        assert len(s2["skipped_buckets"]) == 8 and jobs == 0
+
+    def test_hidden_lineage_leftover_is_ignored(self, spark, tmp_path):
+        """A commit that died between its write and its rename leaves a
+        ``.part-*.parquet``: it commits nothing, for pyarrow and Spark."""
+        out = str(tmp_path / "sink_leftover")
+        df = spark.range(400).select(F.col("id"), F.pmod(F.col("id"), F.lit(13)).alias("bucket"))
+        sink.checkpointed_write(df, out, "bucket", n_buckets=4)
+        _forge_partial_lineage(spark, out, tmp_path, keep=2)
+        lineage_path = os.path.join(out, "_lineage")
+        pq.write_table(pa.table({"bucket": pa.array([2, 3], pa.int32())}),
+                       os.path.join(lineage_path, f".part-{uuid.uuid4()}.parquet"))
+        assert sink.completed_buckets(out) == {0, 1}
+        assert {r["bucket"] for r in spark.read.parquet(lineage_path).collect()} == {0, 1}
+        s = sink.checkpointed_write(df, out, "bucket", n_buckets=4)
+        assert s["written_buckets"] == [2, 3]
+        _assert_lineage_matches_data(spark, out)
 
     def test_corrupt_lineage_raises(self, spark, tmp_path, caplog):
         """A lineage that cannot be read must stop the resume (logged and
@@ -224,7 +296,7 @@ class TestCheckpointedSink:
                     fh.write(b"not a parquet file")
             elif f.endswith(".crc"):
                 os.remove(os.path.join(lineage_path, f))
-        with caplog.at_level("ERROR", logger=sink.__name__), pytest.raises((Py4JJavaError, PySparkException)):
+        with caplog.at_level("ERROR", logger=sink.__name__), pytest.raises(pa.lib.ArrowInvalid):
             sink.checkpointed_write(df, out, "bucket", n_buckets=4)
         assert any(lineage_path in r.getMessage() for r in caplog.records)
 
@@ -233,8 +305,8 @@ class TestCheckpointedSink:
         (the first lineage write died) means nothing is committed."""
         out = str(tmp_path / "sink4")
         os.makedirs(os.path.join(out, "_lineage", "_temporary", "0"))
-        assert sink.completed_buckets(spark, out) == set()
-        assert sink.completed_buckets(spark, str(tmp_path / "never-written")) == set()
+        assert sink.completed_buckets(out) == set()
+        assert sink.completed_buckets(str(tmp_path / "never-written")) == set()
 
     def test_docs_without_point_are_written(self, spark, tmp_path):
         """Tiled docs with no geo span (cell id -1) land in a real bucket
@@ -258,18 +330,16 @@ class TestCheckpointedSink:
         )
         s1 = sink.checkpointed_write(df, out, "bucket", n_buckets=4)
         assert s1["rows"] == 90
+        _assert_lineage_matches_data(spark, out)
         # forge a lineage missing buckets 2 and 3, then resume
-        lineage_path = os.path.join(out, "_lineage")
-        partial = spark.read.parquet(lineage_path).where(F.col("bucket") < 2)
-        partial.write.mode("overwrite").parquet(str(tmp_path / "lineage_partial"))
-        shutil.rmtree(lineage_path)
-        shutil.copytree(str(tmp_path / "lineage_partial"), lineage_path)
+        _forge_partial_lineage(spark, out, tmp_path, keep=2)
         s2 = sink.checkpointed_write(df, out, "bucket", n_buckets=4)
         assert sorted(s2["written_buckets"]) == [2, 3]
         data = spark.read.parquet(os.path.join(out, "data"))
         assert data.count() == 100
         assert data.select("id").distinct().count() == 100
         assert data.where(F.col("_bucket").isNull()).count() == 10
+        _assert_lineage_matches_data(spark, out)
 
 
 class TestMultimodal:
