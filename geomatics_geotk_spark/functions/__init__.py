@@ -16,7 +16,6 @@ operations that are pure arithmetic/string work:
   ids are interchangeable;
 - point-in-polygon crossing number, over whole rings and over a cell's
   edge slots;
-- BBOX interval-overlap predicate (``SpatialAssert.java:39-67``);
 - antipode (``Extents.java:421-431``);
 - CRS-id normalization regexes (``GeodesyUtils.java:222-271``);
 - envelope KVP serialization (``Extents.java:364-382``) and GML-style

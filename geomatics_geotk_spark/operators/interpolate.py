@@ -10,7 +10,7 @@ Shape for 100 TB
 Candidate generation is pluggable: the built-in path broadcasts a
 dimension-sized observation table (weather stations, sensors — the
 realistic IDW source) and ranks with the salted two-phase top-k
-(``similarity._topk_per_query`` — never a one-task-per-doc window); for
+(``stats.salted_topk`` — never a one-task-per-doc window); for
 observation tables too big to broadcast, pass ``neighbors=`` from
 ``knn.knn_join`` (cell-ring candidates) and this operator only does the
 weighting rollup, which reuses the ranking exchange.
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import haversine_m
-from .similarity import _topk_per_query
+from .stats import salted_topk
 
 
 def idw_interpolate(docs: DataFrame, pois: DataFrame, k: int = 4,
@@ -50,10 +50,9 @@ def idw_interpolate(docs: DataFrame, pois: DataFrame, k: int = 4,
     scored = cand.withColumn("dist_m", F.round(d, 3)).withColumn(
         "_neg_d", -F.col("dist_m")
     )
-    nbrs = _topk_per_query(
-        scored, k, q_id_col=id_col, id_col=poi_id_col,
-        score_col="_neg_d", rank_col="rank", salts=salts,
-    ).drop("_neg_d")
+    salt = F.pmod(F.xxhash64(F.col(poi_id_col).cast("string"), F.lit(17)), F.lit(salts))
+    order = [F.col("_neg_d").desc(), F.col(poi_id_col).asc()]
+    nbrs = salted_topk(scored, [id_col], order, k, salt).drop("_neg_d")
     return idw_weight(nbrs, value_col=value_col, id_col=id_col,
                       d_floor_m=d_floor_m)
 

@@ -30,6 +30,14 @@ from pyspark.sql import functions as F
 
 from ..functions import vincenty_m_udf
 from .spatial_join import tile_assign
+from .stats import salted_topk
+
+# Cell rings of the poi disk expansion: a doc is resolved on the ring
+# path when its k-th distance is within (RINGS - 0.5) cell edges.
+RINGS = 2
+# Past this many pois the exact fallback broadcasts the unresolved-doc
+# residue and streams the poi table, instead of broadcasting the pois.
+FALLBACK_BROADCAST_LIMIT = 2_000_000
 
 
 def knn_join(
@@ -37,12 +45,10 @@ def knn_join(
     pois: DataFrame,
     k: int = 3,
     res: int | None = None,
-    rings: int = 2,
     id_col: str = "doc_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
     strategy: str = "auto",
-    fallback_broadcast_limit: int = 2_000_000,
 ) -> DataFrame:
     """k nearest pois per doc: (doc columns…, poi_id, dist_m, rank).
 
@@ -70,7 +76,8 @@ def knn_join(
     if strategy == "auto" or (strategy == "cellring" and res is None):
         n_pois = max(1, pois.count())
     geo_dist = vincenty_m_udf()
-    w = Window.partitionBy(id_col).orderBy(F.col("dist_m").asc(), F.col("poi_id").asc())
+    order = [F.col("dist_m").asc(), F.col("poi_id").asc()]
+    w = Window.partitionBy(id_col).orderBy(*order)
     if strategy == "auto":
         strategy = "brute" if n_pois <= 100 else "cellring"
     if strategy == "brute":
@@ -95,7 +102,7 @@ def knn_join(
     # poi side exploded into its cell disk as pure Column math — a 10^7-poi
     # table expands distributed; broadcast is the strategy for dim-sized
     # poi tables (the doc side never shuffles)
-    poi_cells = expand_poi_cells(pois, res, rings)
+    poi_cells = expand_poi_cells(pois, res, RINGS)
 
     # re-tile at the kNN grid's own resolution (a caller's cell_id may be
     # tiled at a different res — ids embed the res, so reuse would join
@@ -111,8 +118,8 @@ def knn_join(
     )
     topk = cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
-    # ring-coverage guarantee: the disk(rings) certainly contains every poi
-    # within (rings-0.5)*edge of the doc point (conservative: doc anywhere
+    # ring-coverage guarantee: the disk(RINGS) certainly contains every poi
+    # within (RINGS-0.5)*edge of the doc point (conservative: doc anywhere
     # in its cell). kth distance beyond that ⇒ poi outside the disk could
     # be closer ⇒ doc needs the exact fallback.
     #
@@ -120,7 +127,7 @@ def knn_join(
     # partition key as the rank window (one exchange, reused) — never by
     # re-joining a broadcast doc-cardinality id set, which at 10^12 docs
     # is an OOM by construction.
-    guarantee_m = max(0.0, (rings - 0.5)) * edge_m
+    guarantee_m = (RINGS - 0.5) * edge_m
     wc = Window.partitionBy(id_col)
     topk_f = topk.withColumn("_kth", F.max("dist_m").over(wc)).withColumn(
         "_n", F.count(F.lit(1)).over(wc)
@@ -146,7 +153,7 @@ def knn_join(
     )
     if n_pois is None:
         n_pois = max(1, pois.count())
-    if n_pois > fallback_broadcast_limit:
+    if n_pois > FALLBACK_BROADCAST_LIMIT:
         paired = all_pois.crossJoin(F.broadcast(unresolved_docs))
     else:
         paired = unresolved_docs.crossJoin(F.broadcast(all_pois))
@@ -154,21 +161,9 @@ def knn_join(
         "dist_m",
         geo_dist(F.col(lat_col), F.col(lon_col), F.col("poi_lat"), F.col("poi_lon")),
     )
-    # salted two-phase per-doc top-k (same exact pattern as the ANN
-    # family): each unresolved doc's candidate set is the WHOLE poi
-    # table, so a single per-doc window would sort it in one task; the
-    # phase-1 (doc, salt) cut bounds every window partition, and the
-    # result is provably identical for any salt count.
+    # salted two-phase per-doc top-k: each unresolved doc's candidate
+    # set is the WHOLE poi table, so a single per-doc window would sort
+    # it in one task
     salt = F.pmod(F.xxhash64(F.col("poi_id").cast("string"), F.lit(17)), F.lit(32))
-    w1 = Window.partitionBy(id_col, "_salt").orderBy(
-        F.col("dist_m").asc(), F.col("poi_id").asc()
-    )
-    brute = (
-        scored.withColumn("_salt", salt)
-        .withColumn("_rk1", F.row_number().over(w1))
-        .where(F.col("_rk1") <= k)
-        .drop("_rk1", "_salt")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    brute = salted_topk(scored, [id_col], order, k, salt)
     return resolved.select(*out_cols).unionByName(brute.select(*out_cols))

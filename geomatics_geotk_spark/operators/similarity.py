@@ -10,9 +10,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .stats import salted_topk
 
 
 def _dot(a, b):
@@ -35,38 +37,18 @@ def _safe_cos(num, den):
     return F.when(den > F.lit(0.0), num / den).otherwise(F.lit(-2.0))
 
 
-def _topk_per_query(scored: DataFrame, k: int, q_id_col: str, id_col: str,
-                    score_col: str = "cosine", rank_col: str = "rank",
-                    salts: int = 16) -> DataFrame:
-    """Salted two-phase per-query top-k (EXACT, parallelism knob only).
+def _cosine(a, b):
+    """The exact double cosine every ranking and rerank scores with."""
+    return _safe_cos(_dot(a, b), _norm(a) * _norm(b))
 
-    A single ``row_number() OVER (PARTITION BY q_id)`` funnels every
-    candidate of a query into ONE task — at 100 TB the int8 coarse pass
-    or an LSH candidate set per query is corpus-scale, so that window is
-    a straggler per query.  Phase 1 windows over ``(q_id, salt)``: any
-    member of the true per-query top-k sees, inside its own salt group,
-    only a SUBSET of the rows globally ranked above it, so its local
-    rank ≤ its global rank ≤ k and it survives the cut.  Phase 2's exact
-    window then sorts at most ``k·salts`` rows per query.  The result is
-    provably identical for ANY ``salts ≥ 1`` (asserted by
-    test_topk_salt_invariance); ordering is total — (score desc, id asc)
-    — so ranks are deterministic.  Same pattern as
-    ``text.stratified_topk`` (the engine's sampled top-k).
-    """
+
+def _topk_per_query(scored: DataFrame, k: int, q_id_col: str, id_col: str,
+                    score_col: str = "cosine", rank_col: str = "rank") -> DataFrame:
+    """Per-query top-k by (score desc, id asc) — the salted two-phase
+    :func:`stats.salted_topk`, salted by the candidate id's hash."""
+    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(17)), F.lit(16))
     order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(17)), F.lit(salts))
-    staged = scored.withColumn("_tk_salt", salt)
-    w1 = Window.partitionBy(q_id_col, "_tk_salt").orderBy(*order)
-    survivors = (
-        staged.withColumn("_tk_rk", F.row_number().over(w1))
-        .where(F.col("_tk_rk") <= k)
-        .drop("_tk_rk", "_tk_salt")
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(*order)
-    return (
-        survivors.withColumn(rank_col, F.row_number().over(w2))
-        .where(F.col(rank_col) <= k)
-    )
+    return salted_topk(scored, [q_id_col], order, k, salt, rank_col)
 
 
 def unit_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -74,7 +56,7 @@ def unit_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     ONCE PER ROW — pair scoring downstream of a join is then a SINGLE
     dot fold instead of dot + two norm folds; at scale the per-pair cost
     is what multiplies with the candidate volume (the same
-    hoist-the-norms move ``ann_topk_int8`` makes before its crossJoin).
+    hoist-the-norms move ``ann_topk_ivf_int8`` makes before its cell join).
     The normalize is an Arrow/numpy batch UDF, NOT ``F.transform(x/nv)``:
     higher-order functions are interpreted and CollapseProject re-inlines
     the 64-element norm fold at every downstream reference (once per
@@ -106,11 +88,7 @@ def brute_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
         F.col(q_id_col), F.col(vec_col).alias("_qvec")
     )
     scored = embeddings.join(F.broadcast(q)).withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col(vec_col), F.col("_qvec")),
-            _norm(F.col(vec_col)) * _norm(F.col("_qvec")),
-        ),
+        "cosine", _cosine(F.col(vec_col), F.col("_qvec"))
     )
     return _topk_per_query(scored, k, q_id_col, id_col).drop("_qvec")
 
@@ -208,13 +186,7 @@ def ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                == F.array_min(F.array_intersect("buckets", "_qbuckets")))
         .drop("buckets", "_qbuckets")
     )
-    scored = pairs.withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col(vec_col), F.col("_qvec")),
-            _norm(F.col(vec_col)) * _norm(F.col("_qvec")),
-        ),
-    )
+    scored = pairs.withColumn("cosine", _cosine(F.col(vec_col), F.col("_qvec")))
     return _topk_per_query(scored, k, q_id_col, id_col).drop("_qvec", "bucket")
 
 
@@ -288,11 +260,7 @@ def ann_topk_ivf(embeddings: DataFrame, queries: DataFrame, k: int = 5,
         F.col(q_id_col), F.col(vec_col).alias("_qvec"), F.explode("cells").alias("cell")
     )
     scored = corpus.join(F.broadcast(q), "cell").withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col(vec_col), F.col("_qvec")),
-            _norm(F.col(vec_col)) * _norm(F.col("_qvec")),
-        ),
+        "cosine", _cosine(F.col(vec_col), F.col("_qvec"))
     )
     return _topk_per_query(scored, k, q_id_col, id_col).drop("_qvec", "cell")
 
@@ -446,57 +414,6 @@ def _idot(a, b):
     )
 
 
-def ann_topk_int8(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                  pool: int = 50, id_col: str = "vec_id",
-                  q_id_col: str = "q_id", vec_col: str = "embedding") -> DataFrame:
-    """Two-stage retrieval: int8 coarse scan + exact float rerank.
-
-    Stage 1 scores EVERY corpus row against the broadcast queries with
-    the integer dot product over quantized vectors — the full scan runs
-    on the 4-8x compressed column, integer arithmetic only — and keeps a
-    per-query candidate ``pool`` (window top-``pool`` on the quantized
-    cosine).  Stage 2 reranks only the pool with the exact double cosine
-    (identical expression to :func:`ann_topk`, so results hash-match the
-    brute-force oracle whenever the pool retains the true top-k — the
-    planted-ground-truth fixture guarantees it by construction: planted
-    copies score quantized-cosine ≈ 1 vs ≈ 0.3 for random neighbors).
-
-    At 100 TB this composes with IVF (quantize within probed cells); the
-    standalone form demonstrates the compression + rerank contract.
-    """
-    # per-side norms are projected BEFORE the crossJoin — constant per
-    # corpus row / per query, so the O(dim) fold runs once per row and
-    # once per query instead of three times per (row × query) pair
-    cq = quantize_int8(embeddings, vec_col).select(
-        id_col, vec_col, "qvec",
-        F.sqrt(_idot(F.col("qvec"), F.col("qvec")).cast("double")).alias("_qnorm_c"),
-    )
-    qq = quantize_int8(queries, vec_col, "qq").select(
-        q_id_col, F.col(vec_col).alias("_qvec"), "qq",
-        F.sqrt(_idot(F.col("qq"), F.col("qq")).cast("double")).alias("_qnorm_q"),
-    )
-    scored = cq.crossJoin(F.broadcast(qq)).withColumn(
-        "_coarse",
-        _safe_cos(
-            _idot(F.col("qvec"), F.col("qq")).cast("double"),
-            F.col("_qnorm_c") * F.col("_qnorm_q"),
-        ),
-    )
-    cand = _topk_per_query(
-        scored, pool, q_id_col, id_col, score_col="_coarse", rank_col="_crank"
-    )
-    rer = cand.withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col(vec_col), F.col("_qvec")),
-            _norm(F.col(vec_col)) * _norm(F.col("_qvec")),
-        ),
-    )
-    return _topk_per_query(rer, k, q_id_col, id_col).drop(
-        "_qvec", "qvec", "qq", "_coarse", "_crank", "_qnorm_c", "_qnorm_q"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — byte codes + ADC lookup scoring
 # ---------------------------------------------------------------------------
@@ -566,77 +483,6 @@ def with_pq_codes(df: DataFrame, codebooks: np.ndarray,
     return df.withColumn(out, encode(F.col(vec_col)))
 
 
-def ann_topk_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                pool: int = 50, id_col: str = "vec_id",
-                q_id_col: str = "q_id", vec_col: str = "embedding",
-                m: int = 8, n_codes: int = 256, dim: int = 64,
-                codebooks: np.ndarray | None = None) -> DataFrame:
-    """PQ-compressed retrieval: ADC coarse scan over byte codes + exact
-    rerank via join-back — the deepest compression tier of the ANN
-    family (int8 is 4-8×; PQ at m=8 over 64 float64 lanes is 64×).
-
-    Stage 1 (ADC — asymmetric distance computation): each query
-    precomputes one lookup table ``lut[s·n_codes + c] = q_sub(s) ·
-    codebook[s][c]`` (an Arrow batch over the small query side); the
-    corpus scan then scores every row with ``Σ_s lut[codes[s]]`` — pure
-    JVM Column math (zip_with index + element_at + aggregate over m=8
-    lanes), NO float vectors and NO Python in the corpus path.  The
-    approximate cosine is exact-up-to-quantization because both sides
-    are unit-normalized (corpus at encode time, query at LUT build).
-
-    Stage 2: the per-query candidate ``pool`` (salted two-phase
-    top-``pool`` on the ADC score) JOINS BACK to the vector store by id
-    for the exact double cosine — the scan pass never carries the float
-    vectors, and the join-back probe side is ≤ pool·|queries| rows, so
-    AQE broadcasts it into the store scan.  Final ranks use the same
-    expression as :func:`brute_topk`: results hash-match the
-    brute-force oracle whenever the ADC pool retains the true top-k."""
-    if codebooks is None:
-        codebooks = learn_pq_codebooks(embeddings, m, n_codes, vec_col, dim)
-    n_codes_eff = codebooks.shape[1]
-    books = codebooks
-    mm, _, dsub = books.shape
-
-    corpus = with_pq_codes(embeddings, books, vec_col).select(id_col, "codes")
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def lut_of(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        n = np.linalg.norm(mat, axis=1, keepdims=True)
-        np.divide(mat, n, out=mat, where=n > 0)
-        luts = np.empty((len(mat), mm * n_codes_eff), dtype=np.float64)
-        for s in range(mm):
-            sub = mat[:, s * dsub:(s + 1) * dsub]
-            luts[:, s * n_codes_eff:(s + 1) * n_codes_eff] = sub @ books[s].T
-        return pd.Series(list(luts))
-
-    q = queries.select(
-        q_id_col, F.col(vec_col).alias("_qvec"), lut_of(F.col(vec_col)).alias("_lut")
-    )
-    idx = F.sequence(F.lit(0), F.lit(mm - 1))
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"), idx,
-            lambda c, s: F.element_at("_lut", (s * n_codes_eff + c + 1).cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = corpus.crossJoin(F.broadcast(q)).withColumn("_adc", adc)
-    cand = _topk_per_query(
-        scored, pool, q_id_col, id_col, score_col="_adc", rank_col="_crank"
-    ).select(q_id_col, id_col, "_qvec")
-    store = embeddings.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("_svec"))
-    rer = cand.join(store, cand[id_col] == store["_sid"]).withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col("_svec"), F.col("_qvec")),
-            _norm(F.col("_svec")) * _norm(F.col("_qvec")),
-        ),
-    )
-    return _topk_per_query(rer, k, q_id_col, id_col).drop("_qvec", "_svec", "_sid")
-
-
 def ann_topk_ivf_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                     pool: int = 50, id_col: str = "vec_id",
                     q_id_col: str = "q_id", vec_col: str = "embedding",
@@ -646,15 +492,30 @@ def ann_topk_ivf_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                     codebooks: np.ndarray | None = None) -> DataFrame:
     """IVF + PQ composition (the FAISS ``IVFx,PQy`` layout): coarse cell
     pruning bounds the scan fraction at nprobe/n_centroids, ADC scoring
-    over byte codes bounds the scan WIDTH at m bytes/row, and the exact
+    over byte codes bounds the scan WIDTH at m bytes/row (PQ at m=8 over
+    64 float64 lanes is 64× narrower; int8 is 4-8×), and the exact
     rerank touches only pool·|queries| rows fetched by id join-back.
     The stored 100 TB table this models carries exactly (id, cell,
     codes) — bucket/partition by ``cell`` and the probe join needs zero
-    exchange on the corpus.
+    exchange on the corpus.  With ``n_centroids=1, nprobe=1`` every row
+    shares cell 0 and this is the plain PQ scan of the whole corpus.
 
-    Everything between the scan and the rerank is JVM Column math over
-    ints (cell equi-join + LUT fold); Python appears only in the
-    constant-size encode/LUT Arrow batches."""
+    Stage 1 (ADC — asymmetric distance computation): each query
+    precomputes one lookup table ``lut[s·n_codes + c] = q_sub(s) ·
+    codebook[s][c]`` (an Arrow batch over the small query side); the
+    corpus scan then scores every probed row with ``Σ_s lut[codes[s]]``
+    — JVM Column math (zip_with index + element_at + aggregate over m
+    lanes), NO float vectors and NO Python in the corpus path.  Both
+    sides are unit-normalized (corpus at encode time, query at LUT
+    build), so the score is the cosine up to quantization.
+
+    Stage 2: the per-query candidate ``pool`` (salted two-phase
+    top-``pool`` on the ADC score) JOINS BACK to the vector store by id
+    for the exact double cosine — the scan pass never carries the float
+    vectors, and the join-back probe side is ≤ pool·|queries| rows, so
+    AQE broadcasts it into the store scan.  Final ranks use the same
+    expression as :func:`brute_topk`: results hash-match the
+    brute-force oracle whenever cell + pool retain the true top-k."""
     if centroids is None:
         centroids = learn_centroids(embeddings, n_centroids, vec_col)
     if codebooks is None:
@@ -696,11 +557,7 @@ def ann_topk_ivf_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     ).select(q_id_col, id_col, "_qvec")
     store = embeddings.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("_svec"))
     rer = cand.join(store, cand[id_col] == store["_sid"]).withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col("_svec"), F.col("_qvec")),
-            _norm(F.col("_svec")) * _norm(F.col("_qvec")),
-        ),
+        "cosine", _cosine(F.col("_svec"), F.col("_qvec"))
     )
     return _topk_per_query(rer, k, q_id_col, id_col).drop("_qvec", "_svec", "_sid")
 
@@ -730,12 +587,16 @@ def ann_topk_ivf_int8(embeddings: DataFrame, queries: DataFrame, k: int = 5,
        :func:`brute_topk`, so results hash-match the brute-force oracle
        whenever cell + pool retain the true top-k.
 
-    Unlike :func:`ann_topk_int8` the int8 pass never sees rows outside
-    the probed cells, and unlike :func:`ann_topk_ivf` the float vectors
-    of non-pool candidates are never folded — only quantized ints are.
+    The int8 pass never sees rows outside the probed cells, and unlike
+    :func:`ann_topk_ivf` the float vectors of non-pool candidates are
+    never folded — only quantized ints are.  With ``n_centroids=1,
+    nprobe=1`` every row (the zero vector included) shares cell 0 and
+    this is the plain int8 scan of the whole corpus.
     """
     if centroids is None:
         centroids = learn_centroids(embeddings, n_centroids, vec_col)
+    # per-side norms are projected BEFORE the join: the O(dim) fold runs
+    # once per corpus row and once per query, not once per pair
     cq = quantize_int8(
         with_ivf_cell(embeddings, centroids, vec_col, nprobe=1), vec_col
     ).select(
@@ -759,13 +620,7 @@ def ann_topk_ivf_int8(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     cand = _topk_per_query(
         scored, pool, q_id_col, id_col, score_col="_coarse", rank_col="_crank"
     )
-    rer = cand.withColumn(
-        "cosine",
-        _safe_cos(
-            _dot(F.col(vec_col), F.col("_qvec")),
-            _norm(F.col(vec_col)) * _norm(F.col("_qvec")),
-        ),
-    )
+    rer = cand.withColumn("cosine", _cosine(F.col(vec_col), F.col("_qvec")))
     return _topk_per_query(rer, k, q_id_col, id_col).drop(
         "_qvec", "qvec", "qq", "cell", "_coarse", "_crank", "_qnorm_c", "_qnorm_q"
     )

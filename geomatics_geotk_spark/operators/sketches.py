@@ -34,10 +34,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 from .dedup import md5_long15 as _h60  # the ONE md5-hex-to-long definition
+from .stats import salted_topk
 
 
 # ---------------------------------------------------------------------------
@@ -453,10 +454,10 @@ def kmv_registers(df: DataFrame, group_cols: list[str], value_col: str,
     Mergeable by construction (k smallest of a union = k smallest of
     the per-part k-smallest).  Shape: one map-side-combinable dedup
     exchange on (group, hash), then the engine's salted two-phase k-min
-    — local k-min per (group, salt), global k-min over k·salts
-    survivors — so a billion-token group never funnels through one
-    sorting task.  Hash is the md5-60-bit idiom: every register replays
-    bit-exactly in DuckDB.
+    (:func:`stats.salted_topk`) — local k-min per (group, salt), global
+    k-min over k·salts survivors — so a billion-token group never
+    funnels through one sorting task.  Hash is the md5-60-bit idiom:
+    every register replays bit-exactly in DuckDB.
     """
     if k < 2:
         raise ValueError(f"kmv_registers: k must be >= 2, got {k}")
@@ -466,18 +467,8 @@ def kmv_registers(df: DataFrame, group_cols: list[str], value_col: str,
         .groupBy(*group_cols, "h").agg(F.lit(1).alias("_one")).drop("_one")
     )
     salt = F.pmod(F.col("h"), F.lit(salts))
-    w1 = Window.partitionBy(*group_cols, "_s").orderBy(F.asc("h"))
-    survivors = (
-        distinct.withColumn("_s", salt)
-        .withColumn("_rk", F.row_number().over(w1))
-        .where(F.col("_rk") <= k)
-        .drop("_rk", "_s")
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(F.asc("h"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(*group_cols, "rank", "h")
+    return salted_topk(distinct, group_cols, [F.asc("h")], k, salt).select(
+        *group_cols, "rank", "h"
     )
 
 

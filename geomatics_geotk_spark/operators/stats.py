@@ -5,12 +5,14 @@ engine's explicit hot-cell handling (north rule).
 ``hot_cells`` thresholds it (driver-collects only the tiny hot set);
 ``skew_report`` summarizes the distribution for lineage/metrics.  The
 spatial join's salting policy consumes ``hot_cells`` to decide which
-cells get replicated zone rows + salted doc keys.
+cells get replicated zone rows + salted doc keys.  ``salted_topk`` is
+the same skew handling for ranking windows: every per-group top-k in
+the engine (ANN, kNN fallback, IDW, stratified samples, KMV) uses it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -52,6 +54,36 @@ def skew_report(docs: DataFrame, cell_col: str = "cell_id") -> DataFrame:
         (F.sum("n_docs") / F.count("*")).alias("avg_cell"),
     )
     return agg.withColumn("skew_ratio", F.col("max_cell") / F.col("avg_cell"))
+
+
+def salted_topk(df: DataFrame, keys: list[str], order: list[Column], k: int,
+                salt: Column, rank_col: str = "rank") -> DataFrame:
+    """The first ``k`` rows per ``keys`` group under ``order``, ranked
+    1..k in ``rank_col`` — the engine's one skew-safe ranking window.
+
+    A single ``row_number() OVER (PARTITION BY keys)`` funnels a group's
+    rows into ONE task, so one hot group (a query's whole candidate set,
+    a stratum over the corpus) is a straggler.  Phase 1 windows over
+    ``keys + [salt]``: a member of the true top-k sees, inside its own
+    salt group, only a SUBSET of the rows ranked above it, so its local
+    rank ≤ its global rank ≤ k and it survives the cut.  Phase 2's exact
+    window then sorts at most ``k·salts`` rows per group.  The result is
+    identical for ANY salt column (asserted by test_topk_salt_invariance)
+    as long as ``order`` is total, which also makes the ranks
+    deterministic.
+    """
+    w1 = Window.partitionBy(*keys, "_tk_salt").orderBy(*order)
+    survivors = (
+        df.withColumn("_tk_salt", salt)
+        .withColumn("_tk_rk", F.row_number().over(w1))
+        .where(F.col("_tk_rk") <= k)
+        .drop("_tk_rk", "_tk_salt")
+    )
+    w2 = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        survivors.withColumn(rank_col, F.row_number().over(w2))
+        .where(F.col(rank_col) <= k)
+    )
 
 
 def group_quantiles(df: DataFrame, group_col: str, value_col: str,
@@ -352,8 +384,6 @@ def rolling_zscore(series: DataFrame, key_cols: list[str], order_col: str,
 
     Output: key_cols + (order_col, value_col, n_base, sum_base, z).
     """
-    from pyspark.sql.window import Window
-
     w = (
         Window.partitionBy(*key_cols).orderBy(order_col)
         .rowsBetween(-trailing, -1)
@@ -403,8 +433,6 @@ def quantile_calibration(df: DataFrame, group_col: str, value_col: str,
     is unbounded).  Output: (group_col, decile 1..n_buckets-1,
     v_group, v_global).
     """
-    from pyspark.sql.window import Window
-
     spec = df.sparkSession.range(1, n_buckets).select(
         F.col("id").cast("int").alias("decile")
     )
@@ -524,8 +552,6 @@ def gini(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     (per-group sort over group cardinality); numerator and totals fold
     in the same aggregation.  Output: (group, n_members, total, gini).
     """
-    from pyspark.sql.window import Window
-
     x = F.col(value_col).cast("long")
     ranked = df.select(group_col, x.alias("_x")).withColumn(
         "_i", F.row_number().over(
@@ -720,8 +746,6 @@ def cusum_alarms(series: DataFrame, key_cols: list[str], order_col: str,
     Output: key_cols + (order_col, value_col, s_means) for alarm rows
     only.
     """
-    from pyspark.sql.window import Window
-
     t_n = series.groupBy(*key_cols).agg(
         F.sum(F.col(value_col).cast("long")).alias("_t"),
         F.count("*").alias("_n"),
@@ -773,8 +797,6 @@ def acf(series: DataFrame, key_cols: list[str], order_col: str,
     — never corpus rows); the lag dimension explodes map-side and the
     moment rollup is a map-side-combined agg on (key, lag).
     """
-    from pyspark.sql.window import Window
-
     if max_lag < 1:
         raise ValueError(f"acf: max_lag must be >= 1, got {max_lag}")
     w = Window.partitionBy(*key_cols).orderBy(order_col)
@@ -858,7 +880,6 @@ def theil_sen(series: DataFrame, key_cols: list[str], order_col: str,
             / (F.col("_tb") - F.col("_ta")).cast("double")
         ).alias("_slope"),
     )
-    from pyspark.sql.window import Window
 
     wrk = Window.partitionBy(*key_cols).orderBy("_slope")
     wm = Window.partitionBy(*key_cols)

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import md5_long15
+from .stats import salted_topk
 
 # Tiny per-language marker sets (deterministic heuristic; the goal is a
 # reproducible operator shape, not linguistic accuracy).
@@ -191,30 +192,16 @@ def stratified_topk(
     ``sample_rank``).  Re-runnable and layout-independent, unlike
     ``sampleBy``.
 
-    Two-phase top-k: a first window over ``(stratum, salt)`` keeps k
-    rows per salt — every member of the true per-stratum top-k survives
-    its own salt's cut, so phase 2's exact window sees at most
-    ``k * salts`` rows per stratum instead of the whole stratum.  With a
+    Ranked by the salted two-phase :func:`stats.salted_topk`: with a
     handful of strata over 100 TB a single per-stratum window would
     funnel the entire corpus through a few partitions; the salted phase
-    bounds each window partition, and the result is provably identical
-    for ANY salts >= 1 (salts is purely a parallelism knob).
+    bounds each window partition, and the result is identical for ANY
+    salts >= 1 (salts is purely a parallelism knob).
     """
-    bucket = _id_bucket(id_col, buckets, hash_fn)
     salt = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(1)), F.lit(salts))
-    staged = df.withColumn("sample_bucket", bucket).withColumn("_salt", salt)
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy("sample_bucket", id_col)
-    survivors = (
-        staged.withColumn("_rk1", F.row_number().over(w1))
-        .where(F.col("_rk1") <= k)
-        .drop("_rk1")
-    )
-    w2 = Window.partitionBy(strata_col).orderBy("sample_bucket", id_col)
-    return (
-        survivors.withColumn("sample_rank", F.row_number().over(w2))
-        .where(F.col("sample_rank") <= k)
-        .drop("_salt")
-    )
+    staged = df.withColumn("sample_bucket", _id_bucket(id_col, buckets, hash_fn))
+    order = [F.col("sample_bucket").asc(), F.col(id_col).asc()]
+    return salted_topk(staged, [strata_col], order, k, salt, "sample_rank")
 
 
 def weighted_sample(

@@ -3,9 +3,10 @@
 The north rule targets Iceberg tables (snapshot-pinned reads, hidden
 partitioning on the cell bucket, snapshot-checkpoint resume).  This
 container ships no Iceberg runtime jars, so every entry point probes for
-the DataSourceV2 provider and otherwise degrades to plain parquet plus
-the engine's own snapshot emulation (``sources.sink`` chunk lineage —
-the same commit/retry semantics, documented there).
+the DataSourceV2 provider and otherwise degrades to plain parquet.
+Writes keep Iceberg's commit/retry semantics through ``sources.sink``'s
+chunk lineage (documented there); a snapshot-pinned read has no parquet
+equivalent and is refused.
 
 On a real cluster: submit with
 ``--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver>``
@@ -31,15 +32,23 @@ def read_documents(spark: SparkSession, location: str,
                    snapshot_id: int | None = None) -> DataFrame:
     """Snapshot-pinned read of an interleaved-documents table.
 
-    Iceberg: time-travel via ``snapshot-id``; parquet fallback ignores
-    ``snapshot_id`` (the sink's chunk lineage provides the equivalent
-    resume point instead).
+    Iceberg: time-travel via ``snapshot-id``.  The parquet fallback has
+    no snapshots, so it reads whatever is on disk and raises
+    ``ValueError`` when a ``snapshot_id`` is asked for: a pinned read it
+    cannot honour must not return unpinned rows.  (The sink's chunk
+    lineage records which buckets a write committed; it does not pin the
+    input of a read.)
     """
     if iceberg_available(spark):
         reader = spark.read.format("iceberg")
         if snapshot_id is not None:
             reader = reader.option("snapshot-id", str(snapshot_id))
         return reader.load(location)
+    if snapshot_id is not None:
+        raise ValueError(
+            f"read_documents: snapshot_id={snapshot_id} needs Iceberg; "
+            "the parquet fallback cannot pin a snapshot"
+        )
     return spark.read.parquet(location)
 
 

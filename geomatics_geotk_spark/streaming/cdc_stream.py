@@ -33,7 +33,8 @@ def streaming_cdc_apply(stream: DataFrame, key_col: str = "cust_key",
     """(cust_key, last_ts, last_op, price, n_changes) upsert rows —
     one per touched key per micro-batch.  Write with outputMode
     'update' (memory/console) or treat the append stream as an upsert
-    feed keyed by cust_key."""
+    feed keyed by cust_key.  ``price`` keeps the input column's type
+    (a DECIMAL stays DECIMAL), as in the batch twin."""
     from typing import Any, Iterator
 
     import pandas as pd
@@ -44,8 +45,9 @@ def streaming_cdc_apply(stream: DataFrame, key_col: str = "cust_key",
         F.unix_date(F.col(ts_col).cast("date")).alias("_days"),
         F.col(seq_col).cast("long").alias("seq"),
         F.col(op_col).alias("op"),
-        F.col(value_col).cast("double").alias("price"),
+        F.col(value_col).alias("price"),
     )
+    price_type = keyed.schema["price"].dataType.simpleString()
 
     def apply_fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState):
         (ckey,) = key
@@ -59,7 +61,7 @@ def streaming_cdc_apply(stream: DataFrame, key_col: str = "cust_key",
                 n += 1
                 d, s = int(d), int(s)
                 if days is None or (d, s) > (days, seq):
-                    days, seq, op, price = d, s, str(o), float(p)
+                    days, seq, op, price = d, s, str(o), p
         state.update((days, seq, op, price, n))
         yield pd.DataFrame({
             "cust_key": [ckey],
@@ -72,11 +74,11 @@ def streaming_cdc_apply(stream: DataFrame, key_col: str = "cust_key",
     return keyed.groupBy("cust_key").applyInPandasWithState(
         apply_fn,
         outputStructType=(
-            "cust_key long, last_ts date, last_op string, price double, "
+            f"cust_key long, last_ts date, last_op string, price {price_type}, "
             "n_changes long"
         ),
         stateStructType=(
-            "days long, seq long, op string, price double, n_changes long"
+            f"days long, seq long, op string, price {price_type}, n_changes long"
         ),
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,

@@ -325,19 +325,18 @@ substring greps):
     ))
 
     sections.append((
-        "PQ/ADC retrieval (ann_topk_pq)",
+        "PQ/ADC retrieval (ann_topk_ivf_pq)",
         "Deepest-compression retrieval tier: the corpus scan carries ONLY "
-        "(id, codes) — m=8 ints per row, no float vectors — and the ADC "
+        "(id, cell, codes) — m=8 ints per row, no float vectors — and the ADC "
         "score is a JVM Column fold over broadcast per-query lookup "
         "tables (zip_with index + element_at; Python appears only in the "
         "constant-size encode/LUT Arrow batches).  The exact rerank "
         "JOINS BACK to the vector store by id for the pool rows only, "
         "so the wide float column is read for ≤ pool·Q rows; both "
-        "rankings are the salted two-phase top-k.  ann_topk_ivf_pq "
-        "composes the same ADC stage behind IVF cell pruning — the "
-        "FAISS IVFx,PQy layout where the stored table is bucketed by "
-        "cell and carries (id, cell, codes).",
-        _trim(plans.formatted_plan(queries.q_ann_topk_pq(spark, SF)), 40),
+        "rankings are the salted two-phase top-k.  The ADC stage sits "
+        "behind IVF cell pruning — the FAISS IVFx,PQy layout where the "
+        "stored table is bucketed by cell.",
+        _trim(plans.formatted_plan(queries.q_ann_topk_ivf_pq(spark, SF)), 40),
     ))
 
     sections.append((

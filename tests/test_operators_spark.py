@@ -237,8 +237,8 @@ class TestDWithinKnn:
             gotlist = [pid for _, pid in sorted(got[row["doc_id"]])]
             assert gotlist == expect, row["doc_id"]
 
-    def test_knn_fallback_side_flip_identical(self, spark, decoded, pois):
-        """r5: past fallback_broadcast_limit pois the exact fallback
+    def test_knn_fallback_side_flip_identical(self, spark, decoded, pois, monkeypatch):
+        """r5: past FALLBACK_BROADCAST_LIMIT pois the exact fallback
         broadcasts the unresolved-doc RESIDUE and streams the poi table;
         the row set must be identical to the poi-broadcast path (limit=0
         forces the flipped side on the same data)."""
@@ -247,10 +247,10 @@ class TestDWithinKnn:
             (r["doc_id"], r["rank"], r["poi_id"])
             for r in df.select("doc_id", "rank", "poi_id").collect()
         )
-        a = knn.knn_join(sub, pois, k=3, strategy="cellring")
-        b = knn.knn_join(sub, pois, k=3, strategy="cellring",
-                         fallback_broadcast_limit=0)
-        assert key(a) == key(b)
+        a = key(knn.knn_join(sub, pois, k=3, strategy="cellring"))
+        monkeypatch.setattr(knn, "FALLBACK_BROADCAST_LIMIT", 0)
+        b = key(knn.knn_join(sub, pois, k=3, strategy="cellring"))
+        assert a == b
 
 
 class TestZonal:
@@ -444,11 +444,12 @@ class TestSimilarity:
             assert np.abs(qv - v * scale).max() <= 0.5 + 1e-9
 
     def test_ann_int8_full_pool_equals_brute(self, spark):
-        """With pool >= corpus size the int8 path MUST equal brute-force
-        exactly (the rerank is the exact cosine over all rows)."""
+        """With one IVF cell and pool >= corpus size the int8 path MUST
+        equal brute-force exactly (the rerank is the exact cosine over
+        all rows)."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200).cache()
         queries = emb.limit(3).select(F.col("vec_id").alias("q_id"), "embedding")
-        a = similarity.ann_topk_int8(emb, queries, k=4, pool=200)
+        a = similarity.ann_topk_ivf_int8(emb, queries, k=4, pool=200, n_centroids=1, nprobe=1)
         b = similarity.brute_topk(emb, queries, k=4)
         key = lambda df: sorted((r["q_id"], r["rank"], r["vec_id"]) for r in df.collect())  # noqa: E731
         assert key(a) == key(b)
@@ -458,7 +459,8 @@ class TestSimilarity:
         high on weak random neighbors (planted fixtures make it exact)."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(300).cache()
         queries = emb.limit(4).select(F.col("vec_id").alias("q_id"), "embedding")
-        a = {(r["q_id"], r["vec_id"]) for r in similarity.ann_topk_int8(emb, queries, k=4, pool=30).collect()}
+        a = {(r["q_id"], r["vec_id"]) for r in similarity.ann_topk_ivf_int8(
+            emb, queries, k=4, pool=30, n_centroids=1, nprobe=1).collect()}
         b = {(r["q_id"], r["vec_id"]) for r in similarity.brute_topk(emb, queries, k=4).collect()}
         recall = len(a & b) / len(b)
         assert recall >= 0.9, recall
@@ -513,7 +515,8 @@ class TestSimilarity:
             F.col("vec_id").alias("q_id"), "embedding"
         )
         exact = similarity.brute_topk(emb, queries, k=5)
-        approx = similarity.ann_topk_pq(emb, queries, k=5, pool=50, m=8, n_codes=64)
+        approx = similarity.ann_topk_ivf_pq(emb, queries, k=5, pool=50, m=8, n_codes=64,
+                                            n_centroids=1, nprobe=1)
         e = {(r["q_id"], r["vec_id"]) for r in exact.collect()}
         a = {(r["q_id"], r["vec_id"]) for r in approx.collect()}
         recall = len(e & a) / len(e)
@@ -546,7 +549,8 @@ class TestSimilarity:
         assert np.isfinite(similarity.learn_centroids(emb, n_centroids=4)).all()
         outs = {
             "ann_topk": similarity.ann_topk(emb, queries, k=k, planes_per_table=2),
-            "ann_topk_int8": similarity.ann_topk_int8(emb, queries, k=k, pool=k),
+            "ann_topk_ivf_int8": similarity.ann_topk_ivf_int8(
+                emb, queries, k=k, pool=k, n_centroids=1, nprobe=1),
             "ann_topk_ivf": similarity.ann_topk_ivf(emb, queries, k=k, n_centroids=4, nprobe=4),
         }
         for name, df in outs.items():
@@ -587,27 +591,40 @@ class TestSimilarityR5:
     and the adversarial (rotated, non-direction-identical) near-dup
     fixture."""
 
-    def test_topk_salt_invariance(self, spark):
-        """_topk_per_query is EXACT for any salts >= 1: the salt count is
-        a parallelism knob, never a semantics knob."""
-        scored = (
-            spark.range(500)
-            .select(
-                (F.col("id") % 7).alias("q_id"),
-                F.col("id").alias("vec_id"),
-                (F.sin(F.col("id").cast("double")) * 100).alias("cosine"),
-            )
+    @pytest.mark.parametrize("shape", ["score_desc", "two_col_asc"])
+    def test_topk_salt_invariance(self, spark, shape):
+        """stats.salted_topk is EXACT for any salts >= 1 and equals one
+        unsalted window: the salt count is a parallelism knob, never a
+        semantics knob.  Two order shapes: score desc then long id (ANN,
+        IDW, kNN) and ascending over (bucket, string id) with ties in
+        the bucket (stratified samples, KMV)."""
+        from pyspark.sql import Window
+
+        from geomatics_geotk_spark.operators import stats
+
+        if shape == "score_desc":
+            vid = F.col("id")
+            score = F.sin(F.col("id").cast("double")) * 100
+            order = [F.col("score").desc(), F.col("vec_id").asc()]
+        else:
+            vid = F.col("id").cast("string")
+            score = F.pmod(F.col("id") * 37, F.lit(11))
+            order = [F.col("score").asc(), F.col("vec_id").asc()]
+        scored = spark.range(500).select(
+            (F.col("id") % 7).alias("q_id"), vid.alias("vec_id"), score.alias("score")
         )
+        ref = scored.withColumn(
+            "rank", F.row_number().over(Window.partitionBy("q_id").orderBy(*order))
+        ).where(F.col("rank") <= 5)
         outs = []
         for salts in (1, 4, 16):
-            out = similarity._topk_per_query(
-                scored, 5, "q_id", "vec_id", salts=salts
-            )
-            outs.append(sorted(
-                (r["q_id"], r["rank"], r["vec_id"], round(r["cosine"], 9))
-                for r in out.collect()
-            ))
-        assert outs[0] == outs[1] == outs[2]
+            salt = F.pmod(F.xxhash64(F.col("vec_id").cast("string"), F.lit(17)), F.lit(salts))
+            outs.append(stats.salted_topk(scored, ["q_id"], order, 5, salt))
+        outs.append(ref)
+        outs = [sorted(
+            (r["q_id"], r["rank"], r["vec_id"], round(r["score"], 9)) for r in df.collect()
+        ) for df in outs]
+        assert outs[0] == outs[1] == outs[2] == outs[3]
         assert len(outs[0]) == 35  # 7 queries x top-5
 
     def test_ann_ivf_int8_full_probe_equals_brute(self, spark):

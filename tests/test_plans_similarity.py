@@ -48,22 +48,13 @@ class TestAnnPlans:
     def test_ann_topk_ivf_two_phase(self, spark):
         self._assert_two_phase(queries.q_ann_topk_ivf(spark, SF), 1)
 
-    def test_ann_topk_int8_two_phase(self, spark):
-        """int8 has TWO rankings: the coarse pool and the exact rerank."""
-        self._assert_two_phase(queries.q_ann_topk_int8(spark, SF), 2)
-
     def test_ann_topk_ivf_int8_two_phase(self, spark):
+        """int8 and PQ have TWO rankings: the coarse pool and the exact
+        rerank."""
         self._assert_two_phase(queries.q_ann_topk_ivf_int8(spark, SF), 2)
 
     def test_ann_topk_ivf_pq_two_phase(self, spark):
         self._assert_two_phase(queries.q_ann_topk_ivf_pq(spark, SF), 2)
-
-    def test_ann_topk_pq_two_phase(self, spark):
-        """PQ has TWO rankings (ADC pool + exact rerank); additionally
-        the corpus-side scan must carry NO float vector column — the
-        join-back fetches vectors for the pool only."""
-        df = queries.q_ann_topk_pq(spark, SF)
-        self._assert_two_phase(df, 2)
 
 
 class TestSemanticDedupPlan:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from geomatics_geotk_spark.operators import spatial_join, stats
@@ -60,3 +61,12 @@ class TestIcebergShim:
         # partition pruning: one bucket reads a subset
         one = back.where(F.col("cell_bucket") == 3)
         assert 0 < one.count() < 500
+
+    def test_parquet_fallback_rejects_snapshot_pin(self, spark, tmp_path):
+        """Without Iceberg a pinned read cannot be honoured: it must
+        raise, not return whatever is on disk."""
+        loc = str(tmp_path / "docs")
+        spark.range(3).write.parquet(loc)
+        with pytest.raises(ValueError, match="snapshot_id=7"):
+            iceberg.read_documents(spark, loc, snapshot_id=7)
+        assert iceberg.read_documents(spark, loc).count() == 3

@@ -10,6 +10,7 @@ drops the key; state survives a checkpoint restart.
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import Window
@@ -35,8 +36,8 @@ LOG = [
 ]
 
 
-def _batch_reference(spark):
-    df = spark.createDataFrame(LOG, SCHEMA)
+def _batch_reference(spark, log=LOG, schema=SCHEMA):
+    df = spark.createDataFrame(log, schema)
     w = Window.partitionBy("cust_key").orderBy(F.desc("ts"), F.desc("seq"))
     wall = Window.partitionBy("cust_key")
     r = df.select(
@@ -89,6 +90,36 @@ def test_matches_batch_any_batching(spark, tmp_path, split):
             for k, r in last.items() if r.last_op != "D"}
     assert live == want
     assert last[3].last_op == "D" and 3 not in want  # delete marker
+
+
+def test_decimal_price_keeps_type(spark, tmp_path):
+    """A DECIMAL price is carried as DECIMAL, as the batch twin does:
+    the last emitted row per key equals the batch snapshot, type and
+    value, with no round trip through double."""
+    schema = SCHEMA.replace("price double", "price decimal(12,2)")
+    log = [(*r[:4], Decimal(str(r[4])) + Decimal("0.01")) for r in LOG]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(log, schema).coalesce(1).write.parquet(src)
+    q = (
+        streaming_cdc_apply(spark.readStream.schema(schema).parquet(src))
+        .writeStream.format("memory").queryName("cdc_decimal")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("update").start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    out = spark.sql("select * from cdc_decimal")
+    assert out.schema["price"].dataType.simpleString() == "decimal(12,2)"
+    live = {k: (r.last_ts, r.last_op, r.price, r.n_changes)
+            for k, r in _last_emits(spark, "cdc_decimal").items()
+            if r.last_op != "D"}
+    want = _batch_reference(spark, log, schema)
+    assert live == want
+    assert all(isinstance(v[2], Decimal) for v in live.values())
+    assert live[1][2] == Decimal("120.01")
+
 
 def test_restart_resumes_state(spark, tmp_path):
     """Post-restart changes fold into pre-restart state: the counter
