@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -242,6 +242,13 @@ def with_ivf_cell(df: DataFrame, centroids: np.ndarray,
     return df.withColumn(out, cells_of(F.col(vec_col)))
 
 
+def _corpus_cell() -> Column:
+    """A corpus row's one IVF cell as a never-null join key: on a nullable
+    key Spark infers an ``isnotnull`` filter that evaluates the cell UDF a
+    second time in its own Arrow operator; -1 matches no probed cell."""
+    return F.coalesce(F.element_at("cells", 1), F.lit(-1)).alias("cell")
+
+
 def ann_topk_ivf(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                  id_col: str = "vec_id", q_id_col: str = "q_id",
                  vec_col: str = "embedding", n_centroids: int = 256,
@@ -254,7 +261,7 @@ def ann_topk_ivf(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     if centroids is None:
         centroids = learn_centroids(embeddings, n_centroids, vec_col)
     corpus = with_ivf_cell(embeddings, centroids, vec_col, nprobe=1).select(
-        id_col, vec_col, F.element_at("cells", 1).alias("cell")
+        id_col, vec_col, _corpus_cell()
     )
     q = with_ivf_cell(queries, centroids, vec_col, nprobe=nprobe).select(
         F.col(q_id_col), F.col(vec_col).alias("_qvec"), F.explode("cells").alias("cell")
@@ -525,7 +532,7 @@ def ann_topk_ivf_pq(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
     corpus = with_pq_codes(
         with_ivf_cell(embeddings, centroids, vec_col, nprobe=1), books, vec_col
-    ).select(id_col, "codes", F.element_at("cells", 1).alias("cell"))
+    ).select(id_col, "codes", _corpus_cell())
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def lut_of(vecs: pd.Series) -> pd.Series:
@@ -600,7 +607,7 @@ def ann_topk_ivf_int8(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     cq = quantize_int8(
         with_ivf_cell(embeddings, centroids, vec_col, nprobe=1), vec_col
     ).select(
-        id_col, vec_col, "qvec", F.element_at("cells", 1).alias("cell"),
+        id_col, vec_col, "qvec", _corpus_cell(),
         F.sqrt(_idot(F.col("qvec"), F.col("qvec")).cast("double")).alias("_qnorm_c"),
     )
     qq = quantize_int8(

@@ -59,21 +59,29 @@ from ..kernels import geometry as geom_k
 DEFAULT_RES = 12
 
 
-def decode_geo_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Extract lon/lat from the first ``kind='geo'`` span (WKT POINT).
+def geo_span_text(spans_col: str = "spans") -> Column:
+    """Text of the first ``kind='geo'`` span, null when a doc has none.
 
     Pure codegen'd Column expressions, no lambda: ``array_position`` over
-    the span kinds finds the geo span, ``get`` over the span texts takes
-    it and two regexps read the ordinates.  A doc with no geo span, or
-    geo text that is not a WKT POINT, gets null lon/lat (never an ANSI
-    error).  ``spans`` is carried opaquely — never exploded — so per-doc
-    span sequence is preserved.
+    the span kinds finds the geo span and ``get`` over the span texts
+    takes it (never an ANSI error).
     """
     spans = F.col(spans_col)
     # array_position is 1-based and 0 when absent; get is 0-based and
     # null out of range, so a doc with no geo span gets a null text
     pos = F.array_position(spans["kind"], "geo")
-    geo_text = F.get(spans["text"], (pos - 1).cast("int"))
+    return F.get(spans["text"], (pos - 1).cast("int"))
+
+
+def decode_geo_spans(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+    """Extract lon/lat from the first ``kind='geo'`` span (WKT POINT).
+
+    Two regexps over :func:`geo_span_text` read the ordinates, with no
+    lambda and no Python.  A doc with no geo span, or geo text that is
+    not a WKT POINT, gets null lon/lat.  ``spans`` is carried opaquely —
+    never exploded — so per-doc span sequence is preserved.
+    """
+    geo_text = geo_span_text(spans_col)
     return docs.withColumns({"lon": wkt_point_lon(geo_text), "lat": wkt_point_lat(geo_text)})
 
 

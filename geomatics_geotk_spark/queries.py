@@ -337,10 +337,7 @@ def q_interleaved_gml_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     inter = docs.select(k.alias("doc_id"), spans.alias("spans"))
-    geo_text = F.element_at(
-        F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("geo")), 1
-    )["text"]
-    decoded = inter.withColumn("g", gml_decode_udf(geo_text))
+    decoded = inter.withColumn("g", gml_decode_udf(spatial_join.geo_span_text()))
     # EPSG:4326 stores (lat, lon): first_x is latitude — axis-normalize
     # (transformRingToRightHandedCS semantics) into lon/lat columns
     pts = decoded.select(

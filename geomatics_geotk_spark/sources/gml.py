@@ -3,15 +3,42 @@
 The reference's front door is GML DOM (``GmlUtils.java:414-433``
 unmarshalGMLGeometry); here the equivalent is a scan stage: read XML
 documents distributed (``spark.read.text(wholetext)`` — one row per
-file — or any string column), then one Arrow-batched pandas UDF running
-the :mod:`kernels.gml` decode + flattening per document.  Downstream
-stages see only typed columns (kind, crs, counts, envelope, flattened
-coords) — the XML never crosses another stage boundary.
+file — or any string column), then one Arrow-batched pandas UDF that
+decodes each document into typed columns (kind, crs, counts, envelope,
+first/last coordinates).  Downstream stages see only those columns —
+the XML never crosses another stage boundary.
+
+The UDF decodes a batch on two paths:
+
+* **Simple points, column-wise.**  One RE2 pass over the Arrow batch
+  (``pyarrow.compute.extract_regex``) matches the whole string against
+  a strict shape, ``<gml:Point xmlns:gml="http://www.opengis.net/gml/3.2"
+  srsName="S"><gml:pos>X Y[ Z]</gml:pos></gml:Point>``: the tags and
+  attributes exactly so; whitespace only around and between the numbers,
+  and only XML's four (space, tab, CR, LF: a form feed, which the
+  parser rejects, falls back); ``S`` non-empty and free of ``" < > &``
+  and of control characters, which entity expansion or attribute
+  normalisation would change or the parser reject; numbers in ASCII,
+  ``[-+]?(digits[.[digits]]|.digits)[(e|E)[-+]digits]``.  The matched
+  rows are filled with numpy; each ordinate is Python ``float()`` of
+  its token and a third value is ignored, as
+  :func:`kernels.gml._pos_coords` does.
+* **Everything else, per document.**  Every other row (other prefixes
+  or namespaces, an XML declaration, curves, surfaces, envelopes,
+  ``inf``/``nan`` tokens, malformed text, null) goes through
+  ElementTree and the :mod:`kernels.gml` flattening in
+  :func:`_decode_one`, whose error strings are the contract for
+  malformed documents.
+
+Both paths give the same row for a document the strict shape matches.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,8 +64,6 @@ GML_DECODE_SCHEMA = T.StructType([
 
 
 def _decode_one(xml_text: str) -> dict:
-    import numpy as np
-
     try:
         elem = gml_k.unwrap_property(gml_k.parse(xml_text))
         gml_k.set_srs_name_on_collection_members(elem)
@@ -84,9 +109,42 @@ def _decode_one(xml_text: str) -> dict:
         }
 
 
+_WS = r"[ \t\r\n]"
+_NUM = r"[-+]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
+#: the strict simple-Point shape of the column-wise path (module docstring)
+_SIMPLE_POINT_RE = (
+    r'\A<gml:Point xmlns:gml="http://www\.opengis\.net/gml/3\.2" '
+    r'srsName="(?P<srs>[^"<>&\x00-\x1f\x{FFFE}\x{FFFF}]+)"><gml:pos>'
+    rf"{_WS}*(?P<x>{_NUM}){_WS}+(?P<y>{_NUM})(?:{_WS}+{_NUM})?{_WS}*"
+    r"</gml:pos></gml:Point>\z"
+)
+
+
 @F.pandas_udf(GML_DECODE_SCHEMA)
 def gml_decode_udf(xml: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_decode_one(x) for x in xml])
+    m = pc.extract_regex(pa.array(xml, pa.string()), _SIMPLE_POINT_RE)
+    valid = m.is_valid()
+    fast = valid.to_numpy(zero_copy_only=False)
+    pts = m.filter(valid)
+    x, y = (pts.field(k).to_numpy(zero_copy_only=False).astype(np.float64) for k in "xy")
+    point = {
+        "kind": "Point", "crs": pts.field("srs").to_numpy(zero_copy_only=False),
+        "n_points": 1, "first_x": x, "first_y": y, "last_x": x, "last_y": y,
+        "xmin": x, "ymin": y, "xmax": x, "ymax": y,
+        "n_interior_rings": 0, "n_interior_points": 0, "error": None,
+    }
+    rest = np.flatnonzero(~fast)
+    slow = [_decode_one(xml.iat[i]) for i in rest]
+    cols = {}
+    for f in GML_DECODE_SCHEMA.fields:
+        # numbers as float64 with NaN for null, as pandas infers an int
+        # field with nulls; Arrow casts them back to the schema's ints
+        dtype = object if isinstance(f.dataType, T.StringType) else np.float64
+        col = np.empty(len(xml), dtype)
+        col[fast] = point[f.name]
+        col[rest] = np.array([d[f.name] for d in slow], dtype)
+        cols[f.name] = col
+    return pd.DataFrame(cols)
 
 
 def decode_gml(df: DataFrame, xml_col: str = "xml", out: str = "geom") -> DataFrame:

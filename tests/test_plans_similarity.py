@@ -56,6 +56,18 @@ class TestAnnPlans:
     def test_ann_topk_ivf_pq_two_phase(self, spark):
         self._assert_two_phase(queries.q_ann_topk_ivf_pq(spark, SF), 2)
 
+    def test_ivf_cell_udf_once_per_corpus_branch(self, spark):
+        """The corpus cell is a never-null join key, so Spark infers no
+        ``isnotnull`` filter that evaluates ``cells_of`` a second time
+        below the join: each plan has one ``cells_of`` operator per corpus
+        branch (the fixture's two) and one on the query side."""
+        for q in (queries.q_ann_topk_ivf, queries.q_ann_topk_ivf_int8, queries.q_ann_topk_ivf_pq):
+            plan = plans.formatted_plan(q(spark, SF))
+            cells_of = re.findall(r"\(\d+\) ArrowEvalPython\nInput.*\nArguments: \[.*cells_of\(", plan)
+            filters = re.findall(r"\(\d+\) Filter\nInput.*\nCondition : (.*)", plan)
+            assert len(cells_of) == 3, plan
+            assert not [f for f in filters if "pythonUDF" in f], filters
+
 
 class TestSemanticDedupPlan:
     def test_single_exchange_no_join(self, spark):
