@@ -53,7 +53,7 @@ def flagship(spark, n_docs: int) -> float:
     zones = zones_table(spark, grid=8)
     decoded = spatial_join.decode_geo_spans(docs)
     tiled = spatial_join.tile_assign(decoded, q.RES)
-    joined = spatial_join.spatial_join(tiled, zones, res=q.RES, strategy="broadcast")
+    joined = spatial_join.spatial_join(tiled, zones, res=q.RES)
     out = joined.select("doc_id", "zone_id", "cell_id")
     t0 = time.time()
     _force(out)

@@ -166,8 +166,15 @@ def ann_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     corpora where even t·n/2^b candidates is too much (very weak
     similarity at 10^9 rows), use :func:`ann_topk_ivf`.
     """
-    corpus = with_lsh_tables(embeddings, vec_col, dim, planes_per_table, n_tables, seed)
-    q = with_lsh_tables(queries, vec_col, dim, planes_per_table, n_tables, seed)
+    # never-null bucket arrays: on the nullable UDF output Spark infers
+    # an ``isnotnull`` filter (from the explode and the bucket match
+    # below) that evaluates the bucket UDF a second time in its own Arrow
+    # operator; a null array explodes to no row either way
+    nonnull = F.coalesce("buckets", F.array().cast("array<bigint>"))
+    corpus = with_lsh_tables(embeddings, vec_col, dim, planes_per_table, n_tables, seed) \
+        .withColumn("buckets", nonnull)
+    q = with_lsh_tables(queries, vec_col, dim, planes_per_table, n_tables, seed) \
+        .withColumn("buckets", nonnull)
     ce = corpus.select(
         id_col, vec_col, "buckets", F.explode("buckets").alias("bucket")
     )

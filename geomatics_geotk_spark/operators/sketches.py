@@ -267,7 +267,7 @@ def bloom_filtered_join(
     100 TB the shuffle volume of a selective join drops by the filter's
     selectivity while the filter cost stays O(m) — independent of both
     table sizes.  The collect is bounded at O(m) — the same contract as
-    the documented hot-cell collect in the salting policy.
+    the driver pack of a broadcast-sized zone side.
 
     Designs that keep the filter inside the plan were measured at sf0.1
     and rejected: membership via ``array_contains`` on the broadcast

@@ -13,11 +13,13 @@ into the classic spatial hash join:
 2. **cell-encode** both sides (JVM bit math, :func:`functions.cell_id_col`);
    zones explode into their covering cells, each flagged ``full`` (cell
    entirely inside the polygon — refine skipped) or ``partial``.  Every
-   cell join packs its zone side by one rule (:func:`_zone_side`):
-   broadcast → driver Arrow table, shuffle → executor ``mapInArrow``;
-3. **equi-join on cell_id** — broadcast for small zone sets, shuffle with
-   explicit hot-cell salting for large/skewed ones (AQE skew-split stays
-   on as belt-and-suspenders);
+   cell join takes its zone side from one size rule (:func:`_zone_side`):
+   a zone side Spark would broadcast is packed on the driver into an
+   Arrow table and broadcast, a larger one is packed on the executors by
+   ``mapInArrow``;
+3. **equi-join on cell_id** — a broadcast hash join for small zone sets,
+   else a shuffle on ``cell_id`` whose hot cells AQE's skew-join split
+   (on in :func:`session.get_spark`) divides;
 4. **refine** only the partial-cell candidates with the crossing-number
    test over the partial cell's **edge slots** — the few ring edges that
    can cross a ray from a point in that cell, built once per zone at
@@ -421,28 +423,48 @@ def prepare_zones(zones: DataFrame, res: int = DEFAULT_RES):
     return _explode_zone_cells(z), rings
 
 
-def _zone_side(zones: DataFrame, res: int, strategy: str, margin_m: float = 0.0,
-               slots: bool = False):
-    """The prepared zone side (zone_id, _z) of a cell join under
-    ``strategy``, plus the largest slot count of any cell (0 without
-    ``slots``).  'broadcast' packs it on the driver (a zone side small
-    enough to broadcast is driver-sized); 'shuffle', the large-zone-side
-    strategy, packs it on the executors and checkpoints it, so the prep
-    runs once for every reader."""
+def _broadcastable(df: DataFrame) -> bool:
+    """Spark's own broadcast rule for ``df``: the Catalyst size estimate
+    of its optimized plan (no job runs) is at or below the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; never when that is -1.  A
+    plan Catalyst cannot size (a Python RDD) is not broadcastable."""
+    bound = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= bound
+
+
+def _zone_side(zones: DataFrame, res: int, strategy: str | None = None,
+               margin_m: float = 0.0, slots: bool = False):
+    """The prepared zone side (zone_id, _z) of a cell join, the largest
+    slot count of any cell (0 without ``slots``) and whether to broadcast
+    it.  Sized by :func:`_broadcastable` over ``zones`` unless
+    ``strategy`` pins it: a zone side Spark would broadcast ('broadcast')
+    is packed on the driver; a larger one ('shuffle') is packed on the
+    executors and checkpointed, so the prep runs once for every reader,
+    and joins without a hint.
+
+    The rule sizes the raw zones, not the packed, cell-exploded side, and
+    Catalyst counts an array as one element: a table of many-vertex zones
+    can be estimated within the bound and so collected on the driver
+    (the 100,000-zone grid of ``tests/test_large_zone_path.py`` reads
+    4 MB).  The no-collect path is certain only for a zone side estimated
+    above the bound or with the bound at -1; ``spatial_join`` can pin it
+    with ``strategy='shuffle'``."""
+    if strategy is None:
+        strategy = "broadcast" if _broadcastable(zones) else "shuffle"
     if strategy == "broadcast":
         z, table = _driver_zones(zones, res, margin_m, slots)
         if not slots:
-            return z, 0
+            return z, 0, True
         cells_arr = table.column("_z").combine_chunks().field("cells").flatten()
         k = pc.max(pc.list_value_length(cells_arr.field("edges"))).as_py()
     elif strategy == "shuffle":
         z = prep_zone_struct(zones, res, margin_m, slots).localCheckpoint()
         if not slots:
-            return z, 0
+            return z, 0, False
         k = _explode_zone_cells(z).agg(F.max(F.size("edges"))).first()[0]
     else:
         raise ValueError(f"unknown strategy: {strategy!r}")
-    return z, k or 0
+    return z, k or 0, strategy == "broadcast"
 
 
 # The slot refine unrolls into the join stage's generated Java method,
@@ -509,10 +531,8 @@ def spatial_join(
     docs: DataFrame,
     zones: DataFrame,
     res: int = DEFAULT_RES,
-    strategy: str = "broadcast",
+    strategy: str | None = None,
     predicate: str = "intersects",
-    salt: int = 0,
-    hot_cell_threshold: int = 200_000,
     lon_col: str = "lon",
     lat_col: str = "lat",
     id_col: str = "doc_id",
@@ -523,20 +543,15 @@ def spatial_join(
     sets under the half-open boundary rule) | 'disjoint' (anti-join of
     intersects — reference TopologicalRelationships.java:71-73).
 
-    strategy:
-      - 'broadcast': zone_cells broadcast; no shuffle of docs at all.
-      - 'shuffle': hash-shuffle both sides on cell_id; with ``salt`` > 0,
-        hot cells (estimated count > hot_cell_threshold) get their zone
-        rows replicated ×salt and doc rows spread across salt sub-keys —
-        the explicit skew handling the north rule demands.
-
-    The zone side follows the one rule of :func:`_zone_side`: 'broadcast'
-    packs it on the driver into one Arrow table, which enters the plan
-    as a local relation (``LocalTableScan``), so the plan holds no Python
-    node at all (asserted in tests/test_plans_bucketing.py); 'shuffle',
-    the large-zone-side strategy, packs it on the executors in one
+    The zone side follows the size rule of :func:`_zone_side`; a
+    ``strategy`` of 'broadcast' or 'shuffle' pins it.  A broadcast zone
+    side is packed on the driver into one Arrow table, which enters the
+    plan as a local relation (``LocalTableScan``), so the plan holds no
+    Python node at all (asserted in tests/test_plans_bucketing.py), and
+    no doc is shuffled.  A larger one is packed on the executors in one
     ``mapInArrow`` (checkpointed once), so the driver never materializes
-    a zone or a cell.
+    a zone or a cell, and both sides exchange on ``cell_id``; AQE's
+    skew-join split divides hot cells.
 
     Either way the refine is :func:`functions.edge_slots_pip_col` over
     the partial cells' edge slots, unrolled to the largest slot count of
@@ -556,50 +571,17 @@ def spatial_join(
                 f"disjoint anti-join needs a unique id column; {id_col!r} "
                 f"not in {docs.columns}"
             )
-        matched = spatial_join(
-            docs, zones, res, strategy, "intersects", salt, hot_cell_threshold,
-            lon_col, lat_col,
-        )
+        matched = spatial_join(docs, zones, res, strategy, "intersects", lon_col, lat_col)
         return docs.join(matched.select(id_col).distinct(), id_col, "left_anti")
 
     pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
 
-    z, k = _zone_side(zones, res, strategy, slots=True)
+    z, k, broadcast = _zone_side(zones, res, strategy, slots=True)
     zone_cells, pip_col, refine_cols = _refine_side(
         _explode_zone_cells(z), k, F.col(lon_col), F.col(lat_col))
-    if strategy == "broadcast":
-        joined = pts.join(F.broadcast(zone_cells), "cell_id", "inner")
-    elif salt > 0:
-        # explicit hot-cell salting: estimate per-cell doc counts on a
-        # sample, replicate zone rows for hot cells only
-        hot = [
-            r["cell_id"]
-            for r in pts.sample(0.01, seed=42)
-            .groupBy("cell_id").count()
-            .where(F.col("count") * 100 > hot_cell_threshold)
-            .collect()
-        ]
-        if hot:
-            salts = docs.sparkSession.range(salt).select(F.col("id").cast("int").alias("salt"))
-            zc_hot = (
-                zone_cells.where(F.col("cell_id").isin(hot)).crossJoin(salts)
-            )
-            zc_cold = zone_cells.where(~F.col("cell_id").isin(hot)).withColumn(
-                "salt", F.lit(0)
-            )
-            zc = zc_hot.unionByName(zc_cold)
-            pts = pts.withColumn(
-                "salt",
-                F.when(
-                    F.col("cell_id").isin(hot),
-                    F.pmod(F.xxhash64(F.col(pts.columns[0])), F.lit(salt)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            joined = pts.join(zc, ["cell_id", "salt"], "inner").drop("salt")
-        else:
-            joined = pts.join(zone_cells, "cell_id", "inner")
-    else:
-        joined = pts.join(zone_cells, "cell_id", "inner")
+    if broadcast:
+        zone_cells = F.broadcast(zone_cells)
+    joined = pts.join(zone_cells, "cell_id", "inner")
 
     # crossing-number refine as Column math over what the zone side
     # carries: no Python, no Arrow
@@ -613,7 +595,6 @@ def dwithin_zone_join(
     res: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """docs(points) within ``distance_m`` of polygon ZONES — the
     geometry×geometry DWithin of the reference
@@ -622,7 +603,7 @@ def dwithin_zone_join(
 
     1. zone side: covering cells of the polygon envelope EXPANDED by the
        distance margin, each flagged full (cell inside the polygon ⇒
-       distance 0, refine skipped) — dimension-side prep, broadcast;
+       distance 0, refine skipped);
     2. docs equi-join on cell_id;
     3. refine (Arrow batch, grouped by zone): inside test, else the
        planar nearest witness on the rings (vertex/segment projections —
@@ -631,24 +612,24 @@ def dwithin_zone_join(
 
     Returns doc columns… + zone_id + dist_m (0.0 for interior points).
 
-    The zone side (margin-expanded covering cells) follows the one rule
-    of :func:`_zone_side`: ``strategy='broadcast'`` packs it on the
-    driver and broadcasts the cell and ring tables (dimension-sized zone
-    sets); ``'shuffle'`` packs it on the executors in one ``mapInArrow``
-    — the driver never collects a zone, so a 10^6-zone side is just more
-    partitions — and hash-partitions both joins on their keys.  Rings
-    reach the refine ON JOIN ROWS via a (zone_id → rings) attach join.
+    The zone side (margin-expanded covering cells) follows the size rule
+    of :func:`_zone_side`: a zone side Spark would broadcast is packed on
+    the driver and its cell and ring tables are broadcast; a larger one
+    is packed on the executors in one ``mapInArrow`` — the driver never
+    collects a zone, so a 10^6-zone side is just more partitions — and
+    both joins hash-partition on their keys.  Rings reach the refine ON
+    JOIN ROWS via a (zone_id → rings) attach join.
     """
     if res is None:
         res = cells.res_for_meters(max(distance_m, 500.0) * 4)
 
-    z, _ = _zone_side(zones, res, strategy, margin_m=distance_m)
+    z, _, broadcast = _zone_side(zones, res, margin_m=distance_m)
     zone_cells = _explode_zone_cells(z).select("cell_id", "zone_id", "full")
     flat_ext, flat_int = flat_ring_cols(F.col("_z.exterior"), F.col("_z.interiors"))
     zone_rings = z.select(
         "zone_id", flat_ext.alias("_zext"), flat_int.alias("_zint")
     )
-    if strategy == "broadcast":
+    if broadcast:
         zone_cells = F.broadcast(zone_cells)
         zone_rings = F.broadcast(zone_rings)
 
@@ -754,7 +735,6 @@ def dwithin_join(
     res: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """docs × pois pairs with geodesic distance < distance_m (DWITHIN).
 
@@ -766,9 +746,11 @@ def dwithin_join(
     haversine prefilter (JVM Column math) → exact Vincenty refine
     (Arrow/numpy UDF).
 
-    strategy: 'broadcast' ships the expanded poi side to every executor
-    (right for dimension-sized poi tables); 'shuffle' hash-partitions
-    both sides on cell_id (right when the poi side is itself huge).
+    The poi side has no pack to place, so the join carries no hint:
+    Spark's own join selection broadcasts the expanded poi side when its
+    estimate is within ``spark.sql.autoBroadcastJoinThreshold`` (the
+    bound :func:`_zone_side` sizes zone sides by) and otherwise
+    hash-partitions both sides on cell_id.
 
     BEYOND (``isBeyond``, :194-196) = anti-join on this result.
     """
@@ -783,8 +765,7 @@ def dwithin_join(
     # embed the res in their high bits); the bit math is codegen'd JVM —
     # recomputing is cheaper than trusting
     pts = tile_assign(docs.drop("cell_id"), res, lon_col, lat_col)
-    right = F.broadcast(poi_cells) if strategy == "broadcast" else poi_cells
-    cand = pts.join(right, "cell_id", "inner")
+    cand = pts.join(poi_cells, "cell_id", "inner")
 
     from ..functions import haversine_m, vincenty_m_udf
 

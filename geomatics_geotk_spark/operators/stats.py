@@ -1,13 +1,11 @@
-"""Per-cell occupancy statistics — the skew-detection half of the
-engine's explicit hot-cell handling (north rule).
+"""Per-cell occupancy statistics and the salted per-group top-k.
 
 ``cell_histogram`` is a plain hash aggregation (map-side partials);
-``hot_cells`` thresholds it (driver-collects only the tiny hot set);
-``skew_report`` summarizes the distribution for lineage/metrics.  The
-spatial join's salting policy consumes ``hot_cells`` to decide which
-cells get replicated zone rows + salted doc keys.  ``salted_topk`` is
-the same skew handling for ranking windows: every per-group top-k in
-the engine (ANN, kNN fallback, IDW, stratified samples, KMV) uses it.
+``skew_report`` summarizes the distribution for lineage/metrics (hot
+cells in a cell join are split by AQE's skew join, see
+:mod:`operators.spatial_join`).  ``salted_topk`` is the skew handling
+for ranking windows: every per-group top-k in the engine (ANN, kNN
+fallback, IDW, stratified samples, KMV) uses it.
 """
 
 from __future__ import annotations
@@ -21,31 +19,9 @@ def cell_histogram(docs: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     return docs.groupBy(cell_col).agg(F.count("*").alias("n_docs"))
 
 
-def hot_cells(docs: DataFrame, threshold: int, cell_col: str = "cell_id",
-              sample_fraction: float | None = None) -> list[int]:
-    """Cell ids whose (estimated) count exceeds ``threshold``.
-
-    With ``sample_fraction`` the histogram runs on a deterministic sample
-    and scales the threshold — at 10^12 docs the exact histogram is a full
-    shuffle; a 1% sample finds every cell that matters for salting.
-    """
-    d = docs
-    thr = threshold
-    if sample_fraction:
-        d = docs.sample(sample_fraction, seed=42)
-        thr = max(1, int(threshold * sample_fraction))
-    rows = (
-        cell_histogram(d, cell_col)
-        .where(F.col("n_docs") > thr)
-        .select(cell_col)
-        .collect()
-    )
-    return [r[cell_col] for r in rows]
-
-
 def skew_report(docs: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     """One-row distribution summary: cells, docs, max/avg occupancy and
-    the max/avg skew ratio that decides whether salting is worth it."""
+    the max/avg skew ratio of the hottest cell."""
     h = cell_histogram(docs, cell_col)
     agg = h.agg(
         F.count("*").alias("n_cells"),

@@ -13,8 +13,9 @@ Everything is JVM Column math (whole-stage codegen): covering cells via
 broadcast ``zone_cells`` side — no Python in the per-tile path, so the
 operator holds up at raster scale (billions of tiles).
 
-The zone side follows spatial_join's one rule: broadcast → driver Arrow
-table, shuffle → executor ``mapInArrow``.
+The zone side follows spatial_join's size rule (``_zone_side``): a
+zone side Spark would broadcast → driver Arrow table, broadcast; a
+larger one → executor ``mapInArrow``, shuffled.
 """
 
 from __future__ import annotations
@@ -28,20 +29,17 @@ from .spatial_join import _explode_zone_cells, _zone_side
 DEFAULT_RES = 10
 
 
-def zonal_join(tiles: DataFrame, zones: DataFrame, res: int = DEFAULT_RES,
-               strategy: str = "broadcast") -> DataFrame:
+def zonal_join(tiles: DataFrame, zones: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """(tile columns…, zone_id) pairs where tile envelope ∩ zone ≠ ∅.
 
-    ``strategy='broadcast'`` (default) pins the driver-packed zone-cell
-    side as a broadcast — right when zones fit an executor.
-    ``'shuffle'`` packs the zones on the executors and drops the hint,
-    so both sides exchange on cell_id (AQE picks the physical join and
-    handles hot-cell skew) — the plan for zone sets too large to
-    broadcast.  Row set is identical either way.
+    A zone side Spark would broadcast is packed on the driver and its
+    zone cells broadcast.  A larger one is packed on the executors with
+    no hint, so both sides exchange on cell_id (AQE picks the physical
+    join and splits hot cells).  Row set is identical either way.
     """
-    z, _ = _zone_side(zones, res, strategy)
+    z, _, broadcast = _zone_side(zones, res)
     zone_cells = _explode_zone_cells(z)
-    if strategy == "broadcast":
+    if broadcast:
         zone_cells = F.broadcast(zone_cells)
 
     tile_cells = tiles.withColumn(
@@ -66,11 +64,11 @@ def zonal_join(tiles: DataFrame, zones: DataFrame, res: int = DEFAULT_RES,
 
 
 def zonal_stats(tiles: DataFrame, zones: DataFrame, res: int = DEFAULT_RES,
-                value_col: str = "value", strategy: str = "broadcast") -> DataFrame:
+                value_col: str = "value") -> DataFrame:
     """Per-zone aggregate of intersecting tile values (count/sum/avg/min/max) —
     hash agg with map-side partials, the Spark lifting of the reference's
     sequential envelope fold (Extents.java:73-120)."""
-    pairs = zonal_join(tiles, zones, res, strategy=strategy)
+    pairs = zonal_join(tiles, zones, res)
     return pairs.groupBy("zone_id").agg(
         F.count("*").alias("n_tiles"),
         F.sum(value_col).alias("sum_value"),

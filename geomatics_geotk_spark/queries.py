@@ -151,7 +151,10 @@ POIS = [
 
 
 def _pois_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(POIS, "poi_id string, poi_lon double, poi_lat double")
+    """POIS as a local relation, which Catalyst can size (a Python-list
+    RDD it cannot, so the size rule of ``spatial_join.dwithin_join``
+    would never broadcast it)."""
+    return spark.createDataFrame(pd.DataFrame(POIS, columns=["poi_id", "poi_lon", "poi_lat"]))
 
 
 _POIS_SQL = "(VALUES " + ", ".join(
@@ -222,9 +225,7 @@ def _pentagon_zone(spark: SparkSession) -> DataFrame:
 
 def q_pip_convex(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts_from_key(_read(spark, sf_dir, "orders"), "o_orderkey")
-    joined = spatial_join.spatial_join(
-        pts, _pentagon_zone(spark), res=RES, strategy="broadcast"
-    )
+    joined = spatial_join.spatial_join(pts, _pentagon_zone(spark), res=RES)
     return joined.select("doc_id", "zone_id")
 
 
@@ -292,9 +293,7 @@ def q_interleaved_tile_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = build_interleaved(spark, sf_dir)
     decoded = spatial_join.decode_geo_spans(inter)
     tiled = spatial_join.tile_assign(decoded, RES)
-    joined = spatial_join.spatial_join(
-        tiled, _grid_zones(spark), res=RES, strategy="broadcast"
-    )
+    joined = spatial_join.spatial_join(tiled, _grid_zones(spark), res=RES)
     return joined.select("doc_id", "zone_id", "cell_id")
 
 
@@ -345,9 +344,7 @@ def q_interleaved_gml_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("g.first_y").alias("lon"), F.col("g.first_x").alias("lat"),
     )
     tiled = spatial_join.tile_assign(pts, RES)
-    joined = spatial_join.spatial_join(
-        tiled, _grid_zones(spark), res=RES, strategy="broadcast"
-    )
+    joined = spatial_join.spatial_join(tiled, _grid_zones(spark), res=RES)
     return joined.select("doc_id", "zone_id", "cell_id")
 
 
@@ -803,7 +800,7 @@ def q_stay_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("clat").alias("lat"),
     )
     joined = spatial_join.spatial_join(
-        pts, _grid_zones(spark), res=RES, strategy="broadcast", id_col="stay_key"
+        pts, _grid_zones(spark), res=RES, id_col="stay_key"
     )
     return joined.groupBy("zone_id").agg(
         F.count("*").alias("stays"),
@@ -1321,11 +1318,7 @@ def _shifted_zone_rects(spark: SparkSession) -> DataFrame:
             x1, y1 = x0 + 0.16, y0 + 0.16
             ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
             rows.append((f"zr-{i}-{j}", "CRS:84", ring, []))
-    return spark.createDataFrame(
-        rows,
-        "zone_id string, crs string, exterior array<struct<x:double,y:double>>, "
-        "interiors array<array<struct<x:double,y:double>>>",
-    )
+    return polygon_zones(spark, rows)
 
 
 _ZRECT_SQL = (
@@ -3748,15 +3741,14 @@ ORACLE_CRS_DOMAIN = (
 
 
 def q_pip_salted_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join as pip_convex but through the shuffle path with explicit
-    hot-cell salting (threshold forced low so every busy cell salts) —
-    the north-rule skew machinery, verified against the identical oracle
-    row set as the broadcast plan."""
+    """Same join as pip_convex but with the zone side pinned to the
+    executor path (``strategy='shuffle'``: packed by ``mapInArrow``, no
+    broadcast hint), whose hot cells AQE's skew-join split divides —
+    verified against the identical oracle row set as the broadcast
+    plan.  The name predates the removal of explicit salting; the
+    recorded correctness and bench files key on it."""
     pts = _pts_from_key(_read(spark, sf_dir, "orders"), "o_orderkey")
-    joined = spatial_join.spatial_join(
-        pts, _pentagon_zone(spark), res=RES, strategy="shuffle",
-        salt=4, hot_cell_threshold=50,
-    )
+    joined = spatial_join.spatial_join(pts, _pentagon_zone(spark), res=RES, strategy="shuffle")
     return joined.select("doc_id", "zone_id")
 
 
@@ -4037,7 +4029,7 @@ ORACLE_GEOMETRY_JOIN_MULTI = (
 
 def q_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell occupancy histogram — the skew-detection aggregation that
-    feeds the hot-cell salting policy (one exchange, map-side partials)."""
+    feeds ``stats.skew_report`` (one exchange, map-side partials)."""
     from .operators import stats
 
     tiled = q_tile_assign(spark, sf_dir).select("doc_id", "cell_id")

@@ -35,14 +35,14 @@ def streaming_tile_assign(spark, path: str, res: int = 12,
 
 def streaming_spatial_join(assigned: DataFrame, zones: DataFrame,
                            res: int = 12) -> DataFrame:
-    """Stream-static point-in-polygon join: the batch broadcast
+    """Stream-static point-in-polygon join: the batch
     :func:`spatial_join` applied to the streaming tile-assigned docs
     (which already carry ``cell_id``) — batch/stream parity holds by
     construction.
 
     Returns the streaming DataFrame of (doc columns…, zone_id) matches.
     """
-    return spatial_join(assigned, zones, res, strategy="broadcast")
+    return spatial_join(assigned, zones, res)
 
 
 def streaming_exact_dedup(stream: DataFrame, text_col: str = "text",

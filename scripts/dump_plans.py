@@ -60,13 +60,14 @@ def main() -> None:
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     sections.append((
-        "Salted shuffle pip join (broadcast disabled to show the exchange)",
-        "Hash exchange on (cell_id, salt): hot cells spread over salt "
-        "sub-keys, AQE skew-join enabled on top.  At bench scale AQE "
-        "rightly picks broadcast instead; this is the shape the plan "
-        "takes when the zone side outgrows the broadcast threshold.  The "
-        "zone side is packed on the executors in one mapInArrow and "
-        "checkpointed, so it enters as a Scan ExistingRDD.",
+        "Shuffle pip join, pip_salted_shuffle (broadcast disabled to show the exchange)",
+        "Hash exchange on cell_id only; hot cells are split at run time "
+        "by AQE's skew join (spark.sql.adaptive.skewJoin.enabled), with "
+        "no salt key and no sample job.  At bench scale AQE rightly picks "
+        "broadcast instead; this is the shape the plan takes when the "
+        "zone side outgrows the broadcast threshold.  The zone side is "
+        "packed on the executors in one mapInArrow and checkpointed, so "
+        "it enters as a Scan ExistingRDD.",
         salted_plan,
     ))
 
@@ -96,14 +97,15 @@ def main() -> None:
 
     sections.append((
         "Geometry-distance join (dwithin_zones)",
-        "strategy='broadcast': the zone side (margin-expanded cells) is "
-        "packed on the driver into one Arrow table — a LocalTableScan, "
-        "exploded as Column ops, no Python node; candidates "
-        "broadcast-join on cell_id, rings attach on zone_id, then ONE "
-        "Arrow node runs the per-candidate nearest-witness + Vincenty "
-        "refine (full cells short-circuit to 0).  strategy='shuffle' "
-        "packs the zone side on the executors in one mapInArrow and "
-        "swaps both broadcasts for hash exchanges.",
+        "The zone side (margin-expanded cells) is sized by its plan's "
+        "estimate against spark.sql.autoBroadcastJoinThreshold; this one "
+        "is small, so it is packed on the driver into one Arrow table — "
+        "a LocalTableScan, exploded as Column ops, no Python node; "
+        "candidates broadcast-join on cell_id, rings attach on zone_id, "
+        "then ONE Arrow node runs the per-candidate nearest-witness + "
+        "Vincenty refine (full cells short-circuit to 0).  Above the "
+        "threshold the zone side is packed on the executors in one "
+        "mapInArrow and both broadcasts become hash exchanges.",
         _trim(plans.formatted_plan(queries.q_dwithin_zones(spark, SF)), 36),
     ))
 
@@ -117,8 +119,9 @@ def main() -> None:
         "runs map-side) → ring-attach join on zone_id → batch DE-9IM "
         "refine (one Arrow node; factorized by (zone, kind) inside each "
         "batch, concatenated-array kernels — no per-pair Python).  The "
-        "zone side is packed on the driver under strategy='broadcast' (a "
-        "LocalTableScan) and on the executors under 'shuffle' (one "
+        "zone side is packed on the driver when its plan's size estimate "
+        "is within spark.sql.autoBroadcastJoinThreshold (a "
+        "LocalTableScan, as here) and on the executors above it (one "
         "mapInArrow); rings never ride through the explode/shuffle, only "
         "the final dimension join.",
         _trim(plans.formatted_plan(queries.q_geometry_join_lines(spark, SF)), 40),
@@ -304,9 +307,11 @@ substring greps):
         "Tiles explode to covering cells (Column math) → broadcast "
         "zone-cell equi-join → codegen envelope∩polygon refine (full "
         "cells classified without refining) → ONE map-side-combined "
-        "hash-agg exchange for the per-zone stats.  strategy='broadcast': "
-        "the zone side is packed on the driver (a LocalTableScan); "
-        "'shuffle' packs it on the executors in one mapInArrow.",
+        "hash-agg exchange for the per-zone stats.  The zone side is "
+        "sized by its plan's estimate: within "
+        "spark.sql.autoBroadcastJoinThreshold it is packed on the driver "
+        "(a LocalTableScan, as here); above it on the executors in one "
+        "mapInArrow.",
         _trim(plans.formatted_plan(queries.q_zonal_stats(spark, SF)), 30),
     ))
 

@@ -13,3 +13,15 @@ def spark():
     s = get_spark(app="tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """Spark's broadcast bound off (``autoBroadcastJoinThreshold`` -1)
+    until the test ends: every sized cell join packs its zone side on the
+    executors and joins it without a broadcast.  A test may request it
+    part-way with ``request.getfixturevalue("no_broadcast")``."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

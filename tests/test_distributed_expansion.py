@@ -3,8 +3,8 @@ round-1 driver-side loops.
 
 - expand_poi_cells / disk_cells_col must equal the numpy cells.disk
   expansion exactly;
-- dwithin_join at 10^5 POIs runs with NO driver collect (shuffle
-  strategy) and matches a numpy brute-force truth on sampled docs;
+- dwithin_join at 10^5 POIs runs with NO driver collect (broadcast
+  bound off) and matches a numpy brute-force truth on sampled docs;
 - the zone packer gives the identical prepared zone side on the driver
   (strategy 'broadcast') and on the executors ('shuffle'), for every
   way interiors arrive;
@@ -54,12 +54,12 @@ def test_expand_poi_cells_matches_numpy_disk(spark):
     assert got == want
 
 
-def test_dwithin_100k_pois_no_driver_collect(spark, pois_big):
+def test_dwithin_100k_pois_no_driver_collect(spark, pois_big, no_broadcast):
     docs = sj.tile_assign(
         sj.decode_geo_spans(synth_documents(spark, 400)), 12
     ).select("doc_id", "lon", "lat", "cell_id")
     dist = 2000.0
-    out = sj.dwithin_join(docs, pois_big, distance_m=dist, strategy="shuffle")
+    out = sj.dwithin_join(docs, pois_big, distance_m=dist)
     got = {(r["doc_id"], r["poi_id"]) for r in out.collect()}
 
     # numpy brute-force truth over every (doc, poi) pair
@@ -124,7 +124,7 @@ def test_prepare_zones_distributed_equals_driver(spark, tmp_path, interiors, mar
     carry the harmonized rings and full cells carry []."""
     zones = _zones_with_interiors(spark, tmp_path, interiors)
     res = 10
-    (drv, k_drv), (exe, k_exe) = (
+    (drv, k_drv, _), (exe, k_exe, _) = (
         sj._zone_side(zones, res, s, margin_m, slots) for s in ("broadcast", "shuffle")
     )
     assert k_drv == k_exe and (k_drv > 0) == slots
@@ -205,18 +205,20 @@ def test_holed_zone_every_prep_path(spark):
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_zone_prep_takes_untyped_empty_interiors(spark, tmp_path, strategy):
+def test_zone_prep_takes_untyped_empty_interiors(spark, tmp_path, request, strategy):
     """Zones written with only empty interiors get whatever type the
     writer infers for an empty list (:func:`_zones_with_interiors`).
     The zone prep of either strategy takes both like typed zones: the
-    same DWithin and point-in-polygon join rows."""
+    same DWithin and point-in-polygon join rows.  DWithin sizes its zone
+    side, so 'shuffle' turns the broadcast bound off."""
+    if strategy == "shuffle":
+        request.getfixturevalue("no_broadcast")
     typed = zones_table(spark, grid=2)
     docs = sj.tile_assign(sj.decode_geo_spans(synth_documents(spark, 400)), 12)
 
     def rows(zones):
         return (
-            sorted(map(tuple, sj.dwithin_zone_join(docs, zones, distance_m=3000.0,
-                                                   strategy=strategy).collect())),
+            sorted(map(tuple, sj.dwithin_zone_join(docs, zones, distance_m=3000.0).collect())),
             sorted(map(tuple, sj.spatial_join(docs, zones, res=12, strategy=strategy).collect())),
         )
 

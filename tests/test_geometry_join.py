@@ -63,16 +63,19 @@ def test_disjoint_is_complement(spark, mixed_docs):
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "shuffle"])
-def test_disjoint_plan_shares_one_envelope(spark, mixed_docs, strategy):
+def test_disjoint_plan_shares_one_envelope(spark, mixed_docs, request, strategy):
     """disjoint = intersects' Arrow stages plus the anti-join base, which
     reuses the intersects pass's enveloped docs: one envelope stage on
     each side of the anti-join and one refine (3 ArrowEvalPython nodes,
-    against 2 for intersects alone)."""
+    against 2 for intersects alone).  The zone side is sized, so
+    'shuffle' turns the broadcast bound off."""
+    if strategy == "shuffle":
+        request.getfixturevalue("no_broadcast")
     _, docs = mixed_docs
     zones = zones_table(spark, grid=4)
 
     def arrow_nodes(pred):
-        plan = geometry_join(docs, zones, pred, res=10, strategy=strategy)._jdf \
+        plan = geometry_join(docs, zones, pred, res=10)._jdf \
             .queryExecution().executedPlan().toString()
         return plan.count("ArrowEvalPython"), plan.count("_wkt_envelope")
 

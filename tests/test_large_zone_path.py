@@ -1,13 +1,16 @@
 """Large-zone-side scale path: 10^5 zones with NO driver-side collect.
 
 A zone side too large for the driver must never be collected.  Every
-cell join follows one rule: strategy='broadcast' packs the zone side on
-the driver, strategy='shuffle' packs it on the executors
-(spatial_join.prep_zone_struct, one mapInArrow) and ships rings on join
-rows.  These tests run `dwithin_zone_join` and `geometry_join` under
-'shuffle' over a 100,000-zone grid built entirely from Column
-expressions (the zone table never exists on the driver) and check
-planted docs land in their analytically-known zones.
+cell join follows one size rule: a zone side Spark would broadcast is
+packed on the driver, a larger one on the executors
+(spatial_join.prep_zone_struct, one mapInArrow), with rings shipped on
+join rows.  These tests run `dwithin_zone_join` and `geometry_join`
+with the broadcast bound off (the ``no_broadcast`` fixture) over a
+100,000-zone grid built entirely from Column expressions (the zone
+table never exists on the driver) and check planted docs land in their
+analytically-known zones.  The bound has to be off: under the session
+default the size rule estimates this grid within it (see
+``test_100k_grid_estimated_within_the_bound``).
 
 Also covers the malformed-WKT routing rule (ADVICE r2): unparseable
 geometries are excluded from BOTH the intersects output and the disjoint
@@ -54,7 +57,7 @@ def _center(i: int, j: int) -> tuple[float, float]:
     return X0 + (i + 0.5) * W, Y0 + (j + 0.5) * H
 
 
-def test_geometry_join_100k_zones_no_driver_collect(spark, grid_zones):
+def test_geometry_join_100k_zones_no_driver_collect(spark, grid_zones, no_broadcast):
     # planted docs: points at cell centers (each strictly inside exactly
     # one zone) + one line crossing two horizontally-adjacent zones
     planted = [(7, 11), (123, 99), (399, 249), (0, 0), (200, 125)]
@@ -68,8 +71,7 @@ def test_geometry_join_100k_zones_no_driver_collect(spark, grid_zones):
 
     got = {
         (r["doc_id"], r["zone_id"])
-        for r in geometry_join(docs, grid_zones, "intersects", res=10,
-                               strategy="shuffle").collect()
+        for r in geometry_join(docs, grid_zones, "intersects", res=10).collect()
     }
     want = {(n, f"z{j * NX + i}") for n, (i, j) in enumerate(planted)}
     # the line starts in (50,50) and ends in (51,50)
@@ -77,17 +79,29 @@ def test_geometry_join_100k_zones_no_driver_collect(spark, grid_zones):
     assert got == want
 
 
-def test_dwithin_zone_join_100k_zones_no_driver_collect(spark, grid_zones):
+def test_dwithin_zone_join_100k_zones_no_driver_collect(spark, grid_zones, no_broadcast):
     # interior point → dist 0 to its own zone; margin pulls in neighbours
     cx, cy = _center(100, 100)
     docs = spark.createDataFrame([(0, cx, cy)], "doc_id long, lon double, lat double")
-    out = sj.dwithin_zone_join(docs, grid_zones, distance_m=500.0,
-                               strategy="shuffle").collect()
+    out = sj.dwithin_zone_join(docs, grid_zones, distance_m=500.0).collect()
     by_zone = {r["zone_id"]: r["dist_m"] for r in out}
     home = f"z{100 * NX + 100}"
     assert by_zone[home] == 0.0
     # 500 m < half a cell (~2.6 km), so ONLY the home zone qualifies
     assert set(by_zone) == {home}
+
+
+def test_100k_grid_estimated_within_the_bound(spark, grid_zones):
+    """The gap the two tests above step round with ``no_broadcast``: the
+    size rule reads Catalyst's estimate of the raw zones, which counts
+    each ring array as one element, so under the session's default bound
+    this 100k-zone grid sizes as broadcastable and a sized join would
+    collect and pack every zone on the driver.  Sizing the packed side
+    instead would make this test fail; then its assertion flips."""
+    size = grid_zones._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    bound = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert 0 < size <= bound
+    assert sj._broadcastable(grid_zones)
 
 
 def test_malformed_wkt_excluded_from_disjoint(spark):

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from geomatics_geotk_spark import cells
+from geomatics_geotk_spark import cells, plans
 from geomatics_geotk_spark.kernels import geodesic, geometry as geom_k
 from geomatics_geotk_spark.operators import dedup, envelope, knn, similarity, spatial_join, temporal, text, zonal
 from geomatics_geotk_spark.operators.spatial_join import (
@@ -164,28 +164,42 @@ class TestSpatialJoin:
         assert got == self._brute_truth(spark, zones, docs_pd)
 
     def test_shuffle_salted_same_rows(self, spark, decoded, zones):
+        """The executor zone side joined on cell_id alone (the hot-cell
+        salting it once had is gone) gives the broadcast rows."""
         bc = spatial_join.spatial_join(decoded, zones, res=12, strategy="broadcast")
-        sh = spatial_join.spatial_join(
-            decoded, zones, res=12, strategy="shuffle", salt=4, hot_cell_threshold=50
-        )
+        sh = spatial_join.spatial_join(decoded, zones, res=12, strategy="shuffle")
         a = {(r["doc_id"], r["zone_id"]) for r in bc.select("doc_id", "zone_id").collect()}
         b = {(r["doc_id"], r["zone_id"]) for r in sh.select("doc_id", "zone_id").collect()}
         assert a == b
 
-    def test_salted_shuffle_no_point_docs_keep_cold_matches(self, spark, docs, decoded, zones):
+    def test_salted_shuffle_no_point_docs_keep_cold_matches(self, spark, docs, decoded, zones,
+                                                            no_broadcast):
         """Docs without a point all share cell id -1; enough of them make it
-        a hot cell, and the matches in the cold cells must survive that."""
+        a hot cell, which AQE's skew-join split divides (its bounds
+        lowered to this test's kilobytes), and the matches in the cold
+        cells must survive that."""
         no_point = tile_assign(decode_geo_spans(
             spark.createDataFrame([(f"no-point-{i}", []) for i in range(1000)], docs.schema)
         ), 12)
         bc = spatial_join.spatial_join(decoded, zones, res=12, strategy="broadcast")
-        sh = spatial_join.spatial_join(
-            decoded.unionByName(no_point), zones, res=12, strategy="shuffle", salt=4,
-            hot_cell_threshold=50,
-        )
+        skew = {"spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+                "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}
+        prev = {k: spark.conf.get(k) for k in skew}
+        for k, v in skew.items():
+            spark.conf.set(k, v)
+        try:
+            sh = spatial_join.spatial_join(
+                decoded.unionByName(no_point), zones, res=12, strategy="shuffle"
+            ).select("doc_id", "zone_id")
+            b = {(r["doc_id"], r["zone_id"]) for r in sh.collect()}
+            final = sh._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
         a = {(r["doc_id"], r["zone_id"]) for r in bc.select("doc_id", "zone_id").collect()}
-        b = {(r["doc_id"], r["zone_id"]) for r in sh.select("doc_id", "zone_id").collect()}
         assert a and a == b
+        assert "isFinalPlan=true" in final and "SortMergeJoin(skew=true)" in final, final
 
     def test_disjoint_is_complement(self, spark, decoded, zones):
         inter = spatial_join.spatial_join(decoded, zones, res=12)
@@ -269,18 +283,21 @@ class TestZonal:
                     truth.add((t["tile_id"], z))
         assert got == truth
 
-    def test_zonal_shuffle_strategy_same_rows(self, spark):
-        """strategy='shuffle' (no broadcast hint — the 10^6-zone plan)
-        must return the identical pair set."""
+    def test_zonal_shuffle_strategy_same_rows(self, spark, request):
+        """The executor zone side (no broadcast hint — the 10^6-zone plan),
+        sized so by Spark's broadcast bound at -1, must return the
+        identical pair set."""
         tiles = raster_tiles_table(spark, grid=8)
         zones = zones_table(spark, grid=2)
-        b = zonal.zonal_join(tiles, zones, res=8, strategy="broadcast")
-        s = zonal.zonal_join(tiles, zones, res=8, strategy="shuffle")
         key = lambda df: sorted((r["tile_id"], r["zone_id"]) for r in df.select("tile_id", "zone_id").collect())  # noqa: E731
-        assert key(b) == key(s)
-        import pytest as _pt
-        with _pt.raises(ValueError):
-            zonal.zonal_join(tiles, zones, res=8, strategy="broadcst")
+        b = key(zonal.zonal_join(tiles, zones, res=8))
+        request.getfixturevalue("no_broadcast")
+        s = zonal.zonal_join(tiles, zones, res=8)
+        assert "BroadcastHashJoin" not in plans.formatted_plan(s)
+        assert b == key(s)
+        with pytest.raises(ValueError, match="strategy"):
+            pts = spark.createDataFrame([(0.0, 0.0)], "lon double, lat double")
+            spatial_join.spatial_join(pts, zones, res=8, strategy="broadcst")
 
     def test_zonal_stats_schema(self, spark):
         tiles = raster_tiles_table(spark, grid=4)

@@ -210,8 +210,8 @@ def _check_slot_refine(spark, monkeypatch, zones, res, joins):
     zdf = _zones_df(spark, zones)
     key = ["cell_id", "zone_id", "full", "edges"]
 
-    z_drv, k = sj._zone_side(zdf, res, "broadcast", slots=True)
-    z_dist, k_dist = sj._zone_side(zdf, res, "shuffle", slots=True)
+    z_drv, k, _ = sj._zone_side(zdf, res, "broadcast", slots=True)
+    z_dist, k_dist, _ = sj._zone_side(zdf, res, "shuffle", slots=True)
     drv, dist = sj._explode_zone_cells(z_drv), sj._explode_zone_cells(z_dist)
     assert k_dist == k
     assert sorted(drv.select(key).collect()) == sorted(dist.select(key).collect())
@@ -239,7 +239,7 @@ def _check_slot_refine(spark, monkeypatch, zones, res, joins):
 
 
 _BROADCAST = {"strategy": "broadcast"}
-_SALTED = {"strategy": "shuffle", "salt": 3, "hot_cell_threshold": 1}
+_SHUFFLE = {"strategy": "shuffle"}
 
 
 @pytest.mark.parametrize("res", [10, 12, 14])
@@ -249,7 +249,7 @@ def test_edge_slots_refine_equals_full_ring_test(spark, ansi, monkeypatch, res):
     edges and padding slots (rows with fewer slots than the largest)
     divide by zero only if ``And`` fails to short-circuit."""
     k = _check_slot_refine(spark, monkeypatch, _star_zones(np.random.default_rng(100 + res), res), res,
-                           [_BROADCAST, {"strategy": "shuffle"}, _SALTED])
+                           [_BROADCAST, _SHUFFLE])
     assert k >= 3
 
 
@@ -258,5 +258,5 @@ def test_edge_slots_refine_row_of_70_holes(spark, ansi, monkeypatch):
     per vertical hole edge, so one row holds 71 rings (past any 64-bit
     ring mask) and the refine unrolls over 140+ slots."""
     k = _check_slot_refine(spark, monkeypatch, {"row-of-70-holes": _row_of_holes()}, 12,
-                           [_BROADCAST, _SALTED])
+                           [_BROADCAST, _SHUFFLE])
     assert k >= 140

@@ -106,13 +106,18 @@ class TestPlanHygiene:
         assert "MapInArrow" in plan
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
-    @pytest.mark.parametrize("op", ["spatial_join", "dwithin_zone_join", "geometry_join", "zonal_join"])
-    def test_zone_side_follows_strategy(self, spark, tmp_path, op):
-        """Every cell join takes its zone side from the one rule: under
-        'broadcast' the driver-packed local relation (a LocalTableScan,
-        no MapInArrow), under 'shuffle' the checkpointed executor pack
-        (Scan ExistingRDD, no LocalTableScan).  Both give the same rows
-        with a bigint zone_id, and the rows of string ids."""
+    @pytest.mark.parametrize(
+        "op", ["spatial_join", "dwithin_zone_join", "geometry_join", "zonal_join", "dwithin_join"])
+    def test_zone_side_follows_strategy(self, spark, tmp_path, request, op):
+        """Every cell join takes its strategy from one size rule: the
+        zones plan's size estimate against Spark's broadcast bound.  Under
+        the session default the small zone side is the driver-packed
+        local relation (a LocalTableScan, no MapInArrow), broadcast; with
+        the bound at -1 it is the checkpointed executor pack (Scan
+        ExistingRDD, no LocalTableScan) and nothing is broadcast.
+        dwithin_join's poi side is not packed, only broadcast or not by
+        the same rule.  Both give the same rows with a bigint zone_id,
+        and the rows of string ids."""
         from geomatics_geotk_spark.operators.geometry_join import geometry_join
         from geomatics_geotk_spark.operators.zonal import zonal_join
 
@@ -122,37 +127,67 @@ class TestPlanHygiene:
             spatial_join.decode_geo_spans(spark.read.parquet(str(tmp_path / "docs"))), 12
         ).select("doc_id", "lon", "lat", "cell_id")
         joins = {
-            "spatial_join": lambda z, s: spatial_join.spatial_join(
-                pts, z, res=12, strategy=s).select("doc_id", "zone_id"),
-            "dwithin_zone_join": lambda z, s: spatial_join.dwithin_zone_join(
-                pts, z, 3000.0, strategy=s).select("doc_id", "zone_id", "dist_m"),
-            "geometry_join": lambda z, s: geometry_join(
+            "spatial_join": lambda z: spatial_join.spatial_join(
+                pts, z, res=12).select("doc_id", "zone_id"),
+            "dwithin_zone_join": lambda z: spatial_join.dwithin_zone_join(
+                pts, z, 3000.0).select("doc_id", "zone_id", "dist_m"),
+            "geometry_join": lambda z: geometry_join(
                 pts.select("doc_id", F.format_string("POINT (%s %s)", "lon", "lat").alias("wkt")),
-                z, strategy=s),
-            "zonal_join": lambda z, s: zonal_join(
+                z),
+            "zonal_join": lambda z: zonal_join(
                 pts.select(F.col("doc_id").alias("tile_id"),
                            *[(F.col(c) + d).alias(n) for c, d, n in (
                                ("lon", -0.01, "xmin"), ("lat", -0.01, "ymin"),
-                               ("lon", 0.01, "xmax"), ("lat", 0.01, "ymax"))]),
-                z, strategy=s),
+                               ("lon", 0.01, "xmax"), ("lat", 0.01, "ymax"))]), z),
+            # the pois are the lon/lat zones' first corners
+            "dwithin_join": lambda z: spatial_join.dwithin_join(
+                pts, z.where(F.col("crs") == "CRS:84").select(
+                    F.col("zone_id").alias("poi_id"),
+                    F.col("exterior")[0]["x"].alias("x"),
+                    F.col("exterior")[0]["y"].alias("y")), 20000.0,
+            ).select("doc_id", F.col("poi_id").alias("zone_id"), "dist_m"),
         }
         zones = zones_table(spark, grid=2)
         by_hash = dict(zones.select(F.xxhash64("zone_id"), "zone_id").collect())
         bigint = zones.withColumn("zone_id", F.xxhash64("zone_id"))
+        named = sorted(map(tuple, joins[op](zones).collect()))
         got = {}
-        for strategy in ("broadcast", "shuffle"):
-            df = joins[op](bigint, strategy)
+        for bound in ("default", "-1"):
+            if bound == "-1":
+                request.getfixturevalue("no_broadcast")
+            df = joins[op](bigint)
             plan = plans.formatted_plan(df)
-            if strategy == "broadcast":
-                assert "LocalTableScan" in plan, plan
+            if bound == "default":
+                assert "BroadcastHashJoin" in plan, plan
                 assert "MapInArrow" not in plan and "ExistingRDD" not in plan, plan
+                assert "LocalTableScan" in plan, plan
             else:
-                assert "ExistingRDD" in plan and "LocalTableScan" not in plan, plan
-            got[strategy] = sorted(df.collect())
-        assert got["broadcast"] and got["broadcast"] == got["shuffle"]
-        named = [tuple(by_hash[v] if k == "zone_id" else v for k, v in r.asDict().items())
-                 for r in got["shuffle"]]
-        assert sorted(named) == sorted(map(tuple, joins[op](zones, "broadcast").collect()))
+                assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan, plan
+                if op != "dwithin_join":
+                    assert "ExistingRDD" in plan and "LocalTableScan" not in plan, plan
+            got[bound] = sorted(df.collect())
+        assert got["default"] and got["default"] == got["-1"]
+        assert sorted(tuple(by_hash[v] if k == "zone_id" else v for k, v in r.asDict().items())
+                      for r in got["-1"]) == named
+
+    def test_zone_side_sizing_runs_no_job(self, spark, tmp_path):
+        """The size rule reads the zones plan's Catalyst estimate, which
+        runs no Spark job: sizing and packing a parquet zone side on the
+        driver takes one job, the collect of its zones."""
+        zones_table(spark, grid=2).write.parquet(str(tmp_path / "zones"))
+        zones = spark.read.parquet(str(tmp_path / "zones"))
+        sc = spark.sparkContext
+        group = f"zone-side-{tmp_path.name}"
+        sc.setJobGroup(group, "size and pack a zone side")
+        try:
+            assert spatial_join._broadcastable(zones)
+            _, _, broadcast = spatial_join._zone_side(zones, 12)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert broadcast
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
     def test_decode_has_no_lambda(self, spark):
         """The decode projection is codegen'd expressions only.  It runs

@@ -68,6 +68,16 @@ class TestAnnPlans:
             assert len(cells_of) == 3, plan
             assert not [f for f in filters if "pythonUDF" in f], filters
 
+    def test_lsh_bucket_udf_once_per_branch(self, spark):
+        """The LSH bucket arrays are never null, so Spark infers no
+        ``isnotnull`` filter that runs the bucket UDF a second time: one
+        ``buckets`` operator per corpus branch (the fixture's two) and
+        one on the query side."""
+        plan = plans.formatted_plan(queries.q_ann_topk(spark, SF))
+        assert _nodes(plan, "ArrowEvalPython") == 3, plan
+        filters = re.findall(r"\(\d+\) Filter\nInput.*\nCondition : (.*)", plan)
+        assert not [f for f in filters if "pythonUDF" in f], filters
+
 
 class TestSemanticDedupPlan:
     def test_single_exchange_no_join(self, spark):

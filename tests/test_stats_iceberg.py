@@ -20,18 +20,6 @@ class TestStats:
         h = stats.cell_histogram(docs)
         assert h.agg(F.sum("n_docs")).collect()[0][0] == 2000
 
-    def test_hot_cells_found(self, spark):
-        """The generator concentrates 20% of docs on 3 hot centers —
-        the detector must surface those cells."""
-        docs = spatial_join.tile_assign(
-            spatial_join.decode_geo_spans(synth_documents(spark, 5000)), 10
-        )
-        hot = stats.hot_cells(docs, threshold=100)
-        assert len(hot) >= 3
-        h = {r["cell_id"]: r["n_docs"] for r in stats.cell_histogram(docs).collect()}
-        for c in hot:
-            assert h[c] > 100
-
     def test_skew_report_ratio(self, spark):
         # res 12 (~4.9 km cells): the 3 hot centers each concentrate ~7%
         # of all docs into single cells vs ~8 docs/cell uniform
