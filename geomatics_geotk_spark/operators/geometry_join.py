@@ -45,7 +45,6 @@ _ENV_SCHEMA = T.StructType([
 ])
 
 
-@F.pandas_udf(_ENV_SCHEMA)
 def _wkt_envelope(wkt: pd.Series) -> pd.DataFrame:
     """Geometry envelope per WKT (Extents.calculateEnvelopeUsingSingle-
     Geometry semantics, Extents.java:131-183) — Arrow batch, numpy."""
@@ -59,11 +58,16 @@ def _wkt_envelope(wkt: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-# single-eval barrier: _env feeds both the validity filter and the
-# covering-cell explode — without this Catalyst inlines the Arrow UDF
-# into each consumer and parses every WKT twice (seen as a second
-# ArrowEvalPython node in PLANS.md before the fix)
-_wkt_envelope = _wkt_envelope.asNondeterministic()
+def _wkt_envelope_udf():
+    """A pandas UDF of :func:`_wkt_envelope`, new per call (a UDF caches
+    its JVM twin, which a restarted SparkContext no longer knows).
+
+    Single-eval barrier: _env feeds both the validity filter and the
+    covering-cell explode — without it Catalyst inlines the Arrow UDF
+    into each consumer and parses every WKT twice (seen as a second
+    ArrowEvalPython node in PLANS.md before the fix).
+    """
+    return F.pandas_udf(_wkt_envelope, _ENV_SCHEMA).asNondeterministic()
 
 
 def _refine_udf(predicate: str):
@@ -139,7 +143,7 @@ def geometry_join(
     zone cell + ring tables ship to every executor; a larger one is
     packed on the executors and both joins hash-partition.
     """
-    env = docs.withColumn("_env", _wkt_envelope(F.col(wkt_col)))
+    env = docs.withColumn("_env", _wkt_envelope_udf()(F.col(wkt_col)))
     # malformed WKT yields a NaN envelope (which Arrow surfaces as
     # NULL after the pandas round-trip) — route those rows out up
     # front: NaN would clamp covering_cells_col to a bogus max-corner

@@ -39,7 +39,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -120,8 +120,8 @@ _SIMPLE_POINT_RE = (
 )
 
 
-@F.pandas_udf(GML_DECODE_SCHEMA)
-def gml_decode_udf(xml: pd.Series) -> pd.DataFrame:
+def decode_batch(xml: pd.Series) -> pd.DataFrame:
+    """Decode one Arrow batch of GML documents (module docstring)."""
     m = pc.extract_regex(pa.array(xml, pa.string()), _SIMPLE_POINT_RE)
     valid = m.is_valid()
     fast = valid.to_numpy(zero_copy_only=False)
@@ -145,6 +145,24 @@ def gml_decode_udf(xml: pd.Series) -> pd.DataFrame:
         col[rest] = np.array([d[f.name] for d in slow], dtype)
         cols[f.name] = col
     return pd.DataFrame(cols)
+
+
+def gml_decode_udf(xml: Column) -> Column:
+    """The decoded-geometry struct of a GML string Column.
+
+    The pandas UDF of :func:`decode_batch` is built per call: a UDF
+    object caches its JVM twin, whose accumulator a restarted
+    SparkContext no longer knows.  It is a single-eval barrier
+    (``asNondeterministic``): a filter on a decoded field would
+    otherwise be pushed below the projection and re-run the decode in a
+    second ``ArrowEvalPython`` node.  As on a pandas UDF, ``.func`` is
+    the batch function and ``.returnType`` its schema.
+    """
+    return F.pandas_udf(decode_batch, GML_DECODE_SCHEMA).asNondeterministic()(xml)
+
+
+gml_decode_udf.func = decode_batch
+gml_decode_udf.returnType = GML_DECODE_SCHEMA
 
 
 def decode_gml(df: DataFrame, xml_col: str = "xml", out: str = "geom") -> DataFrame:

@@ -286,3 +286,16 @@ def test_benchmark_documents_take_the_column_path(seed, monkeypatch):
     assert out["error"].notna().to_numpy().tolist() == bad.tolist()
     monkeypatch.undo()
     assert _frame_rows(out) == _expected(docs)
+
+
+def test_filtered_decode_evaluates_once(spark):
+    """A filter on a decoded field stays above the decode: one
+    ``ArrowEvalPython`` node, not a second one below the projection."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(INLINE["point_crs84"],), (INLINE["malformed"],)], "xml string")
+    out = gml_src.decode_gml(df).where(F.col("geom.error").isNull()).select(
+        F.col("geom.first_x").alias("x"), F.col("geom.first_y").alias("y"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert [tuple(r) for r in out.collect()] == [(-123.1, 49.25)]
