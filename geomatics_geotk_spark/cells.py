@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 
 MAX_RES = 28
-_RES_SHIFT = 58
+RES_SHIFT = 58
 
 
 def _interleave_bits(x: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -48,7 +48,7 @@ def cell_of(lon, lat, res: int) -> np.ndarray:
     xi = np.clip(((lon + 180.0) / 360.0 * nx).astype(np.int64), 0, nx - 1)
     yi = np.clip(((lat + 90.0) / 180.0 * ny).astype(np.int64), 0, ny - 1)
     morton = _interleave_bits(xi.astype(np.uint64), yi.astype(np.uint64))
-    return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | morton).astype(np.int64)
+    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
 
 
 def cell_bounds(cell: int) -> tuple[float, float, float, float]:
@@ -76,10 +76,10 @@ def cell_bounds_many(cells_arr: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.
     if len(c) == 0:
         z = np.zeros(0, dtype=np.float64)
         return z, z, z, z
-    res = int(c[0] >> np.uint64(_RES_SHIFT))
-    if not bool(np.all((c >> np.uint64(_RES_SHIFT)) == np.uint64(res))):
+    res = int(c[0] >> np.uint64(RES_SHIFT))
+    if not bool(np.all((c >> np.uint64(RES_SHIFT)) == np.uint64(res))):
         raise ValueError("cell_bounds_many requires a single-resolution cell array")
-    morton = c & ((np.uint64(1) << np.uint64(_RES_SHIFT)) - np.uint64(1))
+    morton = c & ((np.uint64(1) << np.uint64(RES_SHIFT)) - np.uint64(1))
     xi = _compact_bits(morton).astype(np.float64)
     yi = _compact_bits(morton >> np.uint64(1)).astype(np.float64)
     w = 360.0 / (1 << (res + 1))
@@ -89,7 +89,7 @@ def cell_bounds_many(cells_arr: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.
 
 def _xy_of(cell: int) -> tuple[int, int, int]:
     c = np.uint64(cell)
-    res = int(c >> np.uint64(_RES_SHIFT))
+    res = int(c >> np.uint64(RES_SHIFT))
     lon0, lat0, _, _ = cell_bounds(cell)
     nx = 1 << (res + 1)
     ny = 1 << res
@@ -114,7 +114,7 @@ def cells_covering(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
     ys = np.arange(y0, y1 + 1, dtype=np.uint64)
     gx, gy = np.meshgrid(xs, ys)
     morton = _interleave_bits(gx.ravel(), gy.ravel())
-    return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | morton).astype(np.int64)
+    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
 
 
 def ring(cell: int, k: int) -> np.ndarray:
@@ -140,7 +140,7 @@ def ring(cell: int, k: int) -> np.ndarray:
         return np.array([], dtype=np.int64)
     arr = np.array(out, dtype=np.uint64)
     morton = _interleave_bits(arr[:, 0], arr[:, 1])
-    return ((np.uint64(res) << np.uint64(_RES_SHIFT)) | morton).astype(np.int64)
+    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
 
 
 def disk(cell: int, k: int) -> np.ndarray:

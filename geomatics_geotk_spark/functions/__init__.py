@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-RES_SHIFT = 58
+from ..cells import RES_SHIFT
 
 # ---------------------------------------------------------------------------
 # WKT POINT decode (hot path: regexp in JVM, no Python)

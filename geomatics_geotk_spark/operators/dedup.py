@@ -82,19 +82,6 @@ def md5_long15(col) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _lane_hash(shingle, seed: int, hash_fn: str):
-    """Seeded 64-bit hash (used for BAND bucket hashing).  'xxhash64' is
-    the production default (fastest JVM path); 'md5' derives a 60-bit
-    integer from the md5 hex — slower but bit-reproducible in DuckDB,
-    which is what lets the LSH pipeline be oracle-hash-checked end to
-    end."""
-    if hash_fn == "xxhash64":
-        return F.xxhash64(shingle, F.lit(seed))
-    if hash_fn == "md5":
-        return md5_long15(F.concat(F.lit(f"{seed}:"), shingle))
-    raise ValueError(f"unknown hash_fn: {hash_fn}")
-
-
 # Affine minhash permutation family: lane_i(x) = (a_i·x + b_i) mod P over
 # ONE base hash per shingle — the classic universal-hashing minhash
 # construction.  One md5/xxhash64 call per shingle instead of n_hashes
@@ -189,6 +176,46 @@ def minhash_signature(df: DataFrame, text_col: str = "text", n_hashes: int = 32,
     return ids.join(sig, id_col, "left")
 
 
+def lsh_bands(sig: DataFrame, id_col: str = "doc_id", n_hashes: int = 32,
+              bands: int = 8, hash_fn: str = "xxhash64") -> DataFrame:
+    """(id_col, band, band_hash) from an (id_col, minhash) signature
+    table: the ONE definition of the LSH band format.  Band b joins its
+    ``n_hashes // bands`` lanes with "," and hashes the string — md5
+    over the ``"{b}:"``-prefixed string (:func:`md5_long15`, replayed by
+    the DuckDB oracles) or xxhash64 of the bare string.
+
+    Rows with NULL lanes (shingle-free docs, see
+    :func:`minhash_signature`) emit no band rows: they have no content
+    to band on.  Per-row only, so it is legal in an append stream.
+    """
+    if hash_fn not in ("md5", "xxhash64"):
+        raise ValueError(f"unknown hash_fn: {hash_fn}")
+    rows_per_band = n_hashes // bands
+
+    def band_hash(b):
+        joined = F.concat_ws(",", *[
+            F.element_at("minhash", b * rows_per_band + j + 1).cast("string")
+            for j in range(rows_per_band)
+        ])
+        if hash_fn == "md5":
+            return md5_long15(F.concat(F.lit(f"{b}:"), joined))
+        return F.xxhash64(joined)
+
+    # NULL lanes explode a NULL array (no rows) rather than pass a
+    # Filter: Catalyst would push a Filter below the caller's signature
+    # Project and evaluate a per-row signature fold twice
+    banded = F.when(
+        F.element_at("minhash", 1).isNotNull(),
+        F.array(*[
+            F.struct(F.lit(b).alias("band"), band_hash(b).alias("band_hash"))
+            for b in range(bands)
+        ]),
+    )
+    return sig.select(id_col, F.explode(banded).alias("bb")).select(
+        id_col, "bb.band", "bb.band_hash"
+    )
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                       n_hashes: int = 32, bands: int = 8, shingle_n: int = 3,
                       max_bucket: int | None = 10_000,
@@ -203,27 +230,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     :func:`cap_buckets`; their content belongs in exact dedup).  None
     disables the guard.
     """
-    rows_per_band = n_hashes // bands
     sig = minhash_signature(df, text_col, n_hashes, shingle_n, id_col, hash_fn)
-    # shingle-free docs carry null lanes — they have no content to band on
-    sig = sig.where(F.element_at("minhash", 1).isNotNull())
-
-    def band_hash(b):
-        joined = F.concat_ws(",", *[
-            F.element_at("minhash", b * rows_per_band + j + 1).cast("string")
-            for j in range(rows_per_band)
-        ])
-        return _lane_hash(joined, b, hash_fn) if hash_fn == "md5" else F.xxhash64(joined)
-
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), band_hash(b).alias("band_hash"))
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.band_hash")
+    banded = lsh_bands(sig, id_col, n_hashes, bands, hash_fn)
     if max_bucket is not None:
         banded = cap_buckets(banded, ["band", "band_hash"], max_bucket)
     a = banded.alias("a")
@@ -480,7 +488,7 @@ def with_simhash_columnar(df: DataFrame, text_col: str = "text",
 
 
 def simhash_near_dups(df: DataFrame, max_hamming: int = 3, id_col: str = "doc_id",
-                      text_col: str = "text", impl: str = "columnar",
+                      text_col: str = "text",
                       max_bucket: int | None = 10_000,
                       hash_fn: str = "xxhash64") -> DataFrame:
     """Near-dup pairs with simhash Hamming distance ≤ max_hamming.
@@ -490,10 +498,7 @@ def simhash_near_dups(df: DataFrame, max_hamming: int = 3, id_col: str = "doc_id
     ``max_bucket`` caps degenerate 16-bit-block buckets (see
     :func:`cap_buckets`); None disables the guard.
     """
-    if impl == "columnar":
-        sig = with_simhash_columnar(df, text_col, id_col, hash_fn).select(id_col, "simhash")
-    else:
-        sig = with_simhash(df, text_col).select(id_col, "simhash")
+    sig = with_simhash_columnar(df, text_col, id_col, hash_fn).select(id_col, "simhash")
     blocks = sig.select(
         id_col, "simhash",
         F.explode(F.array(*[

@@ -103,22 +103,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
-                    n_planes: int = 12, seed: int = 42, out: str = "bucket") -> DataFrame:
-    """Signed-projection LSH bucket id (int) per vector — Arrow/numpy batch."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy())  # (batch, dim)
-        signs = (m @ planes.T) > 0  # (batch, n_planes)
-        return pd.Series(
-            (signs.astype(np.int64) << np.arange(n_planes, dtype=np.int64)).sum(axis=1).astype(np.int32)
-        )
-
-    return df.withColumn(out, bucket(F.col(vec_col)))
-
-
 def with_lsh_tables(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
                     planes_per_table: int = 4, n_tables: int = 16,
                     seed: int = 42, out: str = "buckets") -> DataFrame:

@@ -2,18 +2,22 @@
 
 The batch minhash pipeline (``operators/dedup.py``) computes signatures
 with explode + groupBy — an aggregation, which an append-mode streaming
-plan cannot run statelessly.  Here the signature is a pure per-row
-Column program (one base-hash fold plus 32 affine ``array_min`` lanes
-over the shingle array), so the stream stays stateless end to end:
+plan cannot run statelessly.  Here the stream side's signature is a
+pure per-row Column program (one base-hash fold plus 32 affine lane
+minima over the shingle array), so the stream stays stateless end to
+end:
 
     scan → project (signature) → explode bands → stream-static
     equi-join against the corpus band index
 
-Signatures and band hashes are bit-identical to the batch path — same
-base hash (:func:`operators.dedup._base_hash`), affine lane params
-(:func:`operators.dedup.minhash_lane_params`), and band concat — so the
-static index can be built either by this module or by the batch
-pipeline; a cross-impl test asserts equality.
+The corpus side of a stream-static join is a batch table, so its index
+is built by the batch pipeline (:func:`operators.dedup.minhash_signature`,
+whole-stage codegen'd, where the per-row fold evaluates interpreted).
+Both signatures share the base hash (:func:`operators.dedup._base_hash`)
+and affine lane params (:func:`operators.dedup.minhash_lane_params`),
+and both go through the one band builder
+(:func:`operators.dedup.lsh_bands`), so the two sides emit bit-identical
+band rows; a cross-impl test asserts equality.
 
 100 TB shape: the corpus index is (corpus_id, band, band_hash) — longs
 only, ~3 rows per corpus doc at 8 bands after bucket capping.  For a
@@ -27,15 +31,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.dedup import (
     MINHASH_P,
     _base_hash,
     _shingles_of_tokens,
     cap_buckets,
-    md5_long15,
+    lsh_bands,
     minhash_lane_params,
+    minhash_signature,
 )
 
 
@@ -56,7 +60,6 @@ def minhash_bands(
     content-free docs emit no band rows at all, so they can never form
     the O(k²) spurious empty-doc candidate clique.
     """
-    rows_per_band = n_hashes // bands
     # ALL 32 lane minima in ONE F.aggregate pass over the shingle array.
     # 32 separate array_min(transform(_b, ...)) columns would each inline
     # the base-hash transform after projection collapse — the md5/xxhash
@@ -74,7 +77,7 @@ def minhash_bands(
             ]
         )
 
-    out = (
+    sig = (
         df.withColumn("_toks", F.split(F.col(text_col), r"\s+"))
         .withColumn(
             "_sh",
@@ -85,7 +88,7 @@ def minhash_bands(
         )
         .where(F.size("_sh") > 0)
         .withColumn(
-            "_mh",
+            "minhash",
             F.aggregate(
                 F.transform("_sh", lambda s: _base_hash(s, hash_fn)),
                 F.array(*[p.cast("long") for _ in range(n_hashes)]),
@@ -93,105 +96,7 @@ def minhash_bands(
             ),
         )
     )
-    band_structs = []
-    for b in range(bands):
-        joined = F.concat_ws(
-            ",",
-            *[
-                F.element_at("_mh", b * rows_per_band + j + 1).cast("string")
-                for j in range(rows_per_band)
-            ],
-        )
-        if hash_fn == "md5":
-            bh = md5_long15(F.concat(F.lit(f"{b}:"), joined))
-        else:
-            bh = F.xxhash64(joined)
-        band_structs.append(
-            F.struct(F.lit(b).alias("band"), bh.alias("band_hash"))
-        )
-    return (
-        out.withColumn("bb", F.explode(F.array(*band_structs)))
-        .select(id_col, "bb.band", "bb.band_hash")
-    )
-
-
-def minhash_bands_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Arrow-vectorized twin of :func:`minhash_bands` (md5 backend) —
-    bit-identical output, ~10x less per-row cost.
-
-    The Column path's 32-lane fold is a higher-order function, which
-    Spark evaluates INTERPRETED (no whole-stage codegen) with a fresh
-    32-element array allocated per shingle — measured ~3.6 ms/doc.
-    Here one ``mapInPandas`` stage hashes each shingle once (C md5) and
-    takes all 32 affine minima in a single numpy matrix op.  Still a
-    stateless per-row projection, so it remains legal in an append
-    stream; use it on high-throughput stream sides and for bulk corpus
-    index builds.  md5 only: Spark's xxhash64 has no Python mirror in
-    this container, and md5 is the oracle-checked backend.
-    """
-    import hashlib
-    import re as _re
-
-    import numpy as np
-    import pandas as pd
-
-    rows_per_band = n_hashes // bands
-    ws = _re.compile(r"\s+", _re.ASCII)
-    a_arr = np.array([minhash_lane_params(i)[0] for i in range(n_hashes)],
-                     dtype=np.int64)[:, None]
-    b_arr = np.array([minhash_lane_params(i)[1] for i in range(n_hashes)],
-                     dtype=np.int64)[:, None]
-
-    def _md5_60(s: str) -> int:
-        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-    def process(batches):
-        for pdf in batches:
-            ids, outb, outh = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = ws.split(text or "")
-                hi = max(len(toks) - shingle_n, 0)
-                # empty grams filtered, matching the Column path and the
-                # oracle's shingle <> '' — content-free docs emit no
-                # band rows (minhash_signature contract)
-                grams = {
-                    g
-                    for i in range(hi + 1)
-                    if (g := " ".join(toks[i : i + shingle_n])).strip()
-                }
-                if not grams:
-                    continue
-                bases = np.fromiter(
-                    (_md5_60(g) % MINHASH_P for g in grams), dtype=np.int64,
-                    count=len(grams),
-                )
-                # all 32 lane minima in one matrix op; products < 2^62
-                mh = ((a_arr * bases[None, :] + b_arr) % MINHASH_P).min(axis=1)
-                for b in range(bands):
-                    joined = ",".join(
-                        str(mh[b * rows_per_band + j]) for j in range(rows_per_band)
-                    )
-                    ids.append(did)
-                    outb.append(b)
-                    outh.append(_md5_60(f"{b}:{joined}"))
-            yield pd.DataFrame({id_col: ids, "band": outb, "band_hash": outh})
-
-    # id field type follows the input schema (string ids work like the
-    # Column-path twin), only band/band_hash are fixed
-    id_field = T.StructField(id_col, df.schema[id_col].dataType)
-    out_schema = T.StructType([
-        id_field,
-        T.StructField("band", T.IntegerType()),
-        T.StructField("band_hash", T.LongType()),
-    ])
-    return df.select(id_col, text_col).mapInPandas(process, schema=out_schema)
+    return lsh_bands(sig, id_col, n_hashes, bands, hash_fn)
 
 
 def corpus_band_index(
@@ -199,12 +104,19 @@ def corpus_band_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int | None = 10_000,
-    **kw,
+    n_hashes: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Static LSH index over the reference corpus, renamed to
     ``corpus_id`` and hot-bucket capped (a degenerate boilerplate bucket
-    would otherwise match every incoming doc)."""
-    idx = minhash_bands(corpus, text_col, id_col, **kw).withColumnRenamed(
+    would otherwise match every incoming doc).  The corpus is a batch
+    table, so the signature is the batch explode+groupBy one; the
+    keyword arguments must match the stream side's
+    :func:`minhash_bands`."""
+    sig = minhash_signature(corpus, text_col, n_hashes, shingle_n, id_col, hash_fn)
+    idx = lsh_bands(sig, id_col, n_hashes, bands, hash_fn).withColumnRenamed(
         id_col, "corpus_id"
     )
     if max_bucket is not None:

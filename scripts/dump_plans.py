@@ -144,16 +144,17 @@ def main() -> None:
     sections.append((
         "Stream-signature band index (lsh_band_index)",
         "Zero exchanges, zero Python, zero aggregation — chained Projects "
-        "over the scan.  With no aggregate above it the same program is "
-        "legal in a stateless append stream, so the streaming index and "
-        "the batch index are ONE plan.  The 32 lane minima fold in a "
-        "single F.aggregate pass (32 separate array_min(transform(...)) "
+        "over the scan: the stream side of the stream-static near-dup "
+        "join, run in batch.  With no aggregate above it the program is "
+        "legal in a stateless append stream.  The 32 lane minima fold in "
+        "a single F.aggregate pass (32 separate array_min(transform(...)) "
         "columns would inline the base-hash transform 32x after "
-        "projection collapse — measured 15x slower).  Caveat: lambda "
-        "Column expressions evaluate INTERPRETED, so the bulk build has "
-        "an Arrow twin (lsh_band_index_arrow, bit-identical, same "
-        "oracle, 8x faster at sf0.1): one mapInPandas stage, C md5 once "
-        "per shingle, all 32 affine minima in one numpy matrix op.",
+        "projection collapse — measured 15x slower).  Lambda Column "
+        "expressions evaluate INTERPRETED, so the corpus index (a batch "
+        "table) is built from the codegen'd explode+groupBy signature "
+        "instead (corpus_band_index, ~6x faster at sf0.1); both "
+        "signatures go through the one band builder (dedup.lsh_bands), "
+        "and a cross-impl test asserts the two emit the same rows.",
         _trim(plans.formatted_plan(queries.q_lsh_band_index(spark, SF)), 25),
     ))
 

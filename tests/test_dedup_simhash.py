@@ -45,12 +45,21 @@ def _pairset(df):
 
 
 def test_columnar_matches_reference_pairs(planted):
-    """Both kernels must report the identical pair set at the guaranteed
-    threshold (≤3): exactly the exact-copy pairs, regardless of which
-    token hash (xxhash64 vs FNV-1a) backs the signature."""
+    """The columnar kernel's pair set at the guaranteed threshold (≤3)
+    equals the all-pairs popcount over the python reference
+    signatures: exactly the exact-copy pairs, regardless of which token
+    hash (xxhash64 vs FNV-1a) backs the signature."""
     want = {(i, 100 + i) for i in range(10)}
-    got_col = _pairset(dedup.simhash_near_dups(planted, max_hamming=3, impl="columnar"))
-    got_ref = _pairset(dedup.simhash_near_dups(planted, max_hamming=3, impl="python"))
+    ref = {
+        r["doc_id"]: r["simhash"]
+        for r in dedup.with_simhash(planted).select("doc_id", "simhash").collect()
+    }
+    got_ref = {
+        (a, b)
+        for a in ref for b in ref
+        if a < b and bin((ref[a] ^ ref[b]) & (2**64 - 1)).count("1") <= 3
+    }
+    got_col = _pairset(dedup.simhash_near_dups(planted, max_hamming=3))
     assert got_col == want == got_ref
 
 
@@ -183,8 +192,5 @@ def test_minhash_contentfree_docs_null_lanes_no_pairs(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(4, 5)}, \
         "only the real near-dup pair; no empty-doc clique"
 
-    for fn in (neardup_stream.minhash_bands,
-               neardup_stream.minhash_bands_arrow):
-        kw = {} if fn is neardup_stream.minhash_bands_arrow else {"hash_fn": "md5"}
-        bands = fn(docs, **kw).select("doc_id").distinct()
-        assert {r["doc_id"] for r in bands.collect()} == {4, 5}, fn.__name__
+    bands = neardup_stream.minhash_bands(docs, hash_fn="md5").select("doc_id").distinct()
+    assert {r["doc_id"] for r in bands.collect()} == {4, 5}

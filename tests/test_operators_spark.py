@@ -675,10 +675,8 @@ class TestSimilarityR5:
         assert recall >= 0.6
 
     def test_embedding_neardups_adversarial_recall(self, spark):
-        """The rotated cos-0.98 fixture separates the designs: the old
-        single-table 8-plane bucket join provably misses planted pairs
-        (their hyperplane signs differ from the base's), while the
-        multi-table OR-amplified join finds every one."""
+        """On the rotated cos-0.98 fixture the multi-table OR-amplified
+        join finds every planted pair."""
         from geomatics_geotk_spark import queries as q
 
         aug = q._neardup_fixture(spark, "/root/testdata/sf0.001").cache()
@@ -688,7 +686,6 @@ class TestSimilarityR5:
             .select("vec_id").collect()
         }
         assert expected
-        # multi-table OR-amplified join: complete on the planted truth
         got = {
             (r["id_a"], r["id_b"])
             for r in similarity.embedding_near_dups(
@@ -696,18 +693,6 @@ class TestSimilarityR5:
             ).collect()
         }
         assert expected <= got, sorted(expected - got)
-        # the pre-r5 design: ONE 8-plane table — same bucket required on
-        # all 8 signs at once, p ~ 0.59 per pair at cos 0.98
-        c = similarity.with_lsh_bucket(aug, n_planes=8, out="bucket")
-        a = c.select(F.col("vec_id").alias("id_a"), "bucket")
-        b = c.select(F.col("vec_id").alias("id_b"), "bucket")
-        single = {
-            (r["id_a"], r["id_b"])
-            for r in a.join(b, "bucket").where(F.col("id_a") < F.col("id_b")).collect()
-        }
-        missed = expected - single
-        print(f"single-table missed {len(missed)}/{len(expected)} planted pairs")
-        assert missed, "single-table LSH unexpectedly caught every rotated pair"
 
     def test_semantic_dedup_cluster_blocked_exactness(self, spark):
         """The SemDeDup contract, both directions: semantic_dedup emits

@@ -1,8 +1,9 @@
 """Stream-static LSH near-dup detection (streaming/neardup_stream.py).
 
-Cross-impl: the per-row Column signature path must reproduce the batch
-explode+groupBy signature bit-for-bit; streaming: planted near-dups of
-corpus docs must be flagged, fresh docs must not.
+Cross-impl: the per-row Column signature path (the stream side) must
+reproduce the corpus index, built from the batch explode+groupBy
+signature, bit-for-bit; streaming: planted near-dups of corpus docs must
+be flagged, fresh docs must not.
 """
 
 from __future__ import annotations
@@ -10,7 +11,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from geomatics_geotk_spark.operators import dedup
 from geomatics_geotk_spark.streaming import neardup_stream
 
 
@@ -32,34 +32,13 @@ def corpus(spark):
 
 class TestColumnSignatureParity:
     def test_bands_match_batch_pipeline(self, spark, corpus):
-        """minhash_bands (per-row folds, no aggregation) must emit the
-        exact band set of the batch explode+groupBy path."""
-        got = {
-            (r["doc_id"], r["band"], r["band_hash"])
-            for r in neardup_stream.minhash_bands(corpus).collect()
-        }
-        sig = dedup.minhash_signature(corpus)
-        # batch band hashing: replicate via minhash_lsh_pairs internals —
-        # band b joins lanes [b*4, b*4+4) with "," and xxhash64s
-        rows_per_band = 32 // 8
-        want = set()
-        for r in sig.collect():
-            mh = r["minhash"]
-            for b in range(8):
-                joined = ",".join(
-                    str(mh[b * rows_per_band + j]) for j in range(rows_per_band)
-                )
-                bh = spark.sql(f"SELECT xxhash64('{joined}') AS h").collect()[0]["h"]
-                want.add((r["doc_id"], b, bh))
-        assert got == want
-
-
-class TestArrowTwinParity:
-    def test_arrow_bands_bit_identical(self, spark, corpus):
-        """minhash_bands_arrow must reproduce the Column path's
-        (doc_id, band, band_hash) rows exactly — including whitespace
-        tokenization edge cases (leading/trailing/multiple spaces,
-        short docs) and null-text filtering."""
+        """The stream side (minhash_bands: per-row folds, no
+        aggregation) must emit exactly the (id, band, band_hash) rows of
+        the corpus index, which the batch explode+groupBy signature
+        builds — the stream-static join rests on this.  Both hash
+        backends; includes whitespace tokenization edges (leading,
+        trailing and repeated spaces, one- and two-token docs) and
+        content-free docs, which emit no rows on either side."""
         edge = spark.createDataFrame(
             [(100, "  leading space"), (101, "trailing space  "),
              (102, "a  b"), (103, "one"), (104, "two tok"),
@@ -67,13 +46,17 @@ class TestArrowTwinParity:
             "doc_id long, text string",
         )
         both = corpus.unionByName(edge)
-        col_rows = {
-            tuple(r) for r in neardup_stream.minhash_bands(both, hash_fn="md5").collect()
-        }
-        arrow_rows = {
-            tuple(r) for r in neardup_stream.minhash_bands_arrow(both).collect()
-        }
-        assert arrow_rows == col_rows
+        for hash_fn in ("md5", "xxhash64"):
+            fold = {
+                tuple(r)
+                for r in neardup_stream.minhash_bands(both, hash_fn=hash_fn).collect()
+            }
+            index = {
+                tuple(r)
+                for r in neardup_stream.corpus_band_index(both, hash_fn=hash_fn).collect()
+            }
+            assert len(fold) == 25 * 8, hash_fn
+            assert fold == index, hash_fn
 
 
 class TestStreamingNearDup:
@@ -111,8 +94,9 @@ class TestStreamingNearDup:
         assert not any(d == 200 for d, _ in got), "fresh doc must not match"
 
     def test_stream_plan_is_stateless_broadcast(self, spark, corpus, tmp_path):
-        """The streaming side must contain no aggregation (stateless
-        append) and join the index via broadcast."""
+        """The streaming side of the join must contain no aggregation
+        (stateless append) and join the batch-built index via
+        broadcast."""
         inp = str(tmp_path / "in2")
         spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string").write.mode(
             "overwrite"
@@ -121,9 +105,14 @@ class TestStreamingNearDup:
         cand = neardup_stream.streaming_neardup_candidates(
             stream, neardup_stream.corpus_band_index(corpus)
         )
-        plan = cand.explain(extended=False) or ""
-        # explain() prints; use the logical plan string instead
-        logical = cand._jdf.queryExecution().analyzed().toString()
-        assert "Aggregate" not in logical.split("Join")[0], (
-            "stream side above the join must be aggregation-free"
+        join = cand._jdf.queryExecution().analyzed()
+        while join.getClass().getSimpleName() != "Join":
+            join = join.children().apply(0)
+        stream_side, index_side = join.left(), join.right()
+        assert stream_side.isStreaming() and not index_side.isStreaming()
+        assert "Aggregate" not in stream_side.toString(), (
+            "stream side of the join must be aggregation-free"
         )
+        # the corpus index is a batch table: its signature aggregates
+        assert "Aggregate" in index_side.toString()
+        assert "strategy=broadcast" in index_side.toString()
