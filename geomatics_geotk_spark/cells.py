@@ -47,8 +47,7 @@ def cell_of(lon, lat, res: int) -> np.ndarray:
     ny = np.int64(1) << np.int64(res)       # lat cells
     xi = np.clip(((lon + 180.0) / 360.0 * nx).astype(np.int64), 0, nx - 1)
     yi = np.clip(((lat + 90.0) / 180.0 * ny).astype(np.int64), 0, ny - 1)
-    morton = _interleave_bits(xi.astype(np.uint64), yi.astype(np.uint64))
-    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
+    return index_cells(xi, yi, res)
 
 
 def cell_bounds(cell: int) -> tuple[float, float, float, float]:
@@ -80,11 +79,26 @@ def cell_bounds_many(cells_arr: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.
     if not bool(np.all((c >> np.uint64(RES_SHIFT)) == np.uint64(res))):
         raise ValueError("cell_bounds_many requires a single-resolution cell array")
     morton = c & ((np.uint64(1) << np.uint64(RES_SHIFT)) - np.uint64(1))
-    xi = _compact_bits(morton).astype(np.float64)
-    yi = _compact_bits(morton >> np.uint64(1)).astype(np.float64)
+    return index_bounds(_compact_bits(morton), _compact_bits(morton >> np.uint64(1)), res)
+
+
+def index_bounds(xi, yi, res: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Cell (column, row) indices at ``res`` → (lon_min, lat_min, lon_max,
+    lat_max) arrays.  A bound is ``-180 + i * width`` (``-90 + j *
+    height``) with ``i`` the float of an integer, so neighbouring cells
+    share the identical double, and index ``xi + 1`` gives a cell's
+    right side."""
+    xi = np.asarray(xi).astype(np.float64)
+    yi = np.asarray(yi).astype(np.float64)
     w = 360.0 / (1 << (res + 1))
     h = 180.0 / (1 << res)
     return -180.0 + xi * w, -90.0 + yi * h, -180.0 + (xi + 1.0) * w, -90.0 + (yi + 1.0) * h
+
+
+def index_cells(xi, yi, res: int) -> np.ndarray:
+    """Cell (column, row) indices at ``res`` → int64 cell ids."""
+    morton = _interleave_bits(np.asarray(xi).astype(np.uint64), np.asarray(yi).astype(np.uint64))
+    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
 
 
 def _xy_of(cell: int) -> tuple[int, int, int]:
@@ -98,23 +112,30 @@ def _xy_of(cell: int) -> tuple[int, int, int]:
     return xi, yi, res
 
 
+def covering_index_ranges(xmin, ymin, xmax, ymax, res: int):
+    """Envelopes (lon/lat degree arrays) → the inclusive (column, row)
+    index ranges (x0, y0, x1, y1) of the cells at ``res`` meeting each,
+    as int64 arrays."""
+    def index(v, origin, span, n):
+        i = np.floor((np.asarray(v, dtype=np.float64) + origin) / span * n)
+        return np.clip(i, 0, n - 1).astype(np.int64)
+
+    nx = 1 << (res + 1)
+    ny = 1 << res
+    return (index(xmin, 180.0, 360.0, nx), index(ymin, 90.0, 180.0, ny),
+            index(xmax, 180.0, 360.0, nx), index(ymax, 90.0, 180.0, ny))
+
+
 def cells_covering(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
-    """All cell ids at ``res`` intersecting an envelope (lon/lat degrees).
+    """All cell ids at ``res`` intersecting an envelope (lon/lat degrees),
+    row by row from the bottom-left cell.
 
     Used to explode the polygon/zone side of a spatial join into its
     covering cells — the filter half of filter-and-refine.
     """
-    nx = 1 << (res + 1)
-    ny = 1 << res
-    x0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * nx), 0, nx - 1))
-    x1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * nx), 0, nx - 1))
-    y0 = int(np.clip(np.floor((ymin + 90.0) / 180.0 * ny), 0, ny - 1))
-    y1 = int(np.clip(np.floor((ymax + 90.0) / 180.0 * ny), 0, ny - 1))
-    xs = np.arange(x0, x1 + 1, dtype=np.uint64)
-    ys = np.arange(y0, y1 + 1, dtype=np.uint64)
-    gx, gy = np.meshgrid(xs, ys)
-    morton = _interleave_bits(gx.ravel(), gy.ravel())
-    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
+    x0, y0, x1, y1 = (int(v) for v in covering_index_ranges(xmin, ymin, xmax, ymax, res))
+    gx, gy = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
+    return index_cells(gx.ravel(), gy.ravel(), res)
 
 
 def ring(cell: int, k: int) -> np.ndarray:
@@ -139,8 +160,7 @@ def ring(cell: int, k: int) -> np.ndarray:
     if not out:
         return np.array([], dtype=np.int64)
     arr = np.array(out, dtype=np.uint64)
-    morton = _interleave_bits(arr[:, 0], arr[:, 1])
-    return ((np.uint64(res) << np.uint64(RES_SHIFT)) | morton).astype(np.int64)
+    return index_cells(arr[:, 0], arr[:, 1], res)
 
 
 def disk(cell: int, k: int) -> np.ndarray:

@@ -158,38 +158,44 @@ def point_in_polygon_col(lon: Column, lat: Column, exterior: Column,
     return inside_ext & ~F.coalesce(in_hole, F.lit(False))
 
 
-def edge_slot_cols(edges: Column, k: int) -> list[list[Column]]:
-    """The first ``k`` slots of ``edges`` as the Columns
-    :func:`edge_slots_pip_col` reads, per slot [py, cy, px, dx, dy, step].
+def edge_slot_cols(edges: str, k: int) -> list[list[str]]:
+    """The first ``k`` slots of the column named ``edges``, as the SQL
+    expressions :func:`edge_slots_pip_col` reads, per slot [py, cy, px,
+    dx, dy, step].
 
     ``edges`` is a zone-cell row's array<struct<px,py,cx,cy,last>>: the
     ring edges p→c, in ring order, that can cross the ray x < lon for a
-    point in the cell (``operators.spatial_join._band_edges``), ``last``
+    point in the cell (``operators.spatial_join._edge_slots``), ``last``
     marking the last slot of each ring.  ``dx``, ``dy`` are c - p, the
     same doubles the full-ring test computes; ``step`` is 4 on a ring's
     last slot, else 0.  No column is null: a slot past the row's own
     count is padding with NaN y-values, which no latitude lies between,
     so it crosses nothing and ends no ring.
+
+    SQL text rather than Columns: a query parses the whole refine in one
+    call (``selectExpr``/``F.expr``), where building it as Columns takes
+    a py4j round trip per expression node, about a hundred at 3 slots.
     """
-    nan = F.lit(float("nan"))
+    nan = "CAST('NaN' AS DOUBLE)"
     out = []
     for i in range(k):
-        e = F.get(edges, i)
+        e = f"get(`{edges}`, {i})"
         out.append([
-            F.coalesce(e["py"], nan), F.coalesce(e["cy"], nan), F.coalesce(e["px"], nan),
-            F.coalesce(e["cx"] - e["px"], nan), F.coalesce(e["cy"] - e["py"], nan),
-            F.when(e["last"], 4).otherwise(0),
+            f"coalesce({e}.py, {nan})", f"coalesce({e}.cy, {nan})", f"coalesce({e}.px, {nan})",
+            f"coalesce({e}.cx - {e}.px, {nan})", f"coalesce({e}.cy - {e}.py, {nan})",
+            f"CASE WHEN {e}.last THEN 4 ELSE 0 END",
         ])
     return out
 
 
-def edge_slots_pip_col(lon: Column, lat: Column, slots: list[list[Column]]) -> Column:
+def edge_slots_pip_col(lon: str, lat: str, slots: list[list[str]]) -> str:
     """Even-odd point-in-polygon over a cell's edge slots
     (:func:`edge_slot_cols`) — the spatial join's refine, one lambda-free
-    expression that whole-stage codegen compiles.  Each slot runs the
-    same crossing test with the same operands as
-    :func:`point_in_polygon_col`, and the answer is the same: inside the
-    exterior and in no hole.
+    expression that whole-stage codegen compiles, as SQL text over the
+    columns named ``lon`` and ``lat`` and the slot expressions.  Each
+    slot runs the same crossing test with the same operands as
+    :func:`point_in_polygon_col` (``_crossing``), and the answer is the
+    same: inside the exterior and in no hole.
 
     Walking the slots, the running crossing parity must be odd at the end
     of every ring: the exterior's count odd, then each hole adding an even
@@ -200,12 +206,13 @@ def edge_slots_pip_col(lon: Column, lat: Column, slots: list[list[Column]]) -> C
     """
     # indexed by (state XOR crossed) + step: on a ring's last slot (step
     # 4) an even parity sets bit 1, which no later crossing clears
-    table = F.array(*map(F.lit, (0, 1, 2, 3, 2, 1, 2, 3)))
-    state = F.lit(0)
-    for py, cy, px, dx, dy, step in slots:
-        crossed = _crossing(lon, lat, px, py, cy, dx, dy).cast("int")
-        state = F.get(table, state.bitwiseXOR(crossed) + step)
-    return state == 1
+    table = "array(0, 1, 2, 3, 2, 1, 2, 3)"
+    lon, lat = f"`{lon}`", f"`{lat}`"
+    state = "0"
+    for py, cy, px, dx, dy, step in ([f"({c})" for c in slot] for slot in slots):
+        crossed = f"CAST((({py} > {lat}) != ({cy} > {lat})) AND ({lon} < {dx} * ({lat} - {py}) / {dy} + {px}) AS INT)"
+        state = f"get({table}, ({state} ^ {crossed}) + {step})"
+    return f"({state}) = 1"
 
 
 def _seg_box_intersects(p: Column, c: Column, x0: Column, y0: Column,

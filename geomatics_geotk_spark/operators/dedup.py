@@ -136,6 +136,23 @@ def minhash_signature(df: DataFrame, text_col: str = "text", n_hashes: int = 32,
     same ``shingle <> ''`` filter.  Non-id input columns are not
     carried — join them back on id_col if needed.
     """
+    sig = _minhash_lanes(df, text_col, n_hashes, shingle_n, id_col, hash_fn)
+    # docs with NULL text (null shingle array) vanish from the explode —
+    # restore the one-row-per-input-id contract with null lanes
+    ids = df.select(id_col).distinct()
+    return ids.join(sig, id_col, "left")
+
+
+def _minhash_lanes(df: DataFrame, text_col: str, n_hashes: int, shingle_n: int,
+                   id_col: str, hash_fn: str) -> DataFrame:
+    """(id_col, minhash) of the docs with at least one non-empty
+    shingle, one row per id (the aggregate of :func:`minhash_signature`
+    without its restore join).  What the band builders read:
+    :func:`lsh_bands` emits nothing for the rows the restore adds, so
+    they skip its second scan, distinct aggregate and join.  Rows with a
+    NULL id are left out, as the restore's join leaves them without
+    lanes."""
+    df = df.where(F.col(id_col).isNotNull())
     # Gram building stays entirely inside whole-stage codegen: explode
     # the INDEX sequence (a cheap JVM Generate) and assemble each gram
     # with top-level concat_ws/try_element_at — no interpreted transform
@@ -167,13 +184,9 @@ def minhash_signature(df: DataFrame, text_col: str = "text", n_hashes: int = 32,
             F.min((F.lit(a) * F.col("_b") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"_mh{i}")
         )
     agg = sh.groupBy(id_col).agg(*lanes)
-    sig = agg.select(
+    return agg.select(
         id_col, F.array(*[F.col(f"_mh{i}") for i in range(n_hashes)]).alias("minhash")
     )
-    # docs with NULL text (null shingle array) vanish from the explode —
-    # restore the one-row-per-input-id contract with null lanes
-    ids = df.select(id_col).distinct()
-    return ids.join(sig, id_col, "left")
 
 
 def lsh_bands(sig: DataFrame, id_col: str = "doc_id", n_hashes: int = 32,
@@ -230,7 +243,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     :func:`cap_buckets`; their content belongs in exact dedup).  None
     disables the guard.
     """
-    sig = minhash_signature(df, text_col, n_hashes, shingle_n, id_col, hash_fn)
+    sig = _minhash_lanes(df, text_col, n_hashes, shingle_n, id_col, hash_fn)
     banded = lsh_bands(sig, id_col, n_hashes, bands, hash_fn)
     if max_bucket is not None:
         banded = cap_buckets(banded, ["band", "band_hash"], max_bucket)

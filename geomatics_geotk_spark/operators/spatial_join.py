@@ -37,6 +37,8 @@ small side, so the transform cost is O(M), not O(N).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -96,20 +98,9 @@ def tile_assign(docs: DataFrame, res: int = DEFAULT_RES,
 
 
 # ---------------------------------------------------------------------------
-# Zone preparation: one per-zone kernel (O(M) work over the SMALL side)
-# and one Arrow packer, run on the driver (broadcast) or the executors
-# (shuffle)
+# Zone preparation: one vectorized pack over all zones (O(M) work over the
+# SMALL side), run on the driver (broadcast) or the executors (shuffle)
 # ---------------------------------------------------------------------------
-
-
-def _lonlat(rings: list[np.ndarray], crs) -> list[np.ndarray]:
-    """(n,2) rings in the CRS's native axes → (n,2) lon/lat rings,
-    CRS-harmonized (reference setCRS semantics) and axis-normalized."""
-    out = []
-    for r in rings:
-        lon, lat = crs_k.to_lonlat(r[:, 0], r[:, 1], crs)
-        out.append(np.column_stack([lon, lat]))
-    return out
 
 
 def _ring_arrays(exterior, interiors) -> list[np.ndarray]:
@@ -121,77 +112,194 @@ def _ring_arrays(exterior, interiors) -> list[np.ndarray]:
     ]
 
 
-def _segs_hit_boxes(rings: list[np.ndarray], x0, y0, x1, y1) -> np.ndarray:
-    """(n_cells,) bool: does any ring segment intersect each axis box?
+class _Rings(NamedTuple):
+    """Every ring of a set of zones in one flat layout, in zone order and
+    each zone's exterior first: the points' harmonized ``x`` (lon) and
+    ``y`` (lat); per ring its first point ``start``, point count ``size``,
+    ``zone`` and whether it is an exterior (``ext``); per zone its ring
+    count ``n_rings``."""
 
-    Vectorized slab clipping over (segments × cells); a segment wholly
-    inside a box counts as a hit (strictly more conservative than the
-    ring-edge test — such cells classify partial and the exact refine
-    decides, so join row sets are unchanged).
-    """
-    hit = np.zeros(x0.shape, dtype=bool)
-    for r in rings:
-        ax, ay = r[:-1, 0][:, None], r[:-1, 1][:, None]
-        bx, by = r[1:, 0][:, None], r[1:, 1][:, None]
-        dx, dy = bx - ax, by - ay
+    x: np.ndarray
+    y: np.ndarray
+    start: np.ndarray
+    size: np.ndarray
+    zone: np.ndarray
+    ext: np.ndarray
+    n_rings: np.ndarray
+
+
+def _flat_rings(rows) -> _Rings:
+    """Zone rows (``exterior``, ``interiors``, ``crs``) → :class:`_Rings`,
+    CRS-harmonized to lon/lat (reference setCRS semantics) and
+    axis-normalized by one ``to_lonlat`` call per distinct CRS."""
+    rings = [[r["exterior"], *(r["interiors"] or ())] for r in rows]
+    n_rings = np.array([len(zr) for zr in rings], dtype=np.int64)
+    size = np.array([len(ring) for zr in rings for ring in zr], dtype=np.int64)
+    xy = np.array([(p["x"], p["y"]) for zr in rings for ring in zr for p in ring],
+                  dtype=np.float64).reshape(-1, 2)
+    zone = np.repeat(np.arange(len(rows)), n_rings)
+    point_crs = np.repeat(np.array([r["crs"] for r in rows], dtype=object)[zone], size)
+    x, y = np.empty(len(xy)), np.empty(len(xy))
+    for crs in set(point_crs):
+        m = point_crs == crs
+        x[m], y[m] = crs_k.to_lonlat(xy[m, 0], xy[m, 1], crs)
+    ext = np.zeros(len(size), dtype=bool)
+    ext[np.cumsum(n_rings) - n_rings] = True
+    return _Rings(x, y, np.cumsum(size) - size, size, zone, ext, n_rings)
+
+
+def _expand(counts: np.ndarray):
+    """Item i repeated counts[i] times, with k = 0 .. counts[i] - 1 →
+    (item, k) arrays in item order."""
+    item = np.repeat(np.arange(len(counts)), counts)
+    return item, np.arange(len(item)) - (np.cumsum(counts) - counts)[item]
+
+
+# elements per numpy pass of the zone pack's pair tests: a pass holds a
+# few dozen bytes of temporaries per element, whatever the zone sizes
+_PAIR_CAP = 1 << 19
+
+
+def _runs(counts: np.ndarray, cap: int = _PAIR_CAP):
+    """:func:`_expand` in passes of at most ``cap`` elements (an item
+    with more gets a pass of its own)."""
+    ends = np.cumsum(counts)
+    lo = 0
+    while lo < len(counts):
+        hi = max(lo + 1, int(np.searchsorted(ends, ends[lo] - counts[lo] + cap, side="right")))
+        item, k = _expand(counts[lo:hi])
+        yield item + lo, k
+        lo = hi
+
+
+def _grid(x0, y0, nx, ny):
+    """Per zone the nx × ny (column, row) indices from (x0, y0), row by
+    row from the bottom left as ``cells.cells_covering`` orders them →
+    (zone, column, row, first index of each zone's run)."""
+    zone, k = _expand(nx * ny)
+    return zone, x0[zone] + k % nx[zone], y0[zone] + k // nx[zone], np.cumsum(nx * ny) - nx * ny
+
+
+def _grid_line(v, origin: float, step: float) -> np.ndarray:
+    """The smallest integer k with ``origin + k * step >= v``, per value,
+    in the grid line formula of :func:`cells.index_bounds`, so the
+    comparison is with the grid's own doubles."""
+    k = np.clip(np.ceil((v - origin) / step), -2.0**40, 2.0**40)
+    k = np.where(origin + (k - 1.0) * step >= v, k - 1.0, k)
+    return np.where(origin + k * step < v, k + 1.0, k).astype(np.int64)
+
+
+def _corners_inside(rings: _Rings, gx0, gy0, ncx, ncy, res: int) -> np.ndarray:
+    """Even-odd inside test of every corner of each zone's corner grid
+    (``ncx`` × ``ncy`` corners from (gx0, gy0), in :func:`_grid` order)
+    against its zone: inside the exterior and in no hole.
+
+    The crossings of ``kernels.geometry.points_in_polygon``, over each
+    ring's edges i ← j (j the point before i, wrapping): an edge crosses
+    the ray of a corner at (x, y) when ``(y_i > y) != (y_j > y)`` and
+    ``x < (x_j - x_i) * (y - y_i) / (y_j - y_i) + x_i``.  The first holds
+    on a run of corner rows, and the crossing x depends on the row only,
+    so it is computed once per (edge, row), with the per-point test's
+    operands, and the edge crosses the ray of a run of that row's
+    corners from the left.  In each (ring, row) the edges that hold are
+    even in number (a ring is a cycle), so a corner's parity is that of
+    the edges whose run ends at or before it: one cumulative sum over
+    every (ring, row), each with one spare column for the runs that end
+    past the last corner."""
+    w, h = 360.0 / (1 << (res + 1)), 180.0 / (1 << res)
+    ring_of = np.repeat(np.arange(len(rings.size)), rings.size)
+    i = np.arange(len(rings.x))
+    j = np.where(i == rings.start[ring_of], i + rings.size[ring_of] - 1, i - 1)
+    z = rings.zone[ring_of]
+    ki, kj = _grid_line(rings.y[i], -90.0, h), _grid_line(rings.y[j], -90.0, h)
+    lo = np.maximum(np.minimum(ki, kj), gy0[z])
+    e, k = _expand(np.maximum(np.minimum(np.maximum(ki, kj), gy0[z] + ncy[z]) - lo, 0))
+    row, ze = lo[e] + k, z[e]
+    y = cells.index_bounds(row, row, res)[1]
+    xi, yi, xj, yj = rings.x[i[e]], rings.y[i[e]], rings.x[j[e]], rings.y[j[e]]
+    ends = np.clip(_grid_line((xj - xi) * (y - yi) / (yj - yi) + xi, -180.0, w) - gx0[ze], 0, ncx[ze])
+    # per ring a block of its zone's rows, each ncx + 1 wide
+    rz = rings.zone
+    block = ncy[rz] * (ncx[rz] + 1)
+    first = np.cumsum(block) - block
+    odd = np.cumsum(np.bincount(first[ring_of[e]] + (row - gy0[ze]) * (ncx[ze] + 1) + ends,
+                                minlength=block.sum())) % 2 == 1
+    ring, k = _expand(block)
+    col, zr = k % (ncx[rz[ring]] + 1), rz[ring]
+    corner = (np.cumsum(ncx * ncy) - ncx * ncy)[zr] + k // (ncx[zr] + 1) * ncx[zr] + col
+    odd &= col < ncx[zr]
+    inside = np.zeros(int((ncx * ncy).sum()), dtype=bool)
+    inside[corner[odd & rings.ext[ring]]] = True
+    inside[corner[odd & ~rings.ext[ring]]] = False
+    return inside
+
+
+def _segments(rings: _Rings):
+    """Every ring segment p→c (point p and the next, not wrapping), in
+    ring order → (p index, segment ring index)."""
+    ring_of = np.repeat(np.arange(len(rings.size)), rings.size)
+    p = np.flatnonzero(np.arange(len(rings.x)) < (rings.start + rings.size - 1)[ring_of])
+    return p, ring_of[p]
+
+
+def _boxes_hit(rings: _Rings, x0, y0, nx, ny, res: int) -> np.ndarray:
+    """Does any segment of its zone's rings meet each cell box of the
+    zones' covering grids (``nx`` × ``ny`` cells from (x0, y0), in
+    :func:`_grid` order)?
+
+    Slab clipping, as the segment/box test ``functions._seg_box_intersects``
+    mirrors; a segment wholly inside a box counts as a hit (strictly
+    more conservative than the ring-edge test — such cells classify
+    partial and the exact refine decides, so join row sets are
+    unchanged).  Each segment is tested against the cells within one
+    cell of its bounding box widened by ``1e-9 * (1 + |largest
+    ordinate|)``: a box farther out than that puts the segment's clip
+    parameter strictly outside [0, 1] after rounding (the widening is
+    far above the ordinates' rounding), so it cannot hit."""
+    p, seg_ring = _segments(rings)
+    sz = rings.zone[seg_ring]
+    ax, ay, cx, cy = rings.x[p], rings.y[p], rings.x[p + 1], rings.y[p + 1]
+    dx, dy = cx - ax, cy - ay
+    eps = 1e-9 * (1.0 + np.maximum(np.maximum(np.abs(ax), np.abs(cx)),
+                                   np.maximum(np.abs(ay), np.abs(cy))))
+    wx0, wy0, wx1, wy1 = cells.covering_index_ranges(
+        np.minimum(ax, cx) - eps, np.minimum(ay, cy) - eps,
+        np.maximum(ax, cx) + eps, np.maximum(ay, cy) + eps, res)
+    c_lo = np.maximum(wx0 - 1, x0[sz])
+    c_hi = np.minimum(wx1 + 1, x0[sz] + nx[sz] - 1)
+    r_lo = np.maximum(wy0 - 1, y0[sz])
+    seg, k = _expand(np.maximum(np.minimum(wy1 + 1, y0[sz] + ny[sz] - 1) - r_lo + 1, 0))
+    row = r_lo[seg] + k
+    cell_start = np.cumsum(nx * ny) - nx * ny
+    hit = np.zeros(int((nx * ny).sum()), dtype=bool)
+    for item, k in _runs(np.maximum(c_hi[seg] - c_lo[seg] + 1, 0)):
+        s, r = seg[item], row[item]
+        col, z = c_lo[s] + k, sz[s]
+        bx0, by0, bx1, by1 = cells.index_bounds(col, r, res)
+        sx, sy, sdx, sdy = ax[s], ay[s], dx[s], dy[s]
         with np.errstate(divide="ignore", invalid="ignore"):
-            tx0 = (x0[None, :] - ax) / dx
-            tx1 = (x1[None, :] - ax) / dx
-            ty0 = (y0[None, :] - ay) / dy
-            ty1 = (y1[None, :] - ay) / dy
+            tx0 = (bx0 - sx) / sdx
+            tx1 = (bx1 - sx) / sdx
+            ty0 = (by0 - sy) / sdy
+            ty1 = (by1 - sy) / sdy
         txmin = np.minimum(tx0, tx1)
         txmax = np.maximum(tx0, tx1)
         tymin = np.minimum(ty0, ty1)
         tymax = np.maximum(ty0, ty1)
         # degenerate axes: inside-slab ⇒ (-inf, inf), outside ⇒ empty
-        deg_x = dx == 0
-        in_x = (ax >= x0[None, :]) & (ax <= x1[None, :])
+        deg_x = sdx == 0
+        in_x = (sx >= bx0) & (sx <= bx1)
         txmin = np.where(deg_x, np.where(in_x, -np.inf, np.inf), txmin)
         txmax = np.where(deg_x, np.where(in_x, np.inf, -np.inf), txmax)
-        deg_y = dy == 0
-        in_y = (ay >= y0[None, :]) & (ay <= y1[None, :])
+        deg_y = sdy == 0
+        in_y = (sy >= by0) & (sy <= by1)
         tymin = np.where(deg_y, np.where(in_y, -np.inf, np.inf), tymin)
         tymax = np.where(deg_y, np.where(in_y, np.inf, -np.inf), tymax)
         tmin = np.maximum(np.maximum(txmin, tymin), 0.0)
         tmax = np.minimum(np.minimum(txmax, tymax), 1.0)
-        hit |= (tmin <= tmax).any(axis=0)
+        cell = cell_start[z] + (r - y0[z]) * nx[z] + (col - x0[z])
+        hit[cell[tmin <= tmax]] = True
     return hit
-
-
-def _classify_zone_cells(rings: list[np.ndarray], res: int, margin_m: float = 0.0):
-    """Covering cells of a polygon with full/partial classification —
-    vectorized numpy over (cells × ring segments).  Returns
-    (kept_cell_ids, full_mask) arrays.
-
-    With ``margin_m`` > 0 the covering box expands by the distance margin
-    (conservative meridian/parallel degrees) and EVERY cell in the
-    expanded box is kept — the DWithin candidate disk, where cells not
-    touching the polygon are still within reach of it.  full = cell
-    entirely inside the polygon (distance 0; refine skipped).
-    """
-    xmin, ymin, xmax, ymax = geom_k.envelope_of(rings)
-    if margin_m > 0.0:
-        mlat = margin_m / 110_000.0  # conservative meridian degree
-        max_abs_lat = min(89.9, max(abs(ymin), abs(ymax)) + mlat)
-        mlon = margin_m / (111_320.0 * np.cos(np.deg2rad(max_abs_lat)))
-        carr = cells.cells_covering(xmin - mlon, ymin - mlat, xmax + mlon, ymax + mlat, res)
-    else:
-        carr = cells.cells_covering(xmin, ymin, xmax, ymax, res)
-    cx0, cy0, cx1, cy1 = cells.cell_bounds_many(carr)
-    corners_in = np.ones(len(carr), dtype=bool)
-    corners_any = np.zeros(len(carr), dtype=bool)
-    for gx, gy in ((cx0, cy0), (cx1, cy0), (cx1, cy1), (cx0, cy1)):
-        c_in = geom_k.points_in_polygon(gx, gy, rings)
-        corners_in &= c_in
-        corners_any |= c_in
-    hits = _segs_hit_boxes(rings, cx0, cy0, cx1, cy1)
-    full_mask = corners_in & ~hits
-    if margin_m > 0.0:
-        return carr, full_mask
-    fx, fy = rings[0][0, 0], rings[0][0, 1]
-    first_in = (fx >= cx0) & (fx <= cx1) & (fy >= cy0) & (fy <= cy1)
-    keep = full_mask | corners_any | hits | first_in
-    return carr[keep], full_mask[keep]
 
 
 # far above the double rounding of a cell bound or of a point's cell, far
@@ -199,10 +307,10 @@ def _classify_zone_cells(rings: list[np.ndarray], res: int, margin_m: float = 0.
 _BAND_MARGIN_DEG = 1e-9
 
 
-def _band_edges(rings: list[np.ndarray], cell_ids: np.ndarray):
-    """The edge slots of each cell: the ring edges p→c, in ring order,
-    with p.y != c.y, whose y-range meets the cell's y-range and whose
-    larger x reaches the cell's left side (both widened by
+def _edge_slots(x0, y0, y1, cell_zone, rings: _Rings):
+    """The edge slots of each cell: its zone's ring edges p→c, in ring
+    order, with p.y != c.y, whose y-range meets the cell's y-range and
+    whose larger x reaches the cell's left side (both widened by
     ``_BAND_MARGIN_DEG``).
 
     No other edge can satisfy ``(p.y > lat) != (c.y > lat) AND lon <
@@ -213,28 +321,37 @@ def _band_edges(rings: list[np.ndarray], cell_ids: np.ndarray):
     A cell with no exterior slot has no point inside the exterior, so it
     gets no slot at all.
 
-    Returns (per-cell slot counts, (n,2) p, (n,2) c, (n,) last), slots
-    grouped by cell; ``last`` marks the last slot of a ring in its cell.
+    Returns (per-cell slot counts, each slot's p index into the ring
+    points — c is the next — and ``last``), slots grouped by cell;
+    ``last`` marks the last slot of a ring in its cell.
     """
-    x0, y0, _, y1 = cells.cell_bounds_many(cell_ids)
-    x_lo = np.where(x0 <= -180.0, -np.inf, x0 - _BAND_MARGIN_DEG)[:, None]
-    y_lo = np.where(y0 <= -90.0, -np.inf, y0 - _BAND_MARGIN_DEG)[:, None]
-    y_hi = np.where(y1 >= 90.0, np.inf, y1 + _BAND_MARGIN_DEG)[:, None]
-    p = np.concatenate([r[:-1] for r in rings])
-    c = np.concatenate([r[1:] for r in rings])
-    ring = np.repeat(np.arange(len(rings)), [len(r) - 1 for r in rings])
-    band = (
-        (p[:, 1] != c[:, 1])
-        & (np.minimum(p[:, 1], c[:, 1]) <= y_hi)
-        & (np.maximum(p[:, 1], c[:, 1]) >= y_lo)
-        & (np.maximum(p[:, 0], c[:, 0]) >= x_lo)
-    )
-    band &= band[:, ring == 0].any(axis=1, keepdims=True)
-    row, col = np.nonzero(band)  # row-major: each cell's slots in ring order
-    slot_ring = ring[col]
-    last = np.ones(len(col), dtype=bool)
-    last[:-1] = (row[1:] != row[:-1]) | (slot_ring[1:] != slot_ring[:-1])
-    return band.sum(axis=1), p[col], c[col], last
+    x_lo = np.where(x0 <= -180.0, -np.inf, x0 - _BAND_MARGIN_DEG)
+    y_lo = np.where(y0 <= -90.0, -np.inf, y0 - _BAND_MARGIN_DEG)
+    y_hi = np.where(y1 >= 90.0, np.inf, y1 + _BAND_MARGIN_DEG)
+    p, seg_ring = _segments(rings)
+    py, cy = rings.y[p], rings.y[p + 1]
+    y_min, y_max = np.minimum(py, cy), np.maximum(py, cy)
+    x_max = np.maximum(rings.x[p], rings.x[p + 1])
+    n = np.bincount(rings.zone[seg_ring], minlength=len(rings.n_rings))
+    first = np.cumsum(n) - n
+    cell_parts, seg_parts = [], []
+    for cell, k in _runs(n[cell_zone]):  # cell-major: each cell's slots in ring order
+        s = first[cell_zone[cell]] + k
+        band = (
+            (py[s] != cy[s])
+            & (y_min[s] <= y_hi[cell])
+            & (y_max[s] >= y_lo[cell])
+            & (x_max[s] >= x_lo[cell])
+        )
+        band &= (np.bincount(cell[band & rings.ext[seg_ring[s]]], minlength=len(x0)) > 0)[cell]
+        cell_parts.append(cell[band])
+        seg_parts.append(s[band])
+    cell = _concat(cell_parts, np.int64)
+    s = _concat(seg_parts, np.int64)
+    slot_ring = seg_ring[s]
+    last = np.ones(len(s), dtype=bool)
+    last[:-1] = (cell[1:] != cell[:-1]) | (slot_ring[1:] != slot_ring[:-1])
+    return np.bincount(cell, minlength=len(x0)), p[s], last
 
 
 _POINTS = T.ArrayType(T.StructType([
@@ -258,27 +375,51 @@ def _zprep_schema(slots: bool) -> T.StructType:
     ])
 
 
-def _prep_zone(rings: list[np.ndarray], crs, res: int, margin_m: float = 0.0,
-               slots: bool = False):
-    """The per-zone kernel: one zone's [exterior, *interiors] (n,2) rings
-    in its CRS → (rings, kept_cell_ids, full_mask, slots) as numpy — the
-    harmonized lon/lat rings, the classified covering cells and, when
-    ``slots`` is asked for (only :func:`spatial_join` reads them), the
-    partial cells' edge slots as :func:`_band_edges` returns them, over
-    all kept cells (full cells get none); else ``slots`` is None.
-    :func:`_zone_table` packs it into the :func:`_zprep_schema`
-    carrier."""
-    rings = _lonlat(rings, crs)
-    kept, full_mask = _classify_zone_cells(rings, res, margin_m)
-    if slots:
-        partial = np.nonzero(~full_mask)[0]
-        n, p, c, last = _band_edges(rings, kept[partial])
-        counts = np.zeros(len(kept), dtype=np.int64)
-        counts[partial] = n
-        slots = counts, p, c, last
+def _classify_cells(rings: _Rings, res: int, margin_m: float):
+    """The covering cells of every zone, classified → (zone, cell id,
+    full, lon_min, lat_min, lat_max) of the kept cells, in zone order.
+
+    A cell is full (entirely inside the polygon) when its four corners
+    are inside and no ring segment meets it, and it is kept when it is
+    full, has a corner inside, meets a segment or holds the exterior's
+    first vertex.  With ``margin_m`` > 0 the covering box expands by the
+    distance margin (conservative meridian/parallel degrees) and EVERY
+    cell in the expanded box is kept — the DWithin candidate disk, where
+    cells not touching the polygon are still within reach of it.
+
+    The corners are one grid per zone, one more column and row than its
+    cells, so each corner is tested once and neighbouring cells read the
+    identical double (:func:`cells.index_bounds`)."""
+    n_zones = len(rings.n_rings)
+    zfirst = rings.start[np.cumsum(rings.n_rings) - rings.n_rings]  # the exterior's first point
+    if n_zones:
+        xmin, xmax = np.minimum.reduceat(rings.x, zfirst), np.maximum.reduceat(rings.x, zfirst)
+        ymin, ymax = np.minimum.reduceat(rings.y, zfirst), np.maximum.reduceat(rings.y, zfirst)
     else:
-        slots = None
-    return rings, kept, full_mask, slots
+        xmin = xmax = ymin = ymax = np.empty(0)
+    if margin_m > 0.0:
+        mlat = margin_m / 110_000.0  # conservative meridian degree
+        max_abs_lat = np.minimum(89.9, np.maximum(np.abs(ymin), np.abs(ymax)) + mlat)
+        mlon = margin_m / (111_320.0 * np.cos(np.deg2rad(max_abs_lat)))
+        xmin, ymin, xmax, ymax = xmin - mlon, ymin - mlat, xmax + mlon, ymax + mlat
+    x0, y0, x1, y1 = cells.covering_index_ranges(xmin, ymin, xmax, ymax, res)
+    nx, ny = x1 - x0 + 1, y1 - y0 + 1
+    zone, xi, yi, _ = _grid(x0, y0, nx, ny)
+    bx0, by0, bx1, by1 = cells.index_bounds(xi, yi, res)
+    inside = _corners_inside(rings, x0, y0, nx + 1, ny + 1, res)
+    ll = (np.cumsum((nx + 1) * (ny + 1)) - (nx + 1) * (ny + 1))[zone] \
+        + (yi - y0[zone]) * (nx[zone] + 1) + (xi - x0[zone])
+    corners = inside[[ll, ll + 1, ll + nx[zone] + 2, ll + nx[zone] + 1]]
+    hits = _boxes_hit(rings, x0, y0, nx, ny, res)
+    full = corners.all(axis=0) & ~hits
+    if margin_m > 0.0:
+        keep = np.ones(len(zone), dtype=bool)
+    else:
+        fx, fy = rings.x[zfirst][zone], rings.y[zfirst][zone]
+        first_in = (fx >= bx0) & (fx <= bx1) & (fy >= by0) & (fy <= by1)
+        keep = full | corners.any(axis=0) | hits | first_in
+    return (zone[keep], cells.index_cells(xi[keep], yi[keep], res), full[keep],
+            bx0[keep], by0[keep], by1[keep])
 
 
 def _explode_zone_cells(z: DataFrame) -> DataFrame:
@@ -313,18 +454,15 @@ def _list_array(lengths, values) -> pa.ListArray:
     return pa.ListArray.from_arrays(offsets, values)
 
 
-def _points_array(rings: list[np.ndarray]) -> pa.ListArray:
-    """(n,2) rings → list<struct<x,y>>, one list per ring."""
-    xy = np.concatenate(rings) if rings else np.empty((0, 2))
-    return _list_array([len(r) for r in rings],
-                       pa.StructArray.from_arrays([xy[:, 0], xy[:, 1]], names=["x", "y"]))
+def _points_array(x, y, sizes) -> pa.ListArray:
+    """Ring points (the rings concatenated) → list<struct<x,y>>, one list
+    per ring of ``sizes`` points."""
+    return _list_array(sizes, pa.StructArray.from_arrays([x, y], names=["x", "y"]))
 
 
-def _concat(parts, dtype, width: int = 0) -> np.ndarray:
-    """np.concatenate that also takes no parts (a zone side with no zone)."""
-    if parts:
-        return np.concatenate(parts).astype(dtype, copy=False)
-    return np.empty((0, width) if width else 0, dtype=dtype)
+def _concat(parts, dtype) -> np.ndarray:
+    """np.concatenate that also takes no parts."""
+    return np.concatenate(parts).astype(dtype, copy=False) if parts else np.empty(0, dtype=dtype)
 
 
 _ZONE_COLS = ("zone_id", "exterior", "interiors", "crs")
@@ -334,33 +472,39 @@ def _zone_table(rows, zone_id: pa.DataType, res: int, margin_m: float = 0.0,
                 slots: bool = False) -> pa.Table:
     """The zone packer: zone rows (collected ``Row``s or
     ``RecordBatch.to_pylist()`` dicts of :data:`_ZONE_COLS`) → one Arrow
-    table (zone_id of Arrow type ``zone_id``, _z), packed from the
-    per-zone kernel's numpy output by list offsets, with no per-point,
-    per-cell or per-slot Python object.  Interiors may be None or empty
-    lists of any type (``list<null>``, ``list<int32>``)."""
-    preps = [
-        _prep_zone(_ring_arrays(r["exterior"], r["interiors"]), r["crs"], res, margin_m, slots)
-        for r in rows
-    ]
-    rings, kept, full, zslots = (list(v) for v in zip(*preps)) if preps else ([], [], [], [])
-    holes = [h for zr in rings for h in zr[1:]]
-    cell_cols = [pa.array(_concat(kept, np.int64)), pa.array(_concat(full, np.bool_))]
+    table (zone_id of Arrow type ``zone_id``, _z) of the
+    :func:`_zprep_schema` carrier: each zone's harmonized lon/lat rings
+    and its classified covering cells (:func:`_classify_cells`), with,
+    when ``slots`` is asked for (only :func:`spatial_join` reads them),
+    each partial cell's edge slots (:func:`_edge_slots`; full cells get
+    none).  All zones go through each numpy pass together, so the
+    number of numpy calls does not grow with the zone count, and no
+    per-point, per-cell or per-slot Python object is made on the way
+    out.  Interiors may be None or empty lists of any type
+    (``list<null>``, ``list<int32>``)."""
+    rings = _flat_rings(rows)
+    zone, cell_id, full, x0, y0, y1 = _classify_cells(rings, res, margin_m)
+    cell_cols = [pa.array(cell_id), pa.array(full)]
     if slots:
-        counts, p, c, last = zip(*zslots) if zslots else ([], [], [], [])
-        p, c = _concat(p, np.float64, 2), _concat(c, np.float64, 2)
-        edges_arr = pa.StructArray.from_arrays(
-            [p[:, 0], p[:, 1], c[:, 0], c[:, 1], pa.array(_concat(last, np.bool_))],
+        partial = np.flatnonzero(~full)
+        n, p, last = _edge_slots(x0[partial], y0[partial], y1[partial], zone[partial], rings)
+        counts = np.zeros(len(full), dtype=np.int64)
+        counts[partial] = n
+        edges = pa.StructArray.from_arrays(
+            [rings.x[p], rings.y[p], rings.x[p + 1], rings.y[p + 1], pa.array(last)],
             names=_EDGES.elementType.names,
         )
-        cell_cols.append(_list_array(_concat(counts, np.int64), edges_arr))
+        cell_cols.append(_list_array(counts, edges))
     schema = _zprep_schema(slots)
     cells_arr = pa.StructArray.from_arrays(
         cell_cols, names=schema["cells"].dataType.elementType.names)
+    on_ext = np.repeat(rings.ext, rings.size)
     zprep = pa.StructArray.from_arrays(
         [
-            _points_array([zr[0] for zr in rings]),
-            _list_array([len(zr) - 1 for zr in rings], _points_array(holes)),
-            _list_array([len(zk) for zk in kept], cells_arr),
+            _points_array(rings.x[on_ext], rings.y[on_ext], rings.size[rings.ext]),
+            _list_array(rings.n_rings - 1, _points_array(
+                rings.x[~on_ext], rings.y[~on_ext], rings.size[~rings.ext])),
+            _list_array(np.bincount(zone, minlength=len(rows)), cells_arr),
         ],
         names=schema.names,
     )
@@ -475,27 +619,30 @@ def _zone_side(zones: DataFrame, res: int, strategy: str | None = None,
 MAX_SLOTS = 6
 
 
-def _refine_side(zone_cells: DataFrame, k: int, lon: Column, lat: Column):
-    """The join's zone side and its refine, for a zone side whose partial
-    rows hold at most ``k`` edge slots → (zone side, refine Column, the
-    columns only the refine reads).
+def _refine_side(zone_cells: DataFrame, k: int, lon: str, lat: str):
+    """The join's zone side and its refine over the columns named ``lon``
+    and ``lat``, for a zone side whose partial rows hold at most ``k``
+    edge slots → (zone side, refine Column, the columns only the refine
+    reads).
 
     Up to :data:`MAX_SLOTS` slots the refine is
     :func:`functions.edge_slots_pip_col`, and the zone side carries each
     slot field as its own non-null column in place of the rings: read as
     array elements, the slots made flagship_pip's method 8,778 bytes at
     3 slots.  Full rows hold NaN padding there, 48 bytes per slot, so the
-    bound also caps how much the broadcast relation grows.  Past it the
-    refine is the full-ring test (:func:`functions.point_in_polygon_col`)
-    over the rings, with the same rows."""
+    bound also caps how much the broadcast relation grows.  Both are SQL
+    text, parsed by one ``selectExpr`` and one ``F.expr``.  Past the
+    bound the refine is the full-ring test
+    (:func:`functions.point_in_polygon_col`) over the rings, with the
+    same rows."""
     if k > MAX_SLOTS:
-        pip = point_in_polygon_col(lon, lat, F.col("exterior"), F.col("interiors"))
+        pip = point_in_polygon_col(F.col(lon), F.col(lat), F.col("exterior"), F.col("interiors"))
         return zone_cells.drop("edges"), pip, ["exterior", "interiors"]
     names = [[f"_slot{i}_{j}" for j in range(6)] for i in range(k)]
-    cols = [c.alias(n) for slot, ns in zip(edge_slot_cols(F.col("edges"), k), names)
+    cols = [f"{c} AS {n}" for slot, ns in zip(edge_slot_cols("edges", k), names)
             for c, n in zip(slot, ns)]
-    pip = edge_slots_pip_col(lon, lat, [[F.col(n) for n in ns] for ns in names])
-    return (zone_cells.select("cell_id", "zone_id", "full", *cols), pip,
+    pip = F.expr(edge_slots_pip_col(lon, lat, names))
+    return (zone_cells.selectExpr("cell_id", "zone_id", "full", *cols), pip,
             [n for ns in names for n in ns])
 
 
@@ -577,8 +724,7 @@ def spatial_join(
     pts = docs if "cell_id" in docs.columns else tile_assign(docs, res, lon_col, lat_col)
 
     z, k, broadcast = _zone_side(zones, res, strategy, slots=True)
-    zone_cells, pip_col, refine_cols = _refine_side(
-        _explode_zone_cells(z), k, F.col(lon_col), F.col(lat_col))
+    zone_cells, pip_col, refine_cols = _refine_side(_explode_zone_cells(z), k, lon_col, lat_col)
     if broadcast:
         zone_cells = F.broadcast(zone_cells)
     joined = pts.join(zone_cells, "cell_id", "inner")

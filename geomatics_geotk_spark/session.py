@@ -110,6 +110,23 @@ def _submitted_master() -> str | None:
 
 def get_spark(app: str = "geomatics_geotk_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's session (module docstring), created on ``master``
+    (a surrounding ``spark-submit``'s master wins, then the argument,
+    then ``SPARK_GRAFT_MASTER``, then ``local[SPARK_GRAFT_CPUS or all
+    cores]``).
+
+    DataFrame call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``).  While it is
+    on, pyspark wraps every Column and ``functions`` call in a walk of
+    the Python stack and about five py4j round trips to record where the
+    expression was built: about 1,870 of the 2,750 round trips of one
+    flagship build, and nearly half of its driver time.  What that
+    costs: an error raised by a DataFrame expression no longer names the
+    Python line that built it (the JVM stack trace and the expression's
+    text are unchanged).  The conf is static, so it takes effect only
+    when this call creates the SparkContext; a session that already
+    exists keeps the value it was started with.
+    """
     master = (
         _submitted_master()
         or master
@@ -135,6 +152,7 @@ def get_spark(app: str = "geomatics_geotk_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # InferFiltersFromGenerate clones an explode's generator into a

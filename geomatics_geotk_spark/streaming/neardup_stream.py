@@ -11,8 +11,9 @@ end:
     equi-join against the corpus band index
 
 The corpus side of a stream-static join is a batch table, so its index
-is built by the batch pipeline (:func:`operators.dedup.minhash_signature`,
-whole-stage codegen'd, where the per-row fold evaluates interpreted).
+is built by the batch pipeline (the lanes aggregate of
+:func:`operators.dedup.minhash_signature`, whole-stage codegen'd, where
+the per-row fold evaluates interpreted).
 Both signatures share the base hash (:func:`operators.dedup._base_hash`)
 and affine lane params (:func:`operators.dedup.minhash_lane_params`),
 and both go through the one band builder
@@ -35,11 +36,11 @@ from pyspark.sql import functions as F
 from ..operators.dedup import (
     MINHASH_P,
     _base_hash,
+    _minhash_lanes,
     _shingles_of_tokens,
     cap_buckets,
     lsh_bands,
     minhash_lane_params,
-    minhash_signature,
 )
 
 
@@ -112,10 +113,10 @@ def corpus_band_index(
     """Static LSH index over the reference corpus, renamed to
     ``corpus_id`` and hot-bucket capped (a degenerate boilerplate bucket
     would otherwise match every incoming doc).  The corpus is a batch
-    table, so the signature is the batch explode+groupBy one; the
-    keyword arguments must match the stream side's
-    :func:`minhash_bands`."""
-    sig = minhash_signature(corpus, text_col, n_hashes, shingle_n, id_col, hash_fn)
+    table, so the signature is the batch explode+groupBy one (its lanes
+    only: a doc without them has no band either way); the keyword
+    arguments must match the stream side's :func:`minhash_bands`."""
+    sig = _minhash_lanes(corpus, text_col, n_hashes, shingle_n, id_col, hash_fn)
     idx = lsh_bands(sig, id_col, n_hashes, bands, hash_fn).withColumnRenamed(
         id_col, "corpus_id"
     )

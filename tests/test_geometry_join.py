@@ -7,9 +7,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from geomatics_geotk_spark.kernels import crs
 from geomatics_geotk_spark.kernels import geometry as geom_k
 from geomatics_geotk_spark.operators.geometry_join import geometry_join
-from geomatics_geotk_spark.operators.spatial_join import _lonlat, _ring_arrays
+from geomatics_geotk_spark.operators.spatial_join import _ring_arrays
 from geomatics_geotk_spark.sources.documents import zones_table
 
 
@@ -46,7 +47,8 @@ def test_matches_brute_force(spark, mixed_docs, pred):
     for i, w in rows:
         kind, parts = geom_k.parse_wkt(w)
         for zr in zrows:
-            rings = _lonlat(_ring_arrays(zr["exterior"], zr["interiors"]), zr["crs"])
+            rings = [np.column_stack(crs.to_lonlat(r[:, 0], r[:, 1], zr["crs"]))
+                     for r in _ring_arrays(zr["exterior"], zr["interiors"])]
             if getattr(geom_k, pred)(kind, parts, "polygon", rings):
                 want.add((i, zr["zone_id"]))
     assert got == want

@@ -220,8 +220,7 @@ def _check_slot_refine(spark, monkeypatch, zones, res, joins):
         point_in_polygon_col(
             F.col("lon"), F.col("lat"), F.col("exterior"), F.col("interiors")
         ).alias("ring_pip"),
-        edge_slots_pip_col(
-            F.col("lon"), F.col("lat"), edge_slot_cols(F.col("edges"), k)).alias("slot_pip"),
+        F.expr(edge_slots_pip_col("lon", "lat", edge_slot_cols("edges", k))).alias("slot_pip"),
     ).collect()
     partial = [r for r in cand if not r["full"]]
     assert len(partial) > 1000 and sum(r["ring_pip"] for r in partial) > 100
