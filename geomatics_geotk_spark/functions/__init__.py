@@ -218,7 +218,7 @@ def edge_slots_pip_col(lon: str, lat: str, slots: list[list[str]]) -> str:
 def _seg_box_intersects(p: Column, c: Column, x0: Column, y0: Column,
                         x1: Column, y1: Column) -> Column:
     """Segment (p→c) ∩ axis box ≠ ∅ — vectorized slab clipping as Column
-    math (the JVM mirror of operators.spatial_join._segs_hit_boxes)."""
+    math (the JVM mirror of operators.spatial_join._boxes_hit)."""
     inf = F.lit(float("inf"))
     dx, dy = c["x"] - p["x"], c["y"] - p["y"]
 

@@ -12,10 +12,13 @@ into the classic spatial hash join:
    (span-sequence invariant);
 2. **cell-encode** both sides (JVM bit math, :func:`functions.cell_id_col`);
    zones explode into their covering cells, each flagged ``full`` (cell
-   entirely inside the polygon — refine skipped) or ``partial``.  Every
-   cell join takes its zone side from one size rule (:func:`_zone_side`):
-   a zone side Spark would broadcast is packed on the driver into an
-   Arrow table and broadcast, a larger one is packed on the executors by
+   entirely inside the polygon — refine skipped) or ``partial``.  One
+   pack (:func:`_zone_table`) classifies the cells of every zone, and
+   builds the partial cells' edge slots, in the same few numpy passes,
+   so its numpy calls do not grow with the zone count.  Every cell join
+   takes its zone side from one size rule (:func:`_zone_side`): a zone
+   side Spark would broadcast is packed on the driver into an Arrow
+   table and broadcast, a larger one is packed on the executors by
    ``mapInArrow``;
 3. **equi-join on cell_id** — a broadcast hash join for small zone sets,
    else a shuffle on ``cell_id`` whose hot cells AQE's skew-join split
@@ -172,14 +175,6 @@ def _runs(counts: np.ndarray, cap: int = _PAIR_CAP):
         lo = hi
 
 
-def _grid(x0, y0, nx, ny):
-    """Per zone the nx × ny (column, row) indices from (x0, y0), row by
-    row from the bottom left as ``cells.cells_covering`` orders them →
-    (zone, column, row, first index of each zone's run)."""
-    zone, k = _expand(nx * ny)
-    return zone, x0[zone] + k % nx[zone], y0[zone] + k // nx[zone], np.cumsum(nx * ny) - nx * ny
-
-
 def _grid_line(v, origin: float, step: float) -> np.ndarray:
     """The smallest integer k with ``origin + k * step >= v``, per value,
     in the grid line formula of :func:`cells.index_bounds`, so the
@@ -191,8 +186,8 @@ def _grid_line(v, origin: float, step: float) -> np.ndarray:
 
 def _corners_inside(rings: _Rings, gx0, gy0, ncx, ncy, res: int) -> np.ndarray:
     """Even-odd inside test of every corner of each zone's corner grid
-    (``ncx`` × ``ncy`` corners from (gx0, gy0), in :func:`_grid` order)
-    against its zone: inside the exterior and in no hole.
+    (``ncx`` × ``ncy`` corners from (gx0, gy0), row by row from the
+    bottom left) against its zone: inside the exterior and in no hole.
 
     The crossings of ``kernels.geometry.points_in_polygon``, over each
     ring's edges i ← j (j the point before i, wrapping): an edge crosses
@@ -244,8 +239,8 @@ def _segments(rings: _Rings):
 
 def _boxes_hit(rings: _Rings, x0, y0, nx, ny, res: int) -> np.ndarray:
     """Does any segment of its zone's rings meet each cell box of the
-    zones' covering grids (``nx`` × ``ny`` cells from (x0, y0), in
-    :func:`_grid` order)?
+    zones' covering grids (``nx`` × ``ny`` cells from (x0, y0), row by
+    row from the bottom left)?
 
     Slab clipping, as the segment/box test ``functions._seg_box_intersects``
     mirrors; a segment wholly inside a box counts as a hit (strictly
@@ -404,7 +399,8 @@ def _classify_cells(rings: _Rings, res: int, margin_m: float):
         xmin, ymin, xmax, ymax = xmin - mlon, ymin - mlat, xmax + mlon, ymax + mlat
     x0, y0, x1, y1 = cells.covering_index_ranges(xmin, ymin, xmax, ymax, res)
     nx, ny = x1 - x0 + 1, y1 - y0 + 1
-    zone, xi, yi, _ = _grid(x0, y0, nx, ny)
+    zone, k = _expand(nx * ny)  # row by row from the bottom left, as cells.cells_covering
+    xi, yi = x0[zone] + k % nx[zone], y0[zone] + k // nx[zone]
     bx0, by0, bx1, by1 = cells.index_bounds(xi, yi, res)
     inside = _corners_inside(rings, x0, y0, nx + 1, ny + 1, res)
     ll = (np.cumsum((nx + 1) * (ny + 1)) - (nx + 1) * (ny + 1))[zone] \

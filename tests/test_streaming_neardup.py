@@ -58,6 +58,14 @@ class TestColumnSignatureParity:
             assert len(fold) == 25 * 8, hash_fn
             assert fold == index, hash_fn
 
+    def test_index_skips_the_id_restore(self, corpus):
+        """The corpus index bands the signature's lanes aggregate
+        directly: no left join restoring one row per id (whose NULL-lane
+        rows would band to nothing), and no distinct aggregate for it."""
+        plan = neardup_stream.corpus_band_index(corpus)._jdf.queryExecution().executedPlan().toString()
+        assert "LeftOuter" not in plan
+        assert plan.count("HashAggregate") == 2  # the lanes' partial and final
+
 
 class TestStreamingNearDup:
     def test_planted_neardups_flagged(self, spark, corpus, tmp_path):

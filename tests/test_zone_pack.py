@@ -41,7 +41,6 @@ def _lonlat(rings: list[np.ndarray], crs) -> list[np.ndarray]:
     return out
 
 
-
 def _segs_hit_boxes(rings: list[np.ndarray], x0, y0, x1, y1) -> np.ndarray:
     """(n_cells,) bool: does any ring segment intersect each axis box?
 
@@ -194,7 +193,6 @@ def _concat(parts, dtype, width: int = 0) -> np.ndarray:
     return np.empty((0, width) if width else 0, dtype=dtype)
 
 
-
 def reference_zone_table(rows, zone_id: pa.DataType, res: int, margin_m: float = 0.0,
                          slots: bool = False) -> pa.Table:
     """The reference packing: :func:`_prep_zone` once per zone, packed
@@ -227,7 +225,6 @@ def reference_zone_table(rows, zone_id: pa.DataType, res: int, margin_m: float =
         names=schema.names,
     )
     return pa.table({"zone_id": pa.array([r["zone_id"] for r in rows], zone_id), "_z": zprep})
-
 
 
 # ---------------------------------------------------------------------------
